@@ -36,6 +36,10 @@ import org.apache.spark.sql.types._
   */
 object Bpe {
 
+  /** Bump when training or merge-application semantics change -- keys
+    * the staged word-length dump. */
+  val Version = "bpe-2"
+
   /** Merge rounds learned (the model size R). */
   val Rounds = 8
 

@@ -26,9 +26,13 @@ import org.apache.spark.sql.functions._
   * Scale shape (the q47 connected-components pattern): per iteration one
   * equi-join edges⋈ranks on src (edges can be pre-partitioned by src
   * once and the exchange reused) + one groupBy(dst) partial+final
-  * aggregate; `localCheckpoint` truncates the lineage each round so the
-  * plan stays O(1)-deep (at cluster scale substitute reliable
-  * `checkpoint` — same contract). Overflow headroom: Σ ranks ≤
+  * aggregate. The round-invariant inputs are EAGERLY local-checkpointed.
+  * Each round's ranks are LAZILY local-checkpointed: that cuts the
+  * round's logical plan at once (analysis stays O(1)-deep) but
+  * truncates RDD lineage only for the final round, once an action
+  * computes it (the loop says what that means per AQE setting). At
+  * cluster scale substitute reliable `checkpoint` — same contract.
+  * Overflow headroom: Σ ranks ≤
   * N·10⁶ + iters·0.85·N·10⁶; a per-node rank beyond 2⁵⁰ would need a
   * ~10⁹-host graph funneling into one node — and the multiply by 85
   * still fits a Long with 2⁶³ ceiling.
@@ -65,10 +69,11 @@ object HostRank {
         .select(col("dst").as("host"),
           expr(s"(rank_micros * $DampNum) div ($DampDen * outdeg)").as("c"))
       // r6b: LAZY checkpoint — each round's result is referenced exactly
-      // once (by the next round), so nothing needs an eager blocking job
-      // per round; the final action materializes the chain and the
-      // checkpoint hook truncates lineage as each round's RDD computes.
-      // 10 driver-blocking jobs collapse into the terminal action.
+      // once (by the next round), so no round pays the eager
+      // checkpoint's blocking count job. Intermediate rounds are never
+      // truncated: with AQE off the terminal job runs the whole chain;
+      // with AQE on (the default) each round runs its shuffle-map and
+      // broadcast jobs here, when this call plans the round.
       rank = nodes
         .join(contrib.groupBy("host").agg(sum("c").as("in_c")), Seq("host"), "left")
         .select(col("host"),

@@ -45,6 +45,10 @@ import org.apache.spark.sql.functions._
   */
 object LmScore {
 
+  /** Bump when bigram counting or scoring semantics change -- keys the
+    * staged bigram-count and LM-score dumps. */
+  val Version = "lmscore-2"
+
   private def toks(textCol: String) = TextStats.lowerToks(col(textCol))
 
   /** Exploded bigram occurrences: (idCol, a, b) — map-side only. */

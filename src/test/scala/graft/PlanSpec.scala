@@ -205,7 +205,7 @@ class PlanSpec extends AnyFunSuite {
     // contain NO Exchange at all. This is the gate that caught the
     // first-cut lead()-window form, which shuffled every token row.
     val p = executedPlan(graft.ops.Winnowing.fingerprints(
-      graft.queries.GraftQueries.extractedDocsFor(spark, d), "doc_id", "text"))
+      graft.queries.GraftQueries.extractedPagesDocs(spark, d), "doc_id", "text"))
     assert(!p.contains("Exchange"),
       s"the fingerprint build must not shuffle:\n${p.take(600)}")
   }
