@@ -81,10 +81,9 @@ object CurateJob {
           urlBlocklist: Option[Seq[String]] = None,
           repairMojibake: Boolean = true): Funnel = {
     val table = ExtractJob.readExtracted(spark, extractRoot)
-    val baseRaw = table
-      .filter(col("error").isNull && col("payload_kind") === "html" &&
-        length(col("extracted_text")) > 0)
-      .select(col("url"), col("extracted_text"))
+    val isHtml = col("error").isNull && col("payload_kind") === "html" &&
+      length(col("extracted_text")) > 0
+    val baseRaw = table.filter(isHtml).select(col("url"), col("extracted_text"))
 
     // ftfy rung FIRST (q108 kernel): mojibake defeats every digest
     // downstream — a mangled twin of a clean doc would survive exact
@@ -121,8 +120,8 @@ object CurateJob {
     // one keeper per content digest, the lexicographic-min url
     val keeper = Dedup.exact(perUrl, idCol = "url", textCol = "extracted_text")
       .select(col("text_hash").as("h"), col("keep_id").as("url"))
-    // persisted: the fuzzy stage references this table five times
-    // (banding, the verify joins, the cluster docs, the keep semi-join)
+    // persisted: four plans below read this table (the banding, the
+    // verify's member shingling, the cluster docs, the keep semi-join)
     // and the funnel counts it — unpersisted, its scan+dedup lineage
     // would re-execute each time
     val deduped = perUrl.join(keeper, Seq("h", "url"), "left_semi").drop("h")
@@ -134,9 +133,18 @@ object CurateJob {
     // canonical member (the q20 + q47 kernels, unchanged). The LSH
     // bucket cap is AUDITED, never silent (the house rule): the dropped
     // count goes into the funnel manifest.
+    //
+    // bands and candidates are each staged ONCE, eagerly (the
+    // connectedComponents discipline): Spark shares no lazy subplan
+    // between references, so the audit, both self-join sides and the
+    // verify's two reads would each re-run the signatures and the LSH
+    // join. Eager, because AQE can compute an unfilled persist() cache
+    // twice. At 10^12 docs: reliable checkpoints instead.
     val bands = Dedup.minhashBands(deduped, "url", "extracted_text", shingleN = 2)
+      .localCheckpoint(eager = true)
     val fuzzyBucketsDropped = Dedup.oversizedBuckets(bands)
-    val pairs = Dedup.jaccardVerify(Dedup.candidatePairs(bands), deduped,
+    val cands = Dedup.candidatePairs(bands).localCheckpoint(eager = true)
+    val pairs = Dedup.jaccardVerify(cands, deduped,
       "url", "extracted_text", shingleN = 2, threshold = fuzzyThreshold)
     val canon = Dedup.dedupClusters(deduped, pairs, idCol = "url")
       .filter(col("is_canonical"))
@@ -193,22 +201,23 @@ object CurateJob {
       val wroteFiles = Option(new java.io.File(s"$outRoot/data").listFiles())
         .getOrElse(Array.empty)
         .exists(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
-      // html + mojibake counts in ONE pass over the raw base (repair
-      // drops no rows, so html == |baseRaw|; a second corpus-sized
-      // scan purely for the repair stat would be waste)
-      val htmlStats = baseRaw.agg(
-        count(lit(1)).as("n_html"),
+      // extracted, html and mojibake counts in ONE pass over the
+      // extraction table (repair drops no rows, so html == |baseRaw|;
+      // a scan per count would be waste)
+      val tableStats = table.agg(
+        count(lit(1)).as("n_extracted"),
+        count(when(isHtml, lit(1))).as("n_html"),
         (if (repairMojibake)
            coalesce(  // sum over zero rows is NULL, not 0
-             sum(when(graft.ops.Mojibake.wouldRepair(col("extracted_text")),
+             sum(when(isHtml && graft.ops.Mojibake.wouldRepair(col("extracted_text")),
                1L).otherwise(0L)), lit(0L))
          else lit(0L)).as("n_moji")).first()
       val funnel = Funnel(
-        extracted = table.count(),
-        html = htmlStats.getLong(0),
-        mojibakeRepaired = htmlStats.getLong(1),
+        extracted = tableStats.getLong(0),
+        html = tableStats.getLong(1),
+        mojibakeRepaired = tableStats.getLong(2),
         urlFiltered =
-          if (urlBlocklist.isDefined) base.count() else htmlStats.getLong(0),
+          if (urlBlocklist.isDefined) base.count() else tableStats.getLong(1),
         deduped = deduped.count(),
         fuzzyDeduped = fuzzyDeduped.count(),
         semanticDeduped = feats.count(),

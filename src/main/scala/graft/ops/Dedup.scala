@@ -130,12 +130,13 @@ object Dedup {
       .toDF("id", "band", "band_hash")
   }
 
-  /** Count of (band, band_hash) buckets dropped by the most recent
-    * [[candidatePairs]] cap, per JVM — surfaced so the drop is never
+  /** Count of (band, band_hash) buckets in `bands` that the
+    * [[candidatePairs]] cap drops — surfaced so the drop is never
     * silent (a pathological all-identical corpus would otherwise
-    * quietly lose recall). Spark accumulator-free: the count is
-    * computed in the same pass via an aggregate on the driver only
-    * when someone asks (see [[oversizedBuckets]]). */
+    * quietly lose recall). This is its OWN groupBy job over `bands`,
+    * separate from the candidate join's window: a caller that audits
+    * and also builds candidates should stage `bands` first (CurateJob
+    * does), or the banding lineage runs once per read. */
   def oversizedBuckets(bands: DataFrame, maxBucket: Int = 1000): Long =
     bands.groupBy("band", "band_hash").count()
       .filter(col("count") > maxBucket).count()
@@ -229,8 +230,10 @@ object Dedup {
     // a join shuffle (at sf0.1 this is ~10x fewer text rows; at 10^12
     // docs it is the difference between shuffling the corpus twice and
     // shuffling only the near-dup suspects)
-    val memberIds = candidates.select(col("a_id").as("id"))
-      .union(candidates.select(col("b_id").as("id")))
+    // both members from ONE read of `candidates` (a union of two
+    // selects would re-run the whole candidate lineage once per side;
+    // the pair join below is the only other read)
+    val memberIds = candidates.select(explode(array(col("a_id"), col("b_id"))).as("id"))
       .distinct()
     // r6 (guide §2.3): shingle each MEMBER once, map-side, before the
     // pair joins — the old shape joined raw text and re-ran
@@ -270,8 +273,7 @@ object Dedup {
                         textCol: String, shingleN: Int, threshold: Double): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val memberIds = candidates.select(col("a_id").as("id"))
-      .union(candidates.select(col("b_id").as("id")))
+    val memberIds = candidates.select(explode(array(col("a_id"), col("b_id"))).as("id"))
       .distinct()
     // r6: same member-once shingling as [[jaccardVerify]] — hash arrays
     // join instead of raw text, the containment kernel is unchanged.
@@ -379,6 +381,11 @@ object Dedup {
     * needs to actually drop duplicates: pairs → clusters → one
     * canonical doc per cluster.
     *
+    * Edges: each pair (a, b) is exploded into both directed edges
+    * (a→b, b→a) in ONE pass over `pairs`, then made distinct — so an
+    * unstaged `pairs` lineage (a verify join, say) executes once here,
+    * not once per direction.
+    *
     * Algorithm: iterative min-label propagation with pointer jumping.
     * Each round every node takes the min label over itself + its
     * neighbors (one equi-join + groupBy), then labels compress through
@@ -400,9 +407,12 @@ object Dedup {
     * left-join and coalesce to self for singletons. */
   def connectedComponents(pairs: DataFrame, aCol: String = "a_id",
                           bCol: String = "b_id", maxIters: Int = 25): DataFrame = {
-    val half = pairs.select(col(aCol).cast("string").as("src"),
-      col(bCol).cast("string").as("dst"))
-    val edges = half.union(half.select(col("dst").as("src"), col("src").as("dst")))
+    val a = col(aCol).cast("string")
+    val b = col(bCol).cast("string")
+    val edges = pairs
+      .select(explode(array(struct(a.as("src"), b.as("dst")),
+        struct(b.as("src"), a.as("dst")))).as("e"))
+      .select(col("e.src"), col("e.dst"))
       .distinct().persist()
     var labels = edges.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("label"))

@@ -21,7 +21,10 @@ class CurateJobSpec extends AnyFunSuite {
 
   private def tmp(): String = Files.createTempDirectory("curatespec").toString
 
-  test("curate: funnel monotone, dedup exact, host cap enforced, splits total, deterministic") {
+  /** 600 generated pages plus planted exact dups and a same-url
+    * re-crawl, extracted into `<dir>/out`; shared by the property test
+    * and the job budget. */
+  private lazy val corpus: String = {
     val dir = tmp()
     ExtractJob.generatePages(spark, 600, s"$dir/pages", partitions = 3)
     // plant EXACT duplicates (the generator's mirrors are near-dups, so
@@ -39,6 +42,11 @@ class CurateJobSpec extends AnyFunSuite {
       .orderBy(col("url")).limit(5)
       .withColumn("extracted_text", concat(col("extracted_text"), lit(" recrawl-delta")))
       .write.mode("append").parquet(SnapshotStore.dataDirs(s"$dir/out").head)
+    dir
+  }
+
+  test("curate: funnel monotone, dedup exact, host cap enforced, splits total, deterministic") {
+    val dir = corpus
     val f = CurateJob.run(spark, s"$dir/out", s"$dir/curated", perHostCap = 3)
 
     // funnel is a monotone filter chain and the manifest records it
@@ -84,6 +92,39 @@ class CurateJobSpec extends AnyFunSuite {
     val out2 = spark.read.parquet(s"$dir/curated2/data")
     assert(out.exceptAll(out2).isEmpty && out2.exceptAll(out).isEmpty,
       "curation is not deterministic")
+  }
+
+  test("curate: job budget — CurateJob.run stays within its Spark job ceiling on the spec corpus") {
+    val dir = corpus
+    // every job started while the tag is set; a sentinel job started
+    // after it flushes the (asynchronous, in-order) listener queue
+    val tag = "curatespec.budget"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(tag))) match {
+          case Some("run") => jobs.incrementAndGet()
+          case Some("sentinel") => flushed.countDown()
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tag, "run")
+      val f = try CurateJob.run(spark, s"$dir/out", s"$dir/curated-budget", perHostCap = 3)
+      finally sc.setLocalProperty(tag, "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      sc.setLocalProperty(tag, null)
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener queue never drained")
+      assert(f.kept > 0, f.toString)
+      info(s"CurateJob.run launched ${jobs.get()} Spark jobs")
+      // measured count + ~7% headroom; it holds only while the fuzzy
+      // stage reads its bands and candidates from one staged copy (lazy
+      // re-reads re-run the LSH chain per reference: 114 jobs here)
+      assert(jobs.get() <= 72, s"CurateJob.run launched ${jobs.get()} jobs")
+    } finally sc.removeSparkListener(listener)
   }
 
   test("curate: ftfy rung folds upstream-mangled twins into their clean originals") {

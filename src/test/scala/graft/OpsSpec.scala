@@ -277,6 +277,41 @@ class OpsSpec extends AnyFunSuite {
     assert(clusters.toSet.contains(("c", "a", false)))
   }
 
+  test("connected components reads each pair row once; jaccard/containment verify read candidates at most twice") {
+    import spark.implicits._
+    // every row a wrapped input yields bumps the accumulator, so the
+    // total is (rows × times the plan read the input) — an unstaged
+    // lineage re-runs in full on every read
+    def counted(df: org.apache.spark.sql.DataFrame,
+                acc: org.apache.spark.util.LongAccumulator) =
+      df.as[(String, String)].mapPartitions(_.map { r => acc.add(1); r }).toDF("a_id", "b_id")
+
+    val pairs = Seq(("b", "a"), ("b", "c"), ("d", "e"), ("e", "f"), ("f", "d"), ("h", "g"))
+      .toDF("a_id", "b_id")
+    val pairReads = spark.sparkContext.longAccumulator("pair-reads")
+    val labels = Dedup.connectedComponents(counted(pairs, pairReads)).collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(labels == Map("a" -> "a", "b" -> "a", "c" -> "a",
+      "d" -> "d", "e" -> "d", "f" -> "d", "g" -> "g", "h" -> "g"))
+    assert(pairReads.value == 6L, s"pairs read ${pairReads.value / 6.0} times")
+
+    val cands = Dedup.candidatePairs(Dedup.minhashBands(docs, "doc_id", "text", 2))
+      .localCheckpoint(eager = true)
+    val nCands = cands.count()
+    assert(nCands > 0)
+    val candReads = spark.sparkContext.longAccumulator("cand-reads")
+    val verified = Dedup.jaccardVerify(counted(cands, candReads), docs, "doc_id", "text", 2, 0.8)
+      .collect().map { r =>
+        val a = r.getString(0).toLong; val b = r.getString(1).toLong
+        (math.min(a, b), math.max(a, b))
+      }.toSet
+    assert(verified == bruteJaccardPairs(2, 0.8))
+    assert(candReads.value <= 2 * nCands, s"candidates read ${candReads.value.toDouble / nCands} times")
+    val contReads = spark.sparkContext.longAccumulator("cont-reads")
+    Dedup.containmentVerify(counted(cands, contReads), docs, "doc_id", "text", 2, 0.8).collect()
+    assert(contReads.value <= 2 * nCands, s"candidates read ${contReads.value.toDouble / nCands} times")
+  }
+
   test("connected components converge on a long path (pointer jumping beats diameter)") {
     import spark.implicits._
     // a 40-node path: plain propagation needs 40 rounds; with pointer
