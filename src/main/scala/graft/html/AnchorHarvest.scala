@@ -89,9 +89,10 @@ object AnchorHarvest {
   /** Bump when harvest semantics change — keys the harvest-once dump. */
   val Version = "ah1"
 
-  def anchors(html: String): ArrayBuffer[(String, String)] = {
+  /** (href, label) pairs of the raw UTF-8 payload, in document order. */
+  def anchors(html: Array[Byte]): ArrayBuffer[(String, String)] = {
     val c = new AnchorCollector
-    HtmlTokenizer.tokenize(html, c)
+    ByteHtmlTokenizer.tokenize(html, c)
     c.result()
   }
 }

@@ -2,17 +2,48 @@ package graft.html
 
 import java.nio.charset.StandardCharsets.UTF_8
 
-/** Byte-level variant of [[HtmlTokenizer]]: tokenizes the UTF-8 payload
-  * WITHOUT decoding the whole document — markup structure is pure ASCII
+/** Event sink for the streaming tokenizer. */
+trait HtmlHandler {
+  def startTag(name: String, selfClosing: Boolean): Unit
+  def endTag(name: String): Unit
+  /** Text with entities already decoded; raw whitespace preserved.
+    * The CharSequence is the tokenizer's REUSED buffer — consume it
+    * before returning, never retain a reference. */
+  def text(s: CharSequence): Unit
+  /** href of an `<a>` start tag — fired BEFORE the corresponding
+    * startTag("a"), only for ABSOLUTE http/https values (the out-link
+    * surface, Common-Crawl-WAT-style; relative links are navigation
+    * noise and are never materialized). Value is the raw attribute
+    * text (no entity decode). First href attribute wins. Recognized
+    * when the attribute name is preceded by ASCII whitespace (the
+    * forgiving-tokenizer contract the golden hashes pin). */
+  def anchorHref(href: String): Unit = ()
+}
+
+/** A single-pass, forgiving, allocation-light streaming HTML tokenizer
+  * over the raw UTF-8 payload — the one HTML entry point.
+  *
+  * Hand-rolled (no HTML library is on the classpath, and a streaming
+  * tokenizer is what the extraction path needs anyway). It plays the
+  * role the OCR engines' low-level text emitters play in the reference
+  * (e.g. the tesseract TSV walk at
+  * `ocrworker/engines/tesseract.py:36-71`): turn an opaque payload into
+  * an ordered stream of text fragments with structure.
+  *
+  * The whole document is never decoded: markup structure is pure ASCII
   * (and UTF-8 guarantees no ASCII byte ever appears inside a multibyte
   * sequence), so tags, comments, script/style bodies and attribute
   * machinery are scanned as bytes and only the *kept text runs* are
-  * decoded. On the generated corpus this removes ~40% of per-document
+  * decoded. On the generated corpus this removed ~40% of per-document
   * extraction cost (whole-doc String decode + its 2x char[] allocation).
   *
-  * Event-stream contract: byte-for-byte identical text events to the
-  * String tokenizer (gated by the committed golden hashes and the
-  * generator↔extractor agreement suite).
+  * Handles: comments, doctype, processing instructions, CDATA, raw-text
+  * elements (script/style — content skipped; textarea is deliberately
+  * NOT raw-text: its markup parses as tags), quoted attributes
+  * containing '>', self-closing tags, character entities (named core
+  * set + numeric dec/hex), unclosed/stray tags (forgiving: emitted
+  * as-is, never throws). The event stream is pinned by the committed
+  * golden hashes and the generator↔extractor agreement suite.
   */
 object ByteHtmlTokenizer {
 
@@ -98,8 +129,8 @@ object ByteHtmlTokenizer {
 
   @inline private def isWs(c: Byte): Boolean =
     // exactly Character.isWhitespace over the ASCII range (incl. the
-    // information-separator block 0x1C-0x1F) — keeps the byte and
-    // string tokenizers event-identical on any input
+    // information-separator block 0x1C-0x1F); non-ASCII spaces are
+    // never seen as single bytes, so they never count
     c == ' ' || c == '\t' || c == '\n' || c == '\r' || c == '\f' ||
       c == 0x0b || (c >= 0x1c && c <= 0x1f)
 
@@ -120,7 +151,9 @@ object ByteHtmlTokenizer {
     true
   }
 
-  /** Byte mirror of HtmlTokenizer.isAbsoluteHttp. */
+  /** `http://` or `https://` prefix, ASCII-case-insensitive — checked
+    * on the bytes BEFORE materializing the value String, so the
+    * (overwhelmingly common) relative hrefs cost zero allocation. */
   @inline private def isAbsoluteHttp(b: Array[Byte], start: Int, end: Int): Boolean = {
     var i = start
     if (end - i < 7) return false
@@ -160,7 +193,9 @@ object ByteHtmlTokenizer {
     -1
   }
 
-  /** Mirrors HtmlTokenizer.parseTag over bytes. */
+  /** Parse one tag starting at b(start)=='<'. Returns index after the
+    * tag. For raw-text elements, also consumes content up to the
+    * matching close tag (ASCII-case-insensitive) and drops it. */
   private def parseTag(b: Array[Byte], start: Int, h: HtmlHandler): Int = {
     val n = b.length
     var i = start + 1
@@ -187,9 +222,10 @@ object ByteHtmlTokenizer {
 
     var selfClosing = false
     var done = false
-    // href capture on <a> tags, mirroring HtmlTokenizer.parseTag byte-
-    // for-byte (whitespace-preceded name, quoted or bare value, absolute
-    // http/https only — checked on bytes before any String materializes)
+    // <a> tags additionally watch for a whitespace-preceded href
+    // attribute (quoted or bare value, absolute http/https only); the
+    // href branch consumes exactly the bytes the generic quote-skipping
+    // branches would, so position semantics are the same for every tag
     val wantHref = !closing && name == "a"
     var hrefSeen = false
     while (i < n && !done) {
@@ -252,7 +288,9 @@ object ByteHtmlTokenizer {
     i
   }
 
-  /** Mirrors Entities.decodeInto over bytes (entity bodies are ASCII). */
+  /** Decode the entity at b(i)=='&' appending to out; returns the next
+    * index. The body must be ASCII and end in ';' within a bounded
+    * window, else a literal '&' is emitted and one byte consumed. */
   private def decodeEntity(b: Array[Byte], i: Int, out: java.lang.StringBuilder): Int = {
     val n = b.length
     var j = i + 1
@@ -270,5 +308,37 @@ object ByteHtmlTokenizer {
       case null => out.append('&'); i + 1
       case rep  => out.append(rep); semi + 1
     }
+  }
+}
+
+/** HTML character-entity decoding: core named set + numeric dec/hex.
+  * Unknown entities pass through literally (forgiving).
+  */
+object Entities {
+  private val named: Map[String, String] = Map(
+    "amp" -> "&", "lt" -> "<", "gt" -> ">", "quot" -> "\"", "apos" -> "'",
+    "nbsp" -> " ", "mdash" -> "—", "ndash" -> "–",
+    "hellip" -> "…", "rsquo" -> "’", "lsquo" -> "‘",
+    "ldquo" -> "“", "rdquo" -> "”", "copy" -> "©",
+    "reg" -> "®", "trade" -> "™", "euro" -> "€",
+    "pound" -> "£", "cent" -> "¢", "sect" -> "§",
+    "middot" -> "·", "laquo" -> "«", "raquo" -> "»",
+    "times" -> "×", "deg" -> "°", "shy" -> ""
+  )
+
+  /** Decode an entity body (between '&' and ';'): the replacement
+    * string, "" for a parsed-but-invalid numeric reference (consumed,
+    * nothing emitted), or null for an unrecognized entity (caller
+    * emits a literal '&' and advances one char). */
+  def decodeBody(body: String): String = {
+    if (body.startsWith("#")) {
+      val num = body.substring(1)
+      try {
+        val cp =
+          if (num.startsWith("x") || num.startsWith("X")) Integer.parseInt(num.substring(1), 16)
+          else Integer.parseInt(num)
+        if (cp > 0 && Character.isValidCodePoint(cp)) new String(Character.toChars(cp)) else ""
+      } catch { case _: NumberFormatException => null }
+    } else named.getOrElse(body, null)
   }
 }

@@ -308,20 +308,14 @@ object MainContentExtractor {
   final case class HtmlResult(
       text: String, spans: Array[Span], title: String,
       nBlocks: Int, nContentBlocks: Int, confidence: Double,
-      engine: String = "density", fallbackUsed: Boolean = false,
-      outLinks: Array[String] = Array.empty,
-      nLinksFound: Int = 0) // pre-cap href count (truncation audit)
+      engine: String, fallbackUsed: Boolean,
+      outLinks: Array[String],
+      nLinksFound: Int) // pre-cap href count (truncation audit)
 
   /** Early-exit threshold of the engine cascade — the reference's
     * ocr_confidence_threshold (/root/reference/ocrworker/config.py:38,
     * applied at hybrid.py:139). */
   val ConfidenceThreshold = 0.7
-
-  def extract(html: String): HtmlResult = {
-    val builder = new BlockBuilder
-    HtmlTokenizer.tokenize(html, builder)
-    cascade(builder)
-  }
 
   /** Per-thread scratch (builder + tokenizer text buffer) reused across
     * the documents of a partition — Spark runs one task per thread, so
@@ -330,59 +324,26 @@ object MainContentExtractor {
     ThreadLocal.withInitial[(BlockBuilder, java.lang.StringBuilder)](() =>
       (new BlockBuilder, new java.lang.StringBuilder(256)))
 
-  /** Byte-level entry: same result, skips the whole-document UTF-8
-    * decode (see [[ByteHtmlTokenizer]]). */
-  def extractBytes(html: Array[Byte]): HtmlResult = {
+  /** Strict-first extraction over the raw UTF-8 payload (the whole
+    * document is never decoded — see [[ByteHtmlTokenizer]]). */
+  def extractBytes(html: Array[Byte]): HtmlResult = cascade(tokenize(html), relaxedFirst = false)
+
+  /** Cascade with a routed STARTING engine (EngineSelector output):
+    * "density" is the default strict-first cascade; "density_relaxed"
+    * runs the recall engine first (selector.py's characteristics-based
+    * ordering — e.g. complex-script lang or poor-quality hint) and
+    * falls back to strict only below the confidence threshold. */
+  def extractBytesRouted(html: Array[Byte], startEngine: String): HtmlResult =
+    cascade(tokenize(html), relaxedFirst = startEngine == "density_relaxed")
+
+  private def tokenize(html: Array[Byte]): BlockBuilder = {
     val (builder, textBuf) = scratch.get()
     builder.reset()
     // same clamp as reset(): one pathological document must not grow
     // this thread's tokenizer text buffer for the executor's lifetime
     BlockBuilder.clampScratch(textBuf, BlockBuilder.MaxKeepChars)
     ByteHtmlTokenizer.tokenize(html, builder, textBuf)
-    cascade(builder)
-  }
-
-  /** Cascade with a routed STARTING engine (EngineSelector output):
-    * "density" is the default strict-first cascade; "density_relaxed"
-    * runs the recall engine first (selector.py's characteristics-based
-    * ordering — e.g. complex-script lang or poor-quality hint) and
-    * falls back to strict only below the confidence threshold, keeping
-    * the higher-confidence result exactly like [[cascade]]. The relaxed
-    * classifier applied to FRESH blocks is the pure relaxed criteria
-    * (its isContent ||= starts from false), so relaxed-first is a real
-    * engine order change, not a re-labelled strict run. */
-  def extractBytesRouted(html: Array[Byte], startEngine: String): HtmlResult = {
-    if (startEngine != "density_relaxed") extractBytes(html)
-    else {
-      val (builder, textBuf) = scratch.get()
-      builder.reset()
-      BlockBuilder.clampScratch(textBuf, BlockBuilder.MaxKeepChars)
-      ByteHtmlTokenizer.tokenize(html, builder, textBuf)
-      val (blocks, title) = builder.result()
-      val chars = builder.chars
-      val links = builder.links
-      val nFound = builder.linksFound
-      // same no-losing-assemble discipline as cascade(): confidences
-      // are pure functions of the block flags, so decide the winner on
-      // flag passes alone and build text+spans exactly once
-      DensityClassifier.classifyRelaxed(blocks)
-      val relaxedConf = confidenceOf(blocks)
-      if (relaxedConf >= ConfidenceThreshold)
-        assemble(blocks, title, chars, links, nFound).copy(engine = "density_relaxed")
-      else {
-        // strict assigns isContent directly, so re-classification is a
-        // clean second engine pass over the same block array
-        DensityClassifier.classify(blocks)
-        val strictConf = confidenceOf(blocks)
-        if (strictConf > relaxedConf)
-          assemble(blocks, title, chars, links, nFound).copy(fallbackUsed = true)
-        else {
-          // relaxed won: re-derive its flags (cheap) for the one assemble
-          DensityClassifier.classifyRelaxed(blocks)
-          assemble(blocks, title, chars, links, nFound).copy(engine = "density_relaxed")
-        }
-      }
-    }
+    builder
   }
 
   /** Mean content-block score — assemble's confidence without the
@@ -399,41 +360,49 @@ object MainContentExtractor {
     if (nContent == 0) 0.0 else scoreSum / nContent
   }
 
-  /** Confidence cascade (hybrid.py:123-161 semantics): run the strict
-    * density classifier; below the threshold, also run the relaxed
-    * fallback and keep the HIGHER-confidence result (strictly greater,
-    * like the reference's `result.confidence > best.confidence`). The
-    * tokenizer runs once — engines re-classify the same block array. */
-  private def cascade(builder: BlockBuilder): HtmlResult = {
+  /** Confidence cascade (hybrid.py:123-161 semantics): run the first
+    * engine; below the threshold, also run the other one and keep the
+    * HIGHER-confidence result (strictly greater, like the reference's
+    * `result.confidence > best.confidence` — ties keep the first
+    * engine). The tokenizer runs once — engines re-classify the same
+    * block array, and since confidences are pure functions of the
+    * block flags, the winner is decided on flag passes alone and text +
+    * spans are assembled exactly once.
+    *
+    * Strict assigns every flag, so it is the same engine over any
+    * prior state. Relaxed only ORs onto the flags it finds: after
+    * strict it is the strict ∪ relaxed fallback, and over fresh blocks
+    * it is the pure relaxed engine — so when relaxed-first still wins
+    * after the strict fallback, its flags are re-derived from cleared
+    * blocks. fallbackUsed marks that the second engine's OUTPUT was
+    * used. */
+  private def cascade(builder: BlockBuilder, relaxedFirst: Boolean): HtmlResult = {
     val (blocks, title) = builder.result()
-    val chars = builder.chars
-    val links = builder.links
-    val nFound = builder.linksFound
-    DensityClassifier.classify(blocks)
-    val strict = assemble(blocks, title, chars, links, nFound)
-    if (strict.confidence >= ConfidenceThreshold) strict
+    def first(): Unit =
+      if (relaxedFirst) {
+        blocks.foreach(_.isContent = false)
+        DensityClassifier.classifyRelaxed(blocks)
+      } else DensityClassifier.classify(blocks)
+    def result(relaxed: Boolean, fallbackUsed: Boolean): HtmlResult =
+      assemble(blocks, title, builder.chars, builder.links, builder.linksFound,
+        if (relaxed) "density_relaxed" else "density", fallbackUsed)
+    first()
+    val firstConf = confidenceOf(blocks)
+    if (firstConf >= ConfidenceThreshold) result(relaxedFirst, fallbackUsed = false)
     else {
-      DensityClassifier.classifyRelaxed(blocks)
-      // The winner check needs only the relaxed CONFIDENCE, which is a
-      // pure function of the block flags — assemble (the full text +
-      // span string build) only when the fallback actually wins, since
-      // on most corpora the strict engine keeps winning and the losing
-      // assemble was the single biggest allocation on the hot path.
-      val relaxedConf = confidenceOf(blocks)
-      // strictly greater, like the reference's `result.confidence >
-      // best.confidence` — ties keep the selected (first) engine.
-      // fallbackUsed marks that the fallback's OUTPUT was used.
-      if (relaxedConf > strict.confidence)
-        assemble(blocks, title, chars, links, nFound)
-          .copy(engine = "density_relaxed", fallbackUsed = true)
-      else strict
+      if (relaxedFirst) DensityClassifier.classify(blocks)
+      else DensityClassifier.classifyRelaxed(blocks)
+      if (confidenceOf(blocks) > firstConf) result(!relaxedFirst, fallbackUsed = true)
+      else { first(); result(relaxedFirst, fallbackUsed = false) }
     }
   }
 
   private def assemble(blocks: Array[Block], title: String,
                        chars: CharSequence,
                        links: Array[String],
-                       nLinksFound: Int): HtmlResult = {
+                       nLinksFound: Int,
+                       engine: String,
+                       fallbackUsed: Boolean): HtmlResult = {
     // presize exactly: growth-doubling on the output builder was pure
     // garbage at ~2x the text size per document
     var cap = 0
@@ -466,6 +435,6 @@ object MainContentExtractor {
       sb.toString, spans, title,
       blocks.length, nContent,
       if (nContent == 0) 0.0 else scoreSum / nContent,
-      outLinks = links, nLinksFound = nLinksFound)
+      engine, fallbackUsed, links, nLinksFound)
   }
 }

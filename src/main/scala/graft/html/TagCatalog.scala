@@ -2,12 +2,12 @@ package graft.html
 
 /** Canonical tag-name interning + precomputed dispatch flags.
   *
-  * Both tokenizers used to allocate a fresh lowercased String per tag
+  * The tokenizer used to allocate a fresh lowercased String per tag
   * event, and [[BlockBuilder]] then probed 4–5 Sets per event. At
   * hundreds of tag events per document × millions of documents that is
   * pure allocation/GC pressure — the residual suspect for the 8→32
   * core scaling gap (BENCH/BASELINE.md). The catalog resolves a
-  * lowered tag-name span (bytes or chars) to a shared canonical String
+  * lowered tag-name byte span to a shared canonical String
   * with an open-addressed, collision-verified table — zero allocation
   * for known tags — and precomputes the flag bitmask BlockBuilder
   * dispatches on, collapsing its per-event Set probes into one lookup.
@@ -72,7 +72,7 @@ object TagCatalog {
 
   /** Dispatch flags for a tag name (0 for unknown). One probe; String
     * hashCode is cached, equals hits the reference fast path when the
-    * name came from [[lookupBytes]]/[[lookupChars]]. */
+    * name came from [[lookupBytes]]. */
   def flags(name: String): Int = {
     var i = name.hashCode & Mask
     var n = names(i)
@@ -88,8 +88,8 @@ object TagCatalog {
     if (c >= 'A' && c <= 'Z') c + 32 else c.toInt
 
   /** Canonical String for the LOWERED tag-name bytes `[start, start+len)`,
-    * or null if unknown (caller allocates). Tag-name chars are ASCII by
-    * construction (isNameChar), so the char hash equals the byte hash. */
+    * or null if unknown (caller allocates). Tag-name bytes are ASCII by
+    * construction (isNameChar), so the byte hash equals the String hash. */
   def lookupBytes(b: Array[Byte], start: Int, len: Int): String = {
     var h = 0
     var k = start
@@ -109,34 +109,6 @@ object TagCatalog {
     var k = 0
     while (k < n.length) {
       if (n.charAt(k) != lowerB(b(start + k)).toChar) return false
-      k += 1
-    }
-    true
-  }
-
-  @inline private def lowerC(c: Char): Char =
-    if (c >= 'A' && c <= 'Z') (c + 32).toChar else c
-
-  /** Canonical String for the LOWERED tag-name chars `[start, end)` of
-    * `s`, or null if unknown. */
-  def lookupChars(s: String, start: Int, end: Int): String = {
-    var h = 0
-    var k = start
-    while (k < end) { h = h * 31 + lowerC(s.charAt(k)); k += 1 }
-    var i = h & Mask
-    var n = names(i)
-    while (n != null) {
-      if (n.length == end - start && eqChars(n, s, start)) return n
-      i = (i + 1) & Mask
-      n = names(i)
-    }
-    null
-  }
-
-  private def eqChars(n: String, s: String, start: Int): Boolean = {
-    var k = 0
-    while (k < n.length) {
-      if (n.charAt(k) != lowerC(s.charAt(start + k))) return false
       k += 1
     }
     true

@@ -749,8 +749,7 @@ object GraftQueries {
         import spark.implicits._
         payloads(spark, sfDir).flatMap { case (url, payload) =>
           if (payload.length == 0 || payload(0) != '<') Iterator.empty
-          else graft.html.AnchorHarvest
-            .anchors(new String(payload, java.nio.charset.StandardCharsets.UTF_8))
+          else graft.html.AnchorHarvest.anchors(payload)
             .iterator.map { case (href, lbl) => (url, href, lbl) }
         }.toDF("url", "link", "label")
     }

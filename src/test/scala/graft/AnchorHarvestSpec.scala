@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.html.AnchorHarvest
+import java.nio.charset.StandardCharsets.UTF_8
 
 /** Pure (no-Spark) tests of the WAT-style anchor-text harvest (q87's
   * map-side kernel). The corpus-level value check is the q87 DuckDB
@@ -11,7 +12,7 @@ import graft.html.AnchorHarvest
 class AnchorHarvestSpec extends AnyFunSuite {
 
   private def h(html: String): Seq[(String, String)] =
-    AnchorHarvest.anchors(html).toSeq
+    AnchorHarvest.anchors(html.getBytes(UTF_8)).toSeq
 
   test("absolute href captures with its visible label") {
     assert(h("""<p><a href="https://x.example/">Hello</a></p>""") ==
@@ -51,5 +52,13 @@ class AnchorHarvestSpec extends AnyFunSuite {
   test("empty labels are kept (image-only anchors exist in the wild)") {
     assert(h("""<a href="https://x/"><img src="i.png"></a>""") ==
       Seq(("https://x/", "")))
+  }
+
+  test("labels decode from raw bytes: multibyte kept, lone bad byte is U+FFFD") {
+    // 0xE9 is a three-byte lead whose continuation never comes
+    val html = "<a href=\"https://x/\">é漢字</a><a href=\"https://y/\">a".getBytes(UTF_8) ++
+      Array(0xE9.toByte) ++ "b</a>".getBytes(UTF_8)
+    assert(AnchorHarvest.anchors(html).toSeq ==
+      Seq(("https://x/", "é漢字"), ("https://y/", "a\uFFFDb")))
   }
 }

@@ -6,6 +6,7 @@ import graft.core.Extract
 import graft.gen.PageGen
 import graft.ops.Segmenter
 import graft.core.Span
+import java.nio.charset.StandardCharsets.UTF_8
 
 /** Engine cascade (confidence fallback), multi-document segmentation,
   * signature-card similarity. */
@@ -14,7 +15,7 @@ class CascadeSpec extends AnyFunSuite {
   test("high-confidence page early-exits on the strict engine") {
     val para = ("word " * 60).trim
     val html = s"<html><body><p>$para</p><p>$para</p></body></html>"
-    val r = MainContentExtractor.extract(html)
+    val r = MainContentExtractor.extractBytes(html.getBytes(UTF_8))
     assert(r.confidence >= MainContentExtractor.ConfidenceThreshold)
     assert(r.engine == "density" && !r.fallbackUsed)
   }
@@ -23,7 +24,7 @@ class CascadeSpec extends AnyFunSuite {
     // one lone short paragraph: strict rejects it (words <= 16, no
     // neighbors), text would be empty; relaxed rescues it
     val html = "<html><body><p>short lone note with seven words</p></body></html>"
-    val r = MainContentExtractor.extract(html)
+    val r = MainContentExtractor.extractBytes(html.getBytes(UTF_8))
     assert(r.fallbackUsed, "fallback must fire")
     assert(r.engine == "density_relaxed")
     assert(r.text == "short lone note with seven words")
@@ -35,7 +36,7 @@ class CascadeSpec extends AnyFunSuite {
     // fallback must not lose it even though 3 <= 5 words
     val para = ("word " * 60).trim
     val html = s"<html><body><p>tiny head note</p><p>$para</p><p>second note x</p></body></html>"
-    val r = MainContentExtractor.extract(html)
+    val r = MainContentExtractor.extractBytes(html.getBytes(UTF_8))
     assert(r.text.contains("tiny head note"))
     assert(r.text.contains(para))
   }
@@ -46,7 +47,7 @@ class CascadeSpec extends AnyFunSuite {
     val para = ("word " * 60).trim
     val links = (1 to 12).map(i => s"""<li><a href="/$i">x y</a></li>""").mkString
     val html = s"<html><body><ul>$links</ul><p>$para</p></body></html>"
-    val strictOnly = MainContentExtractor.extract(html)
+    val strictOnly = MainContentExtractor.extractBytes(html.getBytes(UTF_8))
     assert(strictOnly.text.contains("word"))
     assert(!strictOnly.text.contains("x y"))
   }
@@ -90,6 +91,20 @@ class CascadeSpec extends AnyFunSuite {
     // routing to "density" is byte-identical to the default path
     val viaDefault = MainContentExtractor.extractBytesRouted(html, "density")
     assert(viaDefault.text == strictFirst.text && viaDefault.engine == strictFirst.engine)
+  }
+
+  test("relaxed-first winner after the strict fallback is pure relaxed") {
+    // relaxed alone accepts block 1 only (score 10/40); strict accepts
+    // block 2 only via the prev-words rule (3/40) and loses, so the
+    // output is relaxed's — not strict ∪ relaxed at their mixed mean
+    val words = (1 to 10).map(i => s"w$i").mkString(" ")
+    val html = s"<html><body><p>$words</p><p>one two three</p></body></html>".getBytes(UTF_8)
+    val r = MainContentExtractor.extractBytesRouted(html, "density_relaxed")
+    assert(r.engine == "density_relaxed" && !r.fallbackUsed)
+    assert(r.text == words)
+    assert(r.confidence == 0.25)
+    // strict-first keeps the superset fallback: both blocks
+    assert(MainContentExtractor.extractBytes(html).text == s"$words\none two three")
   }
 
   test("routed extraction end-to-end: complex-lang page starts relaxed, default path unchanged") {

@@ -21,14 +21,14 @@ class ExtractCoreSpec extends AnyFunSuite {
         |<!-- a > comment -->
         |<p data-x="a>b">Alpha &amp; beta &mdash; gamma &#65; &hellip; end of the first long paragraph which has quite many words to count here today.</p>
         |</body></html>""".stripMargin
-    val r = MainContentExtractor.extract(html)
+    val r = MainContentExtractor.extractBytes(html.getBytes(UTF_8))
     assert(r.title == "T & Co")
     assert(r.text == "Alpha & beta — gamma A … end of the first long paragraph which has quite many words to count here today.")
     assert(r.spans.length == 1)
     assert(r.spans(0).start == 0 && r.spans(0).end == r.text.length)
   }
 
-  test("tokenizer: out-link capture — absolute only, quote styles, first wins, both tokenizers") {
+  test("tokenizer: out-link capture — absolute only, quote styles, first wins") {
     val html =
       """<html><body>
         |<a href="https://a.example/p">one</a>
@@ -46,11 +46,9 @@ class ExtractCoreSpec extends AnyFunSuite {
       "https://a.example/p", "https://b.example", "https://c.example/q",
       "HTTPS://D.EXAMPLE/X", "https://first.example", "https://real.example",
       "https://kept.example")
-    val a = MainContentExtractor.extract(html)
-    val b = MainContentExtractor.extractBytes(html.getBytes(UTF_8))
-    assert(a.outLinks.toSeq == expected)
-    assert(b.outLinks.toSeq == expected)
-    assert(a.nLinksFound == expected.size) // no truncation on a normal page
+    val r = MainContentExtractor.extractBytes(html.getBytes(UTF_8))
+    assert(r.outLinks.toSeq == expected)
+    assert(r.nLinksFound == expected.size) // no truncation on a normal page
   }
 
   test("out-link cap is audited, never silent: a link farm truncates at MaxOutLinks with n_links_found > size") {
@@ -78,7 +76,7 @@ class ExtractCoreSpec extends AnyFunSuite {
 
   test("tokenizer: unclosed tags and stray '<' never throw") {
     val html = "<body><p>one two three four five six seven eight nine ten eleven twelve thirteen fourteen fifteen sixteen seventeen\n<p>a < b still text of the second paragraph with plenty of words to be considered as content here too</body>"
-    val r = MainContentExtractor.extract(html)
+    val r = MainContentExtractor.extractBytes(html.getBytes(UTF_8))
     assert(r.nBlocks == 2)
     assert(r.text.contains("a < b"))
   }
@@ -87,14 +85,14 @@ class ExtractCoreSpec extends AnyFunSuite {
     val nav = """<nav><ul><li><a href="/">Home</a></li><li><a href="/x">News</a></li></ul></nav>"""
     val para = "word " * 50
     val html = s"<html><body>$nav<p>$para</p><footer><p>Copyright legal words repeated many many many many many many many many many many many many many many many times</p></footer></body></html>"
-    val r = MainContentExtractor.extract(html)
+    val r = MainContentExtractor.extractBytes(html.getBytes(UTF_8))
     assert(r.text == para.trim)
   }
 
   test("classifier: heading directly above content is promoted") {
     val para = ("alpha " * 45).trim
     val html = s"<body><h2>Section Heading</h2><p>$para</p></body>"
-    val r = MainContentExtractor.extract(html)
+    val r = MainContentExtractor.extractBytes(html.getBytes(UTF_8))
     assert(r.text == s"Section Heading\n$para")
     assert(r.spans(0).kind == "heading")
   }
@@ -201,7 +199,7 @@ class ExtractCoreSpec extends AnyFunSuite {
   test("regression: unclosed <title> does not swallow the document") {
     val para = ("word " * 45).trim
     val html = s"<html><head><title>Foo</head><body><p>$para</p></body></html>"
-    val r = MainContentExtractor.extract(html)
+    val r = MainContentExtractor.extractBytes(html.getBytes(UTF_8))
     assert(r.title == "Foo")
     assert(r.text == para)
   }
@@ -209,7 +207,7 @@ class ExtractCoreSpec extends AnyFunSuite {
   test("regression: numeric NBSP (&#160;) separates words and collapses") {
     val para = ("word " * 40).trim
     val html = s"<body><p>alpha&#160;beta $para</p></body>"
-    val r = MainContentExtractor.extract(html)
+    val r = MainContentExtractor.extractBytes(html.getBytes(UTF_8))
     assert(r.text.startsWith("alpha beta "))
   }
 
@@ -230,7 +228,7 @@ class ExtractCoreSpec extends AnyFunSuite {
     val para = ("word " * 45).trim
     val html = s"<html><head><title>Page</title></head><body><p>$para</p>" +
       "<svg><title>icon</title></svg></body></html>"
-    val r = MainContentExtractor.extract(html)
+    val r = MainContentExtractor.extractBytes(html.getBytes(UTF_8))
     assert(r.title == "Page")
   }
 

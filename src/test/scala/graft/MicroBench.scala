@@ -40,11 +40,6 @@ object MicroBench {
     println(s"cascade: lowconf=${rs.count(_.confidence < 0.7)} fallbackWon=${rs.count(_.fallbackUsed)} of ${rs.size}")
     time("html", htmls.size, hb) { htmls.foreach(Extract(_)) }
     time("pdf ", pdfs.size, pb) { pdfs.foreach(Extract(_)) }
-    // tokenizer-only vs classify+assemble
-    val strs = htmls.map(p => new String(p.html, java.nio.charset.StandardCharsets.UTF_8))
-    time("tokenize+blocks", strs.size, hb) {
-      strs.foreach { s => val b = new graft.html.BlockBuilder; graft.html.HtmlTokenizer.tokenize(s, b); b.result() }
-    }
-    time("decode utf8", strs.size, hb) { htmls.foreach(p => new String(p.html, java.nio.charset.StandardCharsets.UTF_8)) }
+    time("decode utf8", htmls.size, hb) { htmls.foreach(p => new String(p.html, java.nio.charset.StandardCharsets.UTF_8)) }
   }
 }

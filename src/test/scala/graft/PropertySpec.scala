@@ -54,7 +54,7 @@ class PropertySpec extends AnyFunSuite {
       Gen.const("<!--"), Gen.const("<script>"), Gen.const("</script>"),
       Gen.const("<p>"), Gen.const(" "))).map(_.mkString)
     forAll(tagSoup, minSuccessful(200)) { s =>
-      val r = MainContentExtractor.extract(s)
+      val r = MainContentExtractor.extractBytes(s.getBytes(UTF_8))
       assert(r.text != null && r.nBlocks >= 0)
     }
   }
@@ -128,7 +128,7 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
-  test("byte tokenizer ≡ string tokenizer on arbitrary multibyte tag soup") {
+  test("byte tokenizer invariants on arbitrary multibyte tag soup") {
     val soup = Gen.listOf(Gen.oneOf(
       Gen.alphaNumStr, Gen.const("<"), Gen.const(">"), Gen.const("</"),
       Gen.const("<div class=\"a>b\">"), Gen.const("&amp;"), Gen.const("&#233;"),
@@ -143,12 +143,22 @@ class PropertySpec extends AnyFunSuite {
       Gen.const("<a href"), Gen.const("href=\"https://stray.example\""),
       Gen.const("<a title=\"href=https://fake\" href=\"https://real.example\">"))).map(_.mkString)
     forAll(soup, minSuccessful(300)) { s =>
-      val a = MainContentExtractor.extract(s)
-      val b = MainContentExtractor.extractBytes(s.getBytes(UTF_8))
-      assert(a.text == b.text, s"text diverged on: ${s.take(200)}")
-      assert(a.nBlocks == b.nBlocks && a.title == b.title)
-      assert(a.outLinks.toSeq == b.outLinks.toSeq,
-        s"out-links diverged on: ${s.take(200)}")
+      val bytes = s.getBytes(UTF_8)
+      val a = MainContentExtractor.extractBytes(bytes)
+      assert(a.text != null && a.nBlocks >= 0)
+      assert(a.spans.forall(sp => sp.start >= 0 && sp.start <= sp.end && sp.end <= a.text.length),
+        s"span outside the text on: ${s.take(200)}")
+      a.outLinks.foreach { l =>
+        val lower = l.toLowerCase(java.util.Locale.ROOT)
+        assert(lower.startsWith("http://") || lower.startsWith("https://"), s"relative out-link $l")
+        assert(s.contains(l), s"out-link $l not verbatim in: ${s.take(200)}")
+      }
+      // the second call reuses the per-thread scratch the first one grew
+      val b = MainContentExtractor.extractBytes(bytes)
+      assert(java.util.Arrays.equals(a.text.getBytes(UTF_8), b.text.getBytes(UTF_8)),
+        s"text not deterministic on: ${s.take(200)}")
+      assert(a.spans.toSeq == b.spans.toSeq && a.title == b.title && a.nBlocks == b.nBlocks)
+      assert(a.outLinks.toSeq == b.outLinks.toSeq && a.confidence == b.confidence)
     }
   }
 
