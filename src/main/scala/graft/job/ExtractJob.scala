@@ -38,9 +38,9 @@ import graft.gen.PageGen
 object ExtractJob {
 
   /** Read the input table as the typed Dataset pinned by input_hint. */
-  def readPages(spark: SparkSession, path: String): Dataset[Page] = {
+  def readPages(spark: SparkSession, paths: String*): Dataset[Page] = {
     import spark.implicits._
-    spark.read.parquet(path)
+    spark.read.parquet(paths: _*)
       .select("url", "warc_ts", "html", "text", "lang")
       .as[Page]
   }
@@ -74,69 +74,79 @@ object ExtractJob {
       saltBuckets: Int = 8,
       rowLevelResume: Boolean = true,
       routedSelection: Boolean = false,
-      signatureArtifacts: Boolean = false): Snapshot = {
-    import spark.implicits._
-    SnapshotStore.acquireLock(outRoot) // single-writer commit protocol
-    try {
+      signatureArtifacts: Boolean = false): Snapshot =
+    ingest(outRoot, if (routedSelection) "routed" else "strict", numPartitions,
+      saltBuckets, rowLevelResume, signatureArtifacts)(
+      spark.read.parquet(pagesPath).inputFiles.toSeq.sorted,
+      files => readPages(spark, files: _*))
 
-    // ---- chain-identity guard: routing mode + extraction version are
-    // part of the table's identity (see requireCompatibleChain)
-    val routingMode = if (routedSelection) "routed" else "strict"
-    requireCompatibleChain(outRoot, routingMode)
+  /** The one ingest body behind [[run]] and [[runWarc]], which differ
+    * only in how they list input files and read them into pages:
+    * lock → read the chain once → chain guard → file-level resume →
+    * 0-row no-op commit → row-level net → extract → commit. */
+  private def ingest(outRoot: String, routingMode: String, numPartitions: Int,
+                     saltBuckets: Int, rowLevelResume: Boolean, signatureArtifacts: Boolean)(
+      listFiles: => Seq[String], readFiles: Seq[String] => Dataset[Page]): Snapshot =
+    withLock(outRoot) {
+      val chain = SnapshotStore.chain(outRoot)
+      requireCompatibleChain(outRoot, chain, routingMode)
 
-    // ---- file-level resume (S7): scan only uncommitted input files ----
-    // O(#files) driver-side set arithmetic; at 10^12 rows this replaces
-    // a full-table anti-join that would shuffle the payload column.
-    val allFiles = spark.read.parquet(pagesPath).inputFiles.toSeq.sorted
-    val committedInputs = SnapshotStore.committedInputFiles(outRoot)
-    val pendingFiles = allFiles.filterNot(committedInputs.contains)
+      // ---- file-level resume (S7): scan only uncommitted input files ----
+      // O(#files) driver-side set arithmetic; at 10^12 rows this replaces
+      // a full-table anti-join that would shuffle the payload column.
+      val allFiles = listFiles
+      val committedInputs = SnapshotStore.committedInputFiles(chain)
+      val pendingFiles = allFiles.filterNot(committedInputs.contains)
 
-    val (seq, dataDir) = SnapshotStore.nextDataDir(outRoot)
-    if (pendingFiles.isEmpty) {
-      SnapshotStore.deleteRecursively(dataDir) // clear any crashed writer's leftovers
-      val snap = Snapshot(seq, seq - 1, ExtractionVersion.current, dataDir,
-        Nil, 0L, allFiles, routingMode)
-      SnapshotStore.commit(outRoot, snap)
-      return snap
+      val (seq, dataDir) = SnapshotStore.nextDataDir(outRoot, chain)
+      if (pendingFiles.isEmpty) {
+        SnapshotStore.deleteRecursively(dataDir) // clear any crashed writer's leftovers
+        val snap = Snapshot(seq, seq - 1, ExtractionVersion.current, dataDir,
+          Nil, 0L, allFiles, routingMode)
+        SnapshotStore.commit(outRoot, snap)
+        snap
+      } else {
+        // ---- row-level safety net: exactness if input files were
+        // rewritten. Turn OFF at full scale, where file bookkeeping is
+        // authoritative and the committed url set no longer fits a join.
+        val committedDirs = SnapshotStore.dataDirs(outRoot, chain)
+        val scanned = readFiles(pendingFiles)
+        val pending = if (rowLevelResume) unseen(scanned, committedDirs) else scanned
+
+        // ---- extraction on scan splits (map-side; the html payload never
+        // crosses a shuffle; parallelism governed by maxPartitionBytes).
+        // "routed" = the EngineSelector strategy option: the cascade
+        // STARTS from the engine the document's characteristics pick
+        // (default off — the strict-first path is the byte-identity
+        // golden contract) ----
+        val extracted =
+          if (routingMode == "routed") extractRoutedDS(pending) else extractDS(pending)
+
+        // S6 companion: signature SVG artifacts (signature_extractor.py's
+        // vector output). A SIBLING scan of the raw payload — form detection
+        // needs the html the snapshot no longer carries — so it is opt-in
+        // and never taxes the flagship extraction scan (see SignatureSvg
+        // scaladoc for the 100 TB fusion note).
+        val sigSvgs =
+          if (signatureArtifacts) Some(graft.forms.SignatureSvg.svgs(pending))
+          else None
+
+        commitSnapshot(extracted, outRoot, seq, dataDir, pendingFiles,
+          numPartitions, saltBuckets, routingMode, signatureSvgs = sigSvgs)
+      }
     }
 
-    val scanned = spark.read.parquet(pendingFiles: _*)
-      .select("url", "warc_ts", "html", "text", "lang").as[Page]
+  /** Row-level net: the rows of `ds` whose url no committed data dir
+    * holds. The committed side reads only the url column (payload-free). */
+  private def unseen[T](ds: Dataset[T], committedDirs: Seq[String]): Dataset[T] =
+    if (committedDirs.isEmpty) ds
+    else ds.join(ds.sparkSession.read.parquet(committedDirs: _*).select("url"),
+      Seq("url"), "left_anti").as[T](ds.encoder)
 
-    // ---- row-level safety net: exactness if input files were rewritten.
-    // The committed side reads only the url column of prior snapshots
-    // (payload-free). Turn OFF at full scale, where file bookkeeping is
-    // authoritative and the committed url set no longer fits a join.
-    val committedDirs = SnapshotStore.dataDirs(outRoot)
-    val pending: Dataset[Page] =
-      if (!rowLevelResume || committedDirs.isEmpty) scanned
-      else {
-        val committed = spark.read.parquet(committedDirs: _*).select("url")
-        scanned.join(committed, Seq("url"), "left_anti").as[Page]
-      }
-
-    // ---- extraction on scan splits (map-side; the html payload never
-    // crosses a shuffle; parallelism governed by maxPartitionBytes).
-    // routedSelection = the EngineSelector strategy option: the cascade
-    // STARTS from the engine the document's characteristics pick
-    // (default off — the strict-first path is the byte-identity
-    // golden contract) ----
-    val extracted =
-      if (routedSelection) extractRoutedDS(pending)
-      else pending.mapPartitions { it => it.map(p => Extract(p)) }
-
-    // S6 companion: signature SVG artifacts (signature_extractor.py's
-    // vector output). A SIBLING scan of the raw payload — form detection
-    // needs the html the snapshot no longer carries — so it is opt-in
-    // and never taxes the flagship extraction scan (see SignatureSvg
-    // scaladoc for the 100 TB fusion note).
-    val sigSvgs =
-      if (signatureArtifacts) Some(graft.forms.SignatureSvg.svgs(pending))
-      else None
-
-    commitSnapshot(extracted, outRoot, seq, dataDir, pendingFiles,
-      numPartitions, saltBuckets, routingMode, signatureSvgs = sigSvgs)
-    } finally SnapshotStore.releaseLock(outRoot)
+  /** Single-writer commit protocol around one writing entry point. */
+  private def withLock[A](outRoot: String)(body: => A): A = {
+    SnapshotStore.acquireLock(outRoot)
+    try body finally SnapshotStore.releaseLock(outRoot)
   }
 
   /** Publish the WET sidecar for ONE committed snapshot: its
@@ -150,16 +160,12 @@ object ExtractJob {
     * sweeps stale segments first). Returns the number of records
     * written — counted by the write job itself, not a second scan.
     * Roundtrip fidelity is value-checked corpus-wide by q100's oracle. */
-  def emitWet(spark: SparkSession, snap: Snapshot, wetRoot: String): Long =
-    emitWetFor(spark, snap.sequence, snap.dataDir, snap.rowCount, wetRoot)
-
-  private def emitWetFor(spark: SparkSession, seq: Int, dataDir: String,
-                         rowCount: Long, wetRoot: String): Long = {
-    if (rowCount == 0L) return 0L
-    val dir = s"$wetRoot/wet-$seq"
+  def emitWet(spark: SparkSession, snap: Snapshot, wetRoot: String): Long = {
+    if (snap.rowCount == 0L) return 0L
+    val dir = s"$wetRoot/wet-${snap.sequence}"
     if (graft.sources.Wet.isComplete(dir)) return 0L
     import spark.implicits._
-    val recs = spark.read.parquet(dataDir)
+    val recs = spark.read.parquet(snap.dataDir)
       .filter(col("error").isNull)
       .select(col("url"), col("warc_ts"), col("lang"),
         col("extracted_text").as("text"))
@@ -177,26 +183,20 @@ object ExtractJob {
     * was expired post-compaction can no longer be reconstructed —
     * that is reported loudly, never silently skipped. */
   def emitWetMissing(spark: SparkSession, outRoot: String,
-                     wetRoot: String): Long = {
-    val cur = SnapshotStore.currentSequence(outRoot)
-    var total = 0L
-    var seq = 1
-    while (seq <= cur) {
-      val (dataDir, rows, replaces) = SnapshotStore.snapshotInfo(outRoot, seq)
-      if (replaces == 0L && rows > 0L &&
-          !graft.sources.Wet.isComplete(s"$wetRoot/wet-$seq")) {
-        SnapshotStore.resolveDataDir(outRoot, dataDir) match {
+                     wetRoot: String): Long =
+    SnapshotStore.chain(outRoot).iterator
+      .filter(s => s.replaces == 0 && s.rowCount > 0L &&
+        !graft.sources.Wet.isComplete(s"$wetRoot/wet-${s.sequence}"))
+      .map { s =>
+        SnapshotStore.resolveDataDir(outRoot, s.dataDir) match {
           case None =>
-            System.err.println(s"[graft] WET catch-up: snapshot v$seq data dir " +
-              s"$dataDir no longer exists (expired after compaction) — its " +
+            System.err.println(s"[graft] WET catch-up: snapshot v${s.sequence} data dir " +
+              s"${s.dataDir} no longer exists (expired after compaction) — its " +
               "sidecar cannot be reconstructed")
-          case Some(d) => total += emitWetFor(spark, seq, d, rows, wetRoot)
+            0L
+          case Some(d) => emitWet(spark, s.copy(dataDir = d), wetRoot)
         }
-      }
-      seq += 1
-    }
-    total
-  }
+      }.sum
 
   /** Raw-WARC run with FILE-MANIFEST resume — the same O(#segments)
     * bookkeeping the parquet path uses (round-3 VERDICT "missing" #1:
@@ -205,43 +205,18 @@ object ExtractJob {
     * file-granular design eliminates). Segment paths consumed by each
     * snapshot are recorded in its manifest; a re-run scans ONLY
     * still-unconsumed segments, with the row-level net kept as the
-    * optional safety layer for rewritten segments. */
+    * optional safety layer for rewritten segments. WARC ingestion
+    * extracts strict-first. */
   def runWarc(
       spark: SparkSession,
       warcDir: String,
       outRoot: String,
       numPartitions: Int = 0,
       saltBuckets: Int = 8,
-      rowLevelResume: Boolean = true): Snapshot = {
-    import spark.implicits._
-    SnapshotStore.acquireLock(outRoot)
-    try {
-      requireCompatibleChain(outRoot, "strict") // WARC ingestion extracts strict-first
-      val allFiles = graft.sources.Warc.listSegments(spark, warcDir)
-      val committedInputs = SnapshotStore.committedInputFiles(outRoot)
-      val pendingFiles = allFiles.filterNot(committedInputs.contains)
-
-      val (seq, dataDir) = SnapshotStore.nextDataDir(outRoot)
-      if (pendingFiles.isEmpty) {
-        SnapshotStore.deleteRecursively(dataDir)
-        val snap = Snapshot(seq, seq - 1, ExtractionVersion.current, dataDir,
-          Nil, 0L, allFiles)
-        SnapshotStore.commit(outRoot, snap)
-        return snap
-      }
-
-      val pages = graft.sources.Warc.readPagesFiles(spark, pendingFiles)
-      val committedDirs = SnapshotStore.dataDirs(outRoot)
-      val pending: Dataset[Page] =
-        if (!rowLevelResume || committedDirs.isEmpty) pages
-        else {
-          val committed = spark.read.parquet(committedDirs: _*).select("url")
-          pages.join(committed, Seq("url"), "left_anti").as[Page]
-        }
-      commitSnapshot(extractDS(pending), outRoot, seq, dataDir, pendingFiles,
-        numPartitions, saltBuckets)
-    } finally SnapshotStore.releaseLock(outRoot)
-  }
+      rowLevelResume: Boolean = true): Snapshot =
+    ingest(outRoot, "strict", numPartitions, saltBuckets, rowLevelResume, signatureArtifacts = false)(
+      graft.sources.Warc.listSegments(spark, warcDir),
+      graft.sources.Warc.readPagesFiles(spark, _))
 
   /** Streaming entry: commit one micro-batch of extracted docs as the
     * next snapshot (input-file bookkeeping handled by the streaming
@@ -250,23 +225,14 @@ object ExtractJob {
     * the commit idempotent. */
   def appendSnapshot(extracted: Dataset[ExtractedDoc], outRoot: String,
                      numPartitions: Int = 0, saltBuckets: Int = 8,
-                     routingMode: String = "strict"): Snapshot = {
-    val spark = extracted.sparkSession
-    import spark.implicits._
-    SnapshotStore.acquireLock(outRoot) // single-writer commit protocol
-    try {
-      requireCompatibleChain(outRoot, routingMode)
-      val (seq, dataDir) = SnapshotStore.nextDataDir(outRoot)
-      val committedDirs = SnapshotStore.dataDirs(outRoot)
-      val deduped =
-        if (committedDirs.isEmpty) extracted
-        else {
-          val committed = spark.read.parquet(committedDirs: _*).select("url")
-          extracted.join(committed, Seq("url"), "left_anti").as[ExtractedDoc]
-        }
-      commitSnapshot(deduped, outRoot, seq, dataDir, Nil, numPartitions, saltBuckets, routingMode)
-    } finally SnapshotStore.releaseLock(outRoot)
-  }
+                     routingMode: String = "strict"): Snapshot =
+    withLock(outRoot) {
+      val chain = SnapshotStore.chain(outRoot)
+      requireCompatibleChain(outRoot, chain, routingMode)
+      val (seq, dataDir) = SnapshotStore.nextDataDir(outRoot, chain)
+      commitSnapshot(unseen(extracted, SnapshotStore.dataDirs(outRoot, chain)), outRoot,
+        seq, dataDir, Nil, numPartitions, saltBuckets, routingMode)
+    }
 
   /** The one chain-identity guard every writing entry point shares
     * (run / runWarc / appendSnapshot — compaction intentionally not:
@@ -282,17 +248,18 @@ object ExtractJob {
     * different bytes/schema than the new files' rows. Re-extract to a
     * new outRoot on kernel upgrades (the reference's analog: a new
     * DocumentVersion per OCR run, never an in-place mix).
-    * Both fields come from ONE manifest pass; 0-row snapshots carry no
-    * bytes and pin nothing. */
-  private def requireCompatibleChain(outRoot: String, routingMode: String): Unit = {
-    val (committedRouting, committedVersion) = SnapshotStore.chainIdentity(outRoot)
-    committedRouting.foreach { committed =>
+    * Both fields come from the caller's decoded chain; 0-row snapshots
+    * carry no bytes and pin nothing. */
+  private def requireCompatibleChain(outRoot: String, chain: Seq[Snapshot],
+                                     routingMode: String): Unit = {
+    val (chainRouting, chainVersion) = SnapshotStore.chainIdentity(outRoot, chain)
+    chainRouting.foreach { committed =>
       require(committed == routingMode,
         s"outRoot $outRoot was extracted with routing=$committed; continuing with " +
           s"routing=$routingMode would mix extraction outputs — use a new outRoot " +
           "or re-extract from scratch")
     }
-    committedVersion.foreach { committed =>
+    chainVersion.foreach { committed =>
       require(committed == ExtractionVersion.current,
         s"outRoot $outRoot was extracted with $committed; this build is " +
           s"${ExtractionVersion.current} — continuing would mix extraction kernels; " +
@@ -324,18 +291,15 @@ object ExtractJob {
     *    corrupt the chain under its own mixed-version check (a newer
     *    binary may legitimately compact an old table). */
   def compact(spark: SparkSession, outRoot: String,
-              numPartitions: Int = 0, saltBuckets: Int = 8): Snapshot = {
-    import spark.implicits._
-    SnapshotStore.acquireLock(outRoot)
-    try {
-      val current = SnapshotStore.currentSequence(outRoot)
-      require(current >= 1, s"nothing to compact at $outRoot")
-      val dirs = SnapshotStore.dataDirs(outRoot)
+              numPartitions: Int = 0, saltBuckets: Int = 8): Snapshot =
+    withLock(outRoot) {
+      import spark.implicits._
+      val chain = SnapshotStore.chain(outRoot)
+      require(chain.nonEmpty, s"nothing to compact at $outRoot")
+      val dirs = SnapshotStore.dataDirs(outRoot, chain)
       require(dirs.nonEmpty, s"no live data dirs at $outRoot")
-      val routingMode = SnapshotStore.committedRouting(outRoot).getOrElse("strict")
-      val chainVersion = SnapshotStore.committedExtractionVersion(outRoot)
-        .getOrElse(ExtractionVersion.current)
-      val (seq, dataDir) = SnapshotStore.nextDataDir(outRoot)
+      val (routingMode, chainVersion) = SnapshotStore.chainIdentity(outRoot, chain)
+      val (seq, dataDir) = SnapshotStore.nextDataDir(outRoot, chain)
       // a genuinely pre-v3 chain may LACK columns newer kernels added
       // (out_links arrived in graft-extract-3): fill schema gaps with
       // typed empties before the encoder, so "a newer binary may
@@ -355,11 +319,10 @@ object ExtractJob {
       }
       val table = filled.as[ExtractedDoc]
       commitSnapshot(table, outRoot, seq, dataDir,
-        SnapshotStore.committedInputFiles(outRoot).toSeq.sorted,
-        numPartitions, saltBuckets, routingMode, replaces = current,
-        extractionVersion = chainVersion)
-    } finally SnapshotStore.releaseLock(outRoot)
-  }
+        SnapshotStore.committedInputFiles(chain).toSeq.sorted,
+        numPartitions, saltBuckets, routingMode.getOrElse("strict"), replaces = chain.size,
+        extractionVersion = chainVersion.getOrElse(ExtractionVersion.current))
+    }
 
   /** The output clustering key — codegen'd salted host (never the
     * interpreted ParseUrl; see [[graft.ops.Hosts]]). Public so PlanSpec
@@ -508,13 +471,7 @@ object ExtractJob {
     val current = SnapshotStore.currentSequence(outRoot)
     require(seq >= 1 && seq <= current,
       s"unknown snapshot seq=$seq at $outRoot (committed: 1..$current)")
-    val dirs = SnapshotStore.dataDirs(outRoot, upTo = seq)
-    if (dirs.nonEmpty) spark.read.parquet(dirs: _*)
-    else {
-      import spark.implicits._
-      spark.emptyDataset[ExtractedDoc].toDF()
-        .withColumn("partition_id", org.apache.spark.sql.functions.lit(0).cast("int"))
-    }
+    readDirs(spark, SnapshotStore.dataDirs(outRoot, upTo = seq))
   }
 
   /** Incremental consumption: ONLY the rows added by snapshots
@@ -524,15 +481,16 @@ object ExtractJob {
     * processed and reads just the delta — O(batch) instead of
     * O(table) per cycle). Compaction snapshots add no rows and are
     * skipped; an empty window is a valid EMPTY table. */
-  def readChanges(spark: SparkSession, outRoot: String, fromSeq: Int, toSeq: Int): DataFrame = {
-    val dirs = SnapshotStore.changedDataDirs(outRoot, fromSeq, toSeq)
+  def readChanges(spark: SparkSession, outRoot: String, fromSeq: Int, toSeq: Int): DataFrame =
+    readDirs(spark, SnapshotStore.changedDataDirs(outRoot, fromSeq, toSeq))
+
+  /** Union of committed data dirs; no dirs is a valid EMPTY table. */
+  private def readDirs(spark: SparkSession, dirs: Seq[String]): DataFrame =
     if (dirs.nonEmpty) spark.read.parquet(dirs: _*)
     else {
       import spark.implicits._
-      spark.emptyDataset[ExtractedDoc].toDF()
-        .withColumn("partition_id", org.apache.spark.sql.functions.lit(0).cast("int"))
+      spark.emptyDataset[ExtractedDoc].toDF().withColumn("partition_id", lit(0).cast("int"))
     }
-  }
 
   /** Generate the deterministic synthetic pages table (distributed:
     * each row is a pure function of (seed, index)). `start` > 0 with

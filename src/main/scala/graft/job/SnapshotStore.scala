@@ -20,6 +20,12 @@ import scala.jdk.CollectionConverters._
   *   <root>/data/snap-<seq>/...parquet       immutable per-snapshot data
   *   <root>/snapshots/v<seq>.json            manifest (lineage + files)
   *   <root>/version-hint.text                current sequence (atomic)
+  *
+  * Manifests are written by one renderer and read by one decoder:
+  * [[SnapshotStore.chain]] decodes `v1..v<current>` once into
+  * [[Snapshot]] values, and every chain question (live data dirs,
+  * change windows, chain identity, consumed inputs, expiry) is a
+  * function over that decoded sequence, never a re-read of the text.
   */
 final case class PartitionLineage(
     partitionId: Int,
@@ -30,7 +36,7 @@ final case class PartitionLineage(
 
 final case class Snapshot(
     sequence: Int,
-    parent: Int,              // -1 for first
+    parent: Int,              // sequence - 1; 0 for the first
     extractionVersion: String,
     dataDir: String,
     partitions: Seq[PartitionLineage],
@@ -42,72 +48,74 @@ final case class Snapshot(
 
 object SnapshotStore {
 
+  private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
+
   def currentSequence(root: String): Int = {
     val hint = Paths.get(root, "version-hint.text")
     if (Files.exists(hint)) new String(Files.readAllBytes(hint), UTF_8).trim.toInt else 0
   }
 
+  /** The committed chain: manifests `1..currentSequence` decoded once,
+    * element `i` holding sequence `i + 1`. Every chain question below
+    * is a function over this sequence, so a writer reads it once per
+    * commit and hands the same value to each question. */
+  def chain(root: String): IndexedSeq[Snapshot] =
+    (1 to currentSequence(root)).map(i => decodeManifest(readManifest(root, i)))
+
+  /** The one manifest decoder, the inverse of [[renderManifest]].
+    * Fields older manifests lack read as their historical defaults:
+    * `routing` as "strict", `replaces` as 0, `input_files` as empty. */
+  private def decodeManifest(json: String): Snapshot = {
+    val m = Json.readTree(json)
+    Snapshot(
+      sequence = m.path("sequence").asInt,
+      parent = m.path("parent").asInt,
+      extractionVersion = m.path("extraction_version").asText,
+      dataDir = m.path("data_dir").asText,
+      partitions = m.path("partitions").asScala.map { p =>
+        PartitionLineage(p.path("partition_id").asInt, p.path("row_count").asLong,
+          p.path("error_count").asLong, p.path("warc_ts_min").asLong, p.path("warc_ts_max").asLong)
+      }.toSeq,
+      rowCount = m.path("row_count").asLong,
+      inputFiles = m.path("input_files").asScala.map(_.asText).toSeq,
+      routing = Some(m.path("routing").asText).filter(_.nonEmpty).getOrElse("strict"),
+      replaces = m.path("replaces").asInt)
+  }
+
   /** Data dirs of committed snapshots with rows — read from MANIFESTS
     * (authoritative, Iceberg-style), never from directory listings: a
     * crashed writer may leave stray uncommitted dirs on disk.
-    * `upTo` caps the sequence for time travel.
-    *
-    * The walk runs TOP-DOWN and stops at the first compaction snapshot
-    * (`replaces` > 0): its data dir is the verbatim rewrite of every
-    * snapshot at or below its boundary, so the replaced dirs are not
-    * read again (they stay on disk for time travel below the boundary
-    * until [[expireReplaced]] reclaims them). A committed snapshot
-    * whose data dir is MISSING is an integrity error, never a silent
-    * skip — a partial union would silently drop rows. */
-  def dataDirs(root: String, upTo: Int = Int.MaxValue): Seq[String] = {
-    val seq = math.min(currentSequence(root), upTo)
-    val out = scala.collection.mutable.ArrayBuffer[String]()
-    var i = seq
-    var stop = false
-    while (i >= 1 && !stop) {
-      val m = readManifest(root, i)
-      val dir = parseStringField(m, "data_dir")
-      val rows = parseLongField(m, "row_count")
-      if (rows > 0 && dir.nonEmpty) {
-        out += resolveDataDir(root, dir).getOrElse(throw new IllegalStateException(
-          s"snapshot v$i at $root commits $rows rows but its data dir $dir is missing — " +
-            "expired or externally deleted; reads below a compaction boundary require " +
-            "the replaced dirs to still exist"))
-      }
-      if (parseLongField(m, "replaces") > 0) stop = true else i -= 1
-    }
-    out.reverse.toSeq
-  }
+    * `upTo` caps the sequence for time travel. */
+  def dataDirs(root: String, upTo: Int = Int.MaxValue): Seq[String] =
+    dataDirs(root, chain(root).take(upTo))
 
-  private def parseStringField(json: String, key: String): String = {
-    val k = "\"" + key + "\":\""
-    val i = json.indexOf(k)
-    if (i < 0) return ""
-    val start = i + k.length
-    val sb = new java.lang.StringBuilder()
-    var j = start
-    while (j < json.length && json.charAt(j) != '"') {
-      val c = json.charAt(j)
-      if (c == '\\' && j + 1 < json.length) { sb.append(json.charAt(j + 1)); j += 2 }
-      else { sb.append(c); j += 1 }
-    }
-    sb.toString
-  }
+  /** Live data dirs of a decoded chain. Reads start at the latest
+    * compaction snapshot (`replaces` > 0): its data dir is the verbatim
+    * rewrite of every snapshot at or below its boundary, so the
+    * replaced dirs are not read again (they stay on disk for time
+    * travel below the boundary until [[expireReplaced]] reclaims
+    * them). A committed snapshot whose data dir is MISSING is an
+    * integrity error, never a silent skip — a partial union would
+    * silently drop rows. */
+  def dataDirs(root: String, chain: Seq[Snapshot]): Seq[String] =
+    chain.drop(latestCompaction(chain).fold(0)(_.sequence - 1))
+      .filter(rowBearingDir)
+      .map(requireDataDir(root, _, "reads below a compaction boundary require " +
+        "the replaced dirs to still exist"))
 
-  private def parseLongField(json: String, key: String): Long = {
-    val k = "\"" + key + "\":"
-    val i = json.indexOf(k)
-    if (i < 0) return 0L
-    var j = i + k.length
-    val sb = new java.lang.StringBuilder()
-    while (j < json.length && (json.charAt(j).isDigit || json.charAt(j) == '-')) {
-      sb.append(json.charAt(j)); j += 1
-    }
-    if (sb.length() == 0) 0L else sb.toString.toLong
-  }
+  private def rowBearingDir(s: Snapshot): Boolean = s.rowCount > 0 && s.dataDir.nonEmpty
 
-  def nextDataDir(root: String): (Int, String) = {
-    val next = currentSequence(root) + 1
+  private def requireDataDir(root: String, s: Snapshot, hint: String): String =
+    resolveDataDir(root, s.dataDir).getOrElse(throw new IllegalStateException(
+      s"snapshot v${s.sequence} at $root commits ${s.rowCount} rows but its data dir " +
+        s"${s.dataDir} is missing — expired or externally deleted; $hint"))
+
+  private def latestCompaction(chain: Seq[Snapshot]): Option[Snapshot] =
+    chain.findLast(_.replaces > 0)
+
+  /** Sequence and data dir the next commit on top of `chain` claims. */
+  def nextDataDir(root: String, chain: Seq[Snapshot]): (Int, String) = {
+    val next = chain.size + 1
     (next, s"$root/data/snap-$next")
   }
 
@@ -121,16 +129,6 @@ object SnapshotStore {
     val mPath = snapDir.resolve(s"v${snap.sequence}.json")
     writeAtomic(mPath, manifest.getBytes(UTF_8))
     writeAtomic(Paths.get(root, "version-hint.text"), snap.sequence.toString.getBytes(UTF_8))
-  }
-
-  /** (dataDir, rowCount, replaces) of snapshot `seq`, straight from its
-    * manifest — the per-snapshot handle sidecar emitters (WET catch-up)
-    * need without re-running dataDirs' whole-chain walk. */
-  def snapshotInfo(root: String, seq: Int): (String, Long, Long) = {
-    val m = readManifest(root, seq)
-    (parseStringField(m, "data_dir"),
-      parseLongField(m, "row_count"),
-      parseLongField(m, "replaces"))
   }
 
   /** Relocation-tolerant data-dir resolution, the ONE policy every
@@ -179,24 +177,20 @@ object SnapshotStore {
     s"""{"sequence":${s.sequence},"parent":${s.parent},"extraction_version":"${esc(s.extractionVersion)}","routing":"${esc(s.routing)}","replaces":${s.replaces},"data_dir":"${esc(s.dataDir)}","row_count":${s.rowCount},"partitions":$parts,"input_files":$inputs}"""
   }
 
-  /** The chain's identity — (routing mode, extraction version) — read
-    * in ONE manifest pass (each commit guard needs both; two separate
-    * walks doubled per-commit manifest I/O on long streaming chains).
-    * A snapshot pins the identity iff it committed rows OR consumed
-    * input files: consumed files matter even at 0 rows, because resume
-    * skips them forever — a new kernel re-running over a chain whose
-    * 0-row snapshot already consumed (say) unparseable segments would
+  /** The chain's identity — (routing mode, extraction version) — over
+    * the decoded chain every commit guard already holds. A snapshot
+    * pins the identity iff it committed rows OR consumed input files:
+    * consumed files matter even at 0 rows, because resume skips them
+    * forever — a new kernel re-running over a chain whose 0-row
+    * snapshot already consumed (say) unparseable segments would
     * otherwise silently never re-extract them. Only the pure
     * bootstrap/no-op snapshot (0 rows, 0 inputs) pins nothing, so an
     * EMPTY outRoot survives kernel upgrades. Manifests older than the
-    * routing field read as "strict", the historical default. A chain
+    * routing field decode as "strict", the historical default. A chain
     * mixing either field across pinning snapshots is a corruption of
     * the byte-identity contract and is reported as such. */
-  def chainIdentity(root: String): (Option[String], Option[String]) = {
-    val seq = currentSequence(root)
-    val rowBearing = (1 to seq).map(readManifest(root, _))
-      .filter(m => parseLongField(m, "row_count") > 0 ||
-        parseStringArray(m, "input_files").nonEmpty)
+  def chainIdentity(root: String, chain: Seq[Snapshot]): (Option[String], Option[String]) = {
+    val pinning = chain.filter(s => s.rowCount > 0 || s.inputFiles.nonEmpty)
     def distinctOrThrow(vals: Seq[String], what: String): Option[String] =
       vals.distinct match {
         case Seq() => None
@@ -205,65 +199,14 @@ object SnapshotStore {
           s"snapshot chain at $root mixes $what ${many.mkString(",")} — " +
             "the table violates the byte-identity contract; rebuild from a clean outRoot")
       }
-    val routing = distinctOrThrow(rowBearing.map { m =>
-      val r = parseStringField(m, "routing")
-      if (r.isEmpty) "strict" else r
-    }, "extraction routing modes")
-    val version = distinctOrThrow(
-      rowBearing.map(parseStringField(_, "extraction_version")).filter(_.nonEmpty),
-      "extraction versions")
-    (routing, version)
+    (distinctOrThrow(pinning.map(_.routing), "extraction routing modes"),
+      distinctOrThrow(pinning.map(_.extractionVersion).filter(_.nonEmpty), "extraction versions"))
   }
-
-  /** The extraction_version every row-bearing committed snapshot was
-    * produced under — None for an empty chain. The kernel that produced
-    * the bytes is part of the table's identity. */
-  def committedExtractionVersion(root: String): Option[String] =
-    chainIdentity(root)._2
-
-  /** Routing mode of the committed table (see [[chainIdentity]]). */
-  def committedRouting(root: String): Option[String] =
-    chainIdentity(root)._1
 
   /** Union of input files consumed by all committed snapshots. */
-  def committedInputFiles(root: String): Set[String] = {
-    val seq = currentSequence(root)
-    (1 to seq).flatMap { i =>
-      val m = readManifest(root, i)
-      parseStringArray(m, "input_files")
-    }.toSet
-  }
+  def committedInputFiles(root: String): Set[String] = committedInputFiles(chain(root))
 
-  /** Minimal extractor for a `"key":["a","b"]` JSON string array written
-    * by renderManifest (escapes limited to \" \\ \\uXXXX). */
-  private def parseStringArray(json: String, key: String): Seq[String] = {
-    val k = "\"" + key + "\":["
-    val i = json.indexOf(k)
-    if (i < 0) return Nil
-    var j = i + k.length
-    val out = scala.collection.mutable.ArrayBuffer[String]()
-    val sb = new java.lang.StringBuilder()
-    var inStr = false
-    var done = false
-    while (!done && j < json.length) {
-      val c = json.charAt(j)
-      if (!inStr) {
-        if (c == '"') { inStr = true; sb.setLength(0) }
-        else if (c == ']') done = true
-        j += 1
-      } else {
-        if (c == '\\' && j + 1 < json.length) {
-          val e = json.charAt(j + 1)
-          if (e == 'u' && j + 5 < json.length) {
-            sb.append(Integer.parseInt(json.substring(j + 2, j + 6), 16).toChar)
-            j += 6
-          } else { sb.append(e); j += 2 }
-        } else if (c == '"') { inStr = false; out += sb.toString; j += 1 }
-        else { sb.append(c); j += 1 }
-      }
-    }
-    out.toSeq
-  }
+  def committedInputFiles(chain: Seq[Snapshot]): Set[String] = chain.flatMap(_.inputFiles).toSet
 
   /** Single-writer guard: snapshot sequences are allocated by reading
     * version-hint, so two concurrent writers would both claim seq N+1
@@ -309,28 +252,13 @@ object SnapshotStore {
     * window whose dirs were reclaimed by [[expireReplaced]] fails the
     * same missing-dir integrity check as [[dataDirs]]. */
   def changedDataDirs(root: String, fromExclusive: Int, to: Int): Seq[String] = {
-    val current = currentSequence(root)
-    require(fromExclusive >= 0 && to <= current && fromExclusive <= to,
-      s"invalid change window ($fromExclusive, $to] at $root (committed: 1..$current)")
-    (fromExclusive + 1 to to).flatMap { i =>
-      val m = readManifest(root, i)
-      val dir = parseStringField(m, "data_dir")
-      val rows = parseLongField(m, "row_count")
-      if (rows > 0 && dir.nonEmpty && parseLongField(m, "replaces") == 0L) {
-        Some(resolveDataDir(root, dir).getOrElse(throw new IllegalStateException(
-          s"snapshot v$i at $root commits $rows rows but its data dir $dir is missing — " +
-            "expired or externally deleted; incremental reads over expired snapshots " +
-            "must restart from a full scan at the compaction boundary")))
-      } else None
-    }
+    val c = chain(root)
+    require(fromExclusive >= 0 && to <= c.size && fromExclusive <= to,
+      s"invalid change window ($fromExclusive, $to] at $root (committed: 1..${c.size})")
+    c.slice(fromExclusive, to).filter(s => rowBearingDir(s) && s.replaces == 0)
+      .map(requireDataDir(root, _, "incremental reads over expired snapshots " +
+        "must restart from a full scan at the compaction boundary"))
   }
-
-  /** Sequence of the latest compaction snapshot (replaces > 0), 0 if
-    * the chain has never been compacted. */
-  def latestCompaction(root: String): Int =
-    (currentSequence(root) to 1 by -1)
-      .find(i => parseLongField(readManifest(root, i), "replaces") > 0)
-      .getOrElse(0)
 
   /** Reclaim the space of snapshots rewritten by the LATEST compaction:
     * deletes their data dirs. Manifests are KEPT — file-level resume
@@ -342,19 +270,12 @@ object SnapshotStore {
     * the boundary are untouched (they never descend past it).
     * Returns the deleted dirs. */
   def expireReplaced(root: String): Seq[String] = {
-    val c = latestCompaction(root)
-    if (c == 0) return Nil
-    val r = parseLongField(readManifest(root, c), "replaces").toInt
-    val dirs = (1 to r).flatMap { i =>
-      val m = readManifest(root, i)
-      val dir = parseStringField(m, "data_dir")
-      if (dir.nonEmpty && parseLongField(m, "row_count") > 0)
-        // current-root-first resolution: a moved store reclaims its
-        // OWN dirs, and a copy-migrated store never deletes the
-        // source table's data (already-gone dirs have nothing to do)
-        resolveDataDir(root, dir)
-      else None
-    }.distinct
+    val c = chain(root)
+    val dirs = c.take(latestCompaction(c).fold(0)(_.replaces)).filter(rowBearingDir)
+      // current-root-first resolution: a moved store reclaims its OWN
+      // dirs, and a copy-migrated store never deletes the source
+      // table's data (already-gone dirs have nothing to do)
+      .flatMap(s => resolveDataDir(root, s.dataDir)).distinct
     dirs.foreach(deleteRecursively)
     dirs
   }

@@ -171,7 +171,7 @@ class ExtractJobSpec extends AnyFunSuite {
     val rowsBefore = ExtractJob.readExtracted(spark, s"$dir/out").count()
     val snap = ExtractJob.compact(spark, s"$dir/out")
     assert(snap.extractionVersion == "graft-extract-0")
-    assert(SnapshotStore.committedExtractionVersion(s"$dir/out") == Some("graft-extract-0"))
+    assert(SnapshotStore.chainIdentity(s"$dir/out", SnapshotStore.chain(s"$dir/out"))._2 == Some("graft-extract-0"))
     assert(ExtractJob.readExtracted(spark, s"$dir/out").count() == rowsBefore)
   }
 
