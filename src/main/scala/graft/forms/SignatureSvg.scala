@@ -118,7 +118,7 @@ object SignatureSvg {
   }
 
   /** (url, signer, svg) for every signed form in `pages` — the sidecar
-    * table [[graft.job.ExtractJob]] commits beside the previews. */
+    * table [[graft.job.ExtractJob]] commits beside the snapshot. */
   def svgs(pages: Dataset[Page]): DataFrame = {
     val spark = pages.sparkSession
     import spark.implicits._

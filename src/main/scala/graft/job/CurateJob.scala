@@ -1,6 +1,6 @@
 package graft.job
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.{Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.{Balance, Dedup, Hosts, Repetition, TextStats}
 
@@ -40,11 +40,11 @@ import graft.ops.{Balance, Dedup, Hosts, Repetition, TextStats}
   * Scale notes: document text crosses the wire exactly twice — once
   * into the dedup keeper semi-join (keyed by digest, the text rides
   * only until the projection) and once into the host-cap exchange —
-  * and the quality threshold is a broadcast scalar. The funnel counts
-  * are per-stage aggregates over a persisted feature table (at
-  * 10^12 rows you would swap the persist for accumulators riding the
-  * write; counted explicitly here because the funnel IS the lineage
-  * record a curation run must publish). */
+  * and the quality threshold is a broadcast scalar. The funnel IS the
+  * lineage record a curation run must publish: its gate and cap rungs
+  * are observed by the curated write itself, and the earlier rungs are
+  * counts over the persisted dedup and feature tables (an observation
+  * behind a persist reads from the cache and never fires). */
 object CurateJob {
 
   final case class Funnel(
@@ -183,24 +183,24 @@ object CurateJob {
       // an approximate threshold (approx_percentile's merge order would
       // cost the determinism contract here)
       val thr = kept.agg(expr("percentile(quality, 0.5)").as("q50"))
+      // the gate and cap rungs are counted by the curated write itself:
+      // a separate count would re-run the percentile, the broadcast and
+      // the join
+      val gatedObs = Observation("gated")
+      val keptObs = Observation("kept")
       val gated = kept.join(broadcast(thr))
         .filter(col("quality") >= col("q50"))
         .withColumn("host", Hosts.hostOf(col("url")))
+        .observe(gatedObs, count(lit(1)).as("rows"))
       val capped = Balance.topKPerGroup(gated, col("host"), col("url"),
         Seq(col("quality").desc, col("url").asc), k = perHostCap)
+        .observe(keptObs, count(lit(1)).as("rows"))
       val curated = capped
         .select(col("url"), col("host"), col("quality"),
           Balance.splitAssign(col("url")).as("split"), col("extracted_text"))
       curated.write.mode(SaveMode.Overwrite).partitionBy("split")
         .parquet(s"$outRoot/data")
 
-      // an all-filtered corpus writes ZERO part files — reading the dir
-      // back would fail schema inference, so count the written rows
-      // only when something was written (a legal outcome: e.g. every
-      // doc failed the repetition gate)
-      val wroteFiles = Option(new java.io.File(s"$outRoot/data").listFiles())
-        .getOrElse(Array.empty)
-        .exists(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
       // extracted, html and mojibake counts in ONE pass over the
       // extraction table (repair drops no rows, so html == |baseRaw|;
       // a scan per count would be waste)
@@ -221,8 +221,8 @@ object CurateJob {
         deduped = deduped.count(),
         fuzzyDeduped = fuzzyDeduped.count(),
         semanticDeduped = feats.count(),
-        gated = gated.count(),
-        kept = if (wroteFiles) spark.read.parquet(s"$outRoot/data").count() else 0L)
+        gated = observedRows(gatedObs),
+        kept = observedRows(keptObs))
       val json =
         s"""{"extracted":${funnel.extracted},"html":${funnel.html},"mojibake_repaired":${funnel.mojibakeRepaired},"url_filtered":${funnel.urlFiltered},"deduped":${funnel.deduped},"fuzzy_deduped":${funnel.fuzzyDeduped},"semantic_deduped":${funnel.semanticDeduped},"gated":${funnel.gated},"kept":${funnel.kept},"per_host_cap":$perHostCap,"fuzzy_buckets_dropped":$fuzzyBucketsDropped}"""
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outRoot))
@@ -235,6 +235,9 @@ object CurateJob {
       deduped.unpersist(blocking = false): Unit
     }
   }
+
+  /** The row count an observation recorded in the action that ran it. */
+  private def observedRows(o: Observation): Long = o.get("rows").asInstanceOf[Long]
 }
 
 /** Curation entry point:

@@ -2,7 +2,9 @@ package graft.job
 
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.AccumulatorV2
 import graft.core.{Extract, ExtractedDoc, ExtractionVersion, Page}
 import graft.gen.PageGen
 
@@ -330,8 +332,12 @@ object ExtractJob {
   def clusterKey(saltBuckets: Int): org.apache.spark.sql.Column =
     graft.ops.Hosts.saltedHostKey(col("url"), saltBuckets)
 
-  /** Shared tail of the pipeline: salted-host output clustering, write,
-    * lineage aggregation, atomic manifest commit. */
+  /** Shared tail of the pipeline: salted-host output clustering, the
+    * snapshot write, atomic manifest commit — one Spark execution (two
+    * with the opt-in signature sidecar). The partition lineage the
+    * manifest records is folded by the write tasks themselves; the
+    * preview/digest artifacts ([[readArtifacts]]) and the events rows
+    * ([[readEvents]]) are derived on read from the committed snapshot. */
   private def commitSnapshot(
       extracted: Dataset[ExtractedDoc], outRoot: String, seq: Int,
       dataDir: String, inputFiles: Seq[String],
@@ -353,45 +359,48 @@ object ExtractJob {
     val clustered = extracted
       .repartition(parts, clusterKey(saltBuckets))
 
+    // ---- lineage folded in the write pass: each task records its
+    // partition's row count, error count and warc_ts range once the
+    // write has drained it. A repartition to an explicit count is never
+    // coalesced by AQE, so task partition ids are the written
+    // partition_id values. Empty partitions record nothing.
+    val lineage = new LineageAccumulator
+    spark.sparkContext.register(lineage)
     // tuple, not a nested case class: Janino cannot compile accessors of
     // object-nested private case classes and would drop to interpreted mode
     val withPid = clustered.mapPartitions { it =>
       val pid = TaskContext.getPartitionId()
-      it.map(d => (d, pid))
+      var rows, errors = 0L
+      var tsMin = Long.MaxValue
+      var tsMax = Long.MinValue
+      it.map { d =>
+        rows += 1
+        if (d.error != null) errors += 1
+        if (d.warc_ts != null) {
+          // unix_millis over the stored (microsecond) value
+          val ms = Math.floorDiv(DateTimeUtils.fromJavaTimestamp(d.warc_ts), 1000L)
+          tsMin = math.min(tsMin, ms)
+          tsMax = math.max(tsMax, ms)
+        }
+        (d, pid)
+      } ++ {
+        // by-name tail: runs once the write has drained the partition; a
+        // partition without any warc_ts records 0/0
+        if (rows > 0) {
+          val (lo, hi) = if (tsMin <= tsMax) (tsMin, tsMax) else (0L, 0L)
+          lineage.add(PartitionLineage(pid, rows, errors, lo, hi))
+        }
+        Iterator.empty
+      }
     }
     withPid
       .select($"_1.*", $"_2".as("partition_id"))
       .write.mode(SaveMode.Overwrite).parquet(dataDir)
+    val lineageRows = lineage.value.values.toSeq.sortBy(_.partitionId)
 
-    // ---- lineage from the written snapshot (post-write scan is cheap:
-    // output carries text only, the binary column is long gone) --------
-    val lineageRows = spark.read.parquet(dataDir)
-      .groupBy($"partition_id")
-      .agg(
-        count(lit(1)).as("row_count"),
-        sum(when($"error".isNotNull, 1L).otherwise(0L)).as("error_count"),
-        min(unix_millis($"warc_ts")).as("ts_min"),
-        max(unix_millis($"warc_ts")).as("ts_max"))
-      .collect()
-      .map(r => PartitionLineage(
-        r.getAs[Int]("partition_id"), r.getAs[Long]("row_count"),
-        r.getAs[Long]("error_count"), r.getAs[Long]("ts_min"), r.getAs[Long]("ts_max")))
-      .toSeq
-
-    // ---- S6 preview artifact: the reference's generate_preview analog
-    // (/root/reference/ocrworker/tasks.py:189-199 writes a fixed-width
-    // preview image per document beside the OCR output; the text-engine
-    // analog is a fixed-length text preview + a content digest),
-    // committed as a sidecar table before the manifest flips — a crash
-    // between the two leaves an orphan artifact dir, never a committed
-    // snapshot without its artifacts. Reads the text-only snapshot
-    // output (not the raw payload), so the extra pass costs ~1/20 of
-    // the extraction scan.
-    writeArtifacts(spark, dataDir, artifactDir(outRoot, seq))
-
-    // signature SVG sidecar (same pre-commit ordering contract as the
-    // previews: a crash here leaves an orphan artifact dir, never a
-    // committed snapshot missing its artifacts)
+    // signature SVG sidecar, written before the manifest flips: a crash
+    // here leaves an orphan artifact dir, never a committed snapshot
+    // missing its artifacts
     signatureSvgs.foreach(_.write.mode(SaveMode.Overwrite)
       .parquet(signatureDir(outRoot, seq)))
 
@@ -400,57 +409,87 @@ object ExtractJob {
       parent = seq - 1,
       extractionVersion = extractionVersion,
       dataDir = dataDir,
-      partitions = lineageRows.sortBy(_.partitionId),
+      partitions = lineageRows,
       rowCount = lineageRows.map(_.rowCount).sum,
       inputFiles = inputFiles,
       routing = routingMode,
       replaces = replaces)
     SnapshotStore.commit(outRoot, snap)
-    emitEvents(spark, outRoot, snap)
     snap
+  }
+
+  /** Per-partition lineage from the write tasks, keyed by partition id:
+    * a re-run task (retry, stage re-execution) replaces its partition's
+    * entry instead of adding to it. */
+  private final class LineageAccumulator
+      extends AccumulatorV2[PartitionLineage, Map[Int, PartitionLineage]] {
+    private var byPartition = Map.empty[Int, PartitionLineage]
+    def isZero: Boolean = byPartition.isEmpty
+    def copy(): LineageAccumulator = {
+      val c = new LineageAccumulator
+      c.byPartition = byPartition
+      c
+    }
+    def reset(): Unit = byPartition = Map.empty
+    def add(p: PartitionLineage): Unit = byPartition += p.partitionId -> p
+    def merge(other: AccumulatorV2[PartitionLineage, Map[Int, PartitionLineage]]): Unit =
+      byPartition ++= other.value
+    def value: Map[Int, PartitionLineage] = byPartition
   }
 
   /** Fixed preview length — the analog of the reference's 300px
     * preview-width constant (tasks.py:193). */
   val PreviewChars = 300
 
-  def artifactDir(outRoot: String, seq: Int): String = s"$outRoot/artifacts/snap-$seq"
-
   /** Signature SVG sidecar table of snapshot `seq` (url, signer, svg) —
     * written only when `run(..., signatureArtifacts = true)`. */
   def signatureDir(outRoot: String, seq: Int): String = s"$outRoot/artifacts/sig-$seq"
 
-  private def writeArtifacts(spark: SparkSession, dataDir: String, artDir: String): Unit = {
-    spark.read.parquet(dataDir)
+  /** S6 preview artifacts of snapshot `seq` — the reference's
+    * generate_preview analog (/root/reference/ocrworker/tasks.py:189-199
+    * writes a fixed-width preview image per document beside the OCR
+    * output; the text-engine analog is a fixed-length text preview + a
+    * content digest): (url, preview, text_sha256) per committed row.
+    * A view over the snapshot's own data dir, resolved through the
+    * decoded chain (so a relocated store resolves too); nothing is
+    * written per commit. An unknown sequence is an error; a 0-row
+    * snapshot is a valid EMPTY table. */
+  def readArtifacts(spark: SparkSession, outRoot: String, seq: Int): DataFrame = {
+    val chain = SnapshotStore.chain(outRoot)
+    require(seq >= 1 && seq <= chain.size,
+      s"unknown snapshot seq=$seq at $outRoot (committed: 1..${chain.size})")
+    val snap = chain(seq - 1)
+    val dirs = if (snap.rowCount > 0) Seq(SnapshotStore.requireDataDir(outRoot, snap,
+      "its preview artifacts are derived from it")) else Nil
+    readDirs(spark, dirs)
       .select(col("url"),
         substring(col("extracted_text"), 1, PreviewChars).as("preview"),
         sha2(coalesce(col("extracted_text"), lit("")), 256).as("text_sha256"))
-      .write.mode(SaveMode.Overwrite).parquet(artDir)
   }
 
-  /** Read the preview/digest artifacts of snapshot `seq`. */
-  def readArtifacts(spark: SparkSession, outRoot: String, seq: Int): DataFrame =
-    spark.read.parquet(artifactDir(outRoot, seq))
-
-  /** Downstream event emission (S9) — the analog of the reference's
-    * notify/index task fan-out (/root/reference/ocrworker/tasks.py:189-212)
-    * and job-status rows (segmentation_tasks.py:293-332): per-commit
-    * metric rows appended to an `events` table next to the snapshots. */
-  private def emitEvents(spark: SparkSession, outRoot: String, snap: Snapshot): Unit = {
+  /** Downstream events (S9) — the analog of the reference's notify/index
+    * task fan-out (/root/reference/ocrworker/tasks.py:189-212) and
+    * job-status rows (segmentation_tasks.py:293-332): one
+    * `partition_committed` row per manifest partition and one
+    * `snapshot_committed` row per snapshot, `ts` being the manifest's
+    * modification time. A view over the manifest chain, never written
+    * per commit (Iceberg's `snapshots` metadata table is read the same
+    * way). */
+  def readEvents(spark: SparkSession, outRoot: String): DataFrame = {
     import spark.implicits._
-    val now = new java.sql.Timestamp(System.currentTimeMillis())
-    val rows =
-      (snap.partitions.map { p =>
-        (now, "partition_committed", snap.sequence, p.partitionId,
+    val rows = SnapshotStore.chain(outRoot).flatMap { snap =>
+      val ts = new java.sql.Timestamp(java.nio.file.Files.getLastModifiedTime(
+        SnapshotStore.manifestPath(outRoot, snap.sequence)).toMillis)
+      snap.partitions.map { p =>
+        (ts, "partition_committed", snap.sequence, p.partitionId,
           Map("row_count" -> p.rowCount.toString, "error_count" -> p.errorCount.toString,
             "warc_ts_min" -> p.warcTsMin.toString, "warc_ts_max" -> p.warcTsMax.toString))
-      } :+ ((now, "snapshot_committed", snap.sequence, -1,
+      } :+ ((ts, "snapshot_committed", snap.sequence, -1,
         Map("row_count" -> snap.rowCount.toString,
           "extraction_version" -> snap.extractionVersion,
-          "n_input_files" -> snap.inputFiles.size.toString))))
+          "n_input_files" -> snap.inputFiles.size.toString)))
+    }
     rows.toDF("ts", "kind", "sequence", "partition_id", "payload")
-      .coalesce(1)
-      .write.mode(SaveMode.Append).parquet(s"$outRoot/events")
   }
 
   /** Read the union of all committed snapshots (the logical table). */

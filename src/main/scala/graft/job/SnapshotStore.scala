@@ -105,7 +105,9 @@ object SnapshotStore {
 
   private def rowBearingDir(s: Snapshot): Boolean = s.rowCount > 0 && s.dataDir.nonEmpty
 
-  private def requireDataDir(root: String, s: Snapshot, hint: String): String =
+  /** The resolved data dir of a row-bearing snapshot; a missing one is
+    * an integrity error naming `hint`. */
+  private[job] def requireDataDir(root: String, s: Snapshot, hint: String): String =
     resolveDataDir(root, s.dataDir).getOrElse(throw new IllegalStateException(
       s"snapshot v${s.sequence} at $root commits ${s.rowCount} rows but its data dir " +
         s"${s.dataDir} is missing — expired or externally deleted; $hint"))
@@ -123,11 +125,7 @@ object SnapshotStore {
     * Write-temp-then-rename gives the same crash-atomicity Iceberg's
     * catalog swap provides on a local FS. */
   def commit(root: String, snap: Snapshot): Unit = {
-    val snapDir = Paths.get(root, "snapshots")
-    Files.createDirectories(snapDir)
-    val manifest = renderManifest(snap)
-    val mPath = snapDir.resolve(s"v${snap.sequence}.json")
-    writeAtomic(mPath, manifest.getBytes(UTF_8))
+    writeAtomic(manifestPath(root, snap.sequence), renderManifest(snap).getBytes(UTF_8))
     writeAtomic(Paths.get(root, "version-hint.text"), snap.sequence.toString.getBytes(UTF_8))
   }
 
@@ -150,9 +148,10 @@ object SnapshotStore {
     else None
   }
 
-  def readManifest(root: String, seq: Int): String = {
-    new String(Files.readAllBytes(Paths.get(root, "snapshots", s"v$seq.json")), UTF_8)
-  }
+  def manifestPath(root: String, seq: Int): Path = Paths.get(root, "snapshots", s"v$seq.json")
+
+  def readManifest(root: String, seq: Int): String =
+    new String(Files.readAllBytes(manifestPath(root, seq)), UTF_8)
 
   private def writeAtomic(target: Path, bytes: Array[Byte]): Unit = {
     val tmp = target.resolveSibling(target.getFileName.toString + ".tmp")

@@ -49,13 +49,28 @@ class ExtensionsSpec extends AnyFunSuite {
 
   test("snapshot commits append events rows (S9 sink)") {
     val dir = Files.createTempDirectory("graftevents").toString
+    val out = s"$dir/out"
     graft.job.ExtractJob.generatePages(spark, 80, s"$dir/pages", partitions = 2)
-    graft.job.ExtractJob.run(spark, s"$dir/pages", s"$dir/out")
-    val ev = spark.read.parquet(s"$dir/out/events")
+    graft.job.ExtractJob.run(spark, s"$dir/pages", out)
+    val ev = graft.job.ExtractJob.readEvents(spark, out)
     assert(ev.filter("kind = 'snapshot_committed'").count() == 1)
     assert(ev.filter("kind = 'partition_committed'").count() > 0)
     val total = ev.filter("kind = 'partition_committed'")
       .selectExpr("sum(cast(payload['row_count'] as long))").first().getLong(0)
     assert(total == 80)
+
+    // a second increment and a compaction: one snapshot_committed row
+    // per sequence, each carrying its manifest's row count
+    graft.job.ExtractJob.generatePages(spark, 120, s"$dir/pages", partitions = 2,
+      start = 80, append = true)
+    graft.job.ExtractJob.run(spark, s"$dir/pages", out)
+    graft.job.ExtractJob.compact(spark, out)
+    val chain = graft.job.SnapshotStore.chain(out)
+    assert(chain.size == 3)
+    val committed = graft.job.ExtractJob.readEvents(spark, out)
+      .filter("kind = 'snapshot_committed'")
+      .selectExpr("sequence", "cast(payload['row_count'] as long)").collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toSeq.sortBy(_._1)
+    assert(committed == chain.map(s => s.sequence -> s.rowCount), committed)
   }
 }

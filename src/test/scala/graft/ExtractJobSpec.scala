@@ -300,6 +300,18 @@ class ExtractJobSpec extends AnyFunSuite {
         .digest(text.getBytes("UTF-8")).map("%02x".format(_)).mkString
       assert(r.getString(2) == sha, s"digest mismatch ${r.getString(0)}")
     }
+    // a 0-row resume snapshot is a valid EMPTY table with the same columns
+    val noop = ExtractJob.run(spark, s"$dir/pages", s"$dir/out")
+    assert(noop.rowCount == 0)
+    val empty = ExtractJob.readArtifacts(spark, s"$dir/out", noop.sequence)
+    assert(empty.columns.toSeq == art.columns.toSeq && empty.isEmpty)
+    // an unknown sequence is an error, never an index or path exception
+    for (bad <- Seq(0, noop.sequence + 1)) {
+      val e = intercept[IllegalArgumentException](
+        ExtractJob.readArtifacts(spark, s"$dir/out", bad))
+      assert(e.getMessage.contains(s"unknown snapshot seq=$bad") &&
+        e.getMessage.contains(s"(committed: 1..${noop.sequence})"), e.getMessage)
+    }
   }
 
   test("signature SVG sidecar: well-formed vector artifact per planted signed form") {
@@ -356,6 +368,7 @@ class ExtractJobSpec extends AnyFunSuite {
       java.nio.file.Paths.get(moved))
     assert(ExtractJob.readExtracted(spark, moved).count() == n)
     assert(ExtractJob.readChanges(spark, moved, 0, 1).count() == n)
+    assert(ExtractJob.readArtifacts(spark, moved, 1).count() == n)
     // a genuinely missing dir still fails loudly after relocation
     SnapshotStore.deleteRecursively(s"$moved/data")
     intercept[IllegalStateException] {
@@ -464,6 +477,56 @@ class ExtractJobSpec extends AnyFunSuite {
     // manifest json round-trips and names the extraction version
     val m = SnapshotStore.readManifest(s"$dir/out", snap.sequence)
     assert(m.contains("\"extraction_version\":\"" + graft.core.ExtractionVersion.current + "\""))
+  }
+
+  test("commit job budget: one ExtractJob.run commit stays within its Spark job ceiling") {
+    val dir = tmp()
+    ExtractJob.generatePages(spark, N, s"$dir/pages", partitions = 2)
+    val (snap, counts) = SparkJobs.count(spark)(ExtractJob.run(spark, s"$dir/pages", s"$dir/out"))
+    assert(snap.rowCount == N)
+    info(s"ExtractJob.run launched ${counts.jobs} Spark jobs in ${counts.executions} SQL executions")
+    // the commit is the snapshot write alone: lineage rides the write
+    // tasks, artifacts and events are derived on read. Measured: 4 jobs
+    // (two input schema reads, the shuffle map and the write) in 1 SQL
+    // execution; the ceiling is that count + ~10%, rounded up
+    assert(counts.executions == 1, s"ExtractJob.run ran ${counts.executions} SQL executions")
+    assert(counts.jobs <= 5, s"ExtractJob.run launched ${counts.jobs} jobs")
+  }
+
+  test("lineage parity: manifest partitions equal the aggregate over the written dir") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val dir = tmp()
+    ExtractJob.generatePages(spark, 200, s"$dir/pages", partitions = 2)
+    // more partitions than rows: some partitions are empty
+    val snap = ExtractJob.run(spark, s"$dir/pages", s"$dir/out", numPartitions = 256, saltBuckets = 1)
+    // a streamed batch without warc_ts: every partition records 0/0
+    val undated = ExtractJob.readExtracted(spark, s"$dir/out").drop("partition_id")
+      .orderBy("url").limit(12)
+      .withColumn("url", concat(col("url"), lit("?undated")))
+      .withColumn("warc_ts", lit(null).cast("timestamp"))
+      .as[graft.core.ExtractedDoc]
+    val snap2 = ExtractJob.appendSnapshot(undated, s"$dir/out", numPartitions = 8)
+    for (s <- Seq(snap, snap2)) {
+      // the aggregate the commit used to run over its written dir
+      val expected = spark.read.parquet(s.dataDir)
+        .groupBy(col("partition_id"))
+        .agg(count(lit(1)).as("row_count"),
+          sum(when(col("error").isNotNull, 1L).otherwise(0L)).as("error_count"),
+          min(unix_millis(col("warc_ts"))).as("ts_min"),
+          max(unix_millis(col("warc_ts"))).as("ts_max"))
+        .collect()
+        .map(r => graft.job.PartitionLineage(r.getAs[Int]("partition_id"),
+          r.getAs[Long]("row_count"), r.getAs[Long]("error_count"),
+          r.getAs[Long]("ts_min"), r.getAs[Long]("ts_max")))
+        .sortBy(_.partitionId).toSeq
+      assert(s.partitions == expected, s"v${s.sequence}")
+      assert(SnapshotStore.chain(s"$dir/out")(s.sequence - 1).partitions == expected)
+    }
+    assert(snap.rowCount == 200 && snap.partitions.size < 256, snap.partitions.size)
+    assert(snap.partitions.map(_.errorCount).sum > 0, "expected quarantined rows")
+    assert(snap2.rowCount == 12 &&
+      snap2.partitions.forall(p => p.warcTsMin == 0L && p.warcTsMax == 0L))
   }
 
   test("salting flattens zipfian host skew in output partitions") {
