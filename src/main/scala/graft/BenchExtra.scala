@@ -1,10 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Round-6 measurement harness (guide §1): time a SUBSET of
-  * SparkEntry.queries under the EXACT session config the frozen
-  * [[Bench]] uses (local[cpus], shuffle.partitions=cpus, AQE on,
+/** Query timing and plan tool: time a SUBSET of SparkEntry.queries
+  * (one name works too) under the session the frozen [[Bench]] measures
+  * with ([[graft.job.GraftSession.local]] on SPARK_GRAFT_CPUS cores,
   * 8 MB scan splits, warmCaches staged untimed), so per-query numbers
   * here are comparable to the driver's bench rows without paying for
   * the full 109-query sweep on every iteration.
@@ -17,8 +15,8 @@ import org.apache.spark.sql.SparkSession
   *     `.explain("formatted")` output is written there as
   *     `<name>.txt` (the plan evidence committed under plans/r06).
   *
-  * This main is ADDITIVE tooling for the optimization round —
-  * [[Bench]], [[Verify]] and the oracle SQL stay frozen.
+  * [[Bench]], [[Verify]] and the oracle SQL stay frozen; oracle dumps
+  * of a query subset are [[DumpOne]]'s job.
   */
 object BenchExtra {
   def main(args: Array[String]): Unit = {
@@ -26,16 +24,7 @@ object BenchExtra {
     val reps = if (args.length > 1) args(1).toInt else 3
     val explainDir = if (args.length > 2) Some(args(2)) else None
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.job.GraftSession.local()
     spark.conf.set("spark.sql.files.maxPartitionBytes", (8L << 20).toString)
     graft.queries.GraftQueries.setSf(sfDir)
     graft.queries.GraftQueries.pagesPath(spark, sfDir)

@@ -109,13 +109,8 @@ object CurateJob {
     // url uniqueness first: the snapshot chain anti-joins urls ACROSS
     // snapshots, but a url re-crawled with changed content within one
     // ingestion batch would otherwise survive dedup twice (two digests,
-    // same min url) and break the host cap's total order. Identical
-    // re-crawl rows collapse; among differing texts the min-digest row
-    // wins — deterministic.
-    val rows = base.dropDuplicates("url", "extracted_text")
-      .withColumn("h", md5(col("extracted_text")))
-    val urlKeeper = rows.groupBy(col("url")).agg(min(col("h")).as("h"))
-    val perUrl = rows.join(urlKeeper, Seq("url", "h"), "left_semi")
+    // same min url) and break the host cap's total order
+    val perUrl = Dedup.onePerUrl(base, "extracted_text")
     // exact content dedup — THE q12 rule via its one home (Dedup.exact):
     // one keeper per content digest, the lexicographic-min url
     val keeper = Dedup.exact(perUrl, idCol = "url", textCol = "extracted_text")

@@ -42,12 +42,8 @@ object ExportJob {
       .select(col("url"), col("extracted_text").as("text"))
     // within-batch url uniqueness (the CurateJob rung): a url
     // re-crawled with changed content inside one ingestion batch would
-    // otherwise export BOTH texts' tokens under one doc id — identical
-    // rows collapse, among differing texts the min-digest row wins
-    val rows = docs0.dropDuplicates("url", "text")
-      .withColumn("h", md5(col("text")))
-    val urlKeeper = rows.groupBy(col("url")).agg(min(col("h")).as("h"))
-    val docs = rows.join(urlKeeper, Seq("url", "h"), "left_semi").drop("h")
+    // otherwise export BOTH texts' tokens under one doc id
+    val docs = graft.ops.Dedup.onePerUrl(docs0, "text").drop("h")
 
     // tokenizer: train on this corpus (self-contained, like q85);
     // counts under the TRAINED merges, not the whitespace definition

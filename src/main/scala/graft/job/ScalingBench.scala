@@ -20,16 +20,8 @@ import org.apache.spark.sql.functions._
 object ScalingBench {
 
   def session(cores: Int, splitBytes: Long = 0): SparkSession = {
-    val b = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-scaling-$cores")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    if (splitBytes > 0) b.config("spark.sql.files.maxPartitionBytes", splitBytes.toString)
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cores.toString)
+    if (splitBytes > 0) spark.conf.set("spark.sql.files.maxPartitionBytes", splitBytes.toString)
     spark
   }
 

@@ -59,12 +59,6 @@ object Bpe {
   def headVocab(words: DataFrame, cap: Int = VocabCap): DataFrame =
     words.orderBy(col("freq").desc, col("word").asc).limit(cap)
 
-  /** (word, freq) for the training-scope words, capped to the
-    * deterministic head vocabulary. */
-  def wordCounts(docs: DataFrame, textCol: String,
-                 cap: Int = VocabCap): DataFrame =
-    headVocab(rawWordCounts(docs, textCol), cap)
-
   // (the per-round DataFrame long-form/mergeOnce window pipeline that
   // lived here moved into the sequential kernel shared with the native
   // expression: graft.functions.BpeEncodeWord.mergeOnce + the unrolled

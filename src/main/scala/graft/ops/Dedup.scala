@@ -31,6 +31,16 @@ object Dedup {
     docs.groupBy(md5(col(textCol)).as("text_hash"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_dups"))
 
+  /** Url uniqueness, the rung CurateJob and ExportJob run before any
+    * content dedup: one row per `url`. Identical re-crawl rows collapse;
+    * among differing texts of one url the min-digest row wins —
+    * deterministic. Keeps the digest as column `h` = md5(text). */
+  def onePerUrl(docs: DataFrame, textCol: String): DataFrame = {
+    val rows = docs.dropDuplicates("url", textCol).withColumn("h", md5(col(textCol)))
+    val urlKeeper = rows.groupBy(col("url")).agg(min(col("h")).as("h"))
+    rows.join(urlKeeper, Seq("url", "h"), "left_semi")
+  }
+
   // ---- shingling / hashing (pure; shared by minhash + jaccard) -------
 
   /** Distinct word n-gram shingles, hashed to 64-bit. */
@@ -367,7 +377,7 @@ object Dedup {
     // Dataset (returning the lazy plan would recompute the whole O(N²)
     // join on first use after the unpersist below), then release the
     // cached shingle blocks — repeated invocations in one session
-    // (BenchOne reps) would otherwise accumulate storage-memory blocks
+    // (BenchExtra reps) would otherwise accumulate storage-memory blocks
     // per call. blocking = false: the result is already computed.
     val out = joined.localCheckpoint(eager = true)
     sh.unpersist(blocking = false)

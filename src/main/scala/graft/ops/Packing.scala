@@ -105,13 +105,4 @@ object Packing {
       }
     }(Encoders.row(outSchema))
   }
-
-  /** Per-sequence roll-up of [[packSequences]]: how full the packed
-    * sequences are (the padding-waste metric a training pipeline
-    * monitors). */
-  def packStats(assignment: DataFrame, budget: Long): DataFrame =
-    assignment.groupBy("shard", "seq_id")
-      .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("sum_tokens"))
-      .withColumn("fill_ratio",
-        round(least(col("sum_tokens"), lit(budget)).cast("double") / budget, 6))
 }

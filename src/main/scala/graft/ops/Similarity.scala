@@ -89,54 +89,6 @@ object Similarity {
     code
   }
 
-  /** Bucketed ANN with L independent hash tables (the classic LSH
-    * recall lever) + hamming-radius multi-probe on the query side.
-    * Corpus is coded once per table (at 10^12 scale: precomputed and
-    * stored as `(table, code)`-bucketed files so a query only scans
-    * its probed buckets); join key is (table, code). */
-  def srpTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-              idCol: String = "vec_id", vecCol: String = "embedding",
-              bits: Int = SrpBits, probeRadius: Int = 1, tables: Int = 4): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val dim = corpus.select(size(col(vecCol))).first().getInt(0)
-    val planes = Array.tabulate(tables)(t => hyperplanes(dim, bits, t))
-    val bp = spark.sparkContext.broadcast(planes)
-
-    val codedCorpus = corpus
-      .select(col(idCol).cast("string").as("neighbor_id"), col(vecCol).as("c_vec"))
-      .as[(String, Array[Float])]
-      .mapPartitions { it =>
-        val pls = bp.value
-        it.flatMap { case (id, v) =>
-          pls.indices.iterator.map(t => (id, v, t, srpCode(v, pls(t))))
-        }
-      }
-      .toDF("neighbor_id", "c_vec", "table", "code")
-
-    val codedQueries = queries
-      .select(col(idCol).cast("string").as("query_id"), col(vecCol).as("q_vec"))
-      .as[(String, Array[Float])]
-      .mapPartitions { it =>
-        val pls = bp.value
-        it.flatMap { case (id, v) =>
-          pls.indices.iterator.flatMap { t =>
-            probeCodes(srpCode(v, pls(t)), bits, probeRadius).map(pc => (id, v, t, pc))
-          }
-        }
-      }
-      .toDF("query_id", "q_vec", "table", "code")
-
-    val scored = codedCorpus.join(broadcast(codedQueries), Seq("table", "code"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .dropDuplicates("query_id", "neighbor_id")
-      .withColumn("cosine", cosine(col("q_vec"), col("c_vec")))
-      .select("query_id", "neighbor_id", "cosine")
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
-
   // ---- IVF -------------------------------------------------------------
 
   /** Deterministic k-means (Lloyd, fixed seed, fixed iterations) over a
@@ -316,60 +268,6 @@ object Similarity {
     bestIdx
   }
 
-  /** IVF top-k: corpus vectors indexed under their `assign` nearest
-    * centroid cells (soft assignment — the standard recall lever for
-    * isotropic embeddings, where true neighbors straddle Voronoi
-    * boundaries; index size grows by exactly `assign`×). Each query
-    * probes its `nprobe` nearest cells; exact cosine within probed
-    * cells only. At scale the assignment is precomputed once (map-side,
-    * no shuffle) and the index table is clustered by cell; nCells grows
-    * ~√N so the probed fraction shrinks as the corpus grows. Measured
-    * on the isotropic 64-d test corpus: recall@5 ≈ 0.86 at
-    * nCells=32, nprobe=8, assign=2 (vs 0.57 for the old 16/4/hard). */
-  def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-              idCol: String = "vec_id", vecCol: String = "embedding",
-              nCells: Int = 32, nprobe: Int = 8, assign: Int = 2,
-              sampleSize: Int = 2000): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val centroids = quantizer(corpus, idCol, vecCol, nCells, sampleSize)
-    val bc = spark.sparkContext.broadcast(centroids)
-
-    val codedCorpus = corpus
-      .select(col(idCol).cast("string").as("neighbor_id"), col(vecCol).as("c_vec"))
-      .as[(String, Array[Float])]
-      .mapPartitions { it =>
-        val cs = bc.value
-        it.flatMap { case (id, v) =>
-          nearestCentroids(v, cs, assign).iterator.map(cell => (id, v, cell))
-        }
-      }
-      .toDF("neighbor_id", "c_vec", "cell")
-
-    val codedQueries = queries
-      .select(col(idCol).cast("string").as("query_id"), col(vecCol).as("q_vec"))
-      .as[(String, Array[Float])]
-      .mapPartitions { it =>
-        val cs = bc.value
-        it.flatMap { case (id, v) =>
-          nearestCentroids(v, cs, nprobe).iterator.map(cell => (id, v, cell))
-        }
-      }
-      .toDF("query_id", "q_vec", "cell")
-
-    // soft assignment means a (query, neighbor) pair can meet in up to
-    // `assign` probed cells — dedup before ranking (cosine is identical
-    // across duplicates, so any survivor is correct)
-    val scored = codedCorpus.join(broadcast(codedQueries), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .dropDuplicates("query_id", "neighbor_id")
-      .withColumn("cosine", cosine(col("q_vec"), col("c_vec")))
-      .select("query_id", "neighbor_id", "cosine")
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
-
   // ---- candidate/verify split (oracle-checkable ANN) -------------------
   //
   // The blocking stages (SRP codes, IVF cells) aren't SQL-expressible,
@@ -379,8 +277,13 @@ object Similarity {
   // whole ANN family from rows-only claims into value-checked queries
   // (the q20/q22 pattern, round-2 VERDICT next-round #2).
 
-  /** Distinct (query_id, neighbor_id) candidates of the SRP index —
-    * same blocking as [[srpTopK]], stopping before the cosine/rank. */
+  /** Distinct (query_id, neighbor_id) candidates of the SRP index:
+    * bucketed ANN with L independent hash tables (the classic LSH
+    * recall lever) + hamming-radius multi-probe on the query side.
+    * Corpus is coded once per table (at 10^12 scale: precomputed and
+    * stored as `(table, code)`-bucketed files so a query only scans
+    * its probed buckets); join key is (table, code). Stops before the
+    * cosine; [[rankWithin]] ranks the candidates. */
   def srpCandidates(corpus: DataFrame, queries: DataFrame,
                     idCol: String = "vec_id", vecCol: String = "embedding",
                     bits: Int = SrpBits, probeRadius: Int = 1, tables: Int = 4): DataFrame = {
@@ -417,8 +320,17 @@ object Similarity {
       .dropDuplicates("query_id", "neighbor_id")
   }
 
-  /** Distinct (query_id, neighbor_id) candidates of the IVF index —
-    * same soft-assigned cells + probing as [[ivfTopK]]. */
+  /** Distinct (query_id, neighbor_id) candidates of the IVF index:
+    * corpus vectors indexed under their `assign` nearest centroid cells
+    * (soft assignment — the standard recall lever for isotropic
+    * embeddings, where true neighbors straddle Voronoi boundaries;
+    * index size grows by exactly `assign`×). Each query probes its
+    * `nprobe` nearest cells. At scale the assignment is precomputed
+    * once (map-side, no shuffle) and the index table is clustered by
+    * cell; nCells grows ~√N so the probed fraction shrinks as the
+    * corpus grows. Measured on the isotropic 64-d test corpus, ranked by
+    * [[rankWithin]]: recall@5 ≈ 0.86 at nCells=32, nprobe=8, assign=2
+    * (vs 0.57 for the old 16/4/hard). */
   def ivfCandidates(corpus: DataFrame, queries: DataFrame,
                     idCol: String = "vec_id", vecCol: String = "embedding",
                     nCells: Int = 32, nprobe: Int = 8, assign: Int = 2,
@@ -453,8 +365,10 @@ object Similarity {
       .dropDuplicates("query_id", "neighbor_id")
   }
 
-  /** Distinct (a_id, b_id) near-dup candidates — [[cosineNearDups]]'s
-    * SRP blocking, stopping before the cosine verify. */
+  /** Distinct (a_id, b_id) embedding near-dup candidates (the 5th
+    * dedup mode): SRP blocking where one side stays in its home bucket
+    * and the probing side fans out, stopping before the cosine verify
+    * ([[verifyPairs]]). */
   def nearDupCandidates(corpus: DataFrame,
                         idCol: String = "vec_id", vecCol: String = "embedding",
                         bits: Int = SrpBits, probeRadius: Int = 1, tables: Int = 4): DataFrame = {
@@ -513,41 +427,6 @@ object Similarity {
     val a = vectors.select(col(idCol).cast("string").as("a_id"), col(vecCol).as("a_vec"))
     val b = vectors.select(col(idCol).cast("string").as("b_id"), col(vecCol).as("b_vec"))
     cands.join(a, Seq("a_id")).join(b, Seq("b_id"))
-      .select(col("a_id"), col("b_id"), cosine(col("a_vec"), col("b_vec")).as("cosine"))
-      .filter(col("cosine") >= threshold)
-  }
-
-  /** Embedding-cosine near-duplicate pairs (the 5th dedup mode): SRP
-    * blocking, exact cosine verify, threshold filter. */
-  def cosineNearDups(corpus: DataFrame, threshold: Double,
-                     idCol: String = "vec_id", vecCol: String = "embedding",
-                     bits: Int = SrpBits, probeRadius: Int = 1, tables: Int = 4): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val dim = corpus.select(size(col(vecCol))).first().getInt(0)
-    val planes = Array.tabulate(tables)(t => hyperplanes(dim, bits, t))
-    val bp = spark.sparkContext.broadcast(planes)
-    val coded = corpus
-      .select(col(idCol).cast("string").as("id"), col(vecCol).as("vec"))
-      .as[(String, Array[Float])]
-      .mapPartitions { it =>
-        val pls = bp.value
-        it.flatMap { case (id, v) =>
-          pls.indices.iterator.flatMap { t =>
-            val c = srpCode(v, pls(t))
-            // one side stays in its home bucket; the probing side fans out
-            Iterator.single((id, v, t, c, true)) ++
-              probeCodes(c, bits, probeRadius).drop(1).map(pc => (id, v, t, pc, false))
-          }
-        }
-      }
-      .toDF("id", "vec", "table", "code", "home")
-    val a = coded.filter(col("home"))
-      .select(col("table"), col("code"), col("id").as("a_id"), col("vec").as("a_vec"))
-    val b = coded.select(col("table"), col("code"), col("id").as("b_id"), col("vec").as("b_vec"))
-    a.join(b, Seq("table", "code"))
-      .filter(col("a_id") < col("b_id"))
-      .dropDuplicates("a_id", "b_id")
       .select(col("a_id"), col("b_id"), cosine(col("a_vec"), col("b_vec")).as("cosine"))
       .filter(col("cosine") >= threshold)
   }

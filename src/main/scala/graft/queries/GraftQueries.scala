@@ -221,7 +221,7 @@ object GraftQueries {
 
   /** Row count the oracle SQL embeds in its dump paths (q19/q39/q44
     * read the extraction dump). Set ONCE, up front, by the entry point
-    * (Verify/Bench/BenchOne call [[setSf]] before any query runs) —
+    * (Verify/Bench/BenchExtra/DumpOne call [[setSf]] before any query runs) —
     * derived from the sf argument, never from execution order, so a
     * reordering of queries can't silently point oracles at the wrong
     * dump (round-2 VERDICT "What's wrong" #4 / ADVICE #5). Defaults to

@@ -128,32 +128,6 @@ object VlmPrompts {
     (key, classMap(key))
   }
 
-  /** OCR prompt (client.py:169-201 ocr_image): plain or detailed. */
-  def ocrPrompt(lang: String, detailed: Boolean): String =
-    if (detailed)
-      s"""Read this document image and transcribe ALL text.
-         |For every text region report the exact content, its rough
-         |position on the page, and its kind (heading, paragraph, table
-         |cell, label, value, signature area).
-         |Language hint: $lang
-         |Keep the document's logical layout; include every number,
-         |date, and readable handwritten item.""".stripMargin
-    else
-      s"""Transcribe ALL text from this document image, keeping the
-         |original layout as closely as possible. Include every number,
-         |date, and readable handwritten item.
-         |Language: $lang""".stripMargin
-
-  /** Constrained-category classify prompt (client.py:203-228
-    * classify_document with an explicit category list). */
-  def classifyWithCategories(categories: Seq[String]): String = {
-    val cats = categories.map(c => s"- $c").mkString("\n")
-    s"""Classify this document as ONE of the following categories:
-       |$cats
-       |
-       |Reply with ONLY the category name, nothing else.""".stripMargin
-  }
-
   /** Field extraction prompt (client.py:230-260 extract_fields): one
     * FIELD_NAME: value line per requested field, NOT FOUND sentinel. */
   def extractFieldsPrompt(fields: Seq[String]): String = {
@@ -227,8 +201,6 @@ final class VlmUnavailable(msg: String) extends RuntimeException(msg)
   * ignores; the deterministic stub uses it to plant transient faults. */
 trait VlmTransport extends Serializable {
   def model: String
-  def isAvailable: Boolean
-  def listModels: Seq[String]
   /** @throws VlmUnavailable on transport/model failure */
   def generate(prompt: String, imageB64: String, temperatureMilli: Int,
                numPredict: Int, attempt: Int): VlmResponse
@@ -260,8 +232,6 @@ trait VlmTransport extends Serializable {
 object StubVlm extends VlmTransport {
   val Version = 2 // v2: digest = md5 over hex rendering (DuckDB-portable)
   val model = "stub-vl:deterministic"
-  def isAvailable = true
-  def listModels: Seq[String] = Seq(model)
 
   val MicrosPerPromptToken = 250L
   val MicrosPerEvalToken = 1000L

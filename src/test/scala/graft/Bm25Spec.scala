@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.ops.Bm25
 
 /** BM25 retrieval: the Spark pipeline must agree row-for-row with an
@@ -12,12 +11,7 @@ import graft.ops.Bm25
   */
 class Bm25Spec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = graft.job.GraftSession.local("4")
 
   private def frame(rows: Seq[(Long, String)]) = {
     import org.apache.spark.sql.types._

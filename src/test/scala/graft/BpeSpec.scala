@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.ops.Bpe
 
 /** BPE merge training: the Spark long-form window pipeline must agree
@@ -13,12 +12,7 @@ import graft.ops.Bpe
   */
 class BpeSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = graft.job.GraftSession.local("4")
 
   private def frame(texts: Seq[String]) = {
     import org.apache.spark.sql.types._

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 import graft.job.{CurateJob, ExtractJob, SnapshotStore}
@@ -11,13 +10,7 @@ import graft.job.{CurateJob, ExtractJob, SnapshotStore}
   * gate monotonicity, cap enforcement, split totality, determinism. */
 class CurateJobSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = graft.job.GraftSession.local("4")
 
   private def tmp(): String = Files.createTempDirectory("curatespec").toString
 

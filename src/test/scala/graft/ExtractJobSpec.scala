@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 import graft.core.{Extract, Page}
@@ -19,13 +18,7 @@ import graft.job.{ExtractJob, SnapshotStore}
   */
 class ExtractJobSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = graft.job.GraftSession.local("4")
 
   private def tmp(): String = Files.createTempDirectory("graftspec").toString
 

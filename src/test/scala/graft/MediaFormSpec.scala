@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.forms.FormDetector
 import graft.gen.PageGen
@@ -10,12 +9,7 @@ import graft.multimodal.MediaOps
 /** Form detection and multimodal plumbing. */
 class MediaFormSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = graft.job.GraftSession.local("4")
 
   test("form detector: planted forms found exactly, no false positives") {
     var tp = 0; var fp = 0; var fn = 0; var forms = 0

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.charset.StandardCharsets
 import graft.ops.Mojibake
@@ -13,12 +12,7 @@ import graft.ops.Mojibake
   */
 class MojibakeSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = graft.job.GraftSession.local("4")
 
   /** UTF-8-as-Latin-1 mangle (the defect under repair). */
   private def mangle(s: String): String =

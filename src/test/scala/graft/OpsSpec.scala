@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.{Balance, Dedup, Similarity, TextStats}
 
@@ -12,12 +11,7 @@ import graft.ops.{Balance, Dedup, Similarity, TextStats}
   */
 class OpsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = graft.job.GraftSession.local("4")
 
   val sfDir = "/root/testdata/sf0.001"
   lazy val docs = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -99,7 +93,8 @@ class OpsSpec extends AnyFunSuite {
     val queries = emb.filter(col("vec_id") < 20)
     val brute = Similarity.bruteForceTopK(emb, queries, 5).collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
-    val srp = Similarity.srpTopK(emb, queries, 5, bits = 8, probeRadius = 2).collect()
+    val srp = Similarity.rankWithin(
+        Similarity.srpCandidates(emb, queries, bits = 8, probeRadius = 2), emb, 5).collect()
       .map(r => (r.getAs[String]("query_id").toLong, r.getAs[String]("neighbor_id").toLong)).toSet
     val recall = brute.count(srp.contains).toDouble / brute.size
     info(f"srp recall@5 = $recall%.2f (candidates examined ≪ corpus)")
@@ -114,7 +109,8 @@ class OpsSpec extends AnyFunSuite {
     val queries = emb.filter(col("vec_id") < 20)
     val brute = Similarity.bruteForceTopK(emb, queries, 5).collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
-    val ivf = Similarity.ivfTopK(emb, queries, 5, nCells = 32, nprobe = 8, assign = 2).collect()
+    val ivf = Similarity.rankWithin(
+        Similarity.ivfCandidates(emb, queries, nCells = 32, nprobe = 8, assign = 2), emb, 5).collect()
       .map(r => (r.getAs[String]("query_id").toLong, r.getAs[String]("neighbor_id").toLong)).toSet
     val recall = brute.count(ivf.contains).toDouble / brute.size
     info(f"ivf recall@5 = $recall%.2f (nCells=32 nprobe=8 assign=2: ~37%% of corpus scanned)")

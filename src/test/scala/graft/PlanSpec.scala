@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 /** Physical-plan regression gates — each pins a plan property a past
@@ -10,18 +10,11 @@ import org.apache.spark.sql.functions.col
   * so every assertion collects the same DataFrame first. */
 class PlanSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // getOrCreate may hand back a session another suite configured
-    // (e.g. SkewJoinSpec disables broadcast joins) — pin every runtime
-    // conf these plan assertions depend on, keeping suite-order
-    // robustness (see round-1 note on shared SparkContext confs).
+  lazy val spark = {
+    val s = graft.job.GraftSession.local("8")
+    // the session is shared with every suite in this JVM, and any of
+    // them may have changed a runtime conf — pin every runtime conf
+    // these plan assertions depend on, keeping suite-order robustness
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", (10L << 20).toString)
     s.conf.set("spark.sql.adaptive.enabled", "true")
     s

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.nlp.ResponseParser
 
@@ -10,11 +9,7 @@ import graft.nlp.ResponseParser
   * responses, including every fallback branch. */
 class ResponseParserSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = graft.job.GraftSession.local("4")
 
   private def parse(resp: String): (String, String, String, Option[String]) = {
     import spark.implicits._

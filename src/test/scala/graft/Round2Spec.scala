@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.Dedup
 import graft.nlp.DocType
@@ -10,12 +9,7 @@ import graft.nlp.DocType
   * doc-type keyword classification, oversized-LSH-bucket audit. */
 class Round2Spec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = graft.job.GraftSession.local("4")
 
   test("jaccardBruteForce matches a hand-computed trigram jaccard") {
     import spark.implicits._

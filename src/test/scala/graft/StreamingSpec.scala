@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import java.nio.file.Files
 import graft.job.{ExtractJob, SnapshotStore}
 import graft.streaming.StreamingExtract
@@ -11,12 +10,7 @@ import graft.streaming.StreamingExtract
   * watermarked windowed aggregation must match its batch equivalent. */
 class StreamingSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = graft.job.GraftSession.local("4")
 
   private def tmp(): String = Files.createTempDirectory("graftstream").toString
 

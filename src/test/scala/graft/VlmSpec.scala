@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.vlm.{StubVlm, VlmPrompts, VlmStage, VlmUnavailable}
 
@@ -12,12 +11,7 @@ import graft.vlm.{StubVlm, VlmPrompts, VlmStage, VlmUnavailable}
   * swap must preserve. */
 class VlmSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = graft.job.GraftSession.local("4")
 
   private def b64(bytes: Array[Byte]): String =
     java.util.Base64.getEncoder.encodeToString(bytes)

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 import graft.core.Extract
@@ -13,12 +12,7 @@ import graft.sources.Warc
   * WARC-ingested table must be byte-identical to direct extraction. */
 class WarcSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = graft.job.GraftSession.local("4")
 
   test("single-record roundtrip preserves every field") {
     val g = PageGen.genRow(PageGen.DefaultSeed, 7L)

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.ops.Winnowing
 
 /** Planted-truth tests for winnowing (q109): the paper's detection
@@ -9,12 +8,7 @@ import graft.ops.Winnowing
   * symmetry on identical documents. */
 class WinnowingSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = graft.job.GraftSession.local("4")
 
   private def fps(rows: Seq[(Long, String)]) = {
     import spark.implicits._
