@@ -47,11 +47,7 @@ object ExportJob {
 
     // tokenizer: train on this corpus (self-contained, like q85);
     // counts under the TRAINED merges, not the whitespace definition
-    val words = docs
-      .select(explode(graft.ops.TextStats.lowerToks(col("text"))).as("word"))
-      .filter(col("word").rlike("^[a-z]+$"))
-      .groupBy(col("word")).agg(count(lit(1)).as("freq"))
-    val wl = graft.ops.Bpe.encodeWordLengthsFromCounts(words)
+    val wl = graft.ops.Bpe.encodeWordLengthsFromCounts(graft.ops.Bpe.rawWordCounts(docs, "text"))
 
     // the one oracle-checked token rule (Bpe.perDocTokenCounts — the
     // q107 chain), keyed by (url, doc_id); the url PASSES THROUGH the

@@ -31,8 +31,8 @@ import org.apache.spark.sql.types._
   * tok) — model-sized work, never corpus-sized, the IVF-centroid
   * pattern. Each round: two window passes + one ≤|pairs| aggregate;
   * the argmax pair is a 1-row driver collect (the model, bytes). The
-  * corpus text never shuffles; [[encodeTokenStats]] is the corpus-wide
-  * application pass against that model.
+  * corpus text never shuffles; [[encodeTokenStatsFromCounts]] is the
+  * corpus-wide application pass against that model.
   */
 object Bpe {
 
@@ -47,9 +47,9 @@ object Bpe {
   val VocabCap = 4000
 
   /** The one corpus-sized exchange: uncapped (word, freq) over every
-    * in-scope corpus word — the table training and encode both start
-    * from (callers with a staged unigram-count dump pass its filtered
-    * projection to the *FromCounts entry points instead). */
+    * in-scope corpus word — the table the *FromCounts entry points
+    * (training and encode) start from. Callers with a staged
+    * unigram-count dump pass its filtered projection instead. */
   def rawWordCounts(docs: DataFrame, textCol: String): DataFrame =
     docs.select(explode(TextStats.lowerToks(col(textCol))).as("word"))
       .filter(col("word").rlike("^[a-z]+$"))
@@ -64,17 +64,11 @@ object Bpe {
   // expression: graft.functions.BpeEncodeWord.mergeOnce + the unrolled
   // oracle CTEs keep the window semantics pinned)
 
-  /** Learned merges: (round, lhs, rhs, pair_count). Trains [[Rounds]]
-    * rounds (early-stops when no adjacent pair remains). */
-  def trainMerges(docs: DataFrame, textCol: String,
-                  rounds: Int = Rounds, cap: Int = VocabCap): DataFrame =
-    trainMergesFromCounts(rawWordCounts(docs, textCol), rounds, cap)
-
-  /** [[trainMerges]] from a pre-computed (word, freq) table — callers
-    * with a staged corpus unigram dump (the extract-once/read-many
-    * pattern) enter here, so reps measure the merge rounds (the
-    * training plan itself), not a re-derivation of the shared
-    * word-count exchange.
+  /** Learned merges: (round, lhs, rhs, pair_count) from a (word, freq)
+    * table ([[rawWordCounts]] or a staged corpus unigram dump — the
+    * extract-once/read-many pattern, so reps measure the merge rounds,
+    * not a re-derivation of the shared word-count exchange). Trains
+    * [[Rounds]] rounds (early-stops when no adjacent pair remains).
     *
     * r6b (guide §1.2 step 1): training runs DRIVER-SIDE over the
     * collected head vocabulary. The head cut is ≤ [[VocabCap]]
@@ -171,7 +165,7 @@ object Bpe {
     org.apache.spark.unsafe.types.UTF8String.fromString(a)
       .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b)) < 0
 
-  /** Result rows kept by [[encodeTokenStats]] (deterministic ties:
+  /** Result rows kept by [[encodeTokenStatsFromCounts]] (deterministic ties:
     * occurrences DESC, tok ASC). */
   val EncodeTopK = 32
 
@@ -184,25 +178,19 @@ object Bpe {
     * oracle (which re-derives both, end to end, in unrolled CTEs)
     * value-checks the whole tokenizer, not just the merge list.
     *
-    * 100 TB shape: the model is 8 driver-side rows (trainMerges); the
-    * ONLY corpus-sized exchange here is the distinct-word count
-    * (map-side combinable, ≤ distinct-word cardinality out — the same
-    * exchange training already pays). Encoding runs as [[Rounds]]
+    * 100 TB shape: the model is 8 driver-side rows
+    * (trainMergesFromCounts); the ONLY corpus-sized exchange here is
+    * the distinct-word count (map-side combinable, ≤ distinct-word
+    * cardinality out — the same exchange training already pays). Encoding runs as [[Rounds]]
     * window passes over the DISTINCT-WORD long form — heavy-tailed but
     * ≪ corpus tokens — and per-document token counts at full scale are
     * a broadcast join of word → n_tokens against this table; the
-    * corpus text itself never shuffles. */
-  def encodeTokenStats(docs: DataFrame, textCol: String,
-                       rounds: Int = Rounds, cap: Int = VocabCap,
-                       topK: Int = EncodeTopK): DataFrame =
-    encodeTokenStatsFromCounts(rawWordCounts(docs, textCol), rounds,
-      cap, topK)
-
-  /** [[encodeTokenStats]] from a pre-computed (word, freq) table —
-    * like [[trainMergesFromCounts]], the entry point for callers with
-    * a staged unigram dump: training and encode then share ONE
-    * materialization of the word table instead of each re-paying the
-    * corpus-sized exchange. */
+    * corpus text itself never shuffles.
+    *
+    * Input is a (word, freq) table, like [[trainMergesFromCounts]]:
+    * [[rawWordCounts]], or a staged unigram dump, so training and
+    * encode share ONE materialization of the word table instead of
+    * each re-paying the corpus-sized exchange. */
   def encodeTokenStatsFromCounts(words: DataFrame, rounds: Int = Rounds,
                                  cap: Int = VocabCap,
                                  topK: Int = EncodeTopK): DataFrame =
@@ -214,8 +202,11 @@ object Bpe {
       .limit(topK)
 
   /** Every distinct word fully tokenized under the trained merges:
-    * (word, freq, pos, tok) — the shared tail of [[encodeTokenStats]]
-    * and [[encodeWordLengthsFromCounts]].
+    * (word, freq, pos, tok) — the shared tail of
+    * [[encodeTokenStatsFromCounts]] and [[encodeWordLengthsFromCounts]].
+    * `pos` is the token's 0-based position in its word (posexplode);
+    * the DuckDB mirror's ef$r CTEs number positions from 1. Both
+    * consumers read only the token multiset, never `pos` itself.
     *
     * r6b: application is ONE map-side pass through the native
     * [[graft.functions.BpeEncodeWord]] expression (the R merges are a
@@ -331,7 +322,8 @@ object Bpe {
        |$roundCtes""".stripMargin
   }
 
-  /** The DuckDB mirror of [[trainMerges]]: the merge list re-derived in
+  /** The DuckDB mirror of [[trainMergesFromCounts]] over
+    * [[rawWordCounts]]: the merge list re-derived in
     * unrolled CTEs (same head-vocab cut, chain-skip counting, and
     * (cnt DESC, l, r) argmax). */
   def trainSql(docsRel: String, rounds: Int = Rounds,
@@ -343,12 +335,15 @@ object Bpe {
        |$unions""".stripMargin
   }
 
-  /** The DuckDB mirror of [[encodeTokenStats]]: re-derives the merges
-    * (the training CTEs), then re-applies them to the FULL corpus word
-    * list with the identical window transform — ef$r parallels lf$r but
-    * pulls round r's pair from b$r instead of recomputing an argmax. An
-    * early-stopped round leaves b$r empty, so its pair subqueries read
-    * NULL and the coalesce makes the round a no-op in both engines. */
+  /** The DuckDB mirror of [[encodeTokenStatsFromCounts]] over
+    * [[rawWordCounts]]: re-derives the merges (the training CTEs), then
+    * re-applies them to the FULL corpus word list with the identical
+    * window transform — ef$r parallels lf$r but pulls round r's pair
+    * from b$r instead of recomputing an argmax. An early-stopped round
+    * leaves b$r empty, so its pair subqueries read NULL and the
+    * coalesce makes the round a no-op in both engines. ef$r's `pos` is
+    * 1-based where the engine's long form (encodedLongForm) is 0-based;
+    * only the order within a word matters. */
   def encodeSql(docsRel: String, rounds: Int = Rounds,
                 cap: Int = VocabCap, topK: Int = EncodeTopK): String =
     s"""WITH ${encodePrefixCtes(docsRel, rounds, cap)}

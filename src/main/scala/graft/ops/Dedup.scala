@@ -177,9 +177,7 @@ object Dedup {
     * over — exact dedup's job, not LSH's); call [[oversizedBuckets]]
     * to audit how many buckets a given corpus loses. */
   def candidatePairs(bands: DataFrame, maxBucket: Int = 1000): DataFrame = {
-    val sized = bands.withColumn("bucket_n",
-      count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy("band", "band_hash")))
-    val kept = sized.filter(col("bucket_n") <= maxBucket).drop("bucket_n")
+    val kept = capBuckets(bands, maxBucket)
     val a = kept.select(col("band"), col("band_hash"), col("id").as("a_id"))
     val b = kept.select(col("band"), col("band_hash"), col("id").as("b_id"))
     a.join(b, Seq("band", "band_hash"))
@@ -188,11 +186,24 @@ object Dedup {
       .distinct()
   }
 
+  /** The bucket cap both candidate joins apply: drop every
+    * (band, band_hash) bucket holding more than `maxBucket` rows. */
+  private def capBuckets(bands: DataFrame, maxBucket: Int): DataFrame =
+    bands.withColumn("bucket_n",
+      count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy("band", "band_hash")))
+      .filter(col("bucket_n") <= maxBucket).drop("bucket_n")
+
   /** Incremental (batch-vs-corpus) candidate pairs: the LSH bands of a
-    * NEW ingest batch equi-joined against the bands of the EXISTING
-    * corpus — the daily-crawl dedup shape, where the corpus index is
-    * built once and each increment only hashes and probes its own docs.
-    * Returns distinct (a_id = batch id, b_id = corpus id).
+    * NEW ingest batch equi-joined against the precomputed bands of the
+    * EXISTING corpus ([[minhashBands]]) — the daily-crawl dedup shape,
+    * where the corpus index is built once and each increment only
+    * hashes and probes its own docs. Returns distinct (a_id = batch id,
+    * b_id = corpus id).
+    *
+    * The caller keeps the corpus bands, so the SAME DataFrame can be
+    * passed to [[auditBucketCap]] and the corpus-bucket drop is
+    * recorded in a sidecar instead of silently zeroing a batch doc's
+    * candidates (round-4 ADVICE #3).
     *
     * Scale: the corpus side is the 10^12-row side, so the bucket cap is
     * applied to ITS buckets (a batch band key landing in an oversized
@@ -202,67 +213,23 @@ object Dedup {
     * table partitioned by band — each increment shuffles only
     * |batch| × Bands rows, never the corpus. Within-batch duplicates
     * are [[candidatePairs]]' job, deliberately out of scope here. */
-  def incrementalCandidates(corpus: DataFrame, batch: DataFrame,
+  def incrementalCandidates(corpusBands: DataFrame, batch: DataFrame,
                             idCol: String, textCol: String,
                             shingleN: Int = 2, maxBucket: Int = 1000): DataFrame =
-    incrementalCandidatesFromBands(
-      minhashBands(corpus, idCol, textCol, shingleN),
-      batch, idCol, textCol, shingleN, maxBucket)
-
-  /** [[incrementalCandidates]] with the corpus bands precomputed by the
-    * caller — the dump-site shape, so the SAME bands DataFrame can be
-    * passed to [[auditBucketCap]] and the corpus-bucket drop is
-    * recorded in a sidecar instead of silently zeroing a batch doc's
-    * candidates (round-4 ADVICE #3). */
-  def incrementalCandidatesFromBands(cb: DataFrame, batch: DataFrame,
-                                     idCol: String, textCol: String,
-                                     shingleN: Int = 2, maxBucket: Int = 1000): DataFrame = {
-    val bb = minhashBands(batch, idCol, textCol, shingleN)
-    val sized = cb.withColumn("bucket_n",
-      count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy("band", "band_hash")))
-    val kept = sized.filter(col("bucket_n") <= maxBucket).drop("bucket_n")
-    bb.select(col("band"), col("band_hash"), col("id").as("a_id"))
-      .join(kept.select(col("band"), col("band_hash"), col("id").as("b_id")),
+    minhashBands(batch, idCol, textCol, shingleN)
+      .select(col("band"), col("band_hash"), col("id").as("a_id"))
+      .join(capBuckets(corpusBands, maxBucket)
+        .select(col("band"), col("band_hash"), col("id").as("b_id")),
         Seq("band", "band_hash"))
       .select("a_id", "b_id")
       .distinct()
-  }
 
-  /** Exact n-gram Jaccard over candidate pairs: join texts back by id
-    * (two hash joins), compute per-pair in a map. */
+  /** Exact n-gram Jaccard over candidate pairs: the member shingle
+    * sets joined to both sides ([[verifyJoin]]), the kernel map-side. */
   def jaccardVerify(candidates: DataFrame, docs: DataFrame, idCol: String,
                     textCol: String, shingleN: Int, threshold: Double): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // verify only touches candidate MEMBERS: semi-join the corpus down
-    // to ids that appear in some pair before the two text joins, so the
-    // heavy text payload of the ~never-duplicated majority never enters
-    // a join shuffle (at sf0.1 this is ~10x fewer text rows; at 10^12
-    // docs it is the difference between shuffling the corpus twice and
-    // shuffling only the near-dup suspects)
-    // both members from ONE read of `candidates` (a union of two
-    // selects would re-run the whole candidate lineage once per side;
-    // the pair join below is the only other read)
-    val memberIds = candidates.select(explode(array(col("a_id"), col("b_id"))).as("id"))
-      .distinct()
-    // r6 (guide §2.3): shingle each MEMBER once, map-side, before the
-    // pair joins — the old shape joined raw text and re-ran
-    // shingleHashes per PAIR occurrence, so a doc in k candidate pairs
-    // was tokenized and hashed k times (and its text crossed the join
-    // twice). The joins now carry the 8-byte hash arrays instead of
-    // text; the per-pair kernel is the identical jaccard() over the
-    // identical hash sets, so the output is bit-for-bit unchanged.
-    val sh = docs.select(col(idCol).cast("string").as("id"), col(textCol).as("text"))
-      .join(memberIds, Seq("id"), "left_semi")
-      .as[(String, String)]
-      .mapPartitions(_.map { case (id, t) => (id, shingleHashes(t, shingleN)) })
-      .toDF("id", "sh")
-    val joined = candidates
-      .join(sh.withColumnRenamed("id", "a_id").withColumnRenamed("sh", "a_sh"), Seq("a_id"))
-      .join(sh.withColumnRenamed("id", "b_id").withColumnRenamed("sh", "b_sh"), Seq("b_id"))
-      .select(col("a_id"), col("b_id"), col("a_sh"), col("b_sh"))
-      .as[(String, String, Array[Long], Array[Long])]
-    joined.mapPartitions { it =>
+    import docs.sparkSession.implicits._
+    verifyJoin(candidates, docs, idCol, textCol, shingleN).mapPartitions { it =>
       it.map { case (a, b, ha, hb) => (a, b, jaccard(ha, hb)) }
     }.toDF("a_id", "b_id", "jaccard")
       .filter(col("jaccard") >= threshold)
@@ -273,31 +240,15 @@ object Dedup {
     * resemblance): symmetric jaccard misses a short document embedded
     * verbatim in a much longer one (the union is dominated by the long
     * side), but C(A→B) = |sh(A)∩sh(B)| / |sh(A)| reads 1.0 regardless
-    * of the size ratio. Same verify shape and scale posture as
-    * [[jaccardVerify]]: semi-join the corpus down to pair members, two
-    * hash joins bring the texts, the kernel is map-side. Emits both
-    * directions plus the dominant one; a pair is kept when EITHER
+    * of the size ratio. Same verify join and scale posture as
+    * [[jaccardVerify]] ([[verifyJoin]]); the kernel is map-side. Emits
+    * both directions plus the dominant one; a pair is kept when EITHER
     * direction clears `threshold`. shingleHashes returns a non-empty
     * distinct set even for empty text, so denominators are never 0. */
   def containmentVerify(candidates: DataFrame, docs: DataFrame, idCol: String,
                         textCol: String, shingleN: Int, threshold: Double): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val memberIds = candidates.select(explode(array(col("a_id"), col("b_id"))).as("id"))
-      .distinct()
-    // r6: same member-once shingling as [[jaccardVerify]] — hash arrays
-    // join instead of raw text, the containment kernel is unchanged.
-    val sh = docs.select(col(idCol).cast("string").as("id"), col(textCol).as("text"))
-      .join(memberIds, Seq("id"), "left_semi")
-      .as[(String, String)]
-      .mapPartitions(_.map { case (id, t) => (id, shingleHashes(t, shingleN)) })
-      .toDF("id", "sh")
-    val joined = candidates
-      .join(sh.withColumnRenamed("id", "a_id").withColumnRenamed("sh", "a_sh"), Seq("a_id"))
-      .join(sh.withColumnRenamed("id", "b_id").withColumnRenamed("sh", "b_sh"), Seq("b_id"))
-      .select(col("a_id"), col("b_id"), col("a_sh"), col("b_sh"))
-      .as[(String, String, Array[Long], Array[Long])]
-    joined.mapPartitions { it =>
+    import docs.sparkSession.implicits._
+    verifyJoin(candidates, docs, idCol, textCol, shingleN).mapPartitions { it =>
       it.map { case (a, b, sa, sb) =>
         val hs = new java.util.HashSet[Long]()
         sa.foreach(hs.add)
@@ -311,6 +262,39 @@ object Dedup {
         when(col("cont_a_in_b") >= col("cont_b_in_a"), "a_in_b").otherwise("b_in_a"))
   }
 
+  /** The verify join both pair kernels run on: (a_id, b_id, a_sh, b_sh),
+    * each candidate pair with both members' shingle hash sets. */
+  private def verifyJoin(candidates: DataFrame, docs: DataFrame, idCol: String,
+                         textCol: String, shingleN: Int): Dataset[(String, String, Array[Long], Array[Long])] = {
+    import docs.sparkSession.implicits._
+    // verify only touches candidate MEMBERS: semi-join the corpus down
+    // to ids that appear in some pair before the two joins, so the
+    // heavy text payload of the ~never-duplicated majority never enters
+    // a join shuffle (at sf0.1 this is ~10x fewer text rows; at 10^12
+    // docs it is the difference between shuffling the corpus twice and
+    // shuffling only the near-dup suspects)
+    // both members from ONE read of `candidates` (a union of two
+    // selects would re-run the whole candidate lineage once per side;
+    // the pair join below is the only other read)
+    val memberIds = candidates.select(explode(array(col("a_id"), col("b_id"))).as("id"))
+      .distinct()
+    // r6 (guide §2.3): shingle each MEMBER once, map-side, before the
+    // pair joins — joining raw text would re-run shingleHashes per PAIR
+    // occurrence, so a doc in k candidate pairs would be tokenized and
+    // hashed k times (and its text would cross the join twice). The
+    // joins carry the 8-byte hash arrays instead of text.
+    val sh = docs.select(col(idCol).cast("string").as("id"), col(textCol).as("text"))
+      .join(memberIds, Seq("id"), "left_semi")
+      .as[(String, String)]
+      .mapPartitions(_.map { case (id, t) => (id, shingleHashes(t, shingleN)) })
+      .toDF("id", "sh")
+    candidates
+      .join(sh.withColumnRenamed("id", "a_id").withColumnRenamed("sh", "a_sh"), Seq("a_id"))
+      .join(sh.withColumnRenamed("id", "b_id").withColumnRenamed("sh", "b_sh"), Seq("b_id"))
+      .select(col("a_id"), col("b_id"), col("a_sh"), col("b_sh"))
+      .as[(String, String, Array[Long], Array[Long])]
+  }
+
   def jaccard(a: Array[Long], b: Array[Long]): Double = {
     if (a.isEmpty && b.isEmpty) return 1.0
     val sa = new java.util.HashSet[Long]()
@@ -322,17 +306,10 @@ object Dedup {
     if (union == 0) 1.0 else inter.toDouble / union
   }
 
-  /** Full MinHash-LSH near-dup pipeline: bands → candidates → verify. */
-  def minhashDedup(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
-                   shingleN: Int = 2, threshold: Double = 0.8): DataFrame = {
-    val bands = minhashBands(docs, idCol, textCol, shingleN)
-    val cands = candidatePairs(bands)
-    jaccardVerify(cands, docs, idCol, textCol, shingleN, threshold)
-  }
-
   /** Exactness baseline: ALL-PAIRS word-trigram Jaccard — the q17-style
-    * cartesian ground truth for the LSH paths ([[minhashDedup]] is the
-    * 10^12-scale answer; this one is O(N^2) by design and stays gated to
+    * cartesian ground truth for the LSH paths ([[minhashBands]] →
+    * [[candidatePairs]] → [[jaccardVerify]] is the 10^12-scale answer,
+    * as CurateJob composes it; this one is O(N^2) by design and stays gated to
     * oracle/test scale). Everything is built from codegen'd SQL
     * expressions (split/transform/array_intersect — no UDF) precisely so
     * a DuckDB oracle can mirror it term for term. */
@@ -387,7 +364,7 @@ object Dedup {
   // ---- dedup clustering (keep-one-per-cluster) --------------------------
 
   /** Connected components over an undirected near-dup pair list —
-    * the step AFTER [[minhashDedup]] that a training-data pipeline
+    * the step AFTER [[jaccardVerify]] that a training-data pipeline
     * needs to actually drop duplicates: pairs → clusters → one
     * canonical doc per cluster.
     *

@@ -16,16 +16,21 @@ import org.apache.spark.sql.functions._
   * pipeline:
   *
   *  - TRAIN: one map-side-combinable groupBy builds the bigram count
-  *    table (the only corpus-sized exchange), a vocabulary-sized
-  *    groupBy folds it to LHS margins, and counts below `minCount`
-  *    are PRUNED — KenLM-style pruning is what makes n-gram models
-  *    fit in memory at any corpus size, and it is what makes the next
-  *    step honest.
-  *  - SCORE: the pruned model + margins BROADCAST (exactly as the
-  *    KenLM binary ships to every worker node); each doc's bigrams
-  *    stream map-side through two broadcast-hash lookups, and the only
-  *    exchange is the skinny per-doc aggregate. The scoring corpus
-  *    never shuffles — at 100 TB that is the whole ballgame.
+  *    table (the only corpus-sized exchange; skipped when the caller
+  *    passes a staged count table). [[score]] then COLLECTS that table
+  *    to the driver — the model-sized pull, the KenLM-binary analog —
+  *    and folds it there into LHS margins and the `minCount`-PRUNED
+  *    bigram slices (KenLM-style pruning is what keeps an n-gram model
+  *    driver-sized at any corpus size). The collect runs when the
+  *    scoring plan is BUILT, not when it executes: building the q74
+  *    plan runs the bigram job and its collect.
+  *  - SCORE: the driver-built model is ONE composite broadcast table
+  *    ([[graft.functions.LmModel]]: context → (margin, pruned-RHS
+  *    slice)); each doc is scored map-side inside a single native
+  *    expression ([[graft.functions.LmDocScore]]), one hash probe per
+  *    bigram occurrence. The scoring plan is a scan-project with no
+  *    exchange — the scoring corpus never shuffles, which at 100 TB is
+  *    the whole ballgame.
   *
   * All arithmetic is INTEGER fixed-point (micros), the house rule for
   * oracle-exact scores (same as q70's exact-integer PMI): per bigram

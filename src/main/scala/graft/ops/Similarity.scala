@@ -89,6 +89,15 @@ object Similarity {
     code
   }
 
+  /** The set-up both SRP candidate paths share: probe the corpus
+    * dimension (one `first()` job), draw `tables` plane tables of
+    * `bits` planes each and broadcast them. */
+  private def srpPlanes(corpus: DataFrame, vecCol: String, bits: Int,
+                        tables: Int): org.apache.spark.broadcast.Broadcast[Array[Array[Array[Double]]]] = {
+    val dim = corpus.select(size(col(vecCol))).first().getInt(0)
+    corpus.sparkSession.sparkContext.broadcast(Array.tabulate(tables)(t => hyperplanes(dim, bits, t)))
+  }
+
   // ---- IVF -------------------------------------------------------------
 
   /** Deterministic k-means (Lloyd, fixed seed, fixed iterations) over a
@@ -212,15 +221,16 @@ object Similarity {
   /** The IVF coarse quantizer: seed with driver-side Lloyd on a
     * deterministic ordered sample (limit() alone would depend on
     * partition layout, changing centroids across core counts), then
-    * refine over the FULL corpus with [[refineCentroids]]. */
+    * refine over the FULL corpus with [[refineCentroids]]. An empty
+    * corpus has no cells: the result is empty and nothing is refined. */
   def quantizer(corpus: DataFrame, idCol: String, vecCol: String,
                 nCells: Int, sampleSize: Int): Array[Array[Double]] = {
     val spark = corpus.sparkSession
     import spark.implicits._
     val sample = corpus.select(col(idCol), col(vecCol)).orderBy(col(idCol)).limit(sampleSize)
       .collect().map(_.getSeq[Float](1).toArray)
-    val seeds = kmeansCentroids(sample, nCells)
-    refineCentroids(corpus.select(col(vecCol)).as[Array[Float]], seeds)
+    if (sample.isEmpty) Array.empty
+    else refineCentroids(corpus.select(col(vecCol)).as[Array[Float]], kmeansCentroids(sample, nCells))
   }
 
   @inline private def sqDist(v: Array[Float], ce: Array[Double]): Double = {
@@ -287,11 +297,8 @@ object Similarity {
   def srpCandidates(corpus: DataFrame, queries: DataFrame,
                     idCol: String = "vec_id", vecCol: String = "embedding",
                     bits: Int = SrpBits, probeRadius: Int = 1, tables: Int = 4): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val dim = corpus.select(size(col(vecCol))).first().getInt(0)
-    val planes = Array.tabulate(tables)(t => hyperplanes(dim, bits, t))
-    val bp = spark.sparkContext.broadcast(planes)
+    import corpus.sparkSession.implicits._
+    val bp = srpPlanes(corpus, vecCol, bits, tables)
     val codedCorpus = corpus
       .select(col(idCol).cast("string").as("neighbor_id"), col(vecCol).as("c_vec"))
       .as[(String, Array[Float])]
@@ -372,11 +379,8 @@ object Similarity {
   def nearDupCandidates(corpus: DataFrame,
                         idCol: String = "vec_id", vecCol: String = "embedding",
                         bits: Int = SrpBits, probeRadius: Int = 1, tables: Int = 4): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val dim = corpus.select(size(col(vecCol))).first().getInt(0)
-    val planes = Array.tabulate(tables)(t => hyperplanes(dim, bits, t))
-    val bp = spark.sparkContext.broadcast(planes)
+    import corpus.sparkSession.implicits._
+    val bp = srpPlanes(corpus, vecCol, bits, tables)
     val coded = corpus
       .select(col(idCol).cast("string").as("id"), col(vecCol).as("vec"))
       .as[(String, Array[Float])]
@@ -675,13 +679,10 @@ object Similarity {
 
   /** Semantic dedup, the q77 kernel packaged for jobs (CurateJob's
     * embedding-level stage after lexical MinHash — the RefinedWeb →
-    * SemDeDup recipe): k-means-cell-scoped cosine pairs → connected
-    * components → keep each component's member FARTHEST from its cell
-    * centroid (the paper's diversity-preserving choice), distance in
-    * exact floor-micros, ties to the smallest id.
-    *
+    * SemDeDup recipe): [[semanticClusters]] over [[semanticIndex]].
     * Returns (id, cell, cluster_id, is_canonical, dist_micros) — one
-    * row per input doc; filter is_canonical for the keep set.
+    * row per input doc, none for an empty input; filter is_canonical
+    * for the keep set.
     *
     * Scale: pair search never leaves a cell (the paper's blocking), so
     * the only O(n²) term is per-cell and bounded by nCells sizing;
@@ -690,20 +691,43 @@ object Similarity {
   def semanticDedup(docs: DataFrame, idCol: String, vecCol: String,
                     nCells: Int = 16, threshold: Double = 0.35,
                     sampleSize: Int = 2000): DataFrame = {
-    val spark = docs.sparkSession
-    val e = docs.select(col(idCol).cast("string").as("id"), col(vecCol).as("embedding"))
-    val cbs = quantizer(e, "id", "embedding", nCells, sampleSize)
-    val assign = cellAssignments(e, "id", "embedding", cbs)
+    val (assign, books, pairs) = semanticIndex(docs, idCol, vecCol, nCells, sampleSize)
+    semanticClusters(docs, idCol, vecCol, assign, books, pairs, threshold)
+  }
+
+  /** SemDeDup's index half, the three tables q77 stages: the coarse
+    * [[quantizer]], each doc's cell ([[cellAssignments]]), the
+    * floor-micros cell centroids ([[pqCodebookTable]]) and the
+    * within-cell candidate pairs (pair search never leaves a cell).
+    * Returns (assign (id, cell), books (cell, cm), pairs (cell, a_id,
+    * b_id)), ids as strings. The quantizer sample is ordered by the raw
+    * `idCol`: a long id sorts numerically, and a string cast would
+    * reorder the sample and move every centroid. An empty input has no
+    * centroids, so all three tables are empty. */
+  def semanticIndex(docs: DataFrame, idCol: String, vecCol: String,
+                    nCells: Int, sampleSize: Int): (DataFrame, DataFrame, DataFrame) = {
+    val cbs = quantizer(docs, idCol, vecCol, nCells, sampleSize)
+    val assign = cellAssignments(docs, idCol, vecCol, cbs)
+    val books = pqCodebookTable(docs.sparkSession, Array(cbs)).select(col("cell"), col("cm"))
     val pairs = assign.select(col("cell"), col("id").as("a_id"))
       .join(assign.select(col("cell"), col("id").as("b_id")), Seq("cell"))
       .filter(col("a_id") < col("b_id"))
-    val verified = pairs
-      .join(e.select(col("id").as("a_id"), col("embedding").as("a_vec")), "a_id")
-      .join(e.select(col("id").as("b_id"), col("embedding").as("b_vec")), "b_id")
-      .filter(cosine(col("a_vec"), col("b_vec")) >= threshold)
-      .select("a_id", "b_id")
-    val labels = Dedup.connectedComponents(verified)
-    val books = pqCodebookTable(spark, Array(cbs)).select(col("cell"), col("cm"))
+    (assign, books, pairs)
+  }
+
+  /** SemDeDup's clusters half over the [[semanticIndex]] tables: the
+    * within-cell pairs verified by exact cosine ([[verifyPairs]]) →
+    * connected components → each component keeps its member FARTHEST
+    * from its cell centroid (the paper's diversity-preserving choice),
+    * distance in exact floor-micros, ties to the smallest id. Returns
+    * (id, cell, cluster_id, is_canonical, dist_micros), one row per
+    * assigned doc. */
+  def semanticClusters(docs: DataFrame, idCol: String, vecCol: String,
+                       assign: DataFrame, books: DataFrame, pairs: DataFrame,
+                       threshold: Double): DataFrame = {
+    val e = docs.select(col(idCol).cast("string").as("id"), col(vecCol).as("embedding"))
+    val labels = Dedup.connectedComponents(
+      verifyPairs(pairs, docs, threshold, idCol, vecCol).select(col("a_id"), col("b_id")))
     val distMicros =
       "aggregate(zip_with(transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT)), " +
         "cm, (a, b) -> (a - b) * (a - b)), CAST(0 AS BIGINT), (acc, x) -> acc + x)"

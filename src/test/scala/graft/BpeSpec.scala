@@ -66,7 +66,7 @@ class BpeSpec extends AnyFunSuite {
   }
 
   private def run(texts: Seq[String], rounds: Int, cap: Int = 4000) =
-    Bpe.trainMerges(frame(texts), "text", rounds, cap).collect()
+    Bpe.trainMergesFromCounts(Bpe.rawWordCounts(frame(texts), "text"), rounds, cap).collect()
       .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
       .toSeq.sortBy(_._1)
 
@@ -159,7 +159,7 @@ class BpeSpec extends AnyFunSuite {
 
   private def runEncode(texts: Seq[String], rounds: Int, cap: Int,
                         topK: Int): Seq[(String, Long, Long)] =
-    Bpe.encodeTokenStats(frame(texts), "text", rounds, cap, topK).collect()
+    Bpe.encodeTokenStatsFromCounts(Bpe.rawWordCounts(frame(texts), "text"), rounds, cap, topK).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
       .toSeq.sortBy { case (t, o, _) => (-o, t) }
 

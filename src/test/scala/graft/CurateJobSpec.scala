@@ -8,11 +8,11 @@ import graft.job.{CurateJob, ExtractJob, SnapshotStore}
 /** The end-to-end curation job: every published property of the
   * composed pipeline checked on a generated corpus — dedup exactness,
   * gate monotonicity, cap enforcement, split totality, determinism. */
-class CurateJobSpec extends AnyFunSuite {
+class CurateJobSpec extends AnyFunSuite with TempRoots {
 
   lazy val spark = graft.job.GraftSession.local("4")
 
-  private def tmp(): String = Files.createTempDirectory("curatespec").toString
+  private def tmp(): String = tempRoot("curatespec")
 
   /** 600 generated pages plus planted exact dups and a same-url
     * re-crawl, extracted into `<dir>/out`; shared by the property test
@@ -204,6 +204,12 @@ class CurateJobSpec extends AnyFunSuite {
     val f2 = CurateJob.run(spark, s"$dir/out", s"$dir/c2", perHostCap = 1000,
       embeddings = Some(emb), semThreshold = 0.9, semCells = 4)
     assert(f2 == f1)
+    // an embeddings table that matches no doc leaves the stage nothing
+    // to index: the funnel equals the no-embeddings one
+    val stray = rows.take(4).map { case (u, v) => (u + "?no-such-doc", v) }.toDF("url", "embedding")
+    val f3 = CurateJob.run(spark, s"$dir/out", s"$dir/c3", perHostCap = 1000,
+      embeddings = Some(stray), semThreshold = 0.9, semCells = 4)
+    assert(f3 == f0, s"$f3 vs $f0")
   }
 
   test("semanticDedup kernel: one canonical per component — the farthest-from-centroid member") {

@@ -3,11 +3,10 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 import graft.gen.PageGen
-import java.nio.file.Files
 
 /** SQL-surface and events-sink checks: the injected functions must be
   * callable from SQL strings and agree with the library path. */
-class ExtensionsSpec extends AnyFunSuite {
+class ExtensionsSpec extends AnyFunSuite with TempRoots {
 
   lazy val spark: SparkSession = {
     // spark.sql.extensions is a STATIC conf read from the SparkContext,
@@ -48,7 +47,7 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("snapshot commits append events rows (S9 sink)") {
-    val dir = Files.createTempDirectory("graftevents").toString
+    val dir = tempRoot("graftevents")
     val out = s"$dir/out"
     graft.job.ExtractJob.generatePages(spark, 80, s"$dir/pages", partitions = 2)
     graft.job.ExtractJob.run(spark, s"$dir/pages", out)

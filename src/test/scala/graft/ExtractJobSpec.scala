@@ -16,11 +16,11 @@ import graft.job.{ExtractJob, SnapshotStore}
   *  - lineage manifests: per-partition counts sum to total, error counts
   *    match quarantine rows, warc_ts ranges sane.
   */
-class ExtractJobSpec extends AnyFunSuite {
+class ExtractJobSpec extends AnyFunSuite with TempRoots {
 
   lazy val spark = graft.job.GraftSession.local("4")
 
-  private def tmp(): String = Files.createTempDirectory("graftspec").toString
+  private def tmp(): String = tempRoot("graftspec")
 
   val N = 400
 

@@ -9,7 +9,7 @@ import graft.ops.{Balance, Dedup, Similarity, TextStats}
   * planted near-duplicates, SRP-ANN must have sane recall vs exact
   * brute force, lang-id must be accurate on the generated corpus.
   */
-class OpsSpec extends AnyFunSuite {
+class OpsSpec extends AnyFunSuite with TempRoots {
 
   lazy val spark = graft.job.GraftSession.local("4")
 
@@ -33,7 +33,8 @@ class OpsSpec extends AnyFunSuite {
   test("minhash-LSH finds exactly the brute-force jaccard>=0.8 pairs") {
     val truth = bruteJaccardPairs(2, 0.8)
     assert(truth.nonEmpty, "expected planted near-dups in documents")
-    val got = Dedup.minhashDedup(docs, threshold = 0.8).collect()
+    val cands = Dedup.candidatePairs(Dedup.minhashBands(docs, "doc_id", "text", 2))
+    val got = Dedup.jaccardVerify(cands, docs, "doc_id", "text", 2, 0.8).collect()
       .map { r =>
         val a = r.getString(0).toLong; val b = r.getString(1).toLong
         (math.min(a, b), math.max(a, b))
@@ -47,14 +48,17 @@ class OpsSpec extends AnyFunSuite {
   test("LSH bucket cap on a pathological all-identical corpus is audited, never silent") {
     import spark.implicits._
     // 60 byte-identical docs -> every (band, bucket) holds all 60
-    val identical = (0 until 60)
-      .map(i => (i.toLong, "the very same pathological document text repeated verbatim"))
-      .toDF("doc_id", "text")
+    val text = "the very same pathological document text repeated verbatim"
+    val identical = (0 until 60).map(i => (i.toLong, text)).toDF("doc_id", "text")
+    // an incremental batch copy of one of them probes the same buckets
+    val batch = Seq((1000L, text)).toDF("doc_id", "text")
     val bands = Dedup.minhashBands(identical, "doc_id", "text", 2).cache()
     try {
       // cap below the bucket size: every bucket is oversized and dropped
       assert(Dedup.candidatePairs(bands, maxBucket = 10).count() == 0)
-      val dir = java.nio.file.Files.createTempDirectory("bucketaudit")
+      // the incremental join caps the corpus side's buckets the same way
+      assert(Dedup.incrementalCandidates(bands, batch, "doc_id", "text", 2, maxBucket = 10).count() == 0)
+      val dir = java.nio.file.Paths.get(tempRoot("bucketaudit"))
       val dropped = Dedup.auditBucketCap(bands, dir.toString, maxBucket = 10)
       assert(dropped > 0, "expected oversized buckets on an identical corpus")
       val sidecar = dir.resolve("_bucket_audit.json")
@@ -65,6 +69,7 @@ class OpsSpec extends AnyFunSuite {
       // a sane cap keeps the buckets (and the audit reports zero)
       assert(Dedup.auditBucketCap(bands, dir.toString, maxBucket = 1000) == 0L)
       assert(Dedup.candidatePairs(bands, maxBucket = 1000).count() == 60L * 59 / 2)
+      assert(Dedup.incrementalCandidates(bands, batch, "doc_id", "text", 2, maxBucket = 1000).count() == 60L)
     } finally bands.unpersist(blocking = false)
   }
 
@@ -318,7 +323,8 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("dedup clustering on the real near-dup pairs: every cluster keeps exactly one canonical") {
-    val pairs = Dedup.minhashDedup(docs, threshold = 0.8)
+    val cands = Dedup.candidatePairs(Dedup.minhashBands(docs, "doc_id", "text", 2))
+    val pairs = Dedup.jaccardVerify(cands, docs, "doc_id", "text", 2, 0.8)
     val clusters = Dedup.dedupClusters(docs, pairs)
     val perCluster = clusters.groupBy("cluster_id")
       .agg(sum(when(col("is_canonical"), 1).otherwise(0)).as("n_canon"))
@@ -513,7 +519,8 @@ class OpsSpec extends AnyFunSuite {
     } ++ (0 until 10).map(i => (2000L + i,
       s"completely fresh unrelated content item $i quick brown fox jumps lazily")))
       .toDF("doc_id", "text")
-    val cands = Dedup.incrementalCandidates(corpus, batch, "doc_id", "text", 2)
+    val cands = Dedup.incrementalCandidates(
+      Dedup.minhashBands(corpus, "doc_id", "text", 2), batch, "doc_id", "text", 2)
     val pairs = cands.collect().map(r => (r.getString(0).toLong, r.getString(1).toLong))
     assert(pairs.forall { case (a, b) => a >= 1000L && b < 200L },
       "a_id must be batch-side, b_id corpus-side")

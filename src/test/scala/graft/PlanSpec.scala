@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions.col
   * round fixed or a 100 TB design decision depends on. AQE caveat: the
   * executedPlan is final only after materializing THAT QueryExecution,
   * so every assertion collects the same DataFrame first. */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite with TempRoots {
 
   lazy val spark = {
     val s = graft.job.GraftSession.local("8")
@@ -155,7 +155,7 @@ class PlanSpec extends AnyFunSuite {
       _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.ParseUrl]),
       "ExtractJob.clusterKey regressed to parse_url")
     // the measured scaling-bench plan (tiny generated pages table)
-    val pagesDir = java.nio.file.Files.createTempDirectory("planspec_pages").toString
+    val pagesDir = tempRoot("planspec_pages")
     graft.job.ExtractJob.generatePages(spark, 50, pagesDir, partitions = 2)
     val bench = graft.job.ScalingBench.benchDF(spark, pagesDir, 8)
     assert(!hasParseUrl(bench), "ScalingBench.benchDF contains a ParseUrl node")

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path}
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.job.{PartitionLineage, Snapshot, SnapshotStore}
 
@@ -10,11 +9,9 @@ import graft.job.{PartitionLineage, Snapshot, SnapshotStore}
   * format, render → decode round trips, and the defaults older
   * manifests decode to.
   */
-class SnapshotStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SnapshotStoreSpec extends AnyFunSuite with TempRoots {
 
-  private val roots = scala.collection.mutable.ListBuffer.empty[Path]
-  private def tempRoot(): String = { roots += Files.createTempDirectory("snapshot-store-spec"); roots.last.toString }
-  override def afterAll(): Unit = roots.foreach(r => SnapshotStore.deleteRecursively(r.toString))
+  private def tempRoot(): String = tempRoot("snapshot-store-spec")
 
   private val tricky = "q\"uote\\slash\u0001ctl"
 

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.{GraftQueries, Stage}
 import graft.queries.Stage.{KeyInterpolator, Version}
@@ -10,14 +9,12 @@ import graft.queries.Stage.{KeyInterpolator, Version}
   * over the engine's real stage graph (paths only, nothing built), and
   * the build-once protocol over throwaway stages under a temp root.
   */
-class StageSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StageSpec extends AnyFunSuite with TempRoots {
 
   private val Rows = 1000
   private val stages = GraftQueries.stages
 
-  private val roots = scala.collection.mutable.ListBuffer.empty[Path]
-  private def tempRoot(): Path = { roots += Files.createTempDirectory("stage-spec"); roots.last }
-  override def afterAll(): Unit = roots.foreach(r => graft.job.SnapshotStore.deleteRecursively(r.toString))
+  private def tempRoot(): Path = Paths.get(tempRoot("stage-spec"))
 
   test("changing any version moves its stage's key and every downstream key") {
     for (s <- stages; v <- s.key.versions) {

@@ -1,18 +1,23 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 import graft.job.{ExtractJob, SnapshotStore}
 import graft.streaming.StreamingExtract
 
 /** Streaming mode: micro-batch extraction over arriving page files must
   * produce the same committed contents as one batch run, and the
   * watermarked windowed aggregation must match its batch equivalent. */
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with TempRoots {
 
   lazy val spark = graft.job.GraftSession.local("4")
 
-  private def tmp(): String = Files.createTempDirectory("graftstream").toString
+  private def tmp(): String = tempRoot("graftstream")
+
+  // every query here drains and stops itself; a failed test may not
+  override def afterAll(): Unit = {
+    spark.streams.active.foreach(_.stop())
+    super.afterAll()
+  }
 
   test("streaming extraction == batch extraction (same snapshot contents)") {
     val dir = tmp()

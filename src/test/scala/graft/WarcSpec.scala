@@ -10,7 +10,7 @@ import graft.sources.Warc
 /** WARC roundtrip gates: pages → segments → pages must preserve url,
   * timestamp, lang, and payload bytes exactly, and extraction over a
   * WARC-ingested table must be byte-identical to direct extraction. */
-class WarcSpec extends AnyFunSuite {
+class WarcSpec extends AnyFunSuite with TempRoots {
 
   lazy val spark = graft.job.GraftSession.local("4")
 
@@ -143,7 +143,7 @@ class WarcSpec extends AnyFunSuite {
 
   test("gzipped segments (.warc.gz) roundtrip through spark ingestion") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graftwarcgz").toString
+    val dir = tempRoot("graftwarcgz")
     val pages = (200 until 260).map(i => PageGen.genRow(PageGen.DefaultSeed, i.toLong).page)
     Warc.writeSegments(spark.createDataset(pages).repartition(3), s"$dir/gz", compress = true)
     assert(new java.io.File(s"$dir/gz").listFiles().forall(f =>
@@ -159,7 +159,7 @@ class WarcSpec extends AnyFunSuite {
 
   test("CDX random access: point-fetch by byte range == full-scan record, gz and plain") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graftcdx").toString
+    val dir = tempRoot("graftcdx")
     val pages = (300 until 360).map(i => PageGen.genRow(PageGen.DefaultSeed, i.toLong).page)
     for ((sub, gz) <- Seq(("gz", true), ("plain", false))) {
       Warc.writeSegments(spark.createDataset(pages).repartition(3), s"$dir/$sub", compress = gz)
@@ -206,7 +206,7 @@ class WarcSpec extends AnyFunSuite {
 
   test("a crashed writer's _tmp segment is invisible to ingestion and resume") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graftwarctmp").toString
+    val dir = tempRoot("graftwarctmp")
     val pages = (0 until 30).map(i => PageGen.genRow(PageGen.DefaultSeed, i.toLong).page)
     Warc.writeSegments(spark.createDataset(pages).coalesce(1), dir)
     // plant a crashed writer's leftover: a full copy under the _tmp name
@@ -224,7 +224,7 @@ class WarcSpec extends AnyFunSuite {
 
   test("file-manifest resume: re-run extracts ONLY newly-arrived segments") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graftwarcresume").toString
+    val dir = tempRoot("graftwarcresume")
     val first = (0 until 80).map(i => PageGen.genRow(PageGen.DefaultSeed, i.toLong).page)
     Warc.writeSegments(spark.createDataset(first).repartition(2), s"$dir/segments")
     val snap1 = graft.job.ExtractJob.runWarc(spark, s"$dir/segments", s"$dir/out")
@@ -238,7 +238,7 @@ class WarcSpec extends AnyFunSuite {
 
     // one NEW segment arrives (distinct filename so nothing is clobbered)
     val extra = (80 until 120).map(i => PageGen.genRow(PageGen.DefaultSeed, i.toLong).page)
-    val stage = Files.createTempDirectory("graftwarcstage").toString
+    val stage = tempRoot("graftwarcstage")
     Warc.writeSegments(spark.createDataset(extra).coalesce(1), stage)
     val staged = new java.io.File(stage).listFiles().filter(_.getName.endsWith(".warc"))
     assert(staged.length == 1)
@@ -261,7 +261,7 @@ class WarcSpec extends AnyFunSuite {
 
   test("spark ingestion: warc dir → extraction ≡ direct extraction") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graftwarc").toString
+    val dir = tempRoot("graftwarc")
     val gens = (0 until 150).map(i => PageGen.genRow(PageGen.DefaultSeed, i.toLong))
     val ds = spark.createDataset(gens.map(_.page)).repartition(5)
     Warc.writeSegments(ds, s"$dir/segments")
