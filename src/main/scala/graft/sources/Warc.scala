@@ -1,10 +1,15 @@
 package graft.sources
 
+import java.nio.ByteBuffer
+import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.sql.Timestamp
 import java.time.Instant
 import java.time.format.DateTimeFormatter
-import org.apache.spark.sql.{Dataset, SparkSession}
+import java.util.Locale
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions.col
 import graft.core.Page
 
@@ -18,6 +23,10 @@ import graft.core.Page
   * source reads whole .warc files (CC segments are ~1 GB, naturally
   * one task per file — 100 TB ⇒ ~100k parallel tasks), and a typed
   * flatMap splits records. No RDD, no custom FileFormat needed.
+  *
+  * This object also holds the record codec [[Wet]] shares: one framing
+  * reader ([[records]]), one streaming segment writer
+  * ([[writePartition]]) and one `binaryFile` scan ([[scan]]).
   *
   * Parser scope: WARC/1.0-1.1, `response` records with an HTTP/1.1
   * payload (status line + headers + body). Total: malformed records
@@ -39,20 +48,18 @@ object Warc {
     else v.map(c => if (c >= 0x20 || c == '\t') c else ' ')
   }
 
-  /** Serialize pages into one WARC segment (uncompressed). Headers are
-    * UTF-8 per the WARC spec (multibyte target URIs survive); record
-    * Content-Length counts BYTES of the http head + body. The raw
-    * `text` column rides in an extension header (WARC permits custom
-    * fields); header values cannot carry CR/LF, so the text is
-    * NEWLINE-NORMALIZED (CR/LF → space) in the header — the roundtrip
-    * is lossless only for newline-free text (PageGen's corpus is; a
-    * page whose text had newlines would roundtrip with them as
-    * spaces, never with broken framing). url/lang are sanitized the
-    * same way before being written on header lines. */
   /** One complete WARC response record (headers + HTTP envelope +
     * payload + the record separator) — the unit of segment
     * concatenation, of per-record gzip membership, and of CDX-indexed
-    * random access. */
+    * random access. Headers are UTF-8 per the WARC spec (multibyte
+    * target URIs survive); record Content-Length counts BYTES of the
+    * http head + body. The raw `text` column rides in an extension
+    * header (WARC permits custom fields); header values cannot carry
+    * CR/LF, so the text is NEWLINE-NORMALIZED (CR/LF → space) in the
+    * header — the roundtrip is lossless only for newline-free text
+    * (PageGen's corpus is; a page whose text had newlines would
+    * roundtrip with them as spaces, never with broken framing). url/lang
+    * are sanitized the same way before being written on header lines. */
   def recordBytes(p: Page): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(p.html.length + 512)
     def w(s: String): Unit = out.write(s.getBytes(UTF_8))
@@ -81,92 +88,61 @@ object Warc {
     out.toByteArray
   }
 
-  // ---- parser -----------------------------------------------------------
+  // ---- record codec: the framing reader --------------------------------
 
-  /** Parse the response records of a WARC segment lazily — flatMap
-    * consumes the iterator directly, so a ~1 GB segment never holds all
-    * of its Pages in memory at once (only the raw byte array + the
-    * record in flight). Records truncated mid-body are SKIPPED (their
-    * urls stay uncommitted, so a later re-run over the complete segment
-    * picks them up). */
-  def parseSegmentIterator(bytes: Array[Byte]): Iterator[Page] = new Iterator[Page] {
-    private val n = bytes.length
-    private var i = 0
-    private var nextPage: Page = null
+  private val RecordMagic = "WARC/".getBytes(ISO_8859_1)
+  private val BlankLine = "\r\n\r\n".getBytes(ISO_8859_1)
+  private val GzipMagic = Array[Byte](0x1f, 0x8b.toByte)
 
-    private def advance(): Unit = {
-      nextPage = null
-      while (nextPage == null && i < n) {
-        val start = findBytes(bytes, "WARC/", i)
-        if (start < 0) { i = n; return }
-        val headEnd = findBytes(bytes, "\r\n\r\n", start)
-        if (headEnd < 0) { i = n; return }
-        val headers = parseHeaders(new String(bytes, start, headEnd - start, UTF_8))
-        val bodyStart = headEnd + 4
-        // An unparseable Content-Length (garbage, negative, or >2^31) is
-        // treated like a truncated record: SKIP it rather than emit a
-        // zero-length payload — the url stays uncommitted and a later
-        // re-run over a repaired segment picks it up. We resync by
-        // scanning forward for the next "WARC/" magic.
-        headers.getOrElse("content-length", "").trim.toIntOption.filter(_ >= 0) match {
-          case None =>
-            i = bodyStart
-          case Some(len) =>
-            // Overflow-safe form of `bodyStart + len > n`: a corrupt
-            // length near 2^31 would wrap the sum negative and sneak
-            // past the bound, crashing copyOfRange instead of resyncing.
-            if (len > n - bodyStart) {
-              // Body extends past the segment end: either the segment is
-              // genuinely truncated (resync finds no further magic and
-              // the scan ends) or THIS record's length was corrupted but
-              // still parses (e.g. 999999999) — resyncing on the next
-              // "WARC/" magic recovers the intact records after it
-              // instead of abandoning the rest of the segment.
-              i = bodyStart
-            } else {
-              val bodyEnd = bodyStart + len
-              if (headers.getOrElse("warc-type", "") == "response") {
-                val uri = headers.getOrElse("warc-target-uri", "")
-                val ts = parseDate(headers.getOrElse("warc-date", ""))
-                // payload is an HTTP response: body follows the first CRLFCRLF
-                val httpBodyStart = findBytes(bytes, "\r\n\r\n", bodyStart) match {
-                  case x if x >= 0 && x + 4 <= bodyEnd => x + 4
-                  case _ => bodyStart
-                }
-                val httpHead = new String(bytes, bodyStart,
-                  math.max(0, httpBodyStart - bodyStart), UTF_8)
-                val lang = httpHead.linesIterator
-                  .find(_.toLowerCase(java.util.Locale.ROOT).startsWith("content-language:"))
-                  .map(_.split(":", 2)(1).trim).getOrElse("und")
-                if (uri.nonEmpty) {
-                  nextPage = Page(uri, ts,
-                    java.util.Arrays.copyOfRange(bytes, httpBodyStart, bodyEnd),
-                    headers.getOrElse("x-graft-raw-text", ""), lang)
-                }
-              }
-              i = bodyEnd
-            }
-        }
-      }
-    }
-
-    advance()
-    override def hasNext: Boolean = nextPage != null
-    override def next(): Page = {
-      val p = nextPage
-      advance()
-      p
-    }
+  /** One framed record: its headers (names lower-cased, values trimmed)
+    * and its body, `bytes[bodyStart, bodyEnd)` of the inflated segment. */
+  private[sources] final class Record(headers: Map[String, String],
+      val bytes: Array[Byte], val bodyStart: Int, val bodyEnd: Int) {
+    def header(name: String): String = headers.getOrElse(name, "")
   }
 
-  /** Eager form (tests / small segments). */
-  def parseSegment(bytes: Array[Byte]): Seq[Page] =
-    parseSegmentIterator(bytes).toSeq
+  /** The `warcType` records of one segment, framed lazily: a ~1 GB
+    * segment never holds all of its records at once, only its bytes
+    * and the record in flight. Gzip input (one member or many
+    * concatenated) is inflated first, recognised by its magic bytes
+    * whatever the file is named. Total: a record whose Content-Length
+    * is missing, unparseable, negative or past the segment end is
+    * skipped and the scan resyncs on the next `WARC/` after its header
+    * block — a corrupt length loses that record only, and a segment
+    * truncated mid-body keeps every record before the cut (the skipped
+    * urls stay uncommitted, so a re-run over a repaired segment picks
+    * them up). */
+  private[sources] def records(segment: Array[Byte], warcType: String): Iterator[Record] = {
+    val bytes = if (segment.startsWith(GzipMagic)) gunzip(segment) else segment
+    Iterator.unfold(0)(frame(bytes, _)).filter(_.header("warc-type") == warcType)
+  }
 
-  private[sources] def parseHeaders(s: String): Map[String, String] =
+  /** The first well-framed record at or after `from`, with the offset
+    * the scan resumes at. */
+  private def frame(b: Array[Byte], from: Int): Option[(Record, Int)] = {
+    var i = from
+    while (i < b.length) {
+      val start = findBytes(b, RecordMagic, i)
+      val headEnd = if (start < 0) -1 else findBytes(b, BlankLine, start)
+      if (headEnd < 0) return None
+      val headers = parseHeaders(new String(b, start, headEnd - start, UTF_8))
+      val bodyStart = headEnd + 4
+      headers.get("content-length").flatMap(_.toIntOption) match {
+        // `len <= length - bodyStart`, NOT `bodyStart + len <= length`:
+        // a corrupt length near 2^31 would wrap the sum negative and
+        // sneak past the bound instead of resyncing
+        case Some(len) if len >= 0 && len <= b.length - bodyStart =>
+          return Some((new Record(headers, b, bodyStart, bodyStart + len), bodyStart + len))
+        case _ => i = bodyStart
+      }
+    }
+    None
+  }
+
+  private def parseHeaders(s: String): Map[String, String] =
     s.linesIterator.flatMap { line =>
       val idx = line.indexOf(':')
-      if (idx > 0) Some(line.substring(0, idx).toLowerCase(java.util.Locale.ROOT)
+      if (idx > 0) Some(line.substring(0, idx).toLowerCase(Locale.ROOT)
         -> line.substring(idx + 1).trim)
       else None
     }.toMap
@@ -178,47 +154,109 @@ object Warc {
     try Timestamp.from(Instant.parse(s))
     catch { case _: Exception => new Timestamp(0L) }
 
-  private[sources] def findBytes(b: Array[Byte], p: String, from: Int): Int = {
-    val pb = p.getBytes(ISO_8859_1)
-    val n = b.length
+  /** First index `i >= from` where `p` occurs wholly inside `b[.., until)`. */
+  private def findBytes(b: Array[Byte], p: Array[Byte], from: Int,
+                        until: Int = Int.MaxValue): Int = {
+    val end = math.min(until, b.length)
     var i = math.max(0, from)
-    while (i + pb.length <= n) {
+    while (i + p.length <= end) {
       var k = 0
-      while (k < pb.length && b(i + k) == pb(k)) k += 1
-      if (k == pb.length) return i
+      while (k < p.length && b(i + k) == p(k)) k += 1
+      if (k == p.length) return i
       i += 1
     }
     -1
   }
 
-  /** The segment-commit protocol, shared by the WARC and WET writers:
-    * write to an underscore-prefixed, attempt-suffixed temp (invisible
-    * to Spark's file index AND to a concurrent speculative retry of the
-    * same partition), then ATOMIC_MOVE over the target — readers only
-    * ever see absent or complete segments, never a torn write. Keep
-    * every fix to this discipline HERE so the two writers can't drift. */
-  private[sources] def atomicWrite(target: java.nio.file.Path,
-                                   bytes: Array[Byte], attemptTag: Long): Unit =
-    atomicWriteStream(target, attemptTag)(_.write(bytes))
+  // ---- parser -----------------------------------------------------------
 
-  /** Streaming form of [[atomicWrite]] (r5 ADVICE #4): the writer
-    * callback streams records straight into the temp file, so a
-    * ~1 GB segment never has to exist as one in-heap byte array
-    * before the atomic move. Same temp-name, move and cleanup
-    * semantics as the byte-array form. */
-  private[sources] def atomicWriteStream(target: java.nio.file.Path,
-                                         attemptTag: Long)
-                                        (write: java.io.OutputStream => Unit): Unit = {
+  /** The response records of a segment (plain or gzip) as pages, lazily
+    * (see [[records]]) — flatMap consumes the iterator directly. */
+  def parseSegmentIterator(bytes: Array[Byte]): Iterator[Page] =
+    records(bytes, "response").flatMap { r =>
+      val uri = r.header("warc-target-uri")
+      if (uri.isEmpty) None
+      else {
+        // the payload is an HTTP response: its body follows the first blank line
+        val httpBodyStart = findBytes(r.bytes, BlankLine, r.bodyStart, r.bodyEnd) match {
+          case x if x >= 0 => x + 4
+          case _ => r.bodyStart
+        }
+        val lang = new String(r.bytes, r.bodyStart, httpBodyStart - r.bodyStart, UTF_8)
+          .linesIterator
+          .find(_.toLowerCase(Locale.ROOT).startsWith("content-language:"))
+          .map(_.split(":", 2)(1).trim).getOrElse("und")
+        Some(Page(uri, parseDate(r.header("warc-date")),
+          java.util.Arrays.copyOfRange(r.bytes, httpBodyStart, r.bodyEnd),
+          r.header("x-graft-raw-text"), lang))
+      }
+    }
+
+  /** Eager form (tests / small segments). */
+  def parseSegment(bytes: Array[Byte]): Seq[Page] =
+    parseSegmentIterator(bytes).toSeq
+
+  // ---- record codec: the segment writer ---------------------------------
+
+  /** Create a segment dir and delete the entries whose names `stale`
+    * accepts — each writer passes its own sweep policy. */
+  private[sources] def sweep(dir: String)(stale: String => Boolean): Unit = {
+    Files.createDirectories(Paths.get(dir))
+    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
+      .filter(f => stale(f.getName))
+      .foreach(f => Files.deleteIfExists(f.toPath))
+  }
+
+  /** The one segment writer, run once per partition: streams the
+    * partition's records into `dir/segment-<partition id, 5 digits><ext>`
+    * under the [[atomicWriteStream]] commit. With `compress` every record
+    * is its OWN gzip member (the Common-Crawl layout: concatenated
+    * members are one valid gzip stream, and one member is fetchable by
+    * byte range). Neither the partition nor the segment is held in
+    * memory. After each record, `wrote(segment, record, offset, length)`
+    * reports its byte range in the file; offsets are Longs, so a
+    * segment may pass 2 GB. Returns the segment's file name, or None
+    * for an empty partition (no file written). */
+  private[sources] def writePartition[A](it: Iterator[A], dir: String, ext: String,
+                                         compress: Boolean)(encode: A => Array[Byte])
+                                        (wrote: (String, A, Long, Int) => Unit): Option[String] =
+    if (!it.hasNext) None
+    else {
+      val tc = TaskContext.get()
+      val name = f"segment-${tc.partitionId()}%05d$ext"
+      var offset = 0L
+      atomicWriteStream(Paths.get(dir, name), tc.taskAttemptId()) { out =>
+        it.foreach { a =>
+          val rec = encode(a)
+          val stored = if (compress) gzip(rec) else rec
+          out.write(stored)
+          wrote(name, a, offset, stored.length)
+          offset += stored.length
+        }
+      }
+      Some(name)
+    }
+
+  /** The segment-commit protocol: the callback streams into an
+    * underscore-prefixed, attempt-suffixed temp, then ATOMIC_MOVE puts
+    * it over the target — readers only ever see absent or complete
+    * files, never a torn write. The `_` prefix makes Spark's file index
+    * drop the temp before `pathGlobFilter` runs (the `*.warc*` glob
+    * itself WOULD match `_tmp-…`; any non-Spark listing must keep
+    * skipping `_*` names). The attempt suffix keeps a speculative or
+    * zombie retry of the same partition from interleaving writes into
+    * a live temp; last finisher wins, safely, since both attempts carry
+    * equal bytes. */
+  private def atomicWriteStream(target: java.nio.file.Path, attemptTag: Long)
+                               (write: java.io.OutputStream => Unit): Unit = {
     val tmp = target.resolveSibling(
       "_tmp-" + target.getFileName.toString + "." + attemptTag)
     try {
-      val os = new java.io.BufferedOutputStream(
-        java.nio.file.Files.newOutputStream(tmp), 1 << 20)
+      val os = new java.io.BufferedOutputStream(Files.newOutputStream(tmp), 1 << 20)
       try write(os) finally os.close()
-      java.nio.file.Files.move(tmp, target,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    } finally java.nio.file.Files.deleteIfExists(tmp)
+      Files.move(tmp, target,
+        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    } finally Files.deleteIfExists(tmp)
   }
 
   // ---- Spark surface ------------------------------------------------------
@@ -251,107 +289,68 @@ object Warc {
     out.toByteArray
   }
 
+  private val SegmentGlob = "*.warc*"
+
+  private def binaryFiles(spark: SparkSession, glob: String, paths: Seq[String]): DataFrame =
+    spark.read.format("binaryFile").option("pathGlobFilter", glob).load(paths: _*)
+
+  /** The one segment scan under every reader: the `binaryFile` source
+    * over `paths` (files or dirs; names matching `glob`), one task per
+    * segment file, each file's records parsed map-side by `parse`.
+    * Nothing shuffles. */
+  private[sources] def scan[A: Encoder](spark: SparkSession, glob: String, paths: Seq[String])
+                                       (parse: Array[Byte] => Iterator[A]): Dataset[A] =
+    binaryFiles(spark, glob, paths).select(col("content")).as(Encoders.BINARY).flatMap(parse)
+
   /** Read a directory of .warc / .warc.gz segments into the typed pages
-    * Dataset via the built-in binaryFile source (one task per segment —
-    * CC segments are ~1 GB, so 100 TB ⇒ ~100k parallel tasks). */
-  def readPages(spark: SparkSession, dir: String): Dataset[Page] =
-    pagesOf(segmentsDF(spark, dir))
+    * Dataset (one task per segment — CC segments are ~1 GB, so 100 TB ⇒
+    * ~100k parallel tasks). */
+  def readPages(spark: SparkSession, dir: String): Dataset[Page] = {
+    import spark.implicits._
+    scan(spark, SegmentGlob, Seq(dir))(parseSegmentIterator)
+  }
 
   /** Read a SPECIFIC set of segment files — the file-manifest resume
     * path (ExtractJob.runWarc scans only segments no committed snapshot
     * has consumed, mirroring the parquet path's O(#files) resume). */
   def readPagesFiles(spark: SparkSession, files: Seq[String]): Dataset[Page] = {
     require(files.nonEmpty, "readPagesFiles: empty file list")
-    pagesOf(spark.read.format("binaryFile").load(files: _*)
-      .select(col("path"), col("content")))
+    import spark.implicits._
+    scan(spark, SegmentGlob, files)(parseSegmentIterator)
   }
 
   /** Segment file paths under `dir` as the scan would enumerate them —
     * the unit of resume bookkeeping (manifest `input_files`). */
   def listSegments(spark: SparkSession, dir: String): Seq[String] =
-    segmentsDF(spark, dir).inputFiles.toSeq.sorted
-
-  private def segmentsDF(spark: SparkSession, dir: String) =
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.warc*")
-      .load(dir)
-      .select(col("path"), col("content"))
-
-  private def pagesOf(df: org.apache.spark.sql.DataFrame): Dataset[Page] = {
-    import df.sparkSession.implicits._
-    df.as[(String, Array[Byte])]
-      .flatMap { case (path, content) =>
-        val bytes = if (path.endsWith(".gz")) gunzip(content) else content
-        parseSegmentIterator(bytes)
-      }
-  }
+    binaryFiles(spark, SegmentGlob, Seq(dir)).inputFiles.toSeq.sorted
 
   /** Generator-side: write pages as deterministic WARC segments, one
-    * file per input partition, written FROM THE EXECUTORS (atomic
-    * tmp+rename per segment; nothing rides through driver heap — at a
-    * real sf the old collect()-based writer pushed every payload byte
-    * through the driver). Local-mode executors share the local FS; a
-    * cluster deployment points `dir` at the distributed FS. */
+    * file per input partition, written FROM THE EXECUTORS through
+    * [[writePartition]] (nothing rides through driver heap).
+    * Local-mode executors share the local FS; a cluster deployment
+    * points `dir` at the distributed FS. Each segment gets a CDX
+    * sidecar of its records' (offset, length), so one record is
+    * fetchable by byte range without scanning the segment. */
   def writeSegments(pages: Dataset[Page], dir: String, compress: Boolean = false): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    // Sweep temps left by a previous crashed run: they are invisible to
-    // every reader (the _-prefix), so without this they would accumulate
-    // silently, leaking a full segment copy per crash.
-    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.startsWith("_tmp-"))
-      .foreach(f => java.nio.file.Files.deleteIfExists(f.toPath))
+    // temps of a crashed run are invisible to every reader (the _
+    // prefix); without this sweep they would leak a segment copy each
+    sweep(dir)(_.startsWith("_tmp-"))
     import pages.sparkSession.implicits._
     val ext = if (compress) ".warc.gz" else ".warc"
-    val doGzip = compress
-    // returns only O(#partitions) ids to the driver, forcing the write job
+    // returns only O(#partitions) names to the driver, forcing the write job
     pages.mapPartitions { it =>
-      val ps = it.toSeq
-      if (ps.isEmpty) Iterator.empty
-      else {
-        val tc = org.apache.spark.TaskContext.get()
-        val pid = tc.partitionId()
-        // Common-Crawl layout: with compression, every record is its
-        // OWN gzip member (concatenated members are one valid gzip
-        // stream — GZIPInputStream reads across member boundaries, so
-        // whole-segment gunzip readers are untouched) and the CDX
-        // sidecar records each member's (offset, length) so a single
-        // record is fetchable by byte range without scanning the
-        // segment. Uncompressed segments index plain record ranges.
-        val segName = f"segment-$pid%05d$ext"
-        // Int-indexed buffer ⇒ a segment is bounded at 2 GB — within
-        // the Common-Crawl convention (~1 GB segments) and enforced
-        // loudly: ByteArrayOutputStream throws OutOfMemoryError past
-        // Int.MaxValue rather than wrapping offsets. Size partitions
-        // (repartition upstream) so a partition's records stay under
-        // the bound.
-        val out = new java.io.ByteArrayOutputStream()
-        val cdx = new StringBuilder
-        ps.foreach { p =>
-          val rec = recordBytes(p)
-          val stored = if (doGzip) gzip(rec) else rec
-          cdx.append(Warc.cdxKey(p.url)).append('\t').append(segName)
-            .append('\t').append(out.size()).append('\t').append(stored.length)
-            .append('\t').append(p.warc_ts.getTime).append('\n')
-          out.write(stored)
-        }
-        val bytes = out.toByteArray
-        val target = java.nio.file.Paths.get(dir, segName)
-        // Underscore prefix: Spark's file index drops _-prefixed files
-        // before pathGlobFilter runs, so a crashed writer's temp is
-        // invisible to segmentsDF/listSegments. (The *.warc* glob itself
-        // WOULD match "_tmp-…" — any non-Spark listing of this dir must
-        // keep skipping _* names, as listSegments does.) Attempt-suffixed
-        // so a speculative/zombie retry of the same partition never
-        // interleaves writes into a live temp; the ATOMIC_MOVE makes
-        // last-finisher-wins safe since both attempts carry equal bytes.
-        atomicWrite(target, bytes, tc.taskAttemptId())
+      val cdx = new StringBuilder
+      writePartition(it, dir, ext, compress)(recordBytes) { (seg, p, offset, length) =>
+        cdx.append(cdxKey(p.url)).append('\t').append(seg).append('\t').append(offset)
+          .append('\t').append(length).append('\t').append(p.warc_ts.getTime).append('\n')
+      }.map { seg =>
         // the CDX sidecar commits AFTER its segment (readers treat the
         // index as advisory: segment present + cdx missing = scan path
         // still works; cdx present + segment missing cannot happen)
-        val cdxTarget = target.resolveSibling(segName.stripSuffix(ext) + ".cdx")
-        atomicWrite(cdxTarget, cdx.toString.getBytes(UTF_8), tc.taskAttemptId())
-        Iterator.single(pid)
-      }
+        atomicWriteStream(Paths.get(dir, seg.stripSuffix(ext) + ".cdx"),
+          TaskContext.get().taskAttemptId())(_.write(cdx.toString.getBytes(UTF_8)))
+        seg
+      }.iterator
     }.collect()
     ()
   }
@@ -378,7 +377,7 @@ object Warc {
     * the per-segment sidecars the writer commits. Vastly smaller than
     * the segments (~60 bytes/record vs the payload), so point lookups
     * join against THIS and fetch only the matching byte ranges. */
-  def cdxIndex(spark: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
+  def cdxIndex(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types._
     spark.read
       .schema(StructType(Seq(
@@ -390,21 +389,22 @@ object Warc {
       .csv(dir)
   }
 
+  /** The record in `length` bytes at `offset` of an open segment — one
+    * gzip member or one plain record, inflated by its magic. */
+  private def readRecord(ch: FileChannel, offset: Long, length: Int): Option[Page] = {
+    val buf = ByteBuffer.allocate(length)
+    ch.position(offset)
+    while (buf.hasRemaining && ch.read(buf) >= 0) {}
+    parseSegmentIterator(buf.array()).nextOption()
+  }
+
   /** Point-fetch ONE record by CDX coordinates: reads `length` bytes at
-    * `offset` (a complete gzip member for .gz segments), never the
-    * segment. The raw-crawl analog of the reference's per-document S3
-    * GET (ocrworker/s3.py) — S4 point lookup at the segment layer. */
+    * `offset`, never the segment. The raw-crawl analog of the
+    * reference's per-document S3 GET (ocrworker/s3.py) — S4 point
+    * lookup at the segment layer. */
   def fetchRecord(dir: String, segment: String, offset: Long, length: Int): Option[Page] = {
-    val ch = java.nio.channels.FileChannel.open(java.nio.file.Paths.get(dir, segment))
-    try {
-      val buf = java.nio.ByteBuffer.allocate(length)
-      ch.position(offset)
-      while (buf.hasRemaining && ch.read(buf) >= 0) {}
-      val raw = buf.array()
-      val bytes = if (segment.endsWith(".gz")) gunzip(raw) else raw
-      val it = parseSegmentIterator(bytes)
-      if (it.hasNext) Some(it.next()) else None
-    } finally ch.close()
+    val ch = FileChannel.open(Paths.get(dir, segment))
+    try readRecord(ch, offset, length) finally ch.close()
   }
 
   /** Batch point lookups: broadcast-join the url set against the CDX
@@ -422,18 +422,9 @@ object Warc {
       .as[(String, Long, Int)]
       .mapPartitions { it =>
         it.toSeq.groupBy(_._1).iterator.flatMap { case (seg, rows) =>
-          val ch = java.nio.channels.FileChannel.open(java.nio.file.Paths.get(dir, seg))
-          try {
-            rows.sortBy(_._2).flatMap { case (_, off, len) =>
-              val buf = java.nio.ByteBuffer.allocate(len)
-              ch.position(off)
-              while (buf.hasRemaining && ch.read(buf) >= 0) {}
-              val raw = buf.array()
-              val bytes = if (seg.endsWith(".gz")) gunzip(raw) else raw
-              val pit = parseSegmentIterator(bytes)
-              if (pit.hasNext) Some(pit.next()) else None
-            }
-          } finally ch.close()
+          val ch = FileChannel.open(Paths.get(dir, seg))
+          try rows.sortBy(_._2).flatMap { case (_, off, len) => readRecord(ch, off, len) }
+          finally ch.close()
         }
       }
   }

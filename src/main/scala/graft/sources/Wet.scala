@@ -13,14 +13,14 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * publishes (the reference's analog is the extracted-text record it
   * commits per document version, `ocrworker/tasks.py`).
   *
-  * Same segment discipline as [[Warc.writeSegments]] — the commit
-  * protocol itself is the SHARED [[Warc.atomicWrite]], so a fix there
-  * covers both writers. WET carries no CDX sidecar (matching the
-  * Common Crawl convention — text consumers scan; random access goes
-  * through the WARC's index) but does commit a `_WET_DONE` marker
-  * AFTER the last segment lands: the marker is the emission's commit
-  * record (readers of a marker-less dir may be looking at a crashed,
-  * partial emission) and carries the record count for audit.
+  * Same record codec as [[Warc]] — one framing reader, one streaming
+  * segment writer and one scan, so a fix there covers both formats.
+  * WET carries no CDX sidecar (matching the Common Crawl convention —
+  * text consumers scan; random access goes through the WARC's index)
+  * but does commit a `_WET_DONE` marker AFTER the last segment lands:
+  * the marker is the emission's commit record (readers of a
+  * marker-less dir may be looking at a crashed, partial emission) and
+  * carries the record count for audit.
   *
   * Roundtrip contract (q100): writer → gzip → parser preserves every
   * url, language tag, timestamp millisecond and text BYTE — the DuckDB
@@ -79,103 +79,46 @@ object Wet {
   def isComplete(dir: String): Boolean =
     java.nio.file.Files.exists(java.nio.file.Paths.get(dir, DoneMarker))
 
-  /** Write records as WET segments, one per partition (the
-    * [[Warc.atomicWrite]] discipline: per-record gzip members,
-    * invisible temps, atomic move, O(#partitions) driver traffic).
-    * Entry SWEEPS any pre-existing segments and the marker — a
-    * re-emission with fewer partitions must not leave stale
-    * higher-numbered segments for readers to merge in — and exit
-    * commits the [[DoneMarker]]. Returns the record count written. */
+  /** Write records as WET segments, one per partition, through
+    * [[Warc.writePartition]] (per-record gzip members, invisible temps,
+    * atomic move, O(#partitions) driver traffic). Entry SWEEPS any
+    * pre-existing segments and the marker — a re-emission with fewer
+    * partitions must not leave stale higher-numbered segments for
+    * readers to merge in — and exit commits the [[DoneMarker]]. Returns
+    * the record count written. */
   def writeSegments(recs: Dataset[WetRecord], dir: String,
                     compress: Boolean = false): Long = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith("_tmp-") ||
-        f.getName.startsWith("segment-") || f.getName == DoneMarker)
-      .foreach(f => java.nio.file.Files.deleteIfExists(f.toPath))
+    Warc.sweep(dir)(name => name.startsWith("_tmp-") ||
+      name.startsWith("segment-") || name == DoneMarker)
     import recs.sparkSession.implicits._
     val ext = if (compress) ".warc.wet.gz" else ".warc.wet"
-    val doGzip = compress
-    val counts = recs.mapPartitions { it =>
-      // r5 ADVICE #4: records stream one at a time into the temp file
-      // (gzip member per record, same byte layout) instead of first
-      // materializing the whole partition (it.toSeq) AND the whole
-      // segment (ByteArrayOutputStream) — ~2x the segment no longer
-      // sits in executor heap per task at CC-scale segment sizes.
-      if (!it.hasNext) Iterator.empty
-      else {
-        val tc = org.apache.spark.TaskContext.get()
-        val pid = tc.partitionId()
-        val segName = f"segment-$pid%05d$ext"
-        var n = 0L
-        Warc.atomicWriteStream(java.nio.file.Paths.get(dir, segName),
-          tc.taskAttemptId()) { out =>
-          it.foreach { r =>
-            val rec = recordBytes(r)
-            out.write(if (doGzip) Warc.gzip(rec) else rec)
-            n += 1
-          }
-        }
-        Iterator.single(n)
-      }
-    }.collect()
-    val n = counts.sum
+    val n = recs.mapPartitions { it =>
+      var written = 0L
+      Warc.writePartition(it, dir, ext, compress)(recordBytes)((_, _, _, _) => written += 1)
+      Iterator.single(written)
+    }.collect().sum
     // marker last: its presence certifies every segment above landed
     java.nio.file.Files.write(
       java.nio.file.Paths.get(dir, DoneMarker), s"$n\n".getBytes(UTF_8))
     n
   }
 
+  /** The conversion records of one segment (plain or gzip), lazily. */
+  private def conversions(segment: Array[Byte]): Iterator[WetRecord] =
+    Warc.records(segment, "conversion").map(r => WetRecord(
+      r.header("warc-target-uri"), Warc.parseDate(r.header("warc-date")),
+      r.header("warc-identified-content-language"),
+      new String(r.bytes, r.bodyStart, r.bodyEnd - r.bodyStart, UTF_8)))
+
   /** Parse one (possibly multi-member-gzipped) WET segment. */
-  def parseSegment(bytes: Array[Byte]): Seq[WetRecord] = {
-    val raw = if (bytes.length >= 2 &&
-      (bytes(0) & 0xFF) == 0x1F && (bytes(1) & 0xFF) == 0x8B)
-      Warc.gunzip(bytes) else bytes
-    val out = scala.collection.mutable.ArrayBuffer.empty[WetRecord]
-    var i = 0
-    val n = raw.length
-    while (i < n) {
-      val start = Warc.findBytes(raw, "WARC/", i)
-      if (start < 0) { i = n }
-      else {
-        val headEnd = Warc.findBytes(raw, "\r\n\r\n", start)
-        if (headEnd < 0) { i = n }
-        else {
-          val headers =
-            Warc.parseHeaders(new String(raw, start, headEnd - start, UTF_8))
-          val bodyStart = headEnd + 4
-          headers.get("content-length").flatMap(_.toIntOption) match {
-            // `len <= n - bodyStart`, NOT `bodyStart + len <= n`: a
-            // corrupt length near 2^31 wraps the sum negative and would
-            // sneak past the bound, crashing the String ctor instead of
-            // resyncing like every other malformed record.
-            case Some(len) if len >= 0 && len <= n - bodyStart =>
-              if (headers.getOrElse("warc-type", "") == "conversion") {
-                val uri = headers.getOrElse("warc-target-uri", "")
-                val ts = Warc.parseDate(headers.getOrElse("warc-date", ""))
-                val lang = headers.getOrElse("warc-identified-content-language", "")
-                out += WetRecord(uri, ts, lang,
-                  new String(raw, bodyStart, len, UTF_8))
-              }
-              i = bodyStart + len
-            case _ => i = bodyStart // malformed length: resync on next WARC/
-          }
-        }
-      }
-    }
-    out.toSeq
-  }
+  def parseSegment(bytes: Array[Byte]): Seq[WetRecord] = conversions(bytes).toSeq
 
   /** Read a directory of .warc.wet / .warc.wet.gz segments into a typed
-    * Dataset — one task per segment file, parse map-side (the Warc
-    * reader's scan shape: at Common-Crawl scale each ~1 GB segment is
-    * one input split; nothing shuffles). */
+    * Dataset — the [[Warc.scan]] shape: one task per segment file,
+    * parsed map-side, records streamed (at Common-Crawl scale each
+    * ~1 GB segment is one input split; nothing shuffles). */
   def readRecords(spark: SparkSession, dir: String): Dataset[WetRecord] = {
     import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.warc.wet*")
-      .load(dir)
-      .select("content").as[Array[Byte]]
-      .flatMap(parseSegment _)
+    Warc.scan(spark, "*.warc.wet*", Seq(dir))(conversions)
   }
 }

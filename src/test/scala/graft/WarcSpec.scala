@@ -204,6 +204,61 @@ class WarcSpec extends AnyFunSuite with TempRoots {
     assert(java.util.Arrays.equals(fetchedCtrl.head.html, ctrl.html))
   }
 
+  test("gzip is recognised by its magic bytes, not the file name") {
+    val dir = tempRoot("graftwarcmagic")
+    val a = (0 until 20).map(i => PageGen.genRow(PageGen.DefaultSeed, i.toLong).page)
+    val b = (20 until 45).map(i => PageGen.genRow(PageGen.DefaultSeed, i.toLong).page)
+    val segs = java.nio.file.Paths.get(dir, "segments")
+    Files.createDirectories(segs)
+    // gzip members under a plain name, plain records under a .gz name
+    Files.write(segs.resolve("segment-a.warc"),
+      a.map(p => Warc.gzip(Warc.recordBytes(p))).reduce(_ ++ _))
+    Files.write(segs.resolve("segment-b.warc.gz"), Warc.writeSegment(b))
+    val snap = graft.job.ExtractJob.runWarc(spark, segs.toString, s"$dir/out")
+    assert(snap.inputFiles.size == 2)
+    assert(snap.rowCount == a.size + b.size, s"committed ${snap.rowCount} rows")
+    val urls = graft.job.ExtractJob.readExtracted(spark, s"$dir/out")
+      .select("url").collect().map(_.getString(0)).toSet
+    assert(urls == (a ++ b).map(_.url).toSet)
+    // the point fetch takes the same rule: one member, one plain record
+    val fetchedA = Warc.fetchRecord(segs.toString, "segment-a.warc", 0L,
+      Warc.gzip(Warc.recordBytes(a.head)).length)
+    val fetchedB = Warc.fetchRecord(segs.toString, "segment-b.warc.gz", 0L,
+      Warc.recordBytes(b.head).length)
+    assert(fetchedA.map(_.url).contains(a.head.url))
+    assert(fetchedB.map(_.url).contains(b.head.url))
+    assert(java.util.Arrays.equals(fetchedB.get.html, b.head.html))
+  }
+
+  test("segment bytes and CDX ranges are pinned: one record (gzip member) after another, in partition order") {
+    import spark.implicits._
+    val dir = tempRoot("graftwarcpin")
+    val pages = (400 until 430).map(i => PageGen.genRow(PageGen.DefaultSeed, i.toLong).page)
+    val ds = spark.sparkContext.parallelize(pages, 3).toDS()
+    val parts = ds.rdd.glom().collect()
+    assert(parts.length == 3 && parts.forall(_.nonEmpty))
+    for ((sub, gz) <- Seq(("gz", true), ("plain", false))) {
+      val ext = if (gz) ".warc.gz" else ".warc"
+      Warc.writeSegments(ds, s"$dir/$sub", compress = gz)
+      parts.zipWithIndex.foreach { case (part, pid) =>
+        val seg = f"segment-$pid%05d$ext"
+        val members = part.map(p => if (gz) Warc.gzip(Warc.recordBytes(p)) else Warc.recordBytes(p))
+        val bytes = Files.readAllBytes(java.nio.file.Paths.get(dir, sub, seg))
+        assert(java.util.Arrays.equals(bytes, members.reduce(_ ++ _)), s"$sub/$seg bytes")
+        val cdx = new String(Files.readAllBytes(
+          java.nio.file.Paths.get(dir, sub, f"segment-$pid%05d.cdx")), UTF_8).split('\n').toSeq
+        assert(cdx.size == part.length)
+        cdx.zip(part.zip(members)).foreach { case (line, (p, member)) =>
+          val Array(url, segName, off, len, ts) = line.split('\t')
+          assert(url == Warc.cdxKey(p.url) && segName == seg && ts.toLong == p.warc_ts.getTime)
+          val slice = java.util.Arrays.copyOfRange(bytes, off.toInt, off.toInt + len.toInt)
+          assert(java.util.Arrays.equals(slice, member), s"$sub/$seg cdx range of ${p.url}")
+        }
+      }
+      assert(new java.io.File(s"$dir/$sub").list().count(_.startsWith("segment-")) == 6)
+    }
+  }
+
   test("a crashed writer's _tmp segment is invisible to ingestion and resume") {
     import spark.implicits._
     val dir = tempRoot("graftwarctmp")

@@ -10,7 +10,9 @@ import graft.sources.Wet.WetRecord
   * (aggregates straight from the extraction dump); these pin the
   * record grammar edge cases the roundtrip aggregate can't isolate.
   */
-class WetSpec extends AnyFunSuite {
+class WetSpec extends AnyFunSuite with TempRoots {
+
+  lazy val spark = graft.job.GraftSession.local("4")
 
   private def rec(url: String, ms: Long, lang: String, text: String) =
     WetRecord(url, new Timestamp(ms), lang, text)
@@ -77,5 +79,30 @@ class WetSpec extends AnyFunSuite {
       "info-body\r\n\r\n").getBytes("UTF-8")
     val good = Wet.recordBytes(rec("https://h/c", 4L, "fra", "kept"))
     assert(Wet.parseSegment(info ++ good) == Seq(rec("https://h/c", 4L, "fra", "kept")))
+  }
+
+  test("segment bytes are pinned: one record (gzip member) after another, in partition order") {
+    import spark.implicits._
+    val dir = tempRoot("graftwetpin")
+    val recs = (0 until 30).map(i => rec(s"https://h.example/page/$i", 1735689600000L + i,
+      Seq("eng", "fra", "deu")(i % 3), s"text $i\nline ${i * 7}"))
+    val ds = spark.sparkContext.parallelize(recs, 3).toDS()
+    val parts = ds.rdd.glom().collect()
+    assert(parts.length == 3 && parts.forall(_.nonEmpty))
+    for ((sub, gz) <- Seq(("gz", true), ("plain", false))) {
+      val ext = if (gz) ".warc.wet.gz" else ".warc.wet"
+      assert(Wet.writeSegments(ds, s"$dir/$sub", compress = gz) == recs.size)
+      parts.zipWithIndex.foreach { case (part, pid) =>
+        val want = part.map(r => if (gz) Warc.gzip(Wet.recordBytes(r)) else Wet.recordBytes(r))
+          .reduce(_ ++ _)
+        val got = java.nio.file.Files.readAllBytes(
+          java.nio.file.Paths.get(dir, sub, f"segment-$pid%05d$ext"))
+        assert(java.util.Arrays.equals(got, want), s"$sub segment $pid bytes")
+      }
+      assert(new java.io.File(s"$dir/$sub").list().sorted.toSeq ==
+        Seq(Wet.DoneMarker) ++ (0 until 3).map(pid => f"segment-$pid%05d$ext"))
+      assert(Wet.readRecords(spark, s"$dir/$sub").collect().sortBy(_.url).toSeq ==
+        recs.sortBy(_.url))
+    }
   }
 }

@@ -4,10 +4,17 @@ parquet written by `graft.Verify`, run the corresponding oracle SQL from
 oracle_sql.json in DuckDB over the same sf-dir parquet tables and compare
 as sorted multisets (columns sorted by name, rows sorted by string repr).
 
+Some oracles also read stage dumps under /tmp/graft_*_cache (the build-once
+tables the queries read). A dump path that matches no file is reported as
+`MISSING <query>: <path>` and that query counts as failed, so a partial cache
+set names what is absent instead of failing inside DuckDB.
+
 Usage: python3 tools/check_oracle.py <verifyOutDir> <sfDir>
 """
-import sys, os, json, glob
+import sys, os, json, glob, re
 import duckdb
+
+STAGE_PATH = re.compile(r"'(/tmp/graft_[^']*)'")
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -33,7 +40,15 @@ def main(out_dir, sf_dir):
             con.execute(f"create view {t} as select * from '{p}'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     failures = 0
+    missing = 0
     for name, sql in sorted(oracle.items()):
+        absent = sorted({p for p in STAGE_PATH.findall(sql) if not glob.glob(p)})
+        for p in absent:
+            print(f"MISSING {name}: {p}")
+        if absent:
+            missing += len(absent)
+            failures += 1
+            continue
         pdir = f"{out_dir}/{name}"
         files = glob.glob(f"{pdir}/*.parquet")
         if not files:
@@ -70,6 +85,8 @@ def main(out_dir, sf_dir):
         print(f"ROWS {name}: {n} rows {'OK' if n > 0 else 'FAIL (empty)'}")
         if n == 0: failures += 1
     print("=" * 40)
+    if missing:
+        print(f"{missing} stage dumps MISSING (queries reading them counted as failures)")
     print("ALL OK" if failures == 0 else f"{failures} FAILURES")
     return 1 if failures else 0
 
