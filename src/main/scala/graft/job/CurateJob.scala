@@ -37,14 +37,17 @@ import graft.ops.{Balance, Dedup, Hosts, Repetition, TextStats}
   *                                     under incremental ingestion
   *     → curated parquet, partitioned by split, + a funnel manifest
   *
-  * Scale notes: document text crosses the wire exactly twice — once
-  * into the dedup keeper semi-join (keyed by digest, the text rides
-  * only until the projection) and once into the host-cap exchange —
-  * and the quality threshold is a broadcast scalar. The funnel IS the
-  * lineage record a curation run must publish: its gate and cap rungs
-  * are observed by the curated write itself, and the earlier rungs are
-  * counts over the persisted dedup and feature tables (an observation
-  * behind a persist reads from the cache and never fires). */
+  * Scale notes: the extraction table is scanned once for the dataset
+  * build (and once more for the funnel's table counts); document text
+  * crosses the wire three times — the url exchange and the digest
+  * exchange of the two dedup aggregates (the text rides in each min
+  * struct; no join, no broadcast) and the host-cap exchange — and the
+  * quality threshold is a broadcast scalar. The funnel IS the lineage
+  * record a curation run must publish: each rung after the url rung is
+  * observed by the action that runs it — the dedup, fuzzy and feature
+  * counts by the observations inside their persisted plans (each fires
+  * in the action that fills its cache), the gate and cap rungs by the
+  * curated write itself. */
 object CurateJob {
 
   final case class Funnel(
@@ -109,17 +112,19 @@ object CurateJob {
     // url uniqueness first: the snapshot chain anti-joins urls ACROSS
     // snapshots, but a url re-crawled with changed content within one
     // ingestion batch would otherwise survive dedup twice (two digests,
-    // same min url) and break the host cap's total order
-    val perUrl = Dedup.onePerUrl(base, "extracted_text")
-    // exact content dedup — THE q12 rule via its one home (Dedup.exact):
-    // one keeper per content digest, the lexicographic-min url
-    val keeper = Dedup.exact(perUrl, idCol = "url", textCol = "extracted_text")
-      .select(col("text_hash").as("h"), col("keep_id").as("url"))
-    // persisted: four plans below read this table (the banding, the
-    // verify's member shingling, the cluster docs, the keep semi-join)
-    // and the funnel counts it — unpersisted, its scan+dedup lineage
-    // would re-execute each time
-    val deduped = perUrl.join(keeper, Seq("h", "url"), "left_semi").drop("h")
+    // same min url) and break the host cap's total order. Then exact
+    // content dedup — THE q12 rule via its one home (Dedup): one keeper
+    // per content digest, the lexicographic-min url. Two aggregates over
+    // one scan (a url exchange, then a digest exchange), no self-join.
+    // Persisted: four plans below read this table (the banding, the
+    // verify's member shingling, the cluster docs, the keep semi-join);
+    // unpersisted, its scan+dedup lineage would re-execute each time.
+    // Its funnel count is observed inside the cached plan, so it fires
+    // in the action that fills the cache (the bands checkpoint).
+    val dedupedObs = Observation("deduped")
+    val deduped = Dedup.onePerDigest(Dedup.onePerUrl(base, "extracted_text"),
+        idCol = "url", textCol = "extracted_text")
+      .observe(dedupedObs, count(lit(1)).as("rows"))
       .persist()
 
     // fuzzy (near-dup) dedup — the stage every modern recipe runs after
@@ -144,7 +149,9 @@ object CurateJob {
     val canon = Dedup.dedupClusters(deduped, pairs, idCol = "url")
       .filter(col("is_canonical"))
       .select(col("doc_id").as("url"))
+    val fuzzyDedupedObs = Observation("fuzzyDeduped")
     val fuzzyDeduped = deduped.join(canon, Seq("url"), "left_semi")
+      .observe(fuzzyDedupedObs, count(lit(1)).as("rows"))
       .persist()
 
     // embedding-level dedup (SemDeDup) — the recipe's last rung, scoped
@@ -166,9 +173,13 @@ object CurateJob {
       case None => fuzzyDeduped
     }
 
-    // per-doc features once; both gates and the funnel read this table
+    // per-doc features once; both gates read this table. The curated
+    // write fills it and fires its observation (and fuzzyDeduped's,
+    // unless the SemDeDup rung read that table first)
+    val semDedupedObs = Observation("semanticDeduped")
     val feats = Repetition.withStats(semDeduped, textCol = "extracted_text")
       .withColumn("quality", TextStats.qualityScore(col("extracted_text")))
+      .observe(semDedupedObs, count(lit(1)).as("rows"))
       .persist()
     try {
       val kept = feats.filter(col("keep"))
@@ -213,11 +224,11 @@ object CurateJob {
         mojibakeRepaired = tableStats.getLong(2),
         urlFiltered =
           if (urlBlocklist.isDefined) base.count() else tableStats.getLong(1),
-        deduped = deduped.count(),
-        fuzzyDeduped = fuzzyDeduped.count(),
-        semanticDeduped = feats.count(),
-        gated = observedRows(gatedObs),
-        kept = observedRows(keptObs))
+        deduped = observedRows(dedupedObs).getOrElse(deduped.count()),
+        fuzzyDeduped = observedRows(fuzzyDedupedObs).getOrElse(fuzzyDeduped.count()),
+        semanticDeduped = observedRows(semDedupedObs).getOrElse(feats.count()),
+        gated = observedRows(gatedObs).get,
+        kept = observedRows(keptObs).get)
       val json =
         s"""{"extracted":${funnel.extracted},"html":${funnel.html},"mojibake_repaired":${funnel.mojibakeRepaired},"url_filtered":${funnel.urlFiltered},"deduped":${funnel.deduped},"fuzzy_deduped":${funnel.fuzzyDeduped},"semantic_deduped":${funnel.semanticDeduped},"gated":${funnel.gated},"kept":${funnel.kept},"per_host_cap":$perHostCap,"fuzzy_buckets_dropped":$fuzzyBucketsDropped}"""
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outRoot))
@@ -231,8 +242,15 @@ object CurateJob {
     }
   }
 
-  /** The row count an observation recorded in the action that ran it. */
-  private def observedRows(o: Observation): Long = o.get("rows").asInstanceOf[Long]
+  /** The row count an observation recorded in the action that ran it.
+    * None when the first action whose plan holds the observation pruned
+    * that branch (an input the optimizer proved empty, or a consumer
+    * that needed none of it): Spark then completes the observation with
+    * no metrics, and a persisted rung is counted from its cache instead.
+    * The first reader of an observed rung must read all of it (no bare
+    * `limit`), or the count covers only the partitions it computed. */
+  private def observedRows(o: Observation): Option[Long] =
+    o.get.get("rows").map(_.asInstanceOf[Long])
 }
 
 /** Curation entry point:

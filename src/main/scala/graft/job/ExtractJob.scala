@@ -665,6 +665,9 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // one curate + export compiles ~260 generated classes; the default
+      // 100-entry cache recompiles them all on every repeat (static conf)
+      .config("spark.sql.codegen.cache.maxEntries", "5000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -34,12 +34,24 @@ object Dedup {
   /** Url uniqueness, the rung CurateJob and ExportJob run before any
     * content dedup: one row per `url`. Identical re-crawl rows collapse;
     * among differing texts of one url the min-digest row wins —
-    * deterministic. Keeps the digest as column `h` = md5(text). */
-  def onePerUrl(docs: DataFrame, textCol: String): DataFrame = {
-    val rows = docs.dropDuplicates("url", textCol).withColumn("h", md5(col(textCol)))
-    val urlKeeper = rows.groupBy(col("url")).agg(min(col("h")).as("h"))
-    rows.join(urlKeeper, Seq("url", "h"), "left_semi")
-  }
+    * deterministic. A row with a null url or text never survives.
+    * Output `(url, h, <textCol>)`, `h` = md5(text). One aggregate over
+    * one read of `docs` (the keeper rides in the min struct), never a
+    * join back against its own lineage. */
+  def onePerUrl(docs: DataFrame, textCol: String): DataFrame =
+    docs.filter(col("url").isNotNull && col(textCol).isNotNull)
+      .groupBy(col("url"))
+      .agg(min(struct(md5(col(textCol)).as("h"), col(textCol).as("t"))).as("k"))
+      .select(col("url"), col("k.h").as("h"), col("k.t").as(textCol))
+
+  /** Exact content dedup over [[onePerUrl]]'s output — the q12 rule
+    * (the one [[exact]] tabulates): one row per digest `h`, the
+    * lexicographic-min `idCol` row. Output `(idCol, textCol)`. One
+    * aggregate keyed by the digest; the text rides in the min struct. */
+  def onePerDigest(perUrl: DataFrame, idCol: String, textCol: String): DataFrame =
+    perUrl.groupBy(col("h"))
+      .agg(min(struct(col(idCol).as("id"), col(textCol).as("t"))).as("k"))
+      .select(col("k.id").as(idCol), col("k.t").as(textCol))
 
   // ---- shingling / hashing (pure; shared by minhash + jaccard) -------
 

@@ -94,6 +94,33 @@ class OpsSpec extends AnyFunSuite with TempRoots {
     assert(d.agg(sum("n_dups")).first().getLong(0) == n)
   }
 
+  test("url and exact rungs: min-md5 text per url, min url per digest, null text dropped") {
+    val s = spark; import s.implicits._
+    val rows = Seq(
+      ("u1", "alpha page text"), ("u1", "beta page text"), // one url, two texts
+      ("u2", "re-crawl"), ("u2", "re-crawl"),              // byte-identical re-crawl
+      ("u5", "shared body"), ("u3", "shared body"), ("u4", "shared body"), // one text, three urls
+      ("u6", null))                                        // null text
+    val in = rows.toDF("url", "text")
+    def md5Hex(t: String): String = java.security.MessageDigest.getInstance("MD5")
+      .digest(t.getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString
+    // plain-Scala rules: per url the min (digest, text); per digest the min url
+    val perUrl = rows.filter(_._2 != null).groupBy(_._1).toSeq.map { case (u, rs) =>
+      rs.map(r => (md5Hex(r._2), r._2)).min match { case (h, t) => (u, t, h) }
+    }
+    val perDigest = perUrl.groupBy(_._3).values.map(_.minBy(_._1)).map(r => (r._1, r._2)).toSet
+    assert(perUrl.map(_._1).sorted == Seq("u1", "u2", "u3", "u4", "u5"))
+    assert(perDigest.map(_._1) == Set("u1", "u2", "u3"))
+
+    val gotPerUrl = Dedup.onePerUrl(in, "text")
+    assert(gotPerUrl.columns.toSeq == Seq("url", "h", "text"))
+    assert(gotPerUrl.select("url", "text", "h").as[(String, String, String)].collect().toSet ==
+      perUrl.toSet)
+    val gotPerDigest = Dedup.onePerDigest(gotPerUrl, idCol = "url", textCol = "text")
+    assert(gotPerDigest.select("url", "text").as[(String, String)].collect().toSet == perDigest)
+    assert(gotPerDigest.count() == perDigest.size)
+  }
+
   test("srp-ann recall vs brute-force top-5 >= 0.75 at toy scale") {
     val queries = emb.filter(col("vec_id") < 20)
     val brute = Similarity.bruteForceTopK(emb, queries, 5).collect()

@@ -617,4 +617,24 @@ class PlanSpec extends AnyFunSuite with TempRoots {
     assert(!p.contains("Join"), s"anchor index must be join-free:\n${p.take(800)}")
     assert(!p.contains("CartesianProduct"))
   }
+
+  test("url + exact dedup rungs: one scan of the input, no join (aggregates, not self-joins)") {
+    val s = spark; import s.implicits._
+    val dir = tempRoot("planspec_dedup")
+    (0 until 200).map(i => (s"https://h${i % 7}.example/p${i % 150}", s"body ${i % 60}"))
+      .toDF("url", "text").repartition(4).write.parquet(s"$dir/docs")
+    val docs = spark.read.parquet(s"$dir/docs")
+    val deduped = graft.ops.Dedup.onePerDigest(
+      graft.ops.Dedup.onePerUrl(docs, "text"), idCol = "url", textCol = "text")
+    deduped.collect()
+    // walk the final adaptive plan node by node (stages included)
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val plan = deduped.queryExecution.executedPlan
+    val scans = helper.collect(plan) {
+      case n: org.apache.spark.sql.execution.FileSourceScanExec => n }
+    val joins = helper.collect(plan) {
+      case n: org.apache.spark.sql.execution.joins.BaseJoinExec => n }
+    assert(scans.size == 1, s"expected one input scan, got ${scans.size}:\n$plan")
+    assert(joins.isEmpty, s"dedup rungs must be join-free:\n$plan")
+  }
 }
