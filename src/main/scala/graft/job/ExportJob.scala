@@ -43,29 +43,34 @@ object ExportJob {
     // within-batch url uniqueness (the CurateJob rung): a url
     // re-crawled with changed content inside one ingestion batch would
     // otherwise export BOTH texts' tokens under one doc id
-    val docs = graft.ops.Dedup.onePerUrl(docs0, "text").drop("h")
-
-    // tokenizer: train on this corpus (self-contained, like q85);
-    // counts under the TRAINED merges, not the whitespace definition
-    val wl = graft.ops.Bpe.encodeWordLengthsFromCounts(graft.ops.Bpe.rawWordCounts(docs, "text"))
-
-    // the one oracle-checked token rule (Bpe.perDocTokenCounts — the
-    // q107 chain), keyed by (url, doc_id); the url PASSES THROUGH the
-    // pack kernel, so there is no re-attach join to fan out on an
-    // xxhash64 collision and the per-doc chain evaluates once
-    val perDoc = graft.ops.Bpe.perDocTokenCounts(
-        docs.withColumn("doc_id", xxhash64(col("url"))),
-        Seq("url", "doc_id"), "text", wl)
-      .withColumn("grp", graft.ops.Packing.splitShardGrp(col("doc_id"), shardChars))
-
-    val packed = graft.ops.Packing
-      .packCountsGrouped(perDoc, "grp", "doc_id", "n_bpe", budget)
-      .select(col("grp"), col("seq_id"), col("doc_id"), col("url"), col("n_tokens"))
-
+    // persisted: the BPE word count and the packed write both read the
+    // docs, and unstaged each read re-runs the scan and the url
+    // aggregate. The word count's checkpoint fills the cache; its plan
+    // reads the docs once, so AQE cannot compute the unfilled cache twice
+    val docs = graft.ops.Dedup.onePerUrl(docs0, "text").drop("h").persist()
     import java.nio.file.{Files, Paths}
     val doneMarker = Paths.get(exportDir, "_EXPORT_DONE")
-    Files.deleteIfExists(doneMarker) // re-publish over a crashed export
-    packed.write.mode(SaveMode.Overwrite).parquet(s"$exportDir/packed")
+    try {
+      // tokenizer: train on this corpus (self-contained, like q85);
+      // counts under the TRAINED merges, not the whitespace definition
+      val wl = graft.ops.Bpe.encodeWordLengthsFromCounts(graft.ops.Bpe.rawWordCounts(docs, "text"))
+
+      // the one oracle-checked token rule (Bpe.perDocTokenCounts — the
+      // q107 chain), keyed by (url, doc_id); the url PASSES THROUGH the
+      // pack kernel, so there is no re-attach join to fan out on an
+      // xxhash64 collision and the per-doc chain evaluates once
+      val perDoc = graft.ops.Bpe.perDocTokenCounts(
+          docs.withColumn("doc_id", xxhash64(col("url"))),
+          Seq("url", "doc_id"), "text", wl)
+        .withColumn("grp", graft.ops.Packing.splitShardGrp(col("doc_id"), shardChars))
+
+      val packed = graft.ops.Packing
+        .packCountsGrouped(perDoc, "grp", "doc_id", "n_bpe", budget)
+        .select(col("grp"), col("seq_id"), col("doc_id"), col("url"), col("n_tokens"))
+
+      Files.deleteIfExists(doneMarker) // re-publish over a crashed export
+      packed.write.mode(SaveMode.Overwrite).parquet(s"$exportDir/packed")
+    } finally docs.unpersist(blocking = false): Unit
 
     val out = spark.read.parquet(s"$exportDir/packed")
     val stats = out

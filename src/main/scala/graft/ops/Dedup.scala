@@ -392,9 +392,8 @@ object Dedup {
     * jumping squares path lengths, so rounds are O(log diameter), not
     * O(diameter). All distributed state is (id, label) rows and every
     * shuffle is an equi-join or groupBy on id; no driver-side graph —
-    * the driver only runs the (logarithmic) loop and a cheap
-    * convergence probe. localCheckpoint truncates lineage per round
-    * (at real scale: checkpoint to reliable storage instead).
+    * the driver only runs the (logarithmic) [[Fixpoint]] loop and its
+    * cheap convergence probe.
     *
     * Ids are compared as STRINGS (lexicographic min) because dedup ids
     * ride as strings end-to-end (hex ids from Extract.docId must not
@@ -408,48 +407,40 @@ object Dedup {
                           bCol: String = "b_id", maxIters: Int = 25): DataFrame = {
     val a = col(aCol).cast("string")
     val b = col(bCol).cast("string")
+    // persisted, not staged through Fixpoint.stage: a checkpoint keeps
+    // the planner's size estimate of its lineage, and a verify join is
+    // estimated far above its real size, so each round would plan
+    // sort-merge joins that AQE turns into broadcasts only after running
+    // both shuffles (2 more jobs a round on q47). A filled cache reports
+    // its real size. The seed's checkpoint fills it; the last round
+    // reads only `prop`, so it is freed on return.
     val edges = pairs
       .select(explode(array(struct(a.as("src"), b.as("dst")),
         struct(b.as("src"), a.as("dst")))).as("e"))
       .select(col("e.src"), col("e.dst"))
       .distinct().persist()
-    var labels = edges.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("label"))
-      .localCheckpoint(true)
-    var iter = 0
-    var done = edges.isEmpty
-    while (!done && iter < maxIters) {
+    val seed = Fixpoint.stage(edges.select(col("src").as("id")).distinct()
+      .select(col("id"), col("id").as("label")))
+    val out = Fixpoint(seed, maxIters) { (labels, _) =>
       val nbr = edges.join(labels, col("dst") === col("id"))
         .select(col("src").as("id"), col("label"), lit(false).as("self"))
-      // r6: `prop` is referenced twice below (as itself and as the
-      // parent side of the pointer jump) and Spark does not CSE across
-      // a self-join — unstaged, the union+aggregate executed twice per
-      // round. The min-label fold also carries each node's OLD label
-      // (the max over the self-tagged row) so convergence is read off
-      // a `moved` flag on the checkpointed output instead of a full
-      // next⋈labels re-join per round.
+      // `prop` is read twice below (as itself and as the parent side of
+      // the pointer jump) and Spark does not share a subplan across a
+      // self-join, so it is staged. The min-label fold also carries each
+      // node's OLD label (the max over the self-tagged row), so the
+      // round's `moved` flag needs no re-join with the old labels.
       val prop = labels.select(col("id"), col("label"), lit(true).as("self"))
         .union(nbr)
         .groupBy("id").agg(min(col("label")).as("label"),
           max(when(col("self"), col("label"))).as("old"))
         .localCheckpoint(true)
       val parents = prop.select(col("id").as("p_id"), col("label").as("p_label"))
-      val jumped = prop.join(parents, prop("label") === parents("p_id"))
+      prop.join(parents, prop("label") === parents("p_id"))
         .select(prop("id"), least(prop("label"), col("p_label")).as("label"),
           (least(prop("label"), col("p_label")) =!= col("old")).as("moved"))
-      // r6b: LAZY checkpoint — the convergence probe right below is the
-      // action that materializes the round (the checkpoint hook
-      // finishes any partitions limit(1) short-circuited past), so the
-      // separate eager blocking job per round disappears.
-      val next = jumped.localCheckpoint(false)
-      // convergence probe: any label still moving? (limit(1)
-      // short-circuits over the in-memory checkpoint — no join)
-      done = next.filter(col("moved")).limit(1).isEmpty
-      labels = next.drop("moved")
-      iter += 1
     }
     edges.unpersist(blocking = false)
-    labels
+    out
   }
 
   /** Per-document cluster assignment: every doc gets a cluster_id (its

@@ -34,13 +34,13 @@ import org.apache.spark.sql.functions._
   * DuckDB's `//` floor non-negative operands identically, so the oracle
   * unrolls the same recurrence bit-exactly.
   *
-  * Scale shape (identical to [[HostRank.ranks]]): per half-iteration one
-  * equi-join edges⋈scores (edges pre-partitionable by the join key, the
-  * exchange reusable) + one partial+final aggregate + one 1-row scalar
-  * broadcast for the normalizer; `localCheckpoint` truncates lineage each
-  * round (substitute reliable `checkpoint` on a cluster). Dangling
-  * directions contribute 0 via the left join, exactly like the oracle's
-  * COALESCE.
+  * Scale shape (that of [[HostRank.ranks]], over the same staged edge
+  * and node sets): each half-step, run by [[Fixpoint]], is one
+  * equi-join of the edges with the scores on the join key (a fresh
+  * exchange or broadcast each round, as AQE plans it) + one
+  * partial+final aggregate + one 1-row scalar broadcast for the
+  * normalizer. Dangling directions contribute 0 via the left join,
+  * exactly like the oracle's COALESCE.
   */
 object Hits {
 
@@ -50,17 +50,13 @@ object Hits {
   /** x div max(total div Scale, 1) over column v, total via a 1-row
     * broadcast (the scalar-broadcast pattern PlanSpec gates elsewhere). */
   private def l1norm(df: DataFrame): DataFrame = {
-    // r6: materialize the pre-norm sums ONCE per half-step — the plan
-    // references `df` twice (under the normalizer's broadcast build AND
-    // under the crossJoin), and Spark does not common-subexpression-
-    // eliminate across a broadcast boundary, so the edge join +
-    // aggregate executed TWICE per half-step (32 extra join/agg runs
-    // over the 16 rounds) before this checkpoint.
-    // r6b: LAZY — the normalizer's broadcast BUILD is the action that
-    // materializes m (its aggregate reads every partition, so the
-    // checkpoint completes there), and the crossJoin then scans the
-    // persisted blocks; the separate eager blocking job per half-step
-    // (16 per run) folds into the build.
+    // the pre-norm sums are staged once per half-step: the plan reads
+    // `df` twice (under the normalizer's broadcast build and under the
+    // crossJoin), and Spark does not eliminate the common subexpression
+    // across a broadcast boundary, so unstaged the edge join + aggregate
+    // would run twice. LAZY: the broadcast build is the action that
+    // fills the checkpoint (its aggregate reads every partition), and
+    // the crossJoin then scans the stored blocks.
     val m = df.localCheckpoint(false)
     val tot = m.agg(greatest(expr(s"sum(v) div $Scale"), lit(1L)).as("nrm"))
     m.crossJoin(broadcast(tot))
@@ -89,24 +85,15 @@ object Hits {
     * (src, dst) edge set. Input columns: src, dst. Output:
     * (host, auth_micros, hub_micros). */
   def scores(edgesIn: DataFrame): DataFrame = {
-    val edges = edgesIn.select(col("src"), col("dst")).distinct()
-      .localCheckpoint(true)
-    val nodes = edges.select(col("src").as("host"))
-      .union(edges.select(col("dst").as("host")))
-      .distinct().localCheckpoint(true)
-
-    var hub = nodes.withColumn("v", lit(Scale))
-    var auth = nodes.withColumn("v", lit(0L))
-    var t = 0
-    while (t < Iters) {
-      // r6: the lineage-truncating checkpoints are LAZY now — l1norm
-      // already materializes each half-step's join+aggregate eagerly,
-      // so the eager outer checkpoint only re-materialized the final
-      // divide projection (16 extra blocking actions per run)
-      auth = halfStep(edges, nodes, hub, "src", "dst").localCheckpoint(false)
-      hub = halfStep(edges, nodes, auth, "dst", "src").localCheckpoint(false)
-      t += 1
+    val (edges, nodes) = HostRank.graph(edgesIn)
+    // half-steps alternate: even rounds take authorities from hubs, odd
+    // rounds hubs from authorities. 2·Iters − 1 of them end on the last
+    // authorities; the last hubs are one more half-step from those.
+    val auth = Fixpoint(nodes.withColumn("v", lit(Scale)), 2 * Iters - 1) { (s, t) =>
+      if (t % 2 == 0) halfStep(edges, nodes, s, "src", "dst")
+      else halfStep(edges, nodes, s, "dst", "src")
     }
+    val hub = halfStep(edges, nodes, auth, "dst", "src")
     nodes
       .join(auth.withColumnRenamed("v", "auth_micros"), "host")
       .join(hub.withColumnRenamed("v", "hub_micros"), "host")

@@ -23,15 +23,11 @@ import org.apache.spark.sql.functions._
   * matters. Deterministic given the edge set: bit-identical at any
   * parallelism, any engine.
   *
-  * Scale shape (the q47 connected-components pattern): per iteration one
-  * equi-join edges⋈ranks on src (edges can be pre-partitioned by src
-  * once and the exchange reused) + one groupBy(dst) partial+final
-  * aggregate. The round-invariant inputs are EAGERLY local-checkpointed.
-  * Each round's ranks are LAZILY local-checkpointed: that cuts the
-  * round's logical plan at once (analysis stays O(1)-deep) but
-  * truncates RDD lineage only for the final round, once an action
-  * computes it (the loop says what that means per AQE setting). At
-  * cluster scale substitute reliable `checkpoint` — same contract.
+  * Scale shape: the distinct edges, their node set and the per-edge
+  * (src, outdeg) side are staged once; each round, run by [[Fixpoint]],
+  * is one equi-join of that side with the round's ranks on src (a fresh
+  * exchange or broadcast each round, as AQE plans it) + one groupBy(dst)
+  * partial+final aggregate + the left join back onto the nodes.
   * Overflow headroom: Σ ranks ≤
   * N·10⁶ + iters·0.85·N·10⁶; a per-node rank beyond 2⁵⁰ would need a
   * ~10⁹-host graph funneling into one node — and the multiply by 85
@@ -45,43 +41,34 @@ object HostRank {
   val DampNum = 85L
   val DampDen = 100L
 
+  /** The DISTINCT (src, dst) edge set of `edgesIn` and its node set
+    * (host), each staged once; [[Hits]] iterates over the same pair. */
+  private[ops] def graph(edgesIn: DataFrame): (DataFrame, DataFrame) = {
+    val edges = Fixpoint.stage(edgesIn.select(col("src"), col("dst")).distinct())
+    val nodes = Fixpoint.stage(edges.select(col("src").as("host"))
+      .union(edges.select(col("dst").as("host"))).distinct())
+    (edges, nodes)
+  }
+
   /** Ranks after [[Iters]] rounds over the DISTINCT (src, dst) edge set.
     * Input columns: src, dst (any string key). Output: (host, rank_micros). */
   def ranks(edgesIn: DataFrame): DataFrame = {
-    val edges = edgesIn.select(col("src"), col("dst")).distinct()
-      .localCheckpoint(true)
-    val outdeg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    // contribution per edge is a pure function of (src rank, outdeg) —
-    // stage the per-src quotient once per round, then join to edges.
-    // r6: materialized ONCE — unstaged, every one of the 10 rounds
-    // re-ran the edges⋈outdeg join (and outdeg's aggregate) from
-    // scratch before joining the round's ranks.
-    val srcSide = edges.join(outdeg, "src").localCheckpoint(true)
-    val nodes = edges.select(col("src").as("host"))
-      .union(edges.select(col("dst").as("host")))
-      .distinct().localCheckpoint(true)
-
-    var rank = nodes.withColumn("rank_micros", lit(InitMicros))
-    var t = 0
-    while (t < Iters) {
+    val (edges, nodes) = graph(edgesIn)
+    // the contribution per edge is a pure function of (src rank,
+    // outdeg): the edges⋈outdeg side is staged once, not re-joined and
+    // re-aggregated in each of the rounds
+    val srcSide = Fixpoint.stage(
+      edges.join(edges.groupBy("src").agg(count(lit(1)).as("outdeg")), "src"))
+    Fixpoint(nodes.withColumn("rank_micros", lit(InitMicros)), Iters) { (rank, _) =>
       val contrib = srcSide
         .join(rank.withColumnRenamed("host", "src"), "src")
         .select(col("dst").as("host"),
           expr(s"(rank_micros * $DampNum) div ($DampDen * outdeg)").as("c"))
-      // r6b: LAZY checkpoint — each round's result is referenced exactly
-      // once (by the next round), so no round pays the eager
-      // checkpoint's blocking count job. Intermediate rounds are never
-      // truncated: with AQE off the terminal job runs the whole chain;
-      // with AQE on (the default) each round runs its shuffle-map and
-      // broadcast jobs here, when this call plans the round.
-      rank = nodes
+      nodes
         .join(contrib.groupBy("host").agg(sum("c").as("in_c")), Seq("host"), "left")
         .select(col("host"),
           (lit(BaseMicros) + coalesce(col("in_c"), lit(0L))).as("rank_micros"))
-        .localCheckpoint(false)
-      t += 1
     }
-    rank
   }
 
   /** The identical computation as DuckDB SQL, iterations unrolled from

@@ -12,16 +12,14 @@ import org.apache.spark.sql.functions._
   * fetcher.
   *
   * 100 TB shape: resolution is POINTER JUMPING over the redirect edge
-  * table — O(log maxChain) self-join rounds, each a plain equi-join +
-  * localCheckpoint (the [[Dedup.connectedComponents]] discipline; at
-  * real scale: checkpoint to reliable storage). A sequential per-url
-  * walk would be O(maxChain) driver round-trips; a recursive explode
-  * would shuffle the corpus per hop. After round r every pointer has
-  * advanced up to 2^r hops, so `maxIters` = 6 resolves any chain the
-  * fetch policy would have followed (2^6 = 64 hops >> any sane
-  * --max-redirs) and doubles as the LOOP GUARD: a node still pointing
-  * at a redirect source after the last round is flagged unresolved
-  * instead of looping forever. */
+  * table — O(log maxChain) self-join rounds, each a plain equi-join,
+  * run by [[Fixpoint]]. A sequential per-url walk would be O(maxChain)
+  * driver round-trips; a recursive explode would shuffle the corpus per
+  * hop. After round r every pointer has advanced up to 2^r hops, so
+  * `maxIters` = 6 resolves any chain the fetch policy would have
+  * followed (2^6 = 64 hops >> any sane --max-redirs) and doubles as the
+  * LOOP GUARD: a node still pointing at a redirect source after the last
+  * round is flagged unresolved instead of looping forever. */
 object Redirects {
 
   /** Resolve every redirect source in `edges` (srcCol -> dstCol, at
@@ -38,41 +36,24 @@ object Redirects {
     * through verbatim (caller picks string/long keys). */
   def resolve(edges: DataFrame, srcCol: String = "src",
               dstCol: String = "dst", maxIters: Int = 6): DataFrame = {
-    val e = edges.select(col(srcCol).as("node"), col(dstCol).as("next"))
-      .distinct().persist()
-    var ptr = e.select(col("node"), col("next"), lit(1L).as("hops"))
-      .localCheckpoint(true)
-    var iter = 0
-    var done = ptr.isEmpty
-    while (!done && iter < maxIters) {
-      val jumped = ptr.as("a")
-        .join(ptr.as("b"), col("a.next") === col("b.node"), "left")
+    val e = Fixpoint.stage(
+      edges.select(col(srcCol).as("node"), col(dstCol).as("next")).distinct())
+    val ptr = Fixpoint(e.withColumn("hops", lit(1L)), maxIters) { (p, _) =>
+      p.as("a")
+        .join(p.as("b"), col("a.next") === col("b.node"), "left")
         .select(col("a.node").as("node"),
           coalesce(col("b.next"), col("a.next")).as("next"),
           (col("a.hops") + coalesce(col("b.hops"), lit(0L))).as("hops"),
-          // r6: fold the convergence signal into the jump itself — a
-          // pointer advanced this round iff its b-side matched (b.hops
-          // ≥ 1 always, and hops is strictly monotone while a chain is
-          // unfinished), so the old probe's full next⋈ptr re-join is
-          // equivalent to scanning this flag on the checkpointed output
+          // a pointer advanced this round iff its b-side matched (b.hops
+          // ≥ 1 always, so hops is strictly monotone while a chain is
+          // unfinished)
           col("b.node").isNotNull.as("moved"))
-      // r6b: LAZY checkpoint — the convergence probe is the
-      // materializing action (same pattern as connectedComponents), so
-      // the eager blocking job per doubling round disappears.
-      val next = jumped.localCheckpoint(false)
-      // convergence probe: any pointer still advancing? (limit(1)
-      // short-circuits over the in-memory checkpoint — no join)
-      done = next.filter(col("moved")).limit(1).isEmpty
-      ptr = next.drop("moved")
-      iter += 1
     }
     // a node whose final target is still a redirect SOURCE did not
     // terminate within the policy bound: loop (or over-long chain)
     val srcs = e.select(col("node").as("s_node")).distinct()
-    val out = ptr.join(srcs, ptr("next") === col("s_node"), "left")
+    ptr.join(srcs, ptr("next") === col("s_node"), "left")
       .select(col("node"), col("next").as("final"), col("hops"),
         col("s_node").isNull.as("resolved"))
-    e.unpersist(blocking = false)
-    out
   }
 }

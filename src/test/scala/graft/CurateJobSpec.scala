@@ -113,6 +113,19 @@ class CurateJobSpec extends AnyFunSuite with TempRoots {
     assert(counts.jobs <= 15, s"ExportJob.run launched ${counts.jobs} jobs")
   }
 
+  test("export: one ExportJob.run reads the extraction table once") {
+    val dir = corpus
+    val tableRows = ExtractJob.readExtracted(spark, s"$dir/out").count()
+    val (_, counts) = SparkJobs.count(spark)(
+      graft.job.ExportJob.run(spark, s"$dir/out", s"$dir/export-reads"))
+    val packedRows = spark.read.parquet(s"$dir/export-reads/packed").count()
+    info(s"ExportJob.run scanned ${counts.scannedRecords} records: table $tableRows, packed $packedRows")
+    // the docs feed both the BPE word count and the packed write; read
+    // lazily, each use re-ran the scan (2 x the table rows). The stats
+    // pass reads the packed output back once.
+    assert(counts.scannedRecords == tableRows + packedRows)
+  }
+
   test("curate: ftfy rung folds upstream-mangled twins into their clean originals") {
     val dir = tmp()
     ExtractJob.generatePages(spark, 300, s"$dir/pages", partitions = 3)

@@ -778,9 +778,42 @@ class OpsSpec extends AnyFunSuite with TempRoots {
     // cycle members and the chain feeding the cycle never resolve
     assert(!byNode(10L)._4 && !byNode(11L)._4 && !byNode(12L)._4)
     assert(out.length == 7) // one row per distinct src, no fan-out
-    // empty edge table short-circuits (no jump rounds)
+    // an empty edge table resolves nothing
     assert(graft.ops.Redirects.resolve(
       Seq.empty[(Long, Long)].toDF("src", "dst")).isEmpty)
+  }
+
+  test("fixpoint: a converging step stops on its first round that moves nothing; a fixed step runs every round") {
+    import spark.implicits._
+    import graft.ops.Fixpoint
+    var rounds = 0 // the step runs once per round, on the driver
+    // converging: x climbs to 3, flagging each round whether it moved
+    val conv = Fixpoint(Seq(0L).toDF("x"), 10) { (s, _) =>
+      rounds += 1
+      s.select(least(col("x") + 1, lit(3L)).as("x"), (col("x") < 3).as("moved"))
+    }
+    assert(conv.columns.toSeq == Seq("x"))
+    assert(conv.as[Long].collect().toSeq == Seq(3L))
+    assert(rounds == 4, "three rounds move, the fourth moves nothing and ends the loop")
+    // an empty state ends after one round that moves nothing
+    rounds = 0
+    val empty = Fixpoint(Seq.empty[Long].toDF("x"), 10) { (s, _) =>
+      rounds += 1
+      s.select(col("x"), lit(true).as("moved"))
+    }
+    assert(rounds == 1 && empty.isEmpty)
+    // fixed: no `moved` column, so exactly `rounds` rounds run, and the
+    // step sees the round index
+    rounds = 0
+    val fixed = Fixpoint(Seq(0L).toDF("x"), 5) { (s, t) =>
+      rounds += 1
+      s.select((col("x") + t).as("x"))
+    }
+    assert(rounds == 5 && fixed.as[Long].collect().toSeq == Seq(0L + 1 + 2 + 3 + 4))
+    // the bound is Redirects' loop guard: a 2-cycle moves every round
+    val cycle = graft.ops.Redirects.resolve(Seq((1L, 2L), (2L, 1L)).toDF("src", "dst"), maxIters = 3)
+      .collect().map(r => r.getLong(0) -> r.getBoolean(3)).toMap
+    assert(cycle == Map(1L -> false, 2L -> false))
   }
 
   test("span dedup: cross-doc 10-token spans counted, within-doc-only spans exempt") {

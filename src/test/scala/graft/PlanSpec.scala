@@ -566,9 +566,9 @@ class PlanSpec extends AnyFunSuite with TempRoots {
   test("q90 hits half-step: equi-join + partial/final aggregate, normalizer scalar broadcasts (no cartesian, no UDF)") {
     import spark.implicits._
     import org.apache.spark.sql.functions.lit
-    // gate the LAZY one-round shape (scores() materializes each round
-    // through an eager localCheckpoint, so its final plan is an opaque
-    // RDD scan — same situation as the q36 gate)
+    // gate the LAZY one-round shape (scores() checkpoints each
+    // half-step through Fixpoint, so its final plan is an opaque RDD
+    // scan — same situation as the q36 gate)
     val edges = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("a", "c")).toDF("src", "dst")
     val nodes = edges.select(col("src").as("host"))
       .union(edges.select(col("dst").as("host"))).distinct()
