@@ -29,7 +29,8 @@ import graft.core.Page
   */
 object SignatureSvg {
 
-  import graft.pdf.PageRaster.{AdvX, CellH, CellW, Ink, Paper}
+  import graft.pdf.Canvas
+  import graft.pdf.PageRaster.{AdvX, CellH, CellW}
 
   /** Max traced characters — the analog of the reference's crop bound
     * (signature_extractor.py caps the crop to the detected region). */
@@ -40,58 +41,20 @@ object SignatureSvg {
     * row-major top-down. */
   def raster(text: String): (Int, Int, Array[Byte]) = {
     val t = text.take(MaxChars)
-    val n = math.max(t.length, 1)
-    val w = n * AdvX - (AdvX - CellW) // trim the trailing inter-glyph gap
-    val px = Array.fill[Byte](w * CellH)(Paper)
-    var c = 0
-    while (c < t.length) {
-      if (!t.charAt(c).isWhitespace) {
-        val x0 = c * AdvX
-        var dy = 0
-        while (dy < CellH) {
-          var dx = 0
-          while (dx < CellW) { px(dy * w + x0 + dx) = Ink; dx += 1 }
-          dy += 1
-        }
-      }
-      c += 1
-    }
-    (w, CellH, px)
+    val w = math.max(t.length, 1) * AdvX - (AdvX - CellW) // trim the trailing inter-glyph gap
+    val cv = Canvas.blank(w, CellH)
+    Canvas.glyphs(Array(t), 1, t.length, 0, CellH)(cv.glyph)
+    (w, CellH, cv.px)
   }
 
-  /** Vectorize a row-major raster: each connected ink component becomes
-    * one closed rectangular contour path (components of the glyph-box
-    * raster ARE axis-aligned rectangles; a flood fill finds the bounding
-    * box, which equals the component). Row-major discovery order keeps
-    * the path sequence deterministic. */
+  /** Vectorize a row-major raster: each 4-connected ink component
+    * becomes one closed rectangular contour path (components of the
+    * glyph-box raster ARE axis-aligned rectangles, so the bounding box
+    * equals the component). Row-major discovery order keeps the path
+    * sequence deterministic. */
   def tracePaths(w: Int, h: Int, px: Array[Byte]): Seq[String] = {
-    val seen = new Array[Boolean](px.length)
-    val out = Seq.newBuilder[String]
-    val stack = new java.util.ArrayDeque[Int]()
-    var i = 0
-    while (i < px.length) {
-      if (px(i) == Ink && !seen(i)) {
-        var minX = Int.MaxValue; var minY = Int.MaxValue
-        var maxX = -1; var maxY = -1
-        stack.push(i); seen(i) = true
-        while (!stack.isEmpty) {
-          val p = stack.pop()
-          val x = p % w; val y = p / w
-          if (x < minX) minX = x
-          if (y < minY) minY = y
-          if (x > maxX) maxX = x
-          if (y > maxY) maxY = y
-          if (x > 0 && px(p - 1) == Ink && !seen(p - 1)) { seen(p - 1) = true; stack.push(p - 1) }
-          if (x + 1 < w && px(p + 1) == Ink && !seen(p + 1)) { seen(p + 1) = true; stack.push(p + 1) }
-          if (y > 0 && px(p - w) == Ink && !seen(p - w)) { seen(p - w) = true; stack.push(p - w) }
-          if (y + 1 < h && px(p + w) == Ink && !seen(p + w)) { seen(p + w) = true; stack.push(p + w) }
-        }
-        val rw = maxX - minX + 1; val rh = maxY - minY + 1
-        out += s"M$minX ${minY}h${rw}v${rh}h-${rw}z"
-      }
-      i += 1
-    }
-    out.result()
+    val ink = new Canvas(w, h, px).ink
+    Canvas.components(w, h, ink, ink).toSeq.map(c => s"M${c.x} ${c.y}h${c.w}v${c.h}h-${c.w}z")
   }
 
   /** The full artifact: signature ink text → standalone SVG document

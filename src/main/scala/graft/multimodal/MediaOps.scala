@@ -123,6 +123,20 @@ object MediaOps {
     MediaMeta("bmp", "image", width, math.abs(height), bpp / 8, 0, 0, pixelOff, ok = true)
   }
 
+  /** Stored-row layout of a decoded BMP: (row stride, rows stored
+    * top-down), or None when the pixel rows overrun the payload. The
+    * stride is 4-byte padded and computed in LONG arithmetic: a crafted
+    * header claiming width ~2^31 would overflow the Int stride math and
+    * flip the overrun check. Row order honors the HEADER's height sign
+    * (decodeBmp's abs() hides it, so it is re-read from the raw
+    * header): positive stores bottom-up, as our encoder writes;
+    * negative stores row 0 at the top. */
+  private[graft] def bmpRows(b: Array[Byte], m: MediaMeta): Option[(Int, Boolean)] = {
+    val strideL = ((m.width.toLong * m.channels + 3) / 4) * 4
+    if (strideL <= 0 || strideL * m.height + m.payloadOff > b.length) None
+    else Some((strideL.toInt, le32(b, 22) < 0))
+  }
+
   // ---- WAV (real codec): RIFF/WAVE with fmt + data chunks --------------
 
   /** Canonical 44-byte-header PCM WAV. */
@@ -223,25 +237,15 @@ object MediaOps {
     }
     if (m.container != "bmp") return bytes
     val ch = m.channels
-    // dimension sanity in LONG arithmetic: a crafted header claiming
-    // width ~2^31 would overflow the Int stride math, flip the
-    // truncation guard, and crash — untrusted crawl bytes must take
-    // the leave-as-is path, never throw
-    val srcStrideL = ((m.width.toLong * ch + 3) / 4) * 4
-    if (srcStrideL <= 0 || srcStrideL * m.height + m.payloadOff > bytes.length)
-      return bytes // truncated or absurd header: leave as-is
+    // untrusted crawl bytes (truncated or absurd header) take the
+    // leave-as-is path, never throw
+    val (srcStride, topDown) = bmpRows(bytes, m).getOrElse(return bytes)
     val w2 = math.max(1, m.width / 2)
     val h2 = math.max(1, m.height / 2)
-    val srcStride = srcStrideL.toInt
     val dstStride = ((w2 * ch + 3) / 4) * 4
-    // Row order honors the HEADER's height sign (round-4 ADVICE #5):
-    // our encoder writes bottom-up (positive height), and sampling a
-    // bottom-up source in stored order preserves orientation — but an
-    // externally crafted TOP-DOWN BMP (negative height) stores row 0 at
-    // the top, so its stored rows are walked in reverse to land the
-    // same content in the re-encoded bottom-up output (decodeBmp's
-    // abs() hides the sign, so re-read it from the raw header).
-    val topDown = le32(bytes, 22) < 0
+    // sampling a bottom-up source in stored order preserves
+    // orientation; a top-down source's stored rows are walked in
+    // reverse to land the same content in the bottom-up output
     val dst = new Array[Byte](dstStride * h2)
     var y = 0
     while (y < h2) {

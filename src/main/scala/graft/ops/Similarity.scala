@@ -539,17 +539,29 @@ object Similarity {
       .select(col(idCol).cast("string").as("query_id"),
         explode(sequence(lit(0), m - lit(1))).as("sub"), col(vecCol))
       .select(col("query_id"), col("sub"),
-        // CAST to DOUBLE before scaling: FLOAT * INT promotes differently
-        // across engines (single-precision multiply shifts the floor)
-        expr(s"transform(slice($vecCol, sub * $dsub + 1, $dsub), " +
-          "x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT))").as("qm"))
+        expr(floorMicros(s"slice($vecCol, sub * $dsub + 1, $dsub)")).as("qm"))
     val scored = codes
       .join(broadcast(codebooks), Seq("sub", "cell"))
       .join(broadcast(qsub), Seq("sub"))
-      .withColumn("d", expr(
-        "aggregate(zip_with(qm, cm, (a, b) -> (a - b) * (a - b)), CAST(0 AS BIGINT), (acc, x) -> acc + x)"))
+      .withColumn("d", expr(sqDistMicros("qm", "cm")))
       .groupBy(col("query_id"), col("neighbor_id"))
       .agg(sum(col("d")).as("adc_dist"))
+    adcRanks(scored, k)
+  }
+
+  /** Integer micros of a float array expression, floored. CAST to
+    * DOUBLE before scaling: FLOAT * INT promotes differently across
+    * engines (single-precision multiply shifts the floor). */
+  private def floorMicros(arr: String): String =
+    s"transform($arr, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT))"
+
+  /** Exact BIGINT squared L2 distance of two integer-micros arrays. */
+  private def sqDistMicros(a: String, b: String): String =
+    s"aggregate(zip_with($a, $b, (a, b) -> (a - b) * (a - b)), CAST(0 AS BIGINT), (acc, x) -> acc + x)"
+
+  /** The ADC top-k tail: per query, the k nearest neighbors by
+    * (adc_dist, neighbor_id) with their 1-based rank. */
+  private def adcRanks(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("adc_dist").asc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w))
@@ -639,10 +651,9 @@ object Similarity {
                  queries: DataFrame, k: Int, nprobe: Int, dsub: Int,
                  idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val qm = queries.select(col(idCol).cast("string").as("query_id"),
-      expr(s"transform($vecCol, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT))").as("qm"))
+      expr(floorMicros(vecCol)).as("qm"))
     val probed = qm.crossJoin(broadcast(coarse))
-      .withColumn("cd", expr(
-        "aggregate(zip_with(qm, cm, (a, b) -> (a - b) * (a - b)), CAST(0 AS BIGINT), (acc, x) -> acc + x)"))
+      .withColumn("cd", expr(sqDistMicros("qm", "cm")))
     val pw = Window.partitionBy(col("query_id")).orderBy(col("cd").asc, col("cell").asc)
     val probes = probed.withColumn("pr", row_number().over(pw))
       .filter(col("pr") <= nprobe)
@@ -661,18 +672,12 @@ object Similarity {
     val scored = codes
       .join(broadcast(qsub), Seq("cell", "sub"))
       .join(broadcast(books), Seq("sub", "code"))
-      .withColumn("d", expr(
-        "aggregate(zip_with(qrm, cm, (a, b) -> (a - b) * (a - b)), CAST(0 AS BIGINT), (acc, x) -> acc + x)"))
+      .withColumn("d", expr(sqDistMicros("qrm", "cm")))
       .groupBy(col("query_id"), col("neighbor_id"), col("cell"))
       .agg(sum(col("d")).as("cell_dist"))
       .groupBy(col("query_id"), col("neighbor_id"))
       .agg(min(col("cell_dist")).as("adc_dist"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_dist").asc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("adc_dist"),
-        col("rank").cast("int").as("rank"))
+    adcRanks(scored, k)
   }
 
   // ---- SemDeDup (Abbas et al. 2023) as a reusable pipeline stage -------
@@ -728,13 +733,10 @@ object Similarity {
     val e = docs.select(col(idCol).cast("string").as("id"), col(vecCol).as("embedding"))
     val labels = Dedup.connectedComponents(
       verifyPairs(pairs, docs, threshold, idCol, vecCol).select(col("a_id"), col("b_id")))
-    val distMicros =
-      "aggregate(zip_with(transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT)), " +
-        "cm, (a, b) -> (a - b) * (a - b)), CAST(0 AS BIGINT), (acc, x) -> acc + x)"
     val dist = assign
       .join(e, "id")
       .join(broadcast(books), "cell")
-      .select(col("id"), col("cell"), expr(distMicros).as("dist_micros"))
+      .select(col("id"), col("cell"), expr(sqDistMicros(floorMicros("embedding"), "cm")).as("dist_micros"))
     val w = Window.partitionBy(col("cluster_id"))
       .orderBy(col("dist_micros").desc, col("id").asc)
     dist

@@ -1,7 +1,5 @@
 package graft.pdf
 
-import graft.multimodal.MediaOps
-
 /** Pixel-space blob detection — the Spark-side analog of the reference's
   * contour pipeline (/root/reference/ocrworker/form_detector.py:265-371:
   * dilate → findContours → boundingRect → classify by size/aspect, and
@@ -10,13 +8,15 @@ import graft.multimodal.MediaOps
   * pixels over the q76 raster surface, so the capability exists at both
   * levels a reference user expects.
   *
-  * Stages: (1) decode the 8-bit BMP into a top-down ink bitmap;
+  * Stages: (1) decode the 8-bit BMP into a top-down ink bitmap
+  * ([[Canvas.decode]]: either stored row order, rows checked against
+  * the payload);
   * (2) dilate horizontally by 1 px — the raster's inter-glyph gap is
   * exactly 1 px (AdvX − CellW) while an inter-word gap is ≥ 5 px, so
   * dilation merges a word's glyphs and nothing else (the reference uses
   * the same dilate-then-contour trick to group characters into text
   * regions); (3) 4-connected component labeling over the dilated mask
-  * (iterative BFS — no recursion, bounded by W·H ints per page);
+  * ([[Canvas.components]]: iterative BFS, bounded by W·H ints per page);
   * (4) per component, the bounding box and ink count are measured over
   * the ORIGINAL ink only, so dilation never distorts geometry;
   * (5) classify: glyph-height runs are words, taller-and-narrow hollow
@@ -41,74 +41,25 @@ object Blobs {
   val CheckedFillDen = 4
 
   def detect(bmp: Array[Byte]): Array[Blob] = {
-    val m = MediaOps.decodeBmp(bmp)
-    require(m.ok && m.channels == 1, "blob detection expects the 8-bit page raster")
-    val w = m.width; val h = m.height
-    val stride = ((w + 3) / 4) * 4
-    val ink = new Array[Boolean](w * h) // top-down row order
-    var sy = 0
-    while (sy < h) {
-      val y = h - 1 - sy // stored bottom-up
-      val row = m.payloadOff + sy * stride
-      var x = 0
-      while (x < w) {
-        if (bmp(row + x) == PageRaster.Ink) ink(y * w + x) = true
-        x += 1
-      }
-      sy += 1
-    }
+    val cv = Canvas.decode(bmp, "blob detection")
+    val w = cv.w
+    val ink = cv.ink
     // 1-px horizontal dilation: closes the glyph gap inside a word
-    val mask = new Array[Boolean](w * h)
-    var y = 0
-    while (y < h) {
-      val base = y * w
-      var x = 0
-      while (x < w) {
-        val i = base + x
-        mask(i) = ink(i) || (x > 0 && ink(i - 1)) || (x + 1 < w && ink(i + 1))
-        x += 1
-      }
-      y += 1
+    val mask = Array.tabulate(ink.length) { i =>
+      val x = i % w
+      ink(i) || (x > 0 && ink(i - 1)) || (x + 1 < w && ink(i + 1))
     }
-    // 4-connected BFS labeling over the dilated mask, scan order
-    val label = Array.fill(w * h)(-1)
-    val queue = new Array[Int](w * h)
-    val blobs = Array.newBuilder[Blob]
-    var i = 0
-    while (i < w * h) {
-      if (mask(i) && label(i) < 0) {
-        var head = 0; var tail = 0
-        queue(tail) = i; tail += 1; label(i) = 1
-        var minX = w; var maxX = -1; var minY = h; var maxY = -1; var inkPx = 0
-        while (head < tail) {
-          val p = queue(head); head += 1
-          val py = p / w; val px = p % w
-          if (ink(p)) {
-            if (px < minX) minX = px
-            if (px > maxX) maxX = px
-            if (py < minY) minY = py
-            if (py > maxY) maxY = py
-            inkPx += 1
-          }
-          if (px > 0 && mask(p - 1) && label(p - 1) < 0) { label(p - 1) = 1; queue(tail) = p - 1; tail += 1 }
-          if (px + 1 < w && mask(p + 1) && label(p + 1) < 0) { label(p + 1) = 1; queue(tail) = p + 1; tail += 1 }
-          if (py > 0 && mask(p - w) && label(p - w) < 0) { label(p - w) = 1; queue(tail) = p - w; tail += 1 }
-          if (py + 1 < h && mask(p + w) && label(p + w) < 0) { label(p + w) = 1; queue(tail) = p + w; tail += 1 }
-        }
-        // every component contains ≥ 1 original ink pixel (dilation
-        // only ever extends ink), so the box is always well-formed
-        val bw = maxX - minX + 1; val bh = maxY - minY + 1
-        val kind =
-          if (bh <= PageRaster.CellH) "word"
-          else if (bw <= CheckboxMaxW) "checkbox"
-          else "box"
-        val checked = kind == "checkbox" &&
-          inkPx.toLong * CheckedFillDen >= CheckedFillNum.toLong * bw * bh
-        blobs += Blob(kind, minX, minY, bw, bh, inkPx, checked)
-      }
-      i += 1
-    }
-    blobs.result().sortBy(b => (b.y, b.x))
+    // every component contains ≥ 1 original ink pixel (dilation only
+    // ever extends ink), so the box is always well-formed
+    Canvas.components(w, cv.h, mask, ink).map { c =>
+      val kind =
+        if (c.h <= PageRaster.CellH) "word"
+        else if (c.w <= CheckboxMaxW) "checkbox"
+        else "box"
+      val checked = kind == "checkbox" &&
+        c.count.toLong * CheckedFillDen >= CheckedFillNum.toLong * c.w * c.h
+      Blob(kind, c.x, c.y, c.w, c.h, c.count, checked)
+    }.sortBy(b => (b.y, b.x))
   }
 
   /** md5 over "y:x:w:h" boxes sorted by (y, x, w, h) joined with ';' —

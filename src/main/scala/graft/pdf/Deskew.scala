@@ -37,24 +37,14 @@ object Deskew {
 
   final case class Line(angleCenti: Int, pixels: Int)
 
-  /** Ink pixels of a graft 8-bit BMP as packed (x, y), y top-down. */
-  private def inkPixels(bmp: Array[Byte]): (Array[Int], Array[Int]) = {
-    val m = graft.multimodal.MediaOps.decodeBmp(bmp)
-    require(m.ok && m.channels == 1, "deskew expects the 8-bit page raster")
-    val w = m.width; val h = m.height
-    val stride = ((w + 3) / 4) * 4
+  /** Ink pixels of a page canvas as packed (x, y), y top-down. */
+  private def inkPixels(cv: Canvas): (Array[Int], Array[Int]) = {
     val xs = Array.newBuilder[Int]
     val ys = Array.newBuilder[Int]
-    var sy = 0
-    while (sy < h) {
-      val y = h - 1 - sy // stored bottom-up
-      val row = m.payloadOff + sy * stride
-      var x = 0
-      while (x < w) {
-        if (bmp(row + x) == PageRaster.Ink) { xs += x; ys += y }
-        x += 1
-      }
-      sy += 1
+    var i = 0
+    while (i < cv.px.length) {
+      if (cv.px(i) == PageRaster.Ink) { xs += i % cv.w; ys += i / cv.w }
+      i += 1
     }
     (xs.result(), ys.result())
   }
@@ -68,10 +58,10 @@ object Deskew {
     * grid error caused (a sub-grid error smears rho by ~0.5 px across
     * the page width, enough to close a 1-bin inter-line gap). */
   def lines(bmp: Array[Byte]): Array[Line] = {
-    val (xs, ys) = inkPixels(bmp)
+    val cv = Canvas.decode(bmp, "deskew")
+    val (xs, ys) = inkPixels(cv)
     if (xs.isEmpty) return Array.empty
-    val m = graft.multimodal.MediaOps.decodeBmp(bmp)
-    val rhoOff = m.width + m.height // |rho| <= w·sin + h·cos <= w + h
+    val rhoOff = cv.w + cv.h // |rho| <= w·sin + h·cos <= w + h
     val nRho = 2 * rhoOff + 1
 
     // 1. Hough sweep: vote (angle, rho = y·cosθ − x·sinθ); the true

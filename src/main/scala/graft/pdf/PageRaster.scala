@@ -1,7 +1,5 @@
 package graft.pdf
 
-import graft.multimodal.MediaOps
-
 /** G2: pdf page → page image. The reference rasterizes every PDF page
   * to an image before OCR (/root/reference/ocrworker/engines/paddle.py:149-154,
   * pdf2image at fixed DPI). No rasterizer library exists in-sandbox, so
@@ -61,39 +59,9 @@ object PageRaster {
   /** Render one page text to BMP bytes (8-bit, bottom-up rows as the
     * format specifies). */
   def rasterize(pageText: String): Array[Byte] = {
-    val px = Array.fill[Byte](Width * Height)(Paper)
-    val lines = pageText.split("\n", -1)
-    var r = 0
-    while (r < lines.length && r < MaxRows) {
-      val line = lines(r)
-      var c = 0
-      val n = math.min(line.length, MaxCols)
-      while (c < n) {
-        if (!line.charAt(c).isWhitespace) {
-          val x0 = Margin + c * AdvX
-          val y0 = Margin + r * AdvY
-          var dy = 0
-          while (dy < CellH) {
-            var dx = 0
-            while (dx < CellW) {
-              px((y0 + dy) * Width + (x0 + dx)) = Ink
-              dx += 1
-            }
-            dy += 1
-          }
-        }
-        c += 1
-      }
-      r += 1
-    }
-    // bottom-up row order per the BMP spec (the encoder writes raw rows)
-    val flipped = new Array[Byte](px.length)
-    var y = 0
-    while (y < Height) {
-      System.arraycopy(px, y * Width, flipped, (Height - 1 - y) * Width, Width)
-      y += 1
-    }
-    MediaOps.encodeBmp(Width, Height, 1, flipped)
+    val cv = Canvas.blank(Width, Height)
+    Canvas.glyphs(pageText.split("\n", -1), MaxRows, MaxCols, Margin, AdvY)(cv.glyph)
+    cv.toBmp
   }
 
   /** Rasterize every page of a PDF payload: Right(page images) or
@@ -101,14 +69,6 @@ object PageRaster {
   def rasterizePages(pdfBytes: Array[Byte]): Either[String, Array[Array[Byte]]] =
     PdfParser.extract(pdfBytes).map(_.pageTexts.map(rasterize))
 
-  /** [[rasterize]] with the page rotated by `angleCentiDeg` (hundredths
-    * of a degree) about the canvas center — the planted-skew surface
-    * the deskew analog ([[Deskew]]) recovers from. Each glyph box keeps
-    * its axis-aligned shape (rotated TEXT LINES, like a skewed scan of
-    * upright glyphs); its origin rotates, so a text row's boxes fall
-    * along a line of slope tan(angle): dy/dx positive for a positive
-    * angle, exactly the angle [[Deskew.lines]] reports. Boxes rotated
-    * out of bounds are clipped (a real scanner crops too). */
   /** Line pitch of the SKEWED surface: 4 px leading (vs [[AdvY]]'s 2) —
     * the deskew estimator bins ink by rho at a 0.25°-grid angle, and a
     * sub-grid angle error smears rho by ~0.5 px across the page width;
@@ -143,60 +103,15 @@ object PageRaster {
     * checked states are pure functions of (idx, pageNo) — so the
     * detector's output is verifiable from the url alone. */
   def rasterizeForm(pageText: String, idx: Long, pageNo: Int): Array[Byte] = {
-    val px = Array.fill[Byte](Width * Height)(Paper)
-    val lines = pageText.split("\n", -1)
-    var r = 0
-    while (r < lines.length && r < FormTextRows) {
-      val line = lines(r)
-      var c = 0
-      val n = math.min(line.length, MaxCols)
-      while (c < n) {
-        if (!line.charAt(c).isWhitespace) {
-          val x0 = Margin + c * AdvX
-          val y0 = Margin + r * AdvY
-          var dy = 0
-          while (dy < CellH) {
-            var dx = 0
-            while (dx < CellW) { px((y0 + dy) * Width + (x0 + dx)) = Ink; dx += 1 }
-            dy += 1
-          }
-        }
-        c += 1
-      }
-      r += 1
-    }
-    def hollowRect(x0: Int, y0: Int, w: Int, h: Int): Unit = {
-      var x = x0
-      while (x < x0 + w) { px(y0 * Width + x) = Ink; px((y0 + h - 1) * Width + x) = Ink; x += 1 }
-      var y = y0
-      while (y < y0 + h) { px(y * Width + x0) = Ink; px(y * Width + (x0 + w - 1)) = Ink; y += 1 }
-    }
-    def fillRect(x0: Int, y0: Int, w: Int, h: Int): Unit = {
-      var y = y0
-      while (y < y0 + h) {
-        var x = x0
-        while (x < x0 + w) { px(y * Width + x) = Ink; x += 1 }
-        y += 1
-      }
-    }
-    var k = 0
-    val nb = plantedBoxes(idx, pageNo)
-    while (k < nb) { hollowRect(BoxX0 + k * BoxPitch, BoxY, BoxW, BoxH); k += 1 }
-    k = 0
-    val nc = plantedCheckboxes(idx, pageNo)
-    while (k < nc) {
+    val cv = Canvas.blank(Width, Height)
+    Canvas.glyphs(pageText.split("\n", -1), FormTextRows, MaxCols, Margin, AdvY)(cv.glyph)
+    for (k <- 0 until plantedBoxes(idx, pageNo)) cv.hollowRect(BoxX0 + k * BoxPitch, BoxY, BoxW, BoxH)
+    for (k <- 0 until plantedCheckboxes(idx, pageNo)) {
       val x0 = CbX0 + k * CbPitch
-      if (plantedChecked(idx, k)) fillRect(x0, CbY, CbSide, CbSide)
-      else hollowRect(x0, CbY, CbSide, CbSide)
-      k += 1
+      if (plantedChecked(idx, k)) cv.fillRect(x0, CbY, CbSide, CbSide)
+      else cv.hollowRect(x0, CbY, CbSide, CbSide)
     }
-    val flipped = new Array[Byte](px.length)
-    var y = 0
-    while (y < Height) {
-      System.arraycopy(px, y * Width, flipped, (Height - 1 - y) * Width, Width)
-      y += 1
-    }
-    MediaOps.encodeBmp(Width, Height, 1, flipped)
+    cv.toBmp
   }
 
   /** The form surface's WORD ground truth as arithmetic (the [[inkCells]]
@@ -227,45 +142,24 @@ object PageRaster {
     out.result()
   }
 
+  /** [[rasterize]] with the page rotated by `angleCentiDeg` (hundredths
+    * of a degree) about the canvas center — the planted-skew surface
+    * the deskew analog ([[Deskew]]) recovers from. Each glyph box keeps
+    * its axis-aligned shape (rotated TEXT LINES, like a skewed scan of
+    * upright glyphs); its origin rotates, so a text row's boxes fall
+    * along a line of slope tan(angle): dy/dx positive for a positive
+    * angle, exactly the angle [[Deskew.lines]] reports. Boxes rotated
+    * out of bounds are clipped (a real scanner crops too). */
   def rasterizeSkewed(pageText: String, angleCentiDeg: Int): Array[Byte] = {
     val th = math.toRadians(angleCentiDeg / 100.0)
     val cosA = math.cos(th); val sinA = math.sin(th)
     val cx = Width / 2.0; val cy = Height / 2.0
-    val px = Array.fill[Byte](Width * Height)(Paper)
-    val lines = pageText.split("\n", -1)
-    var r = 0
-    while (r < lines.length && r < MaxRowsSkew) {
-      val line = lines(r)
-      var c = 0
-      val n = math.min(line.length, MaxCols)
-      while (c < n) {
-        if (!line.charAt(c).isWhitespace) {
-          val x0 = Margin + c * AdvX
-          val y0 = Margin + r * AdvYSkew
-          val xr = math.round(cx + (x0 - cx) * cosA - (y0 - cy) * sinA).toInt
-          val yr = math.round(cy + (x0 - cx) * sinA + (y0 - cy) * cosA).toInt
-          if (xr >= 0 && yr >= 0 && xr + CellW <= Width && yr + CellH <= Height) {
-            var dy = 0
-            while (dy < CellH) {
-              var dx = 0
-              while (dx < CellW) {
-                px((yr + dy) * Width + (xr + dx)) = Ink
-                dx += 1
-              }
-              dy += 1
-            }
-          }
-        }
-        c += 1
-      }
-      r += 1
+    val cv = Canvas.blank(Width, Height)
+    Canvas.glyphs(pageText.split("\n", -1), MaxRowsSkew, MaxCols, Margin, AdvYSkew) { (x0, y0) =>
+      val xr = math.round(cx + (x0 - cx) * cosA - (y0 - cy) * sinA).toInt
+      val yr = math.round(cy + (x0 - cx) * sinA + (y0 - cy) * cosA).toInt
+      if (xr >= 0 && yr >= 0 && xr + CellW <= Width && yr + CellH <= Height) cv.glyph(xr, yr)
     }
-    val flipped = new Array[Byte](px.length)
-    var y = 0
-    while (y < Height) {
-      System.arraycopy(px, y * Width, flipped, (Height - 1 - y) * Width, Width)
-      y += 1
-    }
-    MediaOps.encodeBmp(Width, Height, 1, flipped)
+    cv.toBmp
   }
 }
