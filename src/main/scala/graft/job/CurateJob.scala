@@ -37,18 +37,21 @@ import graft.ops.{Balance, Dedup, Hosts, Repetition, TextStats}
   *                                     under incremental ingestion
   *     → curated parquet, partitioned by split, + a funnel manifest
   *
-  * Scale notes: the extraction table is scanned once for the dataset
-  * build (and once more for the funnel's table counts); document text
+  * Scale notes: the extraction table is scanned once; document text
   * crosses the wire three times — the url exchange and the digest
   * exchange of the two dedup aggregates (the text rides in each min
   * struct; no join, no broadcast) and the host-cap exchange — and the
   * quality threshold is a broadcast scalar. The funnel IS the lineage
-  * record a curation run must publish: each rung after the url rung is
-  * observed by the action that runs it — the dedup, fuzzy and feature
+  * record a curation run must publish: each rung is observed by the
+  * action that runs it — the table, url, dedup, fuzzy and feature
   * counts by the observations inside their persisted plans (each fires
-  * in the action that fills its cache), the gate and cap rungs by the
-  * curated write itself. */
+  * in the action that fills its cache), the LSH bucket cap's drop by
+  * its own sizing aggregate in the candidate checkpoint, the gate and
+  * cap rungs by the curated write itself. */
 object CurateJob {
+
+  /** Verified MinHash jaccard at or above which two docs are near-dups. */
+  private val FuzzyThreshold = 0.6
 
   final case class Funnel(
       extracted: Long,  // rows in the extraction table
@@ -78,7 +81,7 @@ object CurateJob {
     *   q80 kernel). None keeps the stage out of the funnel (the q57
     *   oracle mirrors the blocklist-free chain). */
   def run(spark: SparkSession, extractRoot: String, outRoot: String,
-          perHostCap: Int = 1000, fuzzyThreshold: Double = 0.6,
+          perHostCap: Int = 1000,
           embeddings: Option[org.apache.spark.sql.DataFrame] = None,
           semThreshold: Double = 0.9, semCells: Int = 16,
           urlBlocklist: Option[Seq[String]] = None,
@@ -86,7 +89,15 @@ object CurateJob {
     val table = ExtractJob.readExtracted(spark, extractRoot)
     val isHtml = col("error").isNull && col("payload_kind") === "html" &&
       length(col("extracted_text")) > 0
-    val baseRaw = table.filter(isHtml).select(col("url"), col("extracted_text"))
+    // the table's own funnel counts ride the one scan that feeds
+    // `deduped` (repair drops no rows, so html == |baseRaw|)
+    val tableObs = Observation("table")
+    val baseRaw = table
+      .observe(tableObs, count(lit(1)).as("extracted"), count_if(isHtml).as("html"),
+        (if (repairMojibake)
+           count_if(isHtml && graft.ops.Mojibake.wouldRepair(col("extracted_text")))
+         else lit(0L)).as("moji"))
+      .filter(isHtml).select(col("url"), col("extracted_text"))
 
     // ftfy rung FIRST (q108 kernel): mojibake defeats every digest
     // downstream — a mangled twin of a clean doc would survive exact
@@ -101,11 +112,13 @@ object CurateJob {
 
     // url rung (first DROPPING stage, like the published recipes: the
     // cheapest signal drops payload before any content-sized work)
+    val urlObs = Observation("urlFiltered")
     val base = urlBlocklist match {
       case Some(bl) =>
         graft.ops.UrlFilter.verdicts(base0, "url", bl)
           .filter(!col("blocked"))
           .select(col("url"), col("extracted_text"))
+          .observe(urlObs, count(lit(1)).as("rows"))
       case None => base0
     }
 
@@ -131,21 +144,24 @@ object CurateJob {
     // exact dedup (C4/RefinedWeb/Gopher all MinHash here): LSH-blocked
     // verified pairs → connected components → keep each cluster's
     // canonical member (the q20 + q47 kernels, unchanged). The LSH
-    // bucket cap is AUDITED, never silent (the house rule): the dropped
-    // count goes into the funnel manifest.
+    // bucket cap is AUDITED, never silent (the house rule): the cap's
+    // own sizing aggregate counts the dropped buckets in the candidate
+    // checkpoint, and the count goes into the funnel manifest.
     //
     // bands and candidates are each staged ONCE, eagerly (the
     // connectedComponents discipline): Spark shares no lazy subplan
-    // between references, so the audit, both self-join sides and the
-    // verify's two reads would each re-run the signatures and the LSH
-    // join. Eager, because AQE can compute an unfilled persist() cache
-    // twice. At 10^12 docs: reliable checkpoints instead.
+    // between references, so the cap's two reads of the bands and the
+    // verify's two reads of the candidates would each re-run the
+    // signatures and the LSH pairing. Eager, because AQE can compute an
+    // unfilled persist() cache twice. At 10^12 docs: reliable
+    // checkpoints instead.
     val bands = Dedup.minhashBands(deduped, "url", "extracted_text", shingleN = 2)
       .localCheckpoint(eager = true)
-    val fuzzyBucketsDropped = Dedup.oversizedBuckets(bands)
-    val cands = Dedup.candidatePairs(bands).localCheckpoint(eager = true)
+    val bucketsDropped = Observation("fuzzyBucketsDropped")
+    val cands = Dedup.candidatePairs(bands, dropped = bucketsDropped)
+      .localCheckpoint(eager = true)
     val pairs = Dedup.jaccardVerify(cands, deduped,
-      "url", "extracted_text", shingleN = 2, threshold = fuzzyThreshold)
+      "url", "extracted_text", shingleN = 2, threshold = FuzzyThreshold)
     val canon = Dedup.dedupClusters(deduped, pairs, idCol = "url")
       .filter(col("is_canonical"))
       .select(col("doc_id").as("url"))
@@ -207,30 +223,25 @@ object CurateJob {
       curated.write.mode(SaveMode.Overwrite).partitionBy("split")
         .parquet(s"$outRoot/data")
 
-      // extracted, html and mojibake counts in ONE pass over the
-      // extraction table (repair drops no rows, so html == |baseRaw|;
-      // a scan per count would be waste)
-      val tableStats = table.agg(
-        count(lit(1)).as("n_extracted"),
-        count(when(isHtml, lit(1))).as("n_html"),
-        (if (repairMojibake)
-           coalesce(  // sum over zero rows is NULL, not 0
-             sum(when(isHtml && graft.ops.Mojibake.wouldRepair(col("extracted_text")),
-               1L).otherwise(0L)), lit(0L))
-         else lit(0L)).as("n_moji")).first()
+      // the table and url counts fired in `deduped`'s cache fill, which
+      // reads the whole scan (a table with no clean html row keeps its
+      // counts: "a corpus with nothing curatable"); they are absent only
+      // when the optimizer proved the table empty
+      def tableCount(metric: String) = observed(tableObs, metric).getOrElse(0L)
       val funnel = Funnel(
-        extracted = tableStats.getLong(0),
-        html = tableStats.getLong(1),
-        mojibakeRepaired = tableStats.getLong(2),
+        extracted = tableCount("extracted"),
+        html = tableCount("html"),
+        mojibakeRepaired = tableCount("moji"),
         urlFiltered =
-          if (urlBlocklist.isDefined) base.count() else tableStats.getLong(1),
-        deduped = observedRows(dedupedObs).getOrElse(deduped.count()),
-        fuzzyDeduped = observedRows(fuzzyDedupedObs).getOrElse(fuzzyDeduped.count()),
-        semanticDeduped = observedRows(semDedupedObs).getOrElse(feats.count()),
-        gated = observedRows(gatedObs).get,
-        kept = observedRows(keptObs).get)
+          if (urlBlocklist.isDefined) observed(urlObs).getOrElse(0L)
+          else tableCount("html"),
+        deduped = observed(dedupedObs).getOrElse(deduped.count()),
+        fuzzyDeduped = observed(fuzzyDedupedObs).getOrElse(fuzzyDeduped.count()),
+        semanticDeduped = observed(semDedupedObs).getOrElse(feats.count()),
+        gated = observed(gatedObs).get,
+        kept = observed(keptObs).get)
       val json =
-        s"""{"extracted":${funnel.extracted},"html":${funnel.html},"mojibake_repaired":${funnel.mojibakeRepaired},"url_filtered":${funnel.urlFiltered},"deduped":${funnel.deduped},"fuzzy_deduped":${funnel.fuzzyDeduped},"semantic_deduped":${funnel.semanticDeduped},"gated":${funnel.gated},"kept":${funnel.kept},"per_host_cap":$perHostCap,"fuzzy_buckets_dropped":$fuzzyBucketsDropped}"""
+        s"""{"extracted":${funnel.extracted},"html":${funnel.html},"mojibake_repaired":${funnel.mojibakeRepaired},"url_filtered":${funnel.urlFiltered},"deduped":${funnel.deduped},"fuzzy_deduped":${funnel.fuzzyDeduped},"semantic_deduped":${funnel.semanticDeduped},"gated":${funnel.gated},"kept":${funnel.kept},"per_host_cap":$perHostCap,"fuzzy_buckets_dropped":${Dedup.droppedBuckets(bucketsDropped, bands)}}"""
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outRoot))
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(outRoot, "funnel.json"), json + "\n")
@@ -242,15 +253,16 @@ object CurateJob {
     }
   }
 
-  /** The row count an observation recorded in the action that ran it.
+  /** The count `metric` (a rung's `rows` by default) an observation
+    * recorded in the action that ran it.
     * None when the first action whose plan holds the observation pruned
     * that branch (an input the optimizer proved empty, or a consumer
     * that needed none of it): Spark then completes the observation with
     * no metrics, and a persisted rung is counted from its cache instead.
     * The first reader of an observed rung must read all of it (no bare
     * `limit`), or the count covers only the partitions it computed. */
-  private def observedRows(o: Observation): Option[Long] =
-    o.get.get("rows").map(_.asInstanceOf[Long])
+  private def observed(o: Observation, metric: String = "rows"): Option[Long] =
+    o.get.get(metric).map(_.asInstanceOf[Long])
 }
 
 /** Curation entry point:

@@ -33,8 +33,11 @@ object ExportJob {
 
   final case class ExportStats(docs: Long, seqs: Long, tokens: Long)
 
+  /** Hex chars of the shard id: 1 char = 16 shards per split. */
+  private val ShardChars = 1
+
   def run(spark: SparkSession, extractRoot: String, exportDir: String,
-          budget: Long = 2048L, shardChars: Int = 1): Map[String, ExportStats] = {
+          budget: Long = 2048L): Map[String, ExportStats] = {
     require(budget > 0, "budget must be positive")
     val docs0 = ExtractJob.readExtracted(spark, extractRoot)
       .filter(col("error").isNull && col("payload_kind") === "html" &&
@@ -62,7 +65,7 @@ object ExportJob {
       val perDoc = graft.ops.Bpe.perDocTokenCounts(
           docs.withColumn("doc_id", xxhash64(col("url"))),
           Seq("url", "doc_id"), "text", wl)
-        .withColumn("grp", graft.ops.Packing.splitShardGrp(col("doc_id"), shardChars))
+        .withColumn("grp", graft.ops.Packing.splitShardGrp(col("doc_id"), ShardChars))
 
       val packed = graft.ops.Packing
         .packCountsGrouped(perDoc, "grp", "doc_id", "n_bpe", budget)
@@ -86,7 +89,7 @@ object ExportJob {
       s""""$s":{"docs":${st.docs},"seqs":${st.seqs},"tokens":${st.tokens}}"""
     }.mkString(",")
     val json =
-      s"""{"budget":$budget,"shard_chars":$shardChars,""" +
+      s"""{"budget":$budget,"shard_chars":$ShardChars,""" +
         s""""extraction_version":"${graft.core.ExtractionVersion.current}",""" +
         s""""splits":{$splitsJson}}"""
     Files.writeString(Paths.get(exportDir, "manifest.json"), json + "\n")

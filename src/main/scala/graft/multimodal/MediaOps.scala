@@ -250,10 +250,10 @@ object MediaOps {
     var y = 0
     while (y < h2) {
       // same CONTENT row either way (bottom-up stored row 2y is content
-      // row 2(h2-1-y)+1; a top-down file stores that content row at
-      // stored index 2(h2-1-y)+1) — so the two orientations of one
-      // image resize to byte-identical output
-      val srcStoredRow = if (topDown) (h2 - 1 - y) * 2 + 1 else y * 2
+      // row h-1-2y; a top-down file stores that content row at stored
+      // index h-1-2y) — so the two orientations of one image resize to
+      // byte-identical output, whatever the parity of h
+      val srcStoredRow = if (topDown) m.height - 1 - 2 * y else y * 2
       val srcRow = m.payloadOff + srcStoredRow * srcStride
       val dstRow = y * dstStride
       var x = 0

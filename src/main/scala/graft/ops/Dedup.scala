@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for a large-scale training-data pipeline:
@@ -8,11 +8,11 @@ import org.apache.spark.sql.functions._
   *
   * Design for 10^12 rows: per-document work (shingling, signatures) is
   * map-side over the text column; the only shuffles are (a) the LSH
-  * bucket join, which is an equi-join on (band, band_hash) — bounded
-  * fan-out because each doc emits exactly `bands` keys — and (b) the
-  * candidate-pair verify join, keyed by doc id. Never an O(N^2) cross
-  * join; the banding IS the blocking strategy. Exact Jaccard runs only
-  * on LSH candidates.
+  * bucket pairing, keyed by (band, band_hash) — bounded fan-out because
+  * each doc emits exactly `bands` keys and every bucket is capped — and
+  * (b) the candidate-pair verify join, keyed by doc id. Never an O(N^2)
+  * cross join; the banding IS the blocking strategy. Exact Jaccard runs
+  * only on LSH candidates.
   */
 object Dedup {
 
@@ -152,58 +152,110 @@ object Dedup {
       .toDF("id", "band", "band_hash")
   }
 
-  /** Count of (band, band_hash) buckets in `bands` that the
-    * [[candidatePairs]] cap drops — surfaced so the drop is never
-    * silent (a pathological all-identical corpus would otherwise
-    * quietly lose recall). This is its OWN groupBy job over `bands`,
-    * separate from the candidate join's window: a caller that audits
-    * and also builds candidates should stage `bands` first (CurateJob
-    * does), or the banding lineage runs once per read. */
-  def oversizedBuckets(bands: DataFrame, maxBucket: Int = 1000): Long =
-    bands.groupBy("band", "band_hash").count()
-      .filter(col("count") > maxBucket).count()
+  /** Default LSH bucket cap: a (band, band_hash) bucket holding more
+    * docs than this is dropped whole. */
+  val MaxBucket = 1000
 
-  /** Audit the [[candidatePairs]] bucket cap AT DUMP TIME: count the
-    * dropped buckets and record the count in a `_bucket_audit.json`
-    * sidecar inside the dump dir (underscore-prefixed, so parquet
-    * readers skip it), logging when nonzero — the cap is deliberate,
-    * but it must never be SILENT (round-3 VERDICT "What's wrong" #2).
-    * One cheap aggregate over the (already computed) bands. */
-  def auditBucketCap(bands: DataFrame, destDir: String, maxBucket: Int = 1000): Long = {
-    val n = oversizedBuckets(bands, maxBucket)
-    val p = java.nio.file.Paths.get(destDir, "_bucket_audit.json")
-    if (java.nio.file.Files.isDirectory(p.getParent)) {
-      java.nio.file.Files.writeString(p,
-        s"""{"oversized_buckets_dropped":$n,"max_bucket":$maxBucket}""" + "\n")
+  private val BandKey = Seq("band", "band_hash")
+
+  // ---- the bucket cap and the bucket-pair kernel -----------------------
+  //
+  // Every capped near-dup path (MinHash LSH, batch and incremental, and
+  // Winnowing) blocks documents into buckets, drops each bucket holding
+  // more than `cap` distinct members (a hot bucket is the skew case: its
+  // pair fan-out grows with the square of its size) and pairs the members
+  // of the buckets it keeps. The drop is deliberate (an oversized bucket
+  // means near-identical docs many times over, exact dedup's job, or a
+  // boilerplate fingerprint) but never silent: the cap's own sizing
+  // aggregate counts it.
+
+  /** The one bucket-size aggregate: the distinct `(keys…, idCol)`
+    * members and their count `n` per bucket. */
+  private def bucketSizes(members: DataFrame, keys: Seq[String],
+                          idCol: String): (DataFrame, DataFrame) = {
+    val m = members.select((keys :+ idCol).map(col): _*).distinct()
+    (m, m.groupBy(keys.map(col): _*).agg(count(lit(1)).as("n")))
+  }
+
+  /** The bucket cap: the distinct members of every bucket holding at
+    * most `cap` of them, as `(keys…, idCol)`. The bucket sizes are
+    * computed once, map-side partial counts first, so a hot bucket never
+    * concentrates its raw rows before it is dropped. `dropped` observes
+    * that same aggregate: once an action has run the pairs,
+    * [[droppedBuckets]] reads how many buckets the cap dropped. */
+  private[ops] def capBuckets(members: DataFrame, keys: Seq[String], idCol: String,
+                              cap: Int, dropped: Observation): DataFrame = {
+    val (m, sizes) = bucketSizes(members, keys, idCol)
+    val kept = sizes.observe(dropped, count_if(col("n") > cap).as("dropped"))
+      .filter(col("n") <= cap)
+    m.join(kept, keys, "left_semi")
+  }
+
+  /** Buckets of `members` holding more than `cap` distinct ids, counted
+    * on their own through the cap's sizing aggregate: for a dump that is
+    * staged before any pairs are drawn from it (Winnowing's fingerprint
+    * table). Where the pairs are computed, [[droppedBuckets]] reads the
+    * cap's own count. */
+  def oversizedBucketCount(members: DataFrame, keys: Seq[String], idCol: String,
+                           cap: Int): Long =
+    bucketSizes(members, keys, idCol)._2.filter(col("n") > cap).count()
+
+  /** The buckets a cap dropped from `members`, read from the Observation
+    * handed to [[candidatePairs]], [[incrementalCandidates]] or
+    * `Winnowing.pairs` after an action has run the pairs. AQE drops a
+    * stage from the final plan, and its observed metrics with it, when
+    * the stages above it turn out empty (no kept bucket yields a pair);
+    * the count then runs through the cap's sizing aggregate on its own
+    * ([[oversizedBucketCount]]). */
+  def droppedBuckets(dropped: Observation, members: DataFrame, keys: Seq[String] = BandKey,
+                     idCol: String = "id", cap: Int = MaxBucket): Long =
+    dropped.get.get("dropped")
+      .fold(oversizedBucketCount(members, keys, idCol, cap))(_.asInstanceOf[Long])
+
+  /** The pairs of kept members that share a bucket: `(a_id, b_id,
+    * n_shared)`, `a_id < b_id`, `n_shared` the number of buckets they
+    * share. Each bucket's members collect into ONE sorted array (co-
+    * partitioned with the cap's semi-join, no extra exchange; the cap is
+    * what makes collect_list safe at any corpus size), the a<b pairs are
+    * generated map-side as an array comprehension, and one aggregate by
+    * pair counts them: no member⋈member self-join, so no double sort of
+    * the member table. */
+  private[ops] def bucketPairs(kept: DataFrame, keys: Seq[String], idCol: String): DataFrame =
+    kept.groupBy(keys.map(col): _*)
+      .agg(sort_array(collect_list(col(idCol))).as("ds"))
+      .filter(size(col("ds")) >= 2)
+      .select(explode(expr(
+        "flatten(transform(sequence(0, size(ds) - 2), i -> " +
+          "transform(sequence(i + 1, size(ds) - 1), j -> " +
+          "named_struct('a_id', ds[i], 'b_id', ds[j]))))")).as("p"))
+      .groupBy(col("p.a_id").as("a_id"), col("p.b_id").as("b_id"))
+      .agg(count(lit(1)).as("n_shared"))
+
+  /** A bucket cap's audit sidecar: `file`, beside a materialized dump,
+    * holding `{"<droppedKey>":n,"<capKey>":cap}` (underscore-prefixed
+    * file names, so parquet readers skip it). */
+  final case class CapAudit(file: String, droppedKey: String, capKey: String) {
+    /** Record `dropped` in the sidecar inside `destDir` (when that dir
+      * exists) and log a nonzero drop. */
+    def write(destDir: String, cap: Int, dropped: Long): Unit = {
+      val p = java.nio.file.Paths.get(destDir, file)
+      if (java.nio.file.Files.isDirectory(p.getParent))
+        java.nio.file.Files.writeString(p, s"""{"$droppedKey":$dropped,"$capKey":$cap}""" + "\n")
+      if (dropped > 0) println(s"[graft] bucket cap dropped $dropped buckets ($capKey=$cap) — recorded in $p")
     }
-    if (n > 0) println(s"[graft] LSH bucket cap dropped $n oversized buckets " +
-      s"(maxBucket=$maxBucket) — recorded in $p")
-    n
   }
 
-  /** Candidate pairs from LSH buckets (a < b, distinct). The self-join
-    * is an equi-join on (band, band_hash): shuffle-bounded, skew handled
-    * by AQE; a pathological bucket (all-identical docs) is capped by
-    * dropping buckets above `maxBucket`. The drop is deliberate (an
-    * oversized bucket means the docs are near-identical many times
-    * over — exact dedup's job, not LSH's); call [[oversizedBuckets]]
-    * to audit how many buckets a given corpus loses. */
-  def candidatePairs(bands: DataFrame, maxBucket: Int = 1000): DataFrame = {
-    val kept = capBuckets(bands, maxBucket)
-    val a = kept.select(col("band"), col("band_hash"), col("id").as("a_id"))
-    val b = kept.select(col("band"), col("band_hash"), col("id").as("b_id"))
-    a.join(b, Seq("band", "band_hash"))
-      .filter(col("a_id") < col("b_id"))
+  /** The sidecar of the LSH candidate dumps. */
+  val BucketAudit = CapAudit("_bucket_audit.json", "oversized_buckets_dropped", "max_bucket")
+
+  /** Candidate pairs from LSH buckets: distinct `(a_id, b_id)`, a < b,
+    * from the members of every (band, band_hash) bucket the cap keeps
+    * ([[capBuckets]] then [[bucketPairs]]). Pass `dropped` to read the
+    * dropped-bucket count ([[droppedBuckets]]) after an action. */
+  def candidatePairs(bands: DataFrame, maxBucket: Int = MaxBucket,
+                     dropped: Observation = Observation()): DataFrame =
+    bucketPairs(capBuckets(bands, BandKey, "id", maxBucket, dropped), BandKey, "id")
       .select("a_id", "b_id")
-      .distinct()
-  }
-
-  /** The bucket cap both candidate joins apply: drop every
-    * (band, band_hash) bucket holding more than `maxBucket` rows. */
-  private def capBuckets(bands: DataFrame, maxBucket: Int): DataFrame =
-    bands.withColumn("bucket_n",
-      count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy("band", "band_hash")))
-      .filter(col("bucket_n") <= maxBucket).drop("bucket_n")
 
   /** Incremental (batch-vs-corpus) candidate pairs: the LSH bands of a
     * NEW ingest batch equi-joined against the precomputed bands of the
@@ -212,27 +264,25 @@ object Dedup {
     * hashes and probes its own docs. Returns distinct (a_id = batch id,
     * b_id = corpus id).
     *
-    * The caller keeps the corpus bands, so the SAME DataFrame can be
-    * passed to [[auditBucketCap]] and the corpus-bucket drop is
-    * recorded in a sidecar instead of silently zeroing a batch doc's
-    * candidates (round-4 ADVICE #3).
-    *
-    * Scale: the corpus side is the 10^12-row side, so the bucket cap is
-    * applied to ITS buckets (a batch band key landing in an oversized
-    * corpus bucket would fan out maxBucket× otherwise); the join stays a
-    * plain shuffle equi-join on (band, band_hash) with AQE skew
-    * handling. At production scale the corpus bands are a materialized
-    * table partitioned by band — each increment shuffles only
-    * |batch| × Bands rows, never the corpus. Within-batch duplicates
-    * are [[candidatePairs]]' job, deliberately out of scope here. */
+    * Scale: the corpus side is the 10^12-row side, so the bucket cap
+    * ([[capBuckets]]) is applied to ITS buckets (a batch band key landing
+    * in an oversized corpus bucket would fan out maxBucket× otherwise),
+    * and `dropped` counts the corpus buckets it drops, so a batch doc
+    * whose only matching bucket was dropped is never a silently clean
+    * verdict. The join stays a plain shuffle equi-join on (band,
+    * band_hash) with AQE skew handling. At production scale the corpus
+    * bands are a materialized table partitioned by band — each increment
+    * shuffles only |batch| × Bands rows, never the corpus. Within-batch
+    * duplicates are [[candidatePairs]]' job, deliberately out of scope
+    * here. */
   def incrementalCandidates(corpusBands: DataFrame, batch: DataFrame,
                             idCol: String, textCol: String,
-                            shingleN: Int = 2, maxBucket: Int = 1000): DataFrame =
+                            shingleN: Int = 2, maxBucket: Int = MaxBucket,
+                            dropped: Observation = Observation()): DataFrame =
     minhashBands(batch, idCol, textCol, shingleN)
       .select(col("band"), col("band_hash"), col("id").as("a_id"))
-      .join(capBuckets(corpusBands, maxBucket)
-        .select(col("band"), col("band_hash"), col("id").as("b_id")),
-        Seq("band", "band_hash"))
+      .join(capBuckets(corpusBands, BandKey, "id", maxBucket, dropped)
+        .withColumnRenamed("id", "b_id"), BandKey)
       .select("a_id", "b_id")
       .distinct()
 

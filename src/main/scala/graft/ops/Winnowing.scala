@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Winnowing document fingerprints (Schleimer, Wilkerson & Aiken,
@@ -41,12 +41,13 @@ import org.apache.spark.sql.functions._
   *     (doc_id, pos, 8-byte hash) rows enter the one per-doc exchange;
   *     both window specs (k-gram assembly via lead, window minimum)
   *     share its partitioning+ordering, so Spark plans a single sort.
-  *   - fingerprint buckets are capped like every LSH surface in this
-  *     repo: a hash shared by more than `bucketCap` docs is a
-  *     boilerplate/stopword fingerprint (the paper's "noise" case) --
-  *     the WHOLE bucket is dropped, deterministically, and the count
-  *     is auditable via [[oversizedFingerprints]]; pair fan-out is
-  *     bounded by bucketCap^2 per bucket, never corpus-quadratic.
+  *   - fingerprint buckets go through the bucket cap and the pair
+  *     body the MinHash LSH paths use (`Dedup.capBuckets`,
+  *     `Dedup.bucketPairs`): a hash shared by more than `bucketCap`
+  *     docs is a boilerplate/stopword fingerprint (the paper's "noise"
+  *     case) -- the WHOLE bucket is dropped, deterministically, and the
+  *     count is auditable; pair fan-out is bounded by bucketCap^2 per
+  *     bucket, never corpus-quadratic.
   */
 object Winnowing {
 
@@ -131,64 +132,19 @@ object Winnowing {
           pmod(col("cmb"), lit(PosBound.toLong))).as("sel_pos"))
   }
 
-  /** Count of fingerprint hashes dropped by the bucket cap (the audit
-    * sidecar value -- the house "caps are never silent" rule). */
-  def oversizedFingerprints(fps: DataFrame, cap: Int = BucketCap): Long =
-    fps.select(col("fp"), col("doc_id")).distinct()
-      .groupBy(col("fp")).agg(count(lit(1)).as("n"))
-      .filter(col("n") > cap).count()
-
-  /** Write the cap audit beside a materialized fingerprint dump and
-    * announce any drop (the Dedup.auditBucketCap pattern -- a
-    * boilerplate fingerprint shared by > cap docs drops WHOLE in
-    * [[pairs]], and that must be visible somewhere durable). */
-  def auditFingerprintCap(fps: DataFrame, destDir: String,
-                          cap: Int = BucketCap): Long = {
-    val n = oversizedFingerprints(fps, cap)
-    val p = java.nio.file.Paths.get(destDir, "_fp_bucket_audit.json")
-    if (java.nio.file.Files.isDirectory(p.getParent)) {
-      java.nio.file.Files.writeString(p,
-        s"""{"oversized_fp_buckets_dropped":$n,"bucket_cap":$cap}""" + "\n")
-    }
-    if (n > 0) println(s"[graft] winnowing cap will drop $n boilerplate " +
-      s"fingerprint buckets (cap=$cap) -- recorded in $p")
-    n
-  }
+  /** The sidecar of the staged fingerprint dump: how many boilerplate
+    * fingerprint buckets [[pairs]] will drop from it. */
+  val Audit = Dedup.CapAudit("_fp_bucket_audit.json", "oversized_fp_buckets_dropped", "bucket_cap")
 
   /** Document pairs sharing >= minShared distinct fingerprint hashes:
     * (doc_a, doc_b, n_shared), doc_a < doc_b. Hashes held by more than
-    * `cap` docs are dropped whole (boilerplate fingerprints).
-    *
-    * r6 shape (guide §2.4/§3): the pair fan-out used to run as a
-    * member⋈member SELF-JOIN on fp — two sorts of the 8M-row
-    * fingerprint table plus the join machinery. The semi-join already
-    * bounds every surviving bucket at `cap` docs, so the members now
-    * collect into ONE sorted ≤cap array per fp (co-partitioned with
-    * the semi-join — no extra exchange; the bound is what makes
-    * collect_list safe at any corpus size) and the a<b pairs generate
-    * MAP-SIDE as an array comprehension. Fan-out count is identical
-    * (bucketCap²/2 per bucket, audited as before); what disappears is
-    * the double sort + merge. The count-then-filter capping path is
-    * UNCHANGED — counts aggregate map-side, so a boilerplate
-    * fingerprint never concentrates raw rows before being dropped. */
-  def pairs(fps: DataFrame, minShared: Int = MinShared,
-            cap: Int = BucketCap): DataFrame = {
-    val byFp = fps.select(col("fp"), col("doc_id")).distinct()
-    val kept = byFp
-      .groupBy(col("fp")).agg(count(lit(1)).as("n"))
-      .filter(col("n") <= cap)
-      .select(col("fp"))
-    val member = byFp.join(kept, Seq("fp"), "left_semi")
-    member.groupBy(col("fp"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-      .filter(size(col("ds")) >= 2)
-      .select(explode(expr(
-        "flatten(transform(sequence(0, size(ds) - 2), i -> " +
-          "transform(sequence(i + 1, size(ds) - 1), j -> " +
-          "named_struct('doc_a', ds[i], 'doc_b', ds[j]))))")).as("p"))
-      .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("n_shared"))
+    * `cap` docs are dropped whole (boilerplate fingerprints); `dropped`
+    * counts them once an action has run the pairs. The cap and the pair
+    * fan-out are Dedup's: each kept fingerprint's docs collect into one
+    * sorted array and the pairs generate map-side. */
+  def pairs(fps: DataFrame, minShared: Int = MinShared, cap: Int = BucketCap,
+            dropped: Observation = Observation()): DataFrame =
+    Dedup.bucketPairs(Dedup.capBuckets(fps, Seq("fp"), "doc_id", cap, dropped), Seq("fp"), "doc_id")
       .filter(col("n_shared") >= minShared)
-  }
+      .select(col("a_id").as("doc_a"), col("b_id").as("doc_b"), col("n_shared"))
 }

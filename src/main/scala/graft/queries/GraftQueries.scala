@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.job.ExtractJob
@@ -211,13 +211,8 @@ object GraftQueries {
       "error_count: LONG, warc_ts_min: LONG, warc_ts_max: LONG>>, " +
       "input_files ARRAY<STRING>"
 
-  def extractedPages(spark: SparkSession, sfDir: String): DataFrame = {
-    // extraction is CPU-bound per byte: shrink scan splits so local-mode
-    // parallelism isn't starved by a handful of 128 MB splits (at real
-    // 100 TB scale the default already yields ~800k splits)
-    spark.conf.set("spark.sql.files.maxPartitionBytes", (8L << 20).toString)
+  def extractedPages(spark: SparkSession, sfDir: String): DataFrame =
     ExtractJob.extractDS(ExtractJob.readPages(spark, pagesPath(spark, sfDir))).toDF()
-  }
 
   /** Row count the oracle SQL embeds in its dump paths (q19/q39/q44
     * read the extraction dump). Set ONCE, up front, by the entry point
@@ -259,14 +254,13 @@ object GraftQueries {
   def candsDumpPath(rows: Int): String = candsCached.path(rows)
 
   /** MinHash-band `docs` (doc_id, text) and write their candidate pairs
-    * to `out`, with the bucket-cap audit beside them. */
+    * to `out`, with the bucket-cap audit beside them: the cap's own
+    * sizing aggregate counts the drop in the pair write. */
   private def writeLshCands(docs: DataFrame, out: String): Unit = {
-    // bands cached: the pair join AND the bucket-cap audit read it
-    val bands = Dedup.minhashBands(docs, "doc_id", "text", 2).cache()
-    try {
-      Dedup.candidatePairs(bands).write.parquet(out)
-      Dedup.auditBucketCap(bands, out): Unit // never a silent drop
-    } finally bands.unpersist(blocking = false)
+    val bands = Dedup.minhashBands(docs, "doc_id", "text", 2)
+    val dropped = Observation()
+    Dedup.candidatePairs(bands, dropped = dropped).write.parquet(out)
+    Dedup.BucketAudit.write(out, Dedup.MaxBucket, Dedup.droppedBuckets(dropped, bands))
   }
 
   /** DuckDB mirror of [[Dedup.jaccardVerify]] over the candidate dump:
@@ -777,11 +771,13 @@ object GraftQueries {
     Stage.tableAt("winnow", cacheDir("postings"),
       key"g$GenV-$ExtV-${Version("Winnowing", graft.ops.Winnowing.Version)}-k${graft.ops.Winnowing.K}w${graft.ops.Winnowing.W}",
       Seq(extractedCached)) { (spark, sfDir, out) =>
-      graft.ops.Winnowing.fingerprints(
+      import graft.ops.Winnowing
+      Winnowing.fingerprints(
         extractedPagesDocs(spark, sfDir), "doc_id", "text").write.parquet(out)
-      // never a silent drop: record how many boilerplate fingerprint
-      // buckets the serving cap will exclude from this dump
-      graft.ops.Winnowing.auditFingerprintCap(spark.read.parquet(out), out): Unit
+      // never a silent drop: no pairs are drawn at build time, so the
+      // boilerplate buckets the serving cap will exclude are counted here
+      Winnowing.Audit.write(out, Winnowing.BucketCap, Dedup.oversizedBucketCount(
+        spark.read.parquet(out), Seq("fp"), "doc_id", Winnowing.BucketCap))
     }
 
   // =====================================================================
@@ -2675,21 +2671,17 @@ object GraftQueries {
         val pages = extractedPagesDocs(s, d)
         val cut = pages.agg(floor(max("doc_id") * 0.9).cast("long").as("cut"))
         val withCut = pages.crossJoin(broadcast(cut))
-        // corpus bands computed HERE and persisted, so the bucket cap
-        // on the corpus side is audited into the dump sidecar like
-        // every other capped LSH path (round-4 ADVICE #3:
-        // a batch doc whose only matching bucket was dropped must not
-        // get a silently clean verdict)
+        // the corpus-side bucket cap is audited into the dump sidecar
+        // like every other capped LSH path (round-4 ADVICE #3: a batch
+        // doc whose only matching bucket was dropped must not get a
+        // silently clean verdict), counted by the cap in the pair write
         val corpusBands = Dedup.minhashBands(
-          withCut.filter(col("doc_id") <= col("cut")).drop("cut"),
-          "doc_id", "text", shingleN = 2).persist()
-        try {
-          Dedup.incrementalCandidates(
-            corpusBands,
-            withCut.filter(col("doc_id") > col("cut")).drop("cut"),
-            "doc_id", "text", shingleN = 2).write.parquet(out)
-          Dedup.auditBucketCap(corpusBands, out): Unit
-        } finally corpusBands.unpersist(blocking = false)
+          withCut.filter(col("doc_id") <= col("cut")).drop("cut"), "doc_id", "text", shingleN = 2)
+        val dropped = Observation()
+        Dedup.incrementalCandidates(corpusBands,
+          withCut.filter(col("doc_id") > col("cut")).drop("cut"),
+          "doc_id", "text", shingleN = 2, dropped = dropped).write.parquet(out)
+        Dedup.BucketAudit.write(out, Dedup.MaxBucket, Dedup.droppedBuckets(dropped, corpusBands))
     }
 
   /** The materialized entity table (extract-once/read-many, same

@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.Row
 import graft.job.ExtractJob
 
@@ -22,12 +22,8 @@ import graft.job.ExtractJob
   */
 object StreamingExtract {
 
-  val pageSchema: StructType = StructType(Seq(
-    StructField("url", StringType),
-    StructField("warc_ts", TimestampType),
-    StructField("html", BinaryType),
-    StructField("text", StringType),
-    StructField("lang", StringType)))
+  /** The pages table's schema, derived from its one definition, [[graft.core.Page]]. */
+  val pageSchema: StructType = Encoders.product[graft.core.Page].schema
 
   /** Streaming extraction: every micro-batch of newly-arrived page files
     * is extracted and committed as a snapshot. maxFilesPerTrigger bounds

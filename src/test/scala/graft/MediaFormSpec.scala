@@ -111,24 +111,31 @@ class MediaFormSpec extends AnyFunSuite {
   }
 
   test("media: top-down BMP (negative height) resizes to the SAME content as its bottom-up twin") {
-    val w = 6; val h = 4; val ch = 3
-    val stride = ((w * ch + 3) / 4) * 4
-    def contentRow(r: Int): Array[Byte] = Array.tabulate(stride)(i => (r * 50 + i).toByte)
-    // bottom-up stores content rows h-1..0; top-down stores 0..h-1
-    val bu = MediaOps.encodeBmp(w, h, ch,
-      (h - 1 to 0 by -1).flatMap(contentRow).toArray)
-    val tdBytes = MediaOps.encodeBmp(w, h, ch,
-      (0 until h).flatMap(contentRow).toArray)
-    // patch the header height to -h (little-endian at offset 22)
-    val neg = -h
-    for (i <- 0 until 4) tdBytes(22 + i) = ((neg >> (8 * i)) & 0xff).toByte
-    assert(MediaOps.decodeBmp(tdBytes).ok && MediaOps.decodeBmp(tdBytes).height == h)
-    val halfBu = MediaOps.resizeHalf(bu)
-    val halfTd = MediaOps.resizeHalf(tdBytes)
+    /** (bottom-up, top-down) encodings of one w×h image. */
+    def twins(w: Int, h: Int, ch: Int)(contentRow: (Int, Int) => Array[Byte]) = {
+      val stride = ((w * ch + 3) / 4) * 4
+      // bottom-up stores content rows h-1..0; top-down stores 0..h-1
+      val bu = MediaOps.encodeBmp(w, h, ch,
+        (h - 1 to 0 by -1).flatMap(contentRow(_, stride)).toArray)
+      val td = MediaOps.encodeBmp(w, h, ch,
+        (0 until h).flatMap(contentRow(_, stride)).toArray)
+      // patch the header height to -h (little-endian at offset 22)
+      val neg = -h
+      for (i <- 0 until 4) td(22 + i) = ((neg >> (8 * i)) & 0xff).toByte
+      assert(MediaOps.decodeBmp(td).ok && MediaOps.decodeBmp(td).height == h)
+      (bu, td)
+    }
     // round-4 ADVICE #5: the crafted top-down file used to come back
     // vertically flipped; now both orientations of one image resize to
     // byte-identical (bottom-up) output
-    assert(halfBu.sameElements(halfTd))
+    val (bu, td) = twins(6, 4, 3)((r, stride) => Array.tabulate(stride)(i => (r * 50 + i).toByte))
+    assert(MediaOps.resizeHalf(bu).sameElements(MediaOps.resizeHalf(td)))
+    // odd height: both orientations sample content rows h-1, h-3, …
+    // (here 4 and 2, filled 40 and 20; output rows are stored bottom-up)
+    val (bu5, td5) = twins(4, 5, 1)((r, stride) => Array.fill(stride)((10 * r).toByte))
+    def rows(bmp: Array[Byte]) = bmp.drop(54).grouped(4).map(_.head.toInt).toSeq
+    assert(rows(MediaOps.resizeHalf(bu5)) == Seq(40, 20))
+    assert(rows(MediaOps.resizeHalf(td5)) == Seq(40, 20))
   }
 
   test("media: REAL BMP codec — encode/decode roundtrip, truncation is total") {

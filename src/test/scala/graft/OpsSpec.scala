@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.Observation
 import org.apache.spark.sql.functions._
 import graft.ops.{Balance, Dedup, Similarity, TextStats}
 
@@ -54,21 +55,26 @@ class OpsSpec extends AnyFunSuite with TempRoots {
     val batch = Seq((1000L, text)).toDF("doc_id", "text")
     val bands = Dedup.minhashBands(identical, "doc_id", "text", 2).cache()
     try {
-      // cap below the bucket size: every bucket is oversized and dropped
-      assert(Dedup.candidatePairs(bands, maxBucket = 10).count() == 0)
+      // cap below the bucket size: every bucket is oversized and dropped,
+      // and the cap's own aggregate counts each drop
+      val dropped = Observation()
+      assert(Dedup.candidatePairs(bands, maxBucket = 10, dropped = dropped).count() == 0)
+      assert(Dedup.droppedBuckets(dropped, bands, cap = 10) == Dedup.Bands)
       // the incremental join caps the corpus side's buckets the same way
-      assert(Dedup.incrementalCandidates(bands, batch, "doc_id", "text", 2, maxBucket = 10).count() == 0)
+      val incrDropped = Observation()
+      assert(Dedup.incrementalCandidates(bands, batch, "doc_id", "text", 2, maxBucket = 10,
+        dropped = incrDropped).count() == 0)
+      assert(Dedup.droppedBuckets(incrDropped, bands, cap = 10) == Dedup.Bands)
       val dir = java.nio.file.Paths.get(tempRoot("bucketaudit"))
-      val dropped = Dedup.auditBucketCap(bands, dir.toString, maxBucket = 10)
-      assert(dropped > 0, "expected oversized buckets on an identical corpus")
+      Dedup.BucketAudit.write(dir.toString, 10, Dedup.droppedBuckets(dropped, bands, cap = 10))
       val sidecar = dir.resolve("_bucket_audit.json")
       assert(java.nio.file.Files.exists(sidecar), "audit sidecar not written")
-      val json = java.nio.file.Files.readString(sidecar)
-      assert(json.contains(s""""oversized_buckets_dropped":$dropped""") &&
-        json.contains(""""max_bucket":10"""), json)
+      assert(java.nio.file.Files.readString(sidecar) ==
+        s"""{"oversized_buckets_dropped":${Dedup.Bands},"max_bucket":10}""" + "\n")
       // a sane cap keeps the buckets (and the audit reports zero)
-      assert(Dedup.auditBucketCap(bands, dir.toString, maxBucket = 1000) == 0L)
-      assert(Dedup.candidatePairs(bands, maxBucket = 1000).count() == 60L * 59 / 2)
+      val kept = Observation()
+      assert(Dedup.candidatePairs(bands, maxBucket = 1000, dropped = kept).count() == 60L * 59 / 2)
+      assert(Dedup.droppedBuckets(kept, bands) == 0L)
       assert(Dedup.incrementalCandidates(bands, batch, "doc_id", "text", 2, maxBucket = 1000).count() == 60L)
     } finally bands.unpersist(blocking = false)
   }

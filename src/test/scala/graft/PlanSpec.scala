@@ -116,6 +116,13 @@ class PlanSpec extends AnyFunSuite with TempRoots {
     assert(p.contains("*(1)"), s"project not inside WholeStageCodegen:\n${p.take(500)}")
   }
 
+  test("q18 leaves the session's scan split size as it found it") {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val before = spark.conf.getOption(key)
+    graft.queries.GraftQueries.queries("q18_extract_pages")(spark, d).count()
+    assert(spark.conf.getOption(key) == before)
+  }
+
   test("q19/q44 read the materialized extraction dump, not the pages table (extract-once/read-many)") {
     for (q <- Seq("q19_extract_host_stats", "q44_engine_stats")) {
       val p = executedPlan(graft.queries.GraftQueries.queries(q)(spark, d))

@@ -75,12 +75,28 @@ class Round2Spec extends AnyFunSuite {
     p.filter(_.getBoolean(4)).foreach(r => assert(r.getDouble(3) > 0.75))
   }
 
-  test("oversizedBuckets counts buckets above the cap") {
+  test("the bucket cap counts the buckets it drops") {
     import spark.implicits._
-    // 30 identical docs -> every band bucket holds 30 ids
-    val df = (1 to 30).map(i => (i.toLong, "same text for everyone here today")).toDF("doc_id", "text")
+    // 30 identical docs -> every band bucket holds 30 ids; one planted
+    // twin pair keeps 16 buckets of 2, so the capped pairs are not empty
+    val same = (1 to 30).map(i => (i.toLong, "same text for everyone here today"))
+    val twin = "another pair of byte identical twin documents"
+    val df = (same ++ Seq(100L -> twin, 101L -> twin)).toDF("doc_id", "text")
     val bands = Dedup.minhashBands(df, "doc_id", "text")
-    assert(Dedup.oversizedBuckets(bands, maxBucket = 10) == Dedup.Bands)
-    assert(Dedup.oversizedBuckets(bands, maxBucket = 100) == 0)
+    def capped(maxBucket: Int): (Long, org.apache.spark.sql.Observation) = {
+      val o = org.apache.spark.sql.Observation()
+      (Dedup.candidatePairs(bands, maxBucket, o).count(), o)
+    }
+    val (pairs10, dropped10) = capped(10)
+    assert(pairs10 == 1)
+    // counted by the cap's own aggregate inside the pair action
+    assert(dropped10.get("dropped") == Dedup.Bands)
+    assert(Dedup.droppedBuckets(dropped10, bands, cap = 10) == Dedup.Bands)
+    val (pairs100, dropped100) = capped(100)
+    assert(pairs100 == 30L * 29 / 2 + 1)
+    assert(Dedup.droppedBuckets(dropped100, bands, cap = 100) == 0)
+    // the standalone count runs through the same sizing aggregate
+    assert(Dedup.oversizedBucketCount(bands, Seq("band", "band_hash"), "id", 10) == Dedup.Bands)
   }
+
 }

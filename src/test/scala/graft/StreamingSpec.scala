@@ -19,6 +19,16 @@ class StreamingSpec extends AnyFunSuite with TempRoots {
     super.afterAll()
   }
 
+  test("pageSchema is the Page record's schema") {
+    import org.apache.spark.sql.types._
+    assert(StreamingExtract.pageSchema == StructType(Seq(
+      StructField("url", StringType),
+      StructField("warc_ts", TimestampType),
+      StructField("html", BinaryType),
+      StructField("text", StringType),
+      StructField("lang", StringType))))
+  }
+
   test("streaming extraction == batch extraction (same snapshot contents)") {
     val dir = tmp()
     val N = 200

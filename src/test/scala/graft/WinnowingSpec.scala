@@ -58,8 +58,10 @@ class WinnowingSpec extends AnyFunSuite {
     // BucketCap + 6 identical docs: every fingerprint bucket oversized
     // -> dropped whole -> no pairs, and the audit counts the drops
     val many = (1L to (Winnowing.BucketCap + 6L)).map(_ -> text)
-    assert(pairsOf(many).isEmpty, "boilerplate buckets must drop, not explode")
-    assert(Winnowing.oversizedFingerprints(fps(many)) > 0,
+    val dropped = org.apache.spark.sql.Observation()
+    assert(Winnowing.pairs(fps(many), dropped = dropped).collect().isEmpty,
+      "boilerplate buckets must drop, not explode")
+    assert(graft.ops.Dedup.droppedBuckets(dropped, fps(many), Seq("fp"), "doc_id", Winnowing.BucketCap) > 0,
       "the drop must be auditable, never silent")
   }
 
