@@ -3,13 +3,10 @@ package graft.core
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Characteristics-based engine selection — the re-expression of the
-  * reference's EngineSelector
-  * (/root/reference/ocrworker/pipeline/selector.py): selection
-  * strategies (:11-18), the language→engine map (:21-35), the document-
-  * type→engine map (:37-47), the per-engine characteristics table
-  * (:50-75), and the strategy dispatch in select_engine (:89-130 with
-  * the per-strategy helpers at :132-221).
+/** Characteristics-based engine routing — the re-expression of the
+  * reference's EngineSelector (ocrworker/pipeline/selector.py,
+  * the most_accurate branch of select_engine at :162-180 with the
+  * language map of :21-35).
   *
   * The engine roster maps onto this pipeline's classifiers:
   *  - "density"          — strict text-density classifier: fast, highest
@@ -21,143 +18,47 @@ import org.apache.spark.sql.functions._
   *  - "pdf_layout"       — the PDF branch (payload-kind dispatch, not a
   *                         choice).
   *
-  * Selection is a pure function of document characteristics (language,
-  * payload kind, payload size → quality hint, optional doc-type hint),
-  * so it runs map-side with zero shuffle at any scale, and the routing
-  * rule table emits BOTH the Spark Columns and the DuckDB SQL mirror
-  * (the DocType.sqlColumns pattern) so q49 is value-checked end-to-end.
+  * Both HTML engines are in-process pure functions, so there is no
+  * availability to gate on and no strategy to pick between: one rule
+  * table, a pure function of (payload kind, payload size, lang), picks
+  * the starting engine. It runs map-side with zero shuffle at any scale.
+  * The table renders the per-row Scala form ([[route]], what the routed
+  * extraction job runs) and the Spark Column and DuckDB SQL forms q49
+  * value-checks, so the job and the oracle read the same arms.
   */
 object EngineSelector {
-
-  // strategy names (selector.py:11-18)
-  val BestAvailable = "best_available"
-  val Fastest = "fastest"
-  val MostAccurate = "most_accurate"
-  val LanguageOptimized = "language_optimized"
-  val DocTypeOptimized = "document_type_optimized"
-  val CostOptimized = "cost_optimized"
-
-  /** Engine characteristics (the selector.py:50-75 table, re-keyed for
-    * this pipeline's engines; memory is per-task scratch ceiling). */
-  final case class Characteristics(
-      speed: String, precision: String, recall: String, memoryMb: Int)
-
-  val characteristics: Map[String, Characteristics] = Map(
-    "density" -> Characteristics("fast", "high", "medium", 4),
-    "density_relaxed" -> Characteristics("fast", "medium", "high", 4),
-    "pdf_layout" -> Characteristics("medium", "high", "high", 16))
-
-  /** Language → engine (selector.py:21-35, same tesseract-style keys):
-    * scripts without spaces or with complex shaping get the recall
-    * engine (word-count density scoring under-fires on them); Latin
-    * languages get the strict engine. */
-  val languageEngineMap: Map[String, String] = Map(
-    "chi_sim" -> "density_relaxed", "chi_tra" -> "density_relaxed",
-    "jpn" -> "density_relaxed", "kor" -> "density_relaxed",
-    "ara" -> "density_relaxed", "hin" -> "density_relaxed",
-    "tha" -> "density_relaxed", "vie" -> "density_relaxed",
-    "eng" -> "density", "deu" -> "density",
-    "fra" -> "density", "spa" -> "density")
-
-  /** Document type → engine (selector.py:37-47 analog: sparse/override
-    * types go to the recall engine, standard text to the strict one). */
-  val docTypeEngineMap: Map[String, String] = Map(
-    "form" -> "density_relaxed",        // sparse label:value lines
-    "link_directory" -> "density_relaxed", // high link density everywhere
-    "sparse_text" -> "density_relaxed",
-    "mixed_content" -> "density_relaxed",
-    "standard_text" -> "density",
-    "article" -> "density")
 
   /** Payload-size floor under which a page is hinted "poor" quality:
     * a sub-800-byte page carries too few blocks for density statistics
     * to be reliable, the analog of a low-DPI scan. */
   val PoorQualityBytes = 800
 
-  /** Engine priority ladders (selector.py:133-139 best, :149-155
-    * fastest, :209-214 cost), DERIVED from the characteristics table —
-    * the ladder is a property of the engine table, not of the dispatch
-    * (change a row above and every strategy reorders consistently).
-    * pdf_layout is payload-dispatched, never strategy-chosen, so the
-    * ladders range over the HTML engines only. For this roster the
-    * strict density engine is both the fastest AND the cheapest, and
-    * "best" prefers it too because main-content precision is the
-    * product metric (unlike the reference, whose best engine is its
-    * slowest). */
-  private val htmlEngines = Seq("density", "density_relaxed")
-  private val speedRank = Map("fast" -> 0, "medium" -> 1, "slow" -> 2)
-  private val levelRank = Map("high" -> 0, "medium" -> 1, "low" -> 2)
-  private val bestPriority =
-    htmlEngines.sortBy(e => (levelRank(characteristics(e).precision), e))
-  private val fastestPriority =
-    htmlEngines.sortBy(e => (speedRank(characteristics(e).speed), e))
-  private val costPriority =
-    htmlEngines.sortBy(e => (characteristics(e).memoryMb, e))
-
-  /** The reference's strategy dispatch (select_engine, selector.py:
-    * 89-130). `available` models engine availability (is_available);
-    * every branch falls through exactly like the original. Returns
-    * (engine, reason). */
-  def selectEngine(strategy: String,
-                   lang: String = "eng",
-                   documentType: String = null,
-                   qualityHint: String = null,
-                   available: Set[String] = Set("density", "density_relaxed")): (String, String) = {
-
-    def firstAvailable(prio: Seq[String], reason: String): (String, String) =
-      prio.find(available.contains).map(e => (e, reason))
-        .getOrElse(("density", s"$reason:fallback"))
-
-    strategy match {
-      case Fastest => firstAvailable(fastestPriority, "strategy:fastest")
-      case CostOptimized => firstAvailable(costPriority, "strategy:cost")
-      case MostAccurate =>
-        // selector.py:162-180
-        if ((qualityHint == "poor" || documentType == "handwritten" ||
-             documentType == "mixed_content") && available("density_relaxed"))
-          ("density_relaxed", if (qualityHint == "poor") "quality:poor" else s"doctype:$documentType")
-        else if (languageEngineMap.get(lang).contains("density_relaxed") &&
-                 available("density_relaxed"))
-          ("density_relaxed", s"lang:$lang")
-        else firstAvailable(bestPriority, "strategy:accurate")
-      case LanguageOptimized =>
-        // selector.py:182-189
-        languageEngineMap.get(lang).filter(available.contains)
-          .map(e => (e, s"lang:$lang"))
-          .getOrElse(firstAvailable(bestPriority, "lang:unmapped"))
-      case DocTypeOptimized =>
-        // selector.py:191-206
-        Option(documentType).flatMap(docTypeEngineMap.get).filter(available.contains)
-          .map(e => (e, s"doctype:$documentType"))
-          .getOrElse {
-            if (qualityHint == "poor" && available("density_relaxed"))
-              ("density_relaxed", "quality:poor")
-            else firstAvailable(bestPriority, "doctype:unmapped")
-          }
-      case _ => firstAvailable(bestPriority, "strategy:best")
-    }
-  }
-
-  // ---- the q49 routing rule as Columns + SQL mirror ---------------------
+  // ---- the routing rule -------------------------------------------------
   //
-  // Per-document routing from payload features only (the most_accurate
-  // strategy with the quality hint derived from payload size):
-  //   kind=pdf     → pdf_layout       reason kind:pdf
+  //   kind=pdf     → pdf_layout        reason kind:pdf
   //   kind=unknown → none (quarantine) reason kind:unknown
   //   size < PoorQualityBytes → density_relaxed, reason quality:poor
-  //   lang → recall engine            reason lang:<l>
-  //   else → density                  reason default
-  // ONE arm list below renders all four public forms (engine/reason ×
-  // Column/SQL), so Spark and DuckDB — and engine vs reason — cannot
-  // drift: an arm added or reordered in one form is added in all four.
+  //   lang → recall engine             reason lang:<l>
+  //   else → density                   reason default
+  // ONE arm list below renders every form (engine in Scala, Column and
+  // SQL; reason in Column and SQL), so the job, Spark and DuckDB cannot
+  // drift: an arm added or reordered in one form is added in all.
 
+  /** Languages whose scripts have no spaces or complex shaping (the
+    * selector.py:21-35 keys mapped to the recall engine): word-count
+    * density scoring under-fires on them. Sorted: q49's SQL lists them
+    * in this order. */
   private val complexLangs: Seq[String] =
-    languageEngineMap.collect { case (l, "density_relaxed") => l }.toSeq.sorted
+    Seq("ara", "chi_sim", "chi_tra", "hin", "jpn", "kor", "tha", "vie")
   private val complexLangsSql = complexLangs.map(l => s"'$l'").mkString(", ")
 
-  /** One routing arm: predicate + engine + reason, each in Column and
-    * SQL form, over the (kind, size, lang) inputs. First match wins. */
+  private val DefaultEngine = "density"
+
+  /** One routing arm: predicate + engine + reason, the predicate in
+    * Scala, Column and SQL form and the reason in Column and SQL form,
+    * over the (kind, size, lang) inputs. First match wins. */
   private final class RouteArm(
+      val holds: (String, Int, String) => Boolean,
       val cond: (Column, Column, Column) => Column,
       val condSql: (String, String, String) => String,
       val engine: String,
@@ -165,20 +66,26 @@ object EngineSelector {
       val reasonSql: (String, String, String) => String)
 
   private val routeArms: Seq[RouteArm] = Seq(
-    new RouteArm((k, _, _) => k === "pdf", (k, _, _) => s"$k = 'pdf'",
+    new RouteArm((k, _, _) => k == "pdf", (k, _, _) => k === "pdf", (k, _, _) => s"$k = 'pdf'",
       "pdf_layout", (_, _, _) => lit("kind:pdf"), (_, _, _) => "'kind:pdf'"),
-    new RouteArm((k, _, _) => k === "unknown", (k, _, _) => s"$k = 'unknown'",
+    new RouteArm((k, _, _) => k == "unknown", (k, _, _) => k === "unknown",
+      (k, _, _) => s"$k = 'unknown'",
       "none", (_, _, _) => lit("kind:unknown"), (_, _, _) => "'kind:unknown'"),
-    new RouteArm((_, s, _) => s < PoorQualityBytes,
+    new RouteArm((_, s, _) => s < PoorQualityBytes, (_, s, _) => s < PoorQualityBytes,
       (_, s, _) => s"$s < $PoorQualityBytes",
       "density_relaxed", (_, _, _) => lit("quality:poor"), (_, _, _) => "'quality:poor'"),
-    new RouteArm((_, _, l) => l.isin(complexLangs: _*),
+    new RouteArm((_, _, l) => complexLangs.contains(l), (_, _, l) => l.isin(complexLangs: _*),
       (_, _, l) => s"$l IN ($complexLangsSql)",
       "density_relaxed",
       (_, _, l) => concat(lit("lang:"), l), (_, _, l) => s"'lang:' || $l"))
 
+  /** The starting engine of one document: the first matching arm's,
+    * else "density". A null `lang` matches no language, as in SQL. */
+  def route(kind: String, payloadBytes: Int, lang: String): String =
+    routeArms.find(_.holds(kind, payloadBytes, lang)).fold(DefaultEngine)(_.engine)
+
   def routeEngineCol(kind: Column, size: Column, lang: Column): Column =
-    routeArms.foldRight(lit("density")) { (a, acc) =>
+    routeArms.foldRight(lit(DefaultEngine)) { (a, acc) =>
       when(a.cond(kind, size, lang), a.engine).otherwise(acc)
     }
 
@@ -189,7 +96,7 @@ object EngineSelector {
 
   def sqlRouteEngine(kind: String, size: String, lang: String): String =
     routeArms.map(a => s"WHEN ${a.condSql(kind, size, lang)} THEN '${a.engine}'")
-      .mkString("(CASE ", " ", " ELSE 'density' END)")
+      .mkString("(CASE ", " ", s" ELSE '$DefaultEngine' END)")
 
   def sqlRouteReason(kind: String, size: String, lang: String): String =
     routeArms.map(a => s"WHEN ${a.condSql(kind, size, lang)} THEN ${a.reasonSql(kind, size, lang)}")

@@ -14,6 +14,13 @@ import graft.pdf.PdfParser
   * PDF branch; leading '<' (after whitespace/BOM) → HTML branch;
   * anything else → quarantine row with an error column (never throws;
   * cf. catch-all fallbacks /root/reference/ocrworker/pipeline/hybrid.py:146-155).
+  *
+  * The HTML cascade starts strict unless `routed` is set, and then
+  * from the engine [[EngineSelector.route]] picks from the page's size
+  * and lang (the reference's characteristics-based ordering,
+  * selector.py:89-130). The default stays strict-first: routing is an
+  * explicit job option (`ExtractJob.run(..., routedSelection = true)`),
+  * so the byte-identity goldens of the default path stay pinned.
   */
 object Extract {
 
@@ -32,11 +39,11 @@ object Extract {
   }
 
   /** Total per-row extraction. */
-  def apply(page: Page): ExtractedDoc = {
+  def apply(page: Page, routed: Boolean = false): ExtractedDoc = {
     val kind = sniff(page.html)
     kind match {
       case "html" =>
-        htmlDoc(page, MainContentExtractor.extractBytes(page.html))
+        htmlDoc(page, routed)
       case "pdf" =>
         PdfParser.extract(page.html) match {
           case Right(r) =>
@@ -59,8 +66,9 @@ object Extract {
     }
   }
 
-  private def htmlDoc(page: Page,
-                      res: MainContentExtractor.HtmlResult): ExtractedDoc =
+  private def htmlDoc(page: Page, routed: Boolean): ExtractedDoc = {
+    val res = MainContentExtractor.extractBytes(page.html, relaxedFirst = routed &&
+      EngineSelector.route("html", page.html.length, page.lang) == "density_relaxed")
     ExtractedDoc(
       url = page.url, warc_ts = page.warc_ts,
       extracted_text = res.text, spans = res.spans,
@@ -70,26 +78,6 @@ object Extract {
       confidence = res.confidence, lang = page.lang,
       engine = res.engine, fallback_used = res.fallbackUsed,
       error = null, extraction_version = ExtractionVersion.current)
-
-  /** Routed per-row extraction: EngineSelector picks the STARTING
-    * engine from document characteristics (the reference's
-    * characteristics-based ordering, selector.py:89-130 — here the
-    * most_accurate strategy with the payload-size quality hint), then
-    * the confidence cascade proceeds from that engine. PDF/unknown
-    * dispatch is payload-typed and unchanged. The default pipeline
-    * ([[apply]]) stays strict-first — routing is an explicit job option
-    * (`ExtractJob.run(..., routedSelection = true)`), preserving the
-    * byte-identity contract of the default path. */
-  def applyRouted(page: Page): ExtractedDoc = {
-    val kind = sniff(page.html)
-    if (kind != "html") apply(page)
-    else {
-      val quality =
-        if (page.html.length < EngineSelector.PoorQualityBytes) "poor" else null
-      val (start, _) = EngineSelector.selectEngine(
-        EngineSelector.MostAccurate, lang = page.lang, qualityHint = quality)
-      htmlDoc(page, MainContentExtractor.extractBytesRouted(page.html, start))
-    }
   }
 
   /** Per-page char spans over the stitched text (analog of per-page

@@ -324,17 +324,14 @@ object MainContentExtractor {
     ThreadLocal.withInitial[(BlockBuilder, java.lang.StringBuilder)](() =>
       (new BlockBuilder, new java.lang.StringBuilder(256)))
 
-  /** Strict-first extraction over the raw UTF-8 payload (the whole
-    * document is never decoded — see [[ByteHtmlTokenizer]]). */
-  def extractBytes(html: Array[Byte]): HtmlResult = cascade(tokenize(html), relaxedFirst = false)
-
-  /** Cascade with a routed STARTING engine (EngineSelector output):
-    * "density" is the default strict-first cascade; "density_relaxed"
-    * runs the recall engine first (selector.py's characteristics-based
-    * ordering — e.g. complex-script lang or poor-quality hint) and
-    * falls back to strict only below the confidence threshold. */
-  def extractBytesRouted(html: Array[Byte], startEngine: String): HtmlResult =
-    cascade(tokenize(html), relaxedFirst = startEngine == "density_relaxed")
+  /** Extraction over the raw UTF-8 payload (the whole document is
+    * never decoded — see [[ByteHtmlTokenizer]]). The cascade runs
+    * strict-first by default; `relaxedFirst` starts it on the recall
+    * engine (the routed start [[graft.core.EngineSelector.route]] picks
+    * for complex-script or poor-quality pages) and falls back to strict
+    * only below the confidence threshold. */
+  def extractBytes(html: Array[Byte], relaxedFirst: Boolean = false): HtmlResult =
+    cascade(tokenize(html), relaxedFirst)
 
   private def tokenize(html: Array[Byte]): BlockBuilder = {
     val (builder, textBuf) = scratch.get()

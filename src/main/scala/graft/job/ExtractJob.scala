@@ -50,23 +50,13 @@ object ExtractJob {
   /** The extraction stage alone (no snapshot I/O) — reused by tests,
     * SparkEntry queries, and the bench. One partition-scoped pass; the
     * per-partition init is the analog of the reference's cached engine
-    * instances (/root/reference/ocrworker/engines/factory.py:9-13). */
-  def extractDS(pages: Dataset[Page]): Dataset[ExtractedDoc] = {
+    * instances (ocrworker/engines/factory.py:9-13 in the reference).
+    * `routed` starts each HTML cascade from the engine the document's
+    * characteristics pick ([[Extract]]); the default is strict-first. */
+  def extractDS(pages: Dataset[Page], routed: Boolean = false): Dataset[ExtractedDoc] = {
     import pages.sparkSession.implicits._
-    pages.mapPartitions { it => it.map(Extract(_)) }
+    pages.mapPartitions { it => it.map(Extract(_, routed)) }
   }
-
-  /** Routed variant: the EngineSelector orders the cascade per document
-    * from its characteristics (lang / payload size / kind) instead of
-    * always starting strict — selector.py's characteristics-based
-    * routing, wired into the job as `run(..., routedSelection = true)`.
-    * The default job keeps [[extractDS]] (strict-first) so the
-    * byte-identity goldens stay pinned. */
-  def extractRoutedDS(pages: Dataset[Page]): Dataset[ExtractedDoc] = {
-    import pages.sparkSession.implicits._
-    pages.mapPartitions { it => it.map(Extract.applyRouted) }
-  }
-
 
   def run(
       spark: SparkSession,
@@ -85,7 +75,9 @@ object ExtractJob {
   /** The one ingest body behind [[run]] and [[runWarc]], which differ
     * only in how they list input files and read them into pages:
     * lock → read the chain once → chain guard → file-level resume →
-    * 0-row no-op commit → row-level net → extract → commit. */
+    * 0-row no-op commit → row-level net → extract → commit. The extract
+    * is [[extractDS]], routed when `routingMode` is "routed" (the
+    * manifest's `routing` tag), strict-first otherwise. */
   private def ingest(outRoot: String, routingMode: String, numPartitions: Int,
                      saltBuckets: Int, rowLevelResume: Boolean, signatureArtifacts: Boolean)(
       listFiles: => Seq[String], readFiles: Seq[String] => Dataset[Page]): Snapshot =
@@ -117,12 +109,10 @@ object ExtractJob {
 
         // ---- extraction on scan splits (map-side; the html payload never
         // crosses a shuffle; parallelism governed by maxPartitionBytes).
-        // "routed" = the EngineSelector strategy option: the cascade
-        // STARTS from the engine the document's characteristics pick
-        // (default off — the strict-first path is the byte-identity
-        // golden contract) ----
-        val extracted =
-          if (routingMode == "routed") extractRoutedDS(pending) else extractDS(pending)
+        // "routed": the cascade STARTS from the engine EngineSelector.route
+        // picks from the document's characteristics (default off — the
+        // strict-first path is the byte-identity golden contract) ----
+        val extracted = extractDS(pending, routed = routingMode == "routed")
 
         // S6 companion: signature SVG artifacts (signature_extractor.py's
         // vector output). A SIBLING scan of the raw payload — form detection
@@ -555,11 +545,13 @@ object ExtractJob {
   */
 object ExtractCli {
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: ExtractCli <pagesParquet> <outRoot> [numPartitions] [--wet <dir>]")
-    // --wet is validated (and its directory created) BEFORE the run: a
-    // malformed invocation must fail in milliseconds, not after hours
+    // `--wet <dir>` may sit anywhere; the paths are the args left without
+    // it. --wet is validated (and its directory created) BEFORE the run:
+    // a malformed invocation must fail in milliseconds, not after hours
     // of extraction have already committed a snapshot.
     val wetIdx = args.indexOf("--wet")
+    val positional = if (wetIdx >= 0) args.patch(wetIdx, Nil, 2) else args
+    require(positional.length >= 2, "usage: ExtractCli <pagesParquet> <outRoot> [numPartitions] [--wet <dir>]")
     val wetDir: Option[String] =
       if (wetIdx < 0) None
       else {
@@ -569,17 +561,18 @@ object ExtractCli {
         java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
         Some(d)
       }
-    val positional = if (wetIdx >= 0) args.patch(wetIdx, Nil, 2) else args
+    val pagesPath = positional(0)
+    val outRoot = positional(1)
     val parts = if (positional.length > 2) positional(2).toInt else 0
     val spark = GraftSession.local()
-    val snap = ExtractJob.run(spark, args(0), args(1), numPartitions = parts)
+    val snap = ExtractJob.run(spark, pagesPath, outRoot, numPartitions = parts)
     println(s"committed snapshot seq=${snap.sequence} rows=${snap.rowCount} " +
       s"errors=${snap.partitions.map(_.errorCount).sum} partitions=${snap.partitions.size}")
-    println(SnapshotStore.readManifest(args(1), snap.sequence))
+    println(SnapshotStore.readManifest(outRoot, snap.sequence))
     // catch-up form: covers the just-committed snapshot AND any earlier
     // snapshot whose emission a previous run crashed out of.
     wetDir.foreach { d =>
-      val n = ExtractJob.emitWetMissing(spark, args(1), d)
+      val n = ExtractJob.emitWetMissing(spark, outRoot, d)
       println(s"emitted WET sidecar records=$n root=$d (all missing snapshots)")
     }
     spark.stop()

@@ -2538,10 +2538,12 @@ object GraftQueries {
     // references the text table 3x (banding + two verify joins) and each
     // reference is now a parquet scan, not a re-extraction (round-1's
     // 84.8 s q32 ran full HTML extraction 3x; VERDICT fix #1).
-    // characteristics-based engine routing (selector.py:50-75 + :89-130):
-    // per-document starting-engine decision from (payload kind, payload
-    // size, lang), aggregated by (engine, reason); the oracle re-derives
-    // the same rule table in SQL over (pages parquet ⋈ extraction dump)
+    // characteristics-based engine routing (selector.py:162-180): the
+    // per-document starting engine from (payload kind, payload size,
+    // lang), aggregated by (engine, reason). The Column forms come from
+    // the arm table whose Scala form (EngineSelector.route) starts the
+    // routed extraction job's cascades; the oracle renders the same arms
+    // in SQL over (pages parquet ⋈ extraction dump)
     "q49_engine_routing" -> ((s, d) => {
       import graft.core.EngineSelector
       val pages = s.read.parquet(pagesPath(s, d))

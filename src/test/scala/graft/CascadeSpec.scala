@@ -52,29 +52,30 @@ class CascadeSpec extends AnyFunSuite {
     assert(!strictOnly.text.contains("x y"))
   }
 
-  test("engine selector: strategy dispatch mirrors selector.py branches") {
-    import graft.core.EngineSelector._
-    // fastest / cost: the priority ladder (selector.py:149-155, :209-214)
-    assert(selectEngine(Fastest)._1 == "density")
-    assert(selectEngine(CostOptimized)._1 == "density")
-    // most_accurate: poor quality or hard doc types escalate (:169-171)
-    assert(selectEngine(MostAccurate, qualityHint = "poor") ==
-      (("density_relaxed", "quality:poor")))
-    assert(selectEngine(MostAccurate, documentType = "mixed_content")._1 == "density_relaxed")
-    // most_accurate: complex-script langs escalate (:173-175)
-    assert(selectEngine(MostAccurate, lang = "chi_sim") == (("density_relaxed", "lang:chi_sim")))
-    assert(selectEngine(MostAccurate, lang = "eng")._1 == "density")
-    // language_optimized honors the map, falls back when unmapped (:182-189)
-    assert(selectEngine(LanguageOptimized, lang = "jpn")._1 == "density_relaxed")
-    assert(selectEngine(LanguageOptimized, lang = "deu")._1 == "density")
-    assert(selectEngine(LanguageOptimized, lang = "xx")._2 == "lang:unmapped")
-    // document_type_optimized: map, then quality hint, then best (:191-206)
-    assert(selectEngine(DocTypeOptimized, documentType = "form")._1 == "density_relaxed")
-    assert(selectEngine(DocTypeOptimized, documentType = "standard_text")._1 == "density")
-    assert(selectEngine(DocTypeOptimized, qualityHint = "poor")._1 == "density_relaxed")
-    // availability gates every branch (is_available, :223-227)
-    assert(selectEngine(MostAccurate, lang = "chi_sim",
-      available = Set("density"))._1 == "density")
+  test("engine selector: route equals q49's routeEngineCol on every arm") {
+    import graft.core.EngineSelector.{route, routeEngineCol}
+    import org.apache.spark.sql.functions.col
+    val spark = graft.job.GraftSession.local("4")
+    import spark.implicits._
+    val langs = Seq("ara", "chi_sim", "chi_tra", "hin", "jpn", "kor", "tha", "vie", "eng", null)
+    val rows = for {
+      kind <- Seq("pdf", "unknown", "html"); size <- Seq(799, 800); lang <- langs
+    } yield (kind, size, lang)
+    val viaSpark = rows.toDF("kind", "size", "lang")
+      .select(col("kind"), col("size"), col("lang"),
+        routeEngineCol(col("kind"), col("size"), col("lang")))
+      .as[(String, Int, String, String)].collect()
+    assert(viaSpark.length == rows.length)
+    viaSpark.foreach { case (kind, size, lang, engine) =>
+      assert(route(kind, size, lang) == engine, s"($kind, $size, $lang)")
+    }
+    // one row per arm, plus the default (selector.py:162-180)
+    assert(route("pdf", 799, "chi_sim") == "pdf_layout")
+    assert(route("unknown", 800, "eng") == "none")
+    assert(route("html", 799, "eng") == "density_relaxed")
+    assert(route("html", 800, "chi_sim") == "density_relaxed")
+    assert(route("html", 800, "eng") == "density")
+    assert(route("html", 800, null) == "density")
   }
 
   test("routed cascade: relaxed-first accepts what strict-first deferred to fallback") {
@@ -84,13 +85,10 @@ class CascadeSpec extends AnyFunSuite {
       .getBytes(java.nio.charset.StandardCharsets.UTF_8)
     val strictFirst = MainContentExtractor.extractBytes(html)
     assert(strictFirst.engine == "density_relaxed" && strictFirst.fallbackUsed)
-    val relaxedFirst = MainContentExtractor.extractBytesRouted(html, "density_relaxed")
+    val relaxedFirst = MainContentExtractor.extractBytes(html, relaxedFirst = true)
     assert(relaxedFirst.text == "short lone note with seven words")
     // same accepted text, but as the SELECTED engine, not a fallback
-    assert(relaxedFirst.engine == "density_relaxed")
-    // routing to "density" is byte-identical to the default path
-    val viaDefault = MainContentExtractor.extractBytesRouted(html, "density")
-    assert(viaDefault.text == strictFirst.text && viaDefault.engine == strictFirst.engine)
+    assert(relaxedFirst.engine == "density_relaxed" && !relaxedFirst.fallbackUsed)
   }
 
   test("relaxed-first winner after the strict fallback is pure relaxed") {
@@ -99,7 +97,7 @@ class CascadeSpec extends AnyFunSuite {
     // output is relaxed's — not strict ∪ relaxed at their mixed mean
     val words = (1 to 10).map(i => s"w$i").mkString(" ")
     val html = s"<html><body><p>$words</p><p>one two three</p></body></html>".getBytes(UTF_8)
-    val r = MainContentExtractor.extractBytesRouted(html, "density_relaxed")
+    val r = MainContentExtractor.extractBytes(html, relaxedFirst = true)
     assert(r.engine == "density_relaxed" && !r.fallbackUsed)
     assert(r.text == words)
     assert(r.confidence == 0.25)
@@ -116,8 +114,8 @@ class CascadeSpec extends AnyFunSuite {
     assert(html.length >= graft.core.EngineSelector.PoorQualityBytes)
     val zh = Page("https://a/1", new java.sql.Timestamp(0), html, "", "chi_sim")
     val en = Page("https://a/2", new java.sql.Timestamp(0), html, "", "eng")
-    val rZh = Extract.applyRouted(zh)
-    val rEn = Extract.applyRouted(en)
+    val rZh = Extract(zh, routed = true)
+    val rEn = Extract(en, routed = true)
     // high-confidence page: each starting engine early-exits as itself
     assert(rZh.engine == "density_relaxed" && !rZh.fallback_used)
     assert(rEn.engine == "density" && !rEn.fallback_used)

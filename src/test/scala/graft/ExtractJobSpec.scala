@@ -98,18 +98,49 @@ class ExtractJobSpec extends AnyFunSuite with TempRoots {
   }
 
   test("routedSelection job option: per-row routed oracle, full coverage, same urls") {
+    import org.apache.spark.sql.functions.{col, length}
+    import graft.core.EngineSelector.{routeEngineCol, routeReasonCol}
+    import spark.implicits._
     val dir = tmp()
-    ExtractJob.generatePages(spark, 300, s"$dir/pages", partitions = 3)
-    ExtractJob.run(spark, s"$dir/pages", s"$dir/out", routedSelection = true)
-    val rows = ExtractJob.readExtracted(spark, s"$dir/out")
-      .select("url", "extracted_text").collect()
-    assert(rows.length == 300)
-    rows.foreach { r =>
-      val url = r.getString(0)
-      val idx = url.substring(url.lastIndexOf('/') + 1).toLong
-      val golden = Extract.applyRouted(PageGen.genRow(PageGen.DefaultSeed, idx).page)
-      assert(r.getString(1) == golden.extracted_text, s"routed mismatch for $url")
+    // PageGen writes only eng/deu/fra/spa pages of 800+ bytes, so every
+    // third row gets a complex-script lang and eight short pages are
+    // added: each routing arm then starts some document
+    val complex = Seq("ara", "chi_sim", "chi_tra", "hin", "jpn", "kor", "tha", "vie")
+    val generated = (0 until 300).map { i =>
+      val p = PageGen.genRow(PageGen.DefaultSeed, i.toLong).page
+      if (i % 3 == 0) p.copy(lang = complex(i / 3 % complex.length)) else p
     }
+    val short = complex.indices.map { i =>
+      Page(s"https://short.example/page/$i", new java.sql.Timestamp(i * 1000L),
+        s"<html><body><p>short note number $i</p></body></html>".getBytes(UTF_8), "",
+        if (i % 2 == 0) "eng" else complex(i))
+    }
+    val pages = generated ++ short
+    spark.sparkContext.parallelize(pages, 3).toDS().write.parquet(s"$dir/pages")
+    ExtractJob.run(spark, s"$dir/pages", s"$dir/out", routedSelection = true)
+    val sizes = spark.read.parquet(s"$dir/pages")
+      .select(col("url"), length(col("html")).cast("int").as("size"))
+    val rows = ExtractJob.readExtracted(spark, s"$dir/out").join(sizes, "url")
+      .select(col("url"), col("extracted_text"), col("engine"), col("fallback_used"),
+        col("payload_kind"),
+        routeEngineCol(col("payload_kind"), col("size"), col("lang")),
+        routeReasonCol(col("payload_kind"), col("size"), col("lang")))
+      .as[(String, String, String, Boolean, String, String, String)].collect()
+    assert(rows.length == pages.length)
+    val byUrl = pages.map(p => p.url -> p).toMap
+    rows.foreach { case (url, text, engine, fallback, kind, start, _) =>
+      val golden = Extract(byUrl(url), routed = true)
+      assert(text == golden.extracted_text && engine == golden.engine &&
+        fallback == golden.fallback_used, s"routed mismatch for $url")
+      // an HTML cascade reports its winner; the start is the other
+      // engine exactly when the fallback won
+      if (kind == "html")
+        assert((if (!fallback) engine else if (engine == "density") "density_relaxed" else "density")
+          == start, s"start engine of $url")
+    }
+    // every arm, and the default, starts at least one document
+    val arms = rows.map(_._7).map(r => if (r.startsWith("lang:")) "lang" else r).toSet
+    assert(arms == Set("kind:pdf", "kind:unknown", "quality:poor", "lang", "default"))
   }
 
   test("routing-mode guard: resuming with the other engine-selection mode is refused") {
