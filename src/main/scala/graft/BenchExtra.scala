@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+import graft.job.Cli
+
 /** Query timing and plan tool: time a SUBSET of SparkEntry.queries
   * (one name works too) under the session the frozen [[Bench]] measures
   * with ([[graft.job.GraftSession.local]] on SPARK_GRAFT_CPUS cores,
@@ -18,13 +21,17 @@ package graft
   * [[Bench]], [[Verify]] and the oracle SQL stay frozen; oracle dumps
   * of a query subset are [[DumpOne]]'s job.
   */
-object BenchExtra {
-  def main(args: Array[String]): Unit = {
-    val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
-    val reps = if (args.length > 1) args(1).toInt else 3
-    val explainDir = if (args.length > 2) Some(args(2)) else None
+object BenchExtra extends Cli.Main(Cli("usage: BenchExtra <q1,q2,...> [reps] [explainDir]", 1 to 3)) {
+  def job(a: Cli.Args): SparkSession => Unit = {
+    val names = a(0).split(",").map(_.trim).filter(_.nonEmpty)
+    val reps = a.int(1, "reps", 3)
+    val explainDir = a.positional.lift(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = graft.job.GraftSession.local()
+    spark => run(spark, names, reps, explainDir, sfDir)
+  }
+
+  private def run(spark: SparkSession, names: Array[String], reps: Int,
+                  explainDir: Option[String], sfDir: String): Unit = {
     spark.conf.set("spark.sql.files.maxPartitionBytes", (8L << 20).toString)
     graft.queries.GraftQueries.setSf(sfDir)
     graft.queries.GraftQueries.pagesPath(spark, sfDir)
@@ -55,6 +62,5 @@ object BenchExtra {
         spark.sparkContext.setJobDescription(null)
       }
     }
-    spark.stop()
   }
 }

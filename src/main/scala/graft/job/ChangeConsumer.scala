@@ -1,7 +1,7 @@
 package graft.job
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -42,15 +42,6 @@ object ChangeConsumer {
     }
   }
 
-  private def writeCheckpoint(ckptFile: String, seq: Int): Unit = {
-    val target = Paths.get(ckptFile)
-    Option(target.getParent).foreach(Files.createDirectories(_))
-    val tmp = target.resolveSibling(target.getFileName.toString + ".tmp")
-    Files.write(tmp, seq.toString.getBytes(UTF_8))
-    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
-
   /** One consumption cycle: process rows added by snapshots
     * `(lastConsumed, currentSequence]`, then advance the checkpoint.
     * Returns the consumed window (from, to]; an empty window (nothing
@@ -65,7 +56,7 @@ object ChangeConsumer {
       s"checkpoint $ckptFile is ahead of the chain ($from > $to) — wrong root or rolled-back store")
     if (to > from) {
       process(ExtractJob.readChanges(spark, snapshotRoot, from, to), from, to)
-      writeCheckpoint(ckptFile, to)
+      SnapshotStore.writeAtomic(Paths.get(ckptFile), to.toString.getBytes(UTF_8))
     }
     (from, to)
   }
@@ -78,22 +69,19 @@ object ChangeConsumer {
   * `<consumerDir>/host_counts` tagged with the provenance window, so a
   * replayed window (at-least-once) is identifiable and idempotently
   * collapsible downstream. */
-object ConsumeCli {
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: ConsumeCli <snapshotRoot> <consumerDir>")
-    val spark = GraftSession.local()
+object ConsumeCli extends Cli.Main(Cli("usage: ConsumeCli <snapshotRoot> <consumerDir>", 2 to 2)) {
+  def job(a: Cli.Args): SparkSession => Unit = spark => {
     import org.apache.spark.sql.functions._
-    val (from, to) = ChangeConsumer.consumeOnce(spark, args(0), s"${args(1)}/last_seq") {
+    val (from, to) = ChangeConsumer.consumeOnce(spark, a(0), s"${a(1)}/last_seq") {
       (delta, f, t) =>
         delta.filter(col("error").isNull)
           .groupBy(graft.ops.Hosts.hostOf(col("url")).as("host"))
           .agg(count(lit(1)).as("n_docs"), sum(length(col("extracted_text"))).as("n_chars"))
           .withColumn("window_from", lit(f)).withColumn("window_to", lit(t))
           .write.mode(org.apache.spark.sql.SaveMode.Append)
-          .parquet(s"${args(1)}/host_counts")
+          .parquet(s"${a(1)}/host_counts")
     }
     println(if (to > from) s"consumed window ($from, $to]"
             else s"nothing new (at seq=$to)")
-    spark.stop()
   }
 }

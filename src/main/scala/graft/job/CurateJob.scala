@@ -268,15 +268,15 @@ object CurateJob {
 /** Curation entry point:
   *   runMain graft.job.CurateCli <extractRoot> <curatedRoot> [perHostCap]
   */
-object CurateCli {
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: CurateCli <extractRoot> <curatedRoot> [perHostCap]")
-    val spark = GraftSession.local()
-    val cap = if (args.length > 2) args(2).toInt else 1000
-    val f = CurateJob.run(spark, args(0), args(1), cap)
-    println(s"curated ${f.kept} docs (extracted=${f.extracted} html=${f.html} " +
-      s"urlFiltered=${f.urlFiltered} deduped=${f.deduped} fuzzy=${f.fuzzyDeduped} " +
-      s"semantic=${f.semanticDeduped} gated=${f.gated}) at ${args(1)}")
-    spark.stop()
+object CurateCli extends Cli.Main(Cli(
+    "usage: CurateCli <extractRoot> <curatedRoot> [perHostCap]", 2 to 3)) {
+  def job(a: Cli.Args): SparkSession => Unit = {
+    val cap = a.int(2, "perHostCap", 1000)
+    spark => {
+      val f = CurateJob.run(spark, a(0), a(1), cap)
+      println(s"curated ${f.kept} docs (extracted=${f.extracted} html=${f.html} " +
+        s"urlFiltered=${f.urlFiltered} deduped=${f.deduped} fuzzy=${f.fuzzyDeduped} " +
+        s"semantic=${f.semanticDeduped} gated=${f.gated}) at ${a(1)}")
+    }
   }
 }

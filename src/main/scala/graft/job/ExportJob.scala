@@ -104,14 +104,14 @@ object ExportJob {
 /** spark-submit entry point:
   *   runMain graft.job.ExportCli <extractRoot> <exportDir> [budget]
   */
-object ExportCli {
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: ExportCli <extractRoot> <exportDir> [budget]")
-    val budget = if (args.length > 2) args(2).toLong else 2048L
-    val spark = GraftSession.local()
-    val stats = ExportJob.run(spark, args(0), args(1), budget)
-    println(s"exported splits=${stats.toSeq.sortBy(_._1)
-      .map { case (s, st) => s"$s:${st.seqs}seqs/${st.tokens}tok" }.mkString(",")}")
-    spark.stop()
+object ExportCli extends Cli.Main(Cli(
+    "usage: ExportCli <extractRoot> <exportDir> [budget]", 2 to 3)) {
+  def job(a: Cli.Args): SparkSession => Unit = {
+    val budget = a.long(2, "budget", 2048L)
+    spark => {
+      val stats = ExportJob.run(spark, a(0), a(1), budget)
+      println(s"exported splits=${stats.toSeq.sortBy(_._1)
+        .map { case (s, st) => s"$s:${st.seqs}seqs/${st.tokens}tok" }.mkString(",")}")
+    }
   }
 }

@@ -283,7 +283,10 @@ object ExtractJob {
     *    corrupt the chain under its own mixed-version check (a newer
     *    binary may legitimately compact an old table). */
   def compact(spark: SparkSession, outRoot: String,
-              numPartitions: Int = 0, saltBuckets: Int = 8): Snapshot =
+              numPartitions: Int = 0, saltBuckets: Int = 8): Snapshot = {
+    // checked before the lock too: taking it creates the root, and a
+    // failed compaction must leave no directory behind
+    require(SnapshotStore.currentSequence(outRoot) > 0, s"nothing to compact at $outRoot")
     withLock(outRoot) {
       import spark.implicits._
       val chain = SnapshotStore.chain(outRoot)
@@ -315,6 +318,7 @@ object ExtractJob {
         numPartitions, saltBuckets, routingMode.getOrElse("strict"), replaces = chain.size,
         extractionVersion = chainVersion.getOrElse(ExtractionVersion.current))
     }
+  }
 
   /** The output clustering key — codegen'd salted host (never the
     * interpreted ParseUrl; see [[graft.ops.Hosts]]). Public so PlanSpec
@@ -521,61 +525,53 @@ object ExtractJob {
       spark.emptyDataset[ExtractedDoc].toDF().withColumn("partition_id", lit(0).cast("int"))
     }
 
-  /** Generate the deterministic synthetic pages table (distributed:
-    * each row is a pure function of (seed, index)). `start` > 0 with
-    * append mode models a growing crawl: new rows arrive as NEW files,
-    * which is what the file-level resume consumes. */
-  def generatePages(spark: SparkSession, rows: Long, path: String,
-                    seed: Long = PageGen.DefaultSeed, partitions: Int = 0,
-                    start: Long = 0L, append: Boolean = false): Unit = {
+  /** The deterministic synthetic pages `start until rows` (distributed:
+    * each row is a pure function of (seed, index)), one range slice per
+    * partition; `partitions` 0 means the default parallelism. */
+  def syntheticPages(spark: SparkSession, rows: Long, seed: Long = PageGen.DefaultSeed,
+                     partitions: Int = 0, start: Long = 0L): Dataset[Page] = {
     import spark.implicits._
     val parts = if (partitions > 0) partitions else spark.sparkContext.defaultParallelism
-    val mode = if (append) SaveMode.Append else SaveMode.Overwrite
-    spark.range(start, rows, 1, parts)
-      .mapPartitions(_.map(i => PageGen.genRow(seed, i).page))
-      .write.mode(mode).parquet(path)
+    spark.range(start, rows, 1, parts).mapPartitions(_.map(i => PageGen.genRow(seed, i).page))
   }
+
+  /** Write [[syntheticPages]] as a pages table. `start` > 0 with append
+    * mode models a growing crawl: new rows arrive as NEW files, which is
+    * what the file-level resume consumes. */
+  def generatePages(spark: SparkSession, rows: Long, path: String,
+                    seed: Long = PageGen.DefaultSeed, partitions: Int = 0,
+                    start: Long = 0L, append: Boolean = false): Unit =
+    syntheticPages(spark, rows, seed, partitions, start)
+      .write.mode(if (append) SaveMode.Append else SaveMode.Overwrite).parquet(path)
 }
 
 /** spark-submit entry point (the analog of the reference CLI,
-  * /root/reference/ocrworker/cli/ocr.py:12-33):
+  * `ocrworker/cli/ocr.py:12-33`):
   *   runMain graft.job.ExtractCli <pagesParquet> <outRoot> [numPartitions] [--wet <dir>]
   * `--wet` publishes the snapshot's WET sidecar (extracted-text
   * conversion records) under `<dir>/wet-<seq>` after the commit.
   */
-object ExtractCli {
-  def main(args: Array[String]): Unit = {
-    // `--wet <dir>` may sit anywhere; the paths are the args left without
-    // it. --wet is validated (and its directory created) BEFORE the run:
-    // a malformed invocation must fail in milliseconds, not after hours
-    // of extraction have already committed a snapshot.
-    val wetIdx = args.indexOf("--wet")
-    val positional = if (wetIdx >= 0) args.patch(wetIdx, Nil, 2) else args
-    require(positional.length >= 2, "usage: ExtractCli <pagesParquet> <outRoot> [numPartitions] [--wet <dir>]")
-    val wetDir: Option[String] =
-      if (wetIdx < 0) None
-      else {
-        require(wetIdx + 1 < args.length && !args(wetIdx + 1).startsWith("--"),
-          "--wet requires a directory argument")
-        val d = args(wetIdx + 1)
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
-        Some(d)
+object ExtractCli extends Cli.Main(Cli(
+    "usage: ExtractCli <pagesParquet> <outRoot> [numPartitions] [--wet <dir>]", 2 to 3,
+    valued = Set("--wet"))) {
+  def job(a: Cli.Args): SparkSession => Unit = {
+    val parts = a.int(2, "numPartitions", 0)
+    // the --wet directory is created BEFORE the run: a bad path must fail
+    // in milliseconds, not after hours of extraction committed a snapshot
+    val wetDir = a.values.get("--wet")
+    wetDir.foreach(d => java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d)))
+    spark => {
+      val snap = ExtractJob.run(spark, a(0), a(1), numPartitions = parts)
+      println(s"committed snapshot seq=${snap.sequence} rows=${snap.rowCount} " +
+        s"errors=${snap.partitions.map(_.errorCount).sum} partitions=${snap.partitions.size}")
+      println(SnapshotStore.readManifest(a(1), snap.sequence))
+      // catch-up form: covers the just-committed snapshot AND any earlier
+      // snapshot whose emission a previous run crashed out of.
+      wetDir.foreach { d =>
+        val n = ExtractJob.emitWetMissing(spark, a(1), d)
+        println(s"emitted WET sidecar records=$n root=$d (all missing snapshots)")
       }
-    val pagesPath = positional(0)
-    val outRoot = positional(1)
-    val parts = if (positional.length > 2) positional(2).toInt else 0
-    val spark = GraftSession.local()
-    val snap = ExtractJob.run(spark, pagesPath, outRoot, numPartitions = parts)
-    println(s"committed snapshot seq=${snap.sequence} rows=${snap.rowCount} " +
-      s"errors=${snap.partitions.map(_.errorCount).sum} partitions=${snap.partitions.size}")
-    println(SnapshotStore.readManifest(outRoot, snap.sequence))
-    // catch-up form: covers the just-committed snapshot AND any earlier
-    // snapshot whose emission a previous run crashed out of.
-    wetDir.foreach { d =>
-      val n = ExtractJob.emitWetMissing(spark, outRoot, d)
-      println(s"emitted WET sidecar records=$n root=$d (all missing snapshots)")
     }
-    spark.stop()
   }
 }
 
@@ -584,18 +580,16 @@ object ExtractCli {
   * analog), optionally reclaiming the replaced dirs:
   *   runMain graft.job.CompactCli <outRoot> [--expire]
   */
-object CompactCli {
-  def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: CompactCli <outRoot> [--expire]")
-    val spark = GraftSession.local()
-    val snap = ExtractJob.compact(spark, args(0))
+object CompactCli extends Cli.Main(Cli(
+    "usage: CompactCli <outRoot> [--expire]", 1 to 1, switches = Set("--expire"))) {
+  def job(a: Cli.Args): SparkSession => Unit = spark => {
+    val snap = ExtractJob.compact(spark, a(0))
     println(s"compacted ${snap.replaces} snapshots into seq=${snap.sequence} " +
       s"rows=${snap.rowCount} partitions=${snap.partitions.size}")
-    if (args.contains("--expire")) {
-      val dirs = SnapshotStore.expireReplaced(args(0))
+    if (a.switches("--expire")) {
+      val dirs = SnapshotStore.expireReplaced(a(0))
       println(s"expired ${dirs.size} replaced data dirs")
     }
-    spark.stop()
   }
 }
 
@@ -606,15 +600,12 @@ object CompactCli {
   * in each manifest, same as the parquet path), with the row-level
   * anti-join net as the safety layer for rewritten segments.
   */
-object WarcExtractCli {
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: WarcExtractCli <warcDir> <outRoot>")
-    val spark = GraftSession.local()
-    val snap = ExtractJob.runWarc(spark, args(0), args(1))
+object WarcExtractCli extends Cli.Main(Cli("usage: WarcExtractCli <warcDir> <outRoot>", 2 to 2)) {
+  def job(a: Cli.Args): SparkSession => Unit = spark => {
+    val snap = ExtractJob.runWarc(spark, a(0), a(1))
     println(s"committed snapshot seq=${snap.sequence} rows=${snap.rowCount} " +
       s"errors=${snap.partitions.map(_.errorCount).sum} " +
       s"segments=${snap.inputFiles.size}")
-    spark.stop()
   }
 }
 
@@ -625,23 +616,18 @@ object WarcExtractCli {
   * per partition, executor-side atomic writes) so WarcExtractCli is
   * drivable end-to-end from the CLI.
   */
-object GenCli {
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: GenCli <rows> <outPath> [--warc|--warc-gz]")
-    val spark = GraftSession.local()
-    val rows = args(0).toLong
-    args.drop(2).headOption match {
-      case Some(flag @ ("--warc" | "--warc-gz")) =>
-        import spark.implicits._
-        val pages = spark.range(0, rows, 1, spark.sparkContext.defaultParallelism)
-          .mapPartitions(_.map(i => graft.gen.PageGen.genRow(graft.gen.PageGen.DefaultSeed, i).page))
-        graft.sources.Warc.writeSegments(pages, args(1), compress = flag == "--warc-gz")
-        println(s"generated $rows pages as WARC segments at ${args(1)}")
-      case _ =>
-        ExtractJob.generatePages(spark, rows, args(1))
-        println(s"generated $rows pages at ${args(1)}")
+object GenCli extends Cli.Main(Cli(
+    "usage: GenCli <rows> <outPath> [--warc|--warc-gz]", 2 to 2,
+    switches = Set("--warc", "--warc-gz"))) {
+  def job(a: Cli.Args): SparkSession => Unit = {
+    val rows = a.long(0, "rows", 0L)
+    val warc = a.switches("--warc") || a.switches("--warc-gz")
+    spark => {
+      if (!warc) ExtractJob.generatePages(spark, rows, a(1))
+      else graft.sources.Warc.writeSegments(ExtractJob.syntheticPages(spark, rows), a(1),
+        compress = a.switches("--warc-gz"))
+      println(s"generated $rows pages${if (warc) " as WARC segments" else ""} at ${a(1)}")
     }
-    spark.stop()
   }
 }
 

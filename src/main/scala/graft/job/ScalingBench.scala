@@ -19,10 +19,21 @@ import org.apache.spark.sql.functions._
   */
 object ScalingBench {
 
-  def session(cores: Int, splitBytes: Long = 0): SparkSession = {
+  /** `f` in a fresh local[cores] session; every exit stops the session. */
+  def withSession[A](cores: Int, splitBytes: Long = 0)(f: SparkSession => A): A = {
     val spark = GraftSession.local(cores.toString)
-    if (splitBytes > 0) spark.conf.set("spark.sql.files.maxPartitionBytes", splitBytes.toString)
-    spark
+    try {
+      if (splitBytes > 0) spark.conf.set("spark.sql.files.maxPartitionBytes", splitBytes.toString)
+      f(spark)
+    } finally spark.stop()
+  }
+
+  /** The shared pages table of `rows` rows, generated once (untimed). */
+  def cachedPages(rows: Long, cores: Int): String = {
+    val pagesPath = s"/tmp/graft_pages_cache/g${graft.gen.PageGen.GenVersion}-rows$rows"
+    if (!new java.io.File(s"$pagesPath/_SUCCESS").exists())
+      withSession(cores)(ExtractJob.generatePages(_, rows, pagesPath))
+    pagesPath
   }
 
   /** Split size targeting ~tasksPerCore waves on the 4N level — the
@@ -83,10 +94,8 @@ object ScalingBench {
     val n4 = n * 4
     var calN = Double.MaxValue; var cal4N = Double.MaxValue
     (1 to reps).foreach { _ =>
-      val sN = session(n)
-      try { val c = calibrateOnce(sN, n4); if (c < calN) calN = c } finally sN.stop()
-      val s4 = session(n4)
-      try { val c = calibrateOnce(s4, n4); if (c < cal4N) cal4N = c } finally s4.stop()
+      calN = calN min withSession(n)(calibrateOnce(_, n4))
+      cal4N = cal4N min withSession(n4)(calibrateOnce(_, n4))
     }
     (calN / cal4N) / 4.0
   }
@@ -95,39 +104,30 @@ object ScalingBench {
     * same wall-clock window decorrelates the two levels from the
     * sandbox VM's noisy phases (observed ±30% on identical busy-loops). */
   def main(args: Array[String]): Unit = {
-    val rows = if (args.length > 0) args(0).toLong else 100000L
-    val n = if (args.length > 1) args(1).toInt else 8
-    val reps = if (args.length > 2) args(2).toInt else 5
+    val a = Cli("usage: ScalingBench [rows] [n] [reps]", 0 to 3).parse(args)
+    val rows = a.long(0, "rows", 100000L)
+    val n = a.int(1, "n", 8)
+    val reps = a.int(2, "reps", 5)
     val n4 = n * 4
-    val pagesPath = s"/tmp/graft_pages_cache/g${graft.gen.PageGen.GenVersion}-rows$rows"
-
-    // generate once (untimed)
-    if (!new java.io.File(s"$pagesPath/_SUCCESS").exists()) {
-      val s = session(n4)
-      ExtractJob.generatePages(s, rows, pagesPath)
-      s.stop()
-    }
+    val pagesPath = cachedPages(rows, n4)
     val splitBytes = splitBytesFor(pagesPath, n4)
     // warmup JVM/JIT on a slice (untimed, separate session)
-    val w = session(n, splitBytes)
-    try runOnce(w, pagesPath, n * 2) finally w.stop()
+    withSession(n, splitBytes)(runOnce(_, pagesPath, n * 2))
 
     var tN = Double.MaxValue; var t4N = Double.MaxValue
     var calN = Double.MaxValue; var cal4N = Double.MaxValue
     var rowsN = 0L; var rows4N = 0L
     (1 to reps).foreach { _ =>
-      val sN = session(n, splitBytes)
-      try {
-        val (r, t) = runOnce(sN, pagesPath, n * 2)
-        rowsN = r; if (t < tN) tN = t
-        val c = calibrateOnce(sN, n4); if (c < calN) calN = c
-      } finally sN.stop()
-      val s4 = session(n4, splitBytes)
-      try {
-        val (r, t) = runOnce(s4, pagesPath, n4 * 2)
-        rows4N = r; if (t < t4N) t4N = t
-        val c = calibrateOnce(s4, n4); if (c < cal4N) cal4N = c
-      } finally s4.stop()
+      withSession(n, splitBytes) { s =>
+        val (r, t) = runOnce(s, pagesPath, n * 2)
+        rowsN = r; tN = tN min t
+        calN = calN min calibrateOnce(s, n4)
+      }
+      withSession(n4, splitBytes) { s =>
+        val (r, t) = runOnce(s, pagesPath, n4 * 2)
+        rows4N = r; t4N = t4N min t
+        cal4N = cal4N min calibrateOnce(s, n4)
+      }
     }
     require(rowsN == rows4N, "row counts differ between levels")
     val effN = (tN / t4N) / 4.0
@@ -151,8 +151,9 @@ object ScalingBench {
 
 object CalibProbe {
   def main(args: Array[String]): Unit = {
-    val n = if (args.length > 0) args(0).toInt else 8
-    val reps = if (args.length > 1) args(1).toInt else 2
+    val a = Cli("usage: CalibProbe [n] [reps]", 0 to 2).parse(args)
+    val n = a.int(0, "n", 8)
+    val reps = a.int(1, "reps", 2)
     val eff = ScalingBench.calibPair(n, reps)
     println(f"""{"metric":"calibration_ceiling","n_cores":$n,"n4_cores":${n * 4},"value":$eff%.3f}""")
   }

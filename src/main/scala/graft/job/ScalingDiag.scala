@@ -11,14 +11,11 @@ import org.apache.spark.sql.functions._
   */
 object ScalingDiag {
   def main(args: Array[String]): Unit = {
-    val rows = if (args.length > 0) args(0).toInt else 1000000
-    val n = if (args.length > 1) args(1).toInt else 8
-    val reps = if (args.length > 2) args(2).toInt else 3
-    val pagesPath = s"/tmp/graft_pages_cache/g${graft.gen.PageGen.GenVersion}-rows$rows"
-    if (!new java.io.File(s"$pagesPath/_SUCCESS").exists()) {
-      val s = ScalingBench.session(n * 4)
-      try ExtractJob.generatePages(s, rows, pagesPath) finally s.stop()
-    }
+    val a = Cli("usage: ScalingDiag [rows] [n] [reps]", 0 to 3).parse(args)
+    val rows = a.int(0, "rows", 1000000)
+    val n = a.int(1, "n", 8)
+    val reps = a.int(2, "reps", 3)
+    val pagesPath = ScalingBench.cachedPages(rows, n * 4)
 
     def extractOnly(spark: org.apache.spark.sql.SparkSession): Double = {
       val t0 = System.nanoTime()
@@ -29,8 +26,7 @@ object ScalingDiag {
     }
 
     val split = ScalingBench.splitBytesFor(pagesPath, n * 4)
-    Seq(n, n * 4).foreach { cores =>
-      val spark = ScalingBench.session(cores, split)
+    Seq(n, n * 4).foreach(cores => ScalingBench.withSession(cores, split) { spark =>
       var bestMap = Double.MaxValue
       var bestFull = Double.MaxValue
       (1 to reps).foreach { _ =>
@@ -38,7 +34,6 @@ object ScalingDiag {
         bestFull = math.min(bestFull, ScalingBench.runOnce(spark, pagesPath, cores)._2)
       }
       println(f"""{"cores":$cores,"map_only_sec":$bestMap%.3f,"full_sec":$bestFull%.3f,"map_dps":${rows / bestMap}%.0f,"full_dps":${rows / bestFull}%.0f}""")
-      spark.stop()
-    }
+    })
   }
 }

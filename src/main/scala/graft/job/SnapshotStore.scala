@@ -153,9 +153,12 @@ object SnapshotStore {
   def readManifest(root: String, seq: Int): String =
     new String(Files.readAllBytes(manifestPath(root, seq)), UTF_8)
 
-  private def writeAtomic(target: Path, bytes: Array[Byte]): Unit = {
+  /** The one small-file write of the store and its consumers: the
+    * bytes go to `<name>.tmp`, then replace `target` by an atomic move,
+    * so a reader sees the old content or the new, never a torn file. */
+  private[job] def writeAtomic(target: Path, bytes: Array[Byte]): Unit = {
     val tmp = target.resolveSibling(target.getFileName.toString + ".tmp")
-    Files.createDirectories(target.getParent)
+    Option(target.getParent).foreach(Files.createDirectories(_))
     Files.write(tmp, bytes)
     Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
@@ -285,11 +288,5 @@ object SnapshotStore {
       Files.walk(p).sorted(java.util.Comparator.reverseOrder())
         .iterator().asScala.foreach(Files.delete)
     }
-  }
-
-  def listFiles(dir: String): Seq[String] = {
-    val p = Paths.get(dir)
-    if (!Files.exists(p)) Nil
-    else Files.walk(p).iterator().asScala.filter(f => f.toString.endsWith(".parquet")).map(_.toString).toSeq
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.Row
-import graft.job.ExtractJob
+import graft.job.{Cli, ExtractJob}
 
 /** Streaming mode of the engine — the direct analog of the reference's
   * arrival-driven worker (Celery consumes one message per document,
@@ -321,21 +321,19 @@ object StreamingExtract {
   * shell); without it the query runs until killed, resuming from the
   * checkpoint on restart.
   */
-object StreamCli {
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 3,
-      "usage: StreamCli <pagesDir> <outRoot> <checkpoint> [--available-now]")
-    val spark = graft.job.GraftSession.local()
-    val writer = StreamingExtract.extractStream(spark, args(0), args(1), args(2))
+object StreamCli extends Cli.Main(Cli(
+    "usage: StreamCli <pagesDir> <outRoot> <checkpoint> [--available-now]", 3 to 3,
+    switches = Set("--available-now"))) {
+  def job(a: Cli.Args): SparkSession => Unit = spark => {
+    val writer = StreamingExtract.extractStream(spark, a(0), a(1), a(2))
     // extractStream bakes AvailableNow in (the batch-drain default);
     // continuous mode must OVERRIDE the trigger or the query would
     // drain what exists and self-terminate
     val q =
-      if (args.contains("--available-now")) writer.trigger(Trigger.AvailableNow()).start()
+      if (a.switches("--available-now")) writer.trigger(Trigger.AvailableNow()).start()
       else writer.trigger(Trigger.ProcessingTime("10 seconds")).start()
     q.awaitTermination()
-    val seq = graft.job.SnapshotStore.currentSequence(args(1))
+    val seq = graft.job.SnapshotStore.currentSequence(a(1))
     println(s"stream drained: current snapshot seq=$seq")
-    spark.stop()
   }
 }

@@ -233,6 +233,13 @@ class ExtractJobSpec extends AnyFunSuite with TempRoots {
     assert(after.selectExpr("max(size(out_links))").collect()(0).getInt(0) == 0)
   }
 
+  test("compacting a root with no committed snapshot fails and creates nothing") {
+    val missing = java.nio.file.Paths.get(tmp(), "never-written")
+    val e = intercept[IllegalArgumentException](ExtractJob.compact(spark, missing.toString))
+    assert(e.getMessage.contains("nothing to compact"))
+    assert(!Files.exists(missing), "a failed compaction left the root directory behind")
+  }
+
   test("compaction: verbatim rewrite, resume intact, time travel until expiry") {
     import org.apache.spark.sql.functions.col
     val dir = tmp()
